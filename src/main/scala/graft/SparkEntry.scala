@@ -226,22 +226,12 @@ object SparkEntry {
           jsonDocSuite)
         .orderBy("doc_id", "constraint_id")
     }),
-    "v_docjson_variant" -> ((s, dir) => {
-      // third execution path: Spark 4 VARIANT — one try_parse_json into
-      // the binary semi-structured type, per-column try_variant_get
-      // extractions, Catalyst validation. Shares the same oracle string
-      // as the other two paths: three engines, one contract.
-      graft.exec.JsonValidator
-        .violationsVariant(jsonDocs(s, dir), "id", "js", docJsonSchema,
-          jsonDocSuite)
-        .orderBy("doc_id", "constraint_id")
-    }),
     "v_docjson_varcol" -> ((s, dir) => {
-      // fourth execution path: the table PERSISTS a VariantType column
+      // third execution path: the table PERSISTS a VariantType column
       // (the lakehouse storage shape) — parse once at write time, then
       // validate straight off the stored binary: NO parse_json in the
       // read plan, and a shredded variant scan prunes to the addressed
-      // subcolumns. Shares the same oracle string as the other three.
+      // subcolumns. Shares the same oracle string as the other two.
       val vdir = new java.io.File(
         System.getProperty("java.io.tmpdir"),
         "graft-varcol-" + dir.replaceAll("[^A-Za-z0-9.]", "_")).toString
@@ -879,7 +869,7 @@ object SparkEntry {
       "(lang IN ('en','de','fr','es')) AND (n_chars = length(text))"
 
   /** Shared by v_docjson (doc-engine map), v_docjson_typed
-    * (from_json + Catalyst) and v_docjson_variant (Spark 4 variant):
+    * (from_json + Catalyst) and v_docjson_varcol (stored variant):
     * ONE oracle string pins all three execution paths to identical
     * results, re-derived from the TYPED columns the JSON was rendered
     * from. `expected` texts are the compiler's own `expectedOf`
@@ -1035,7 +1025,6 @@ object SparkEntry {
         |) ORDER BY doc_id, instance_path""".stripMargin,
     "v_docjson" -> docJsonOracle,
     "v_docjson_typed" -> docJsonOracle,
-    "v_docjson_variant" -> docJsonOracle,
     "v_docjson_varcol" -> docJsonOracle,
     "v_violations" ->
       s"""SELECT * FROM (

@@ -1,10 +1,11 @@
 package graft.checkpoint
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.storage.StorageLevel
 
 import graft.compile.CompiledSuite
-import graft.exec.Validator
+import graft.exec.{Evaluation, Validator}
 import graft.table.TableProvider
 
 /** One line of per-partition lineage — the north rule's
@@ -67,9 +68,22 @@ final case class RunResult(
 /**
  * The resumable whole-table validation driver (north rule C7): plan =
  * pending partitions (checkpoint anti-join) → ONE partition-pruned scan
- * validates all of them in a single job → violations land per partition →
- * checkpoint entries appended with metrics. Kill it anywhere; the next
- * run picks up exactly the unvalidated partitions.
+ * validates all of them → violations land per partition → checkpoint
+ * entries appended with metrics. Kill it anywhere; the next run picks up
+ * exactly the unvalidated partitions.
+ *
+ * SINGLE PASS: [[run]] (Catalyst engine) and [[runJson]] (doc engine)
+ * share one driver and differ only in the [[Evaluation]] they supply —
+ * the narrow per-row frame and, for [[run]], each dataset check's tagged
+ * violation frame. Verdicts and violations both derive from that one
+ * evaluation. When `violationsOut` is set its frames persist to executor
+ * disk between the two actions, so the violations write materializes
+ * them and the verdict aggregate reads the blocks: every pending row and
+ * every dataset check is evaluated once (lineage recomputes a lost block
+ * — correctness never depends on the cache). Verdict-only runs skip the
+ * persist and the returned `violations` plan stays lazy (acting on it
+ * re-evaluates — materialize via `violationsOut` when both outputs are
+ * consumed).
  */
 object PartitionedRunner {
 
@@ -82,6 +96,12 @@ object PartitionedRunner {
   private[graft] val docEngineRows =
     new java.util.concurrent.atomic.AtomicLong
 
+  /** Resumable validation of a partitioned table by the Catalyst engine.
+    * Dataset-level checks (uniqueness, drift baseline) evaluate over the
+    * WHOLE table, not the pending subset: a duplicate key can span
+    * partitions validated in different runs, and the drift baseline must
+    * not depend on which partitions happened to share a run. Row-local
+    * checks and verdict rows stay restricted to the pending scan. */
   def run(
       table: TableProvider,
       suite: CompiledSuite,
@@ -90,59 +110,23 @@ object PartitionedRunner {
       idCol: String = "doc_id",
       dims: Map[String, DataFrame] = Map.empty,
       violationsOut: Option[String] = None,
-      maxPartitions: Int = Int.MaxValue): RunResult = {
-
-    val spark = checkpoint.load().sparkSession
-    val pendingAll = checkpoint.pending(table, suite.constraintHash)
-    val pending = pendingAll.take(maxPartitions)
-    val skipped = table.partitions().diff(pendingAll)
-
-    if (pending.isEmpty) {
-      import spark.implicits._
-      return RunResult(runId, Seq.empty, skipped,
-        spark.emptyDataFrame,
-        spark.emptyDataset[graft.exec.Violation].toDF())
+      maxPartitions: Int = Int.MaxValue): RunResult =
+    drive(table, checkpoint, runId, suite.constraintHash, violationsOut,
+        maxPartitions) { pending =>
+      Validator.evaluate(table.scan(pending), suite, table.partitionCols,
+        idCol, dims, globalDf = Some(table.scanAll()))
     }
-
-    val df = table.scan(pending)
-    // Dataset-level checks (uniqueness, drift baseline) evaluate over the
-    // WHOLE table, not the pending subset: a duplicate key can span
-    // partitions validated in different runs, and the drift baseline must
-    // not depend on which partitions happened to share a run. Row-local
-    // checks and verdict rows stay restricted to the pending scan.
-    val report = Validator.validateWithDetails(
-      df, suite, table.partitionCols, idCol, dims,
-      globalDf = Some(table.scanAll()))
-
-    violationsOut.foreach { out =>
-      report.violations.write.mode(SaveMode.Append).parquet(out)
-    }
-
-    checkpoint.append(checkpointEntries(
-      table, report.verdicts, suite.constraintHash, runId, pending))
-    RunResult(runId, pending, skipped, report.verdicts, report.violations)
-  }
 
   /**
    * Resumable validation of a partitioned RAW-JSON corpus — the
    * reference's literal instance shape (a JSON string per row) under
    * the north rule's checkpoint/lineage contract. The suite compiles
-   * for the DOCUMENT engine once on the driver; each pending partition
-   * is scanned once, every row gets a doc-engine verdict (malformed →
-   * invalid, never a crash), verdicts aggregate per partition and land
-   * in the same checkpoint table `run` uses. The constraint hash is
-   * prefixed (`docjson:`) so the same suite validated through the
-   * typed-column engine and through this path keep distinct lineages.
-   *
-   * SINGLE PASS: the doc engine runs exactly once per pending row. One
-   * `mapPartitions` emits a narrow per-row frame `(partition cols…,
-   * doc_id, _viols array)`; verdicts aggregate over it and violations
-   * explode from it. When `violationsOut` is set the frame persists to
-   * executor disk between the two actions (lineage recomputes it on
-   * block loss — correctness never depends on the cache); verdict-only
-   * runs skip the persist and the returned `violations` plan stays
-   * lazy (acting on it re-scans — materialize via `violationsOut` when
-   * both outputs are consumed).
+   * for the DOCUMENT engine once on the driver; one `mapPartitions`
+   * gives every pending row its doc-engine verdict and violations
+   * (malformed → invalid, never a crash), and verdicts land in the same
+   * checkpoint table `run` uses. The constraint hash is prefixed
+   * (`docjson:`) so the same suite validated through the typed-column
+   * engine and through this path keep distinct lineages.
    */
   def runJson(
       table: TableProvider,
@@ -155,84 +139,69 @@ object PartitionedRunner {
       idCol: String = "doc_id",
       violationsOut: Option[String] = None,
       maxPartitions: Int = Int.MaxValue): RunResult = {
-    val spark = checkpoint.load().sparkSession
     val compiled = graft.exec.JsonValidator.compile(suite, registry)
     val chash = "docjson:" + graft.compile.ConstraintCompiler.hashOf(
       graft.compile.ConstraintCompiler.resolve(suite, registry))
+    drive(table, checkpoint, runId, chash, violationsOut,
+        maxPartitions) { pending =>
+      import org.apache.spark.sql.types._
+      // narrow projection BEFORE the map: partition cols + id + json only
+      // (the corpus may carry arbitrarily wide payload columns), with the
+      // json column cast to string so binary/variant inputs share
+      // JsonValidator.pairs' contract instead of ClassCastException-ing
+      val nPart = table.partitionCols.length
+      val src = table.scan(pending).select(
+        (table.partitionCols.map(F.col) :+
+          F.col(idCol).cast("string").as("_doc_id") :+
+          F.col(jsonCol).cast("string").as("_js")): _*)
+      val violType = ArrayType(StructType(Seq(
+        StructField("constraint_id", StringType, nullable = false),
+        StructField("observed", StringType, nullable = false),
+        StructField("expected", StringType, nullable = false))),
+        containsNull = false)
+      val outSchema = StructType(src.schema.fields.take(nPart) ++ Seq(
+        StructField("_doc_id", StringType),
+        StructField("_ok", BooleanType, nullable = false),
+        StructField("_viols", violType)))
+      val rows = src.mapPartitions { it =>
+        it.map { r =>
+          docEngineRows.incrementAndGet()
+          val viols = graft.exec.JsonValidator
+            .detailRows(compiled, r.getString(nPart), r.getString(nPart + 1))
+            .map(t => Row(t._2, t._3, t._4)).toSeq
+          Row.fromSeq(r.toSeq.take(nPart) ++ Seq(r.getString(nPart),
+            viols.isEmpty, if (viols.isEmpty) null else viols))
+        }
+      }(org.apache.spark.sql.Encoders.row(outSchema))
+      new Evaluation(rows, Nil, table.partitionCols)
+    }
+  }
 
-    val pendingAll = checkpoint.pending(table, chash)
+  /** The one driver loop: pending partitions → one evaluation →
+    * (persisted when violations are written) → violations → checkpoint.
+    * A converged run evaluates nothing and returns empty frames with the
+    * verdict and violation schemas. */
+  private def drive(table: TableProvider, checkpoint: CheckpointStore,
+      runId: String, constraintHash: String, violationsOut: Option[String],
+      maxPartitions: Int)(evaluate: Seq[String] => Evaluation): RunResult = {
+    val pendingAll = checkpoint.pending(table, constraintHash)
     val pending = pendingAll.take(maxPartitions)
     val skipped = table.partitions().diff(pendingAll)
-    if (pending.isEmpty) {
-      import spark.implicits._
-      return RunResult(runId, Seq.empty, skipped,
-        spark.emptyDataFrame,
-        Seq.empty[(String, String, String, String)]
-          .toDF("doc_id", "constraint_id", "observed", "expected"))
-    }
+    val eval = evaluate(pending)
+    if (pending.isEmpty)
+      return RunResult(runId, pending, skipped,
+        eval.verdicts.limit(0), eval.violations.limit(0))
 
-    import org.apache.spark.sql.types._
-    // narrow projection BEFORE the map: partition cols + id + json only
-    // (the corpus may carry arbitrarily wide payload columns), with the
-    // json column cast to string so binary/variant inputs share
-    // JsonValidator.pairs' contract instead of ClassCastException-ing
-    val nPart = table.partitionCols.length
-    val src = table.scan(pending).select(
-      (table.partitionCols.map(F.col) :+
-        F.col(idCol).cast("string").as("_doc_id") :+
-        F.col(jsonCol).cast("string").as("_js")): _*)
-    val violType = ArrayType(StructType(Seq(
-      StructField("constraint_id", StringType, nullable = false),
-      StructField("observed", StringType, nullable = false),
-      StructField("expected", StringType, nullable = false))),
-      containsNull = false)
-    val outSchema = StructType(src.schema.fields.take(nPart) ++ Seq(
-      StructField("_doc_id", StringType),
-      StructField("_viols", violType, nullable = false)))
-    // THE single doc-engine pass: every other output derives from it
-    val perRow = src.mapPartitions { it =>
-      it.map { r =>
-        docEngineRows.incrementAndGet()
-        val viols = graft.exec.JsonValidator
-          .detailRows(compiled, r.getString(nPart), r.getString(nPart + 1))
-          .map(t => org.apache.spark.sql.Row(t._2, t._3, t._4)).toSeq
-        org.apache.spark.sql.Row.fromSeq(
-          r.toSeq.take(nPart) ++ Seq(r.getString(nPart), viols))
+    val persisted = if (violationsOut.isEmpty) Nil else eval.frames
+    persisted.foreach(_.persist(StorageLevel.DISK_ONLY))
+    try {
+      violationsOut.foreach { out =>
+        eval.violations.write.mode(SaveMode.Append).parquet(out)
       }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-
-    val verdicts = perRow
-      .groupBy(table.partitionCols.map(F.col): _*)
-      .agg(F.count(F.lit(1)).as("n_rows"),
-        F.sum(F.when(F.size(F.col("_viols")) > 0, 1L).otherwise(0L))
-          .as("n_bad_rows"))
-      .withColumn("valid", F.col("n_bad_rows") === 0L)
-    // explode drops zero-violation rows — exactly the violations output
-    val violations = perRow
-      .select(F.col("_doc_id").as("doc_id"),
-        F.explode(F.col("_viols")).as("_v"))
-      .select(F.col("doc_id"), F.col("_v.constraint_id"),
-        F.col("_v.observed"), F.col("_v.expected"))
-
-    if (violationsOut.isEmpty) {
-      // verdict-only: one action, one scan; `violations` returned lazy
-      checkpoint.append(
-        checkpointEntries(table, verdicts, chash, runId, pending))
-      RunResult(runId, pending, skipped, verdicts, violations)
-    } else {
-      // two consumers: persist the narrow per-row frame to executor
-      // disk so the write action materializes it and the verdict agg
-      // reuses blocks — the pending corpus is parsed + validated once
-      perRow.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      try {
-        violationsOut.foreach { out =>
-          violations.write.mode(SaveMode.Append).parquet(out)
-        }
-        checkpoint.append(
-          checkpointEntries(table, verdicts, chash, runId, pending))
-      } finally perRow.unpersist(blocking = false)
-      RunResult(runId, pending, skipped, verdicts, violations)
-    }
+      checkpoint.append(checkpointEntries(
+        table, eval.verdicts, constraintHash, runId, pending))
+    } finally persisted.foreach(_.unpersist(blocking = false))
+    RunResult(runId, pending, skipped, eval.verdicts, eval.violations)
   }
 
   /** Collect per-partition verdict rows into checkpoint entries, plus

@@ -10,29 +10,27 @@ import org.apache.spark.sql.types._
  * generalize `uniqueItems` / `enum` / `$ref` to table scope per the north
  * rule (SURVEY.md §2.C).
  *
- * Contract: `violations` returns a DataFrame with exactly the violation
- * schema `(doc_id string, constraint_id string, observed string,
- * expected string)` — same shape the row-local detail path produces, so
- * the validator can `union` all violation sources.
+ * Contract: [[taggedViolations]] returns the check's violation rows —
+ * exactly the violation schema `(doc_id, constraint_id, observed,
+ * expected, instance_path)`, all strings, the same shape the row-local
+ * detail path produces — followed by the partition columns of the
+ * partition each row counts against. Table-scope checks carry no
+ * partition columns: their violations count against every partition.
+ * The validator builds this frame ONCE per check and derives both the
+ * violation rows and the verdict counts from it.
  */
 trait DatasetCheck extends Serializable {
   def id: String
-  def violations(
+  def taggedViolations(
       df: DataFrame,
       idCol: String,
       partitionCols: Seq[String],
       dims: Map[String, DataFrame]): DataFrame
 
-  /** Per-partition violation counts `(partitionCols..., _n_ds_viol)` for
-    * checks whose violations attribute to a partition (RI: the dangling
-    * row's partition; drift: the drifted partition). `None` for
-    * table-scope checks (uniqueness: a duplicate key may span
-    * partitions), whose counts apply globally to every verdict row. */
-  def violationCountsByPartition(
-      df: DataFrame,
-      idCol: String,
-      partitionCols: Seq[String],
-      dims: Map[String, DataFrame]): Option[DataFrame] = None
+  /** Whether a violation counts against EVERY partition rather than the
+    * one it is tagged with (uniqueness: a duplicate key may span
+    * partitions). */
+  def tableScope: Boolean = false
 
   /** Whether the check must see the WHOLE table on a partial/resumed
     * run (uniqueness: duplicates span runs; drift: the baseline is the
@@ -41,6 +39,28 @@ trait DatasetCheck extends Serializable {
     * pending scan — re-running them over the whole table would re-emit
     * already-validated partitions' violations on every resumed run. */
   def needsGlobalScope: Boolean = true
+
+  /** The violation rows alone, without their partition tags. */
+  final def violations(
+      df: DataFrame,
+      idCol: String,
+      partitionCols: Seq[String],
+      dims: Map[String, DataFrame]): DataFrame =
+    taggedViolations(df, idCol, partitionCols, dims)
+      .select(DatasetCheck.violationCols.map(F.col): _*)
+
+  /** Per-partition violation counts `(partitionCols..., _n_ds_viol)`
+    * from the tagged rows; `None` for table-scope checks and
+    * unpartitioned input. */
+  final def violationCountsByPartition(
+      df: DataFrame,
+      idCol: String,
+      partitionCols: Seq[String],
+      dims: Map[String, DataFrame]): Option[DataFrame] =
+    if (tableScope || partitionCols.isEmpty) None
+    else Some(taggedViolations(df, idCol, partitionCols, dims)
+      .groupBy(partitionCols.map(F.col): _*)
+      .agg(F.count(F.lit(1)).as("_n_ds_viol")))
 }
 
 object DatasetCheck {
@@ -78,8 +98,9 @@ object DatasetCheck {
 final case class UniqueCheck(id: String, col: String, expected: String,
     colocated: Boolean = false)
     extends DatasetCheck {
-  def violations(df: DataFrame, idCol: String, partitionCols: Seq[String],
-      dims: Map[String, DataFrame]): DataFrame = {
+  override def tableScope: Boolean = true
+  def taggedViolations(df: DataFrame, idCol: String,
+      partitionCols: Seq[String], dims: Map[String, DataFrame]): DataFrame = {
     val dupKeys =
       if (colocated)
         // raw attribute, no cast: a rewritten expression would not match
@@ -129,7 +150,7 @@ final case class RefIntegrityCheck(
   // dangling keys are facts about individual rows vs an EXTERNAL
   // dimension — nothing cross-partition; pending-scan scope suffices
   override def needsGlobalScope: Boolean = false
-  private def dangling(df: DataFrame, idCol: String,
+  def taggedViolations(df: DataFrame, idCol: String,
       partitionCols: Seq[String], dims: Map[String, DataFrame]): DataFrame = {
     val dim = dims.getOrElse(dimName, throw new IllegalArgumentException(
       s"referential check '$id': dimension '$dimName' not provided"))
@@ -138,25 +159,14 @@ final case class RefIntegrityCheck(
         F.col(col).cast("string").as("_fk") +:
         partitionCols.map(F.col): _*)
       .join(F.broadcast(keys), F.col("_fk") === F.col("_dk"), "left_anti")
-  }
-
-  def violations(df: DataFrame, idCol: String, partitionCols: Seq[String],
-      dims: Map[String, DataFrame]): DataFrame =
-    dangling(df, idCol, partitionCols, dims)
-      .select(
+      .select(Seq(
         F.col("doc_id"),
         F.lit(id).as("constraint_id"),
         F.coalesce(F.col("_fk"), F.lit("null")).as("observed"),
         F.lit(expected).as("expected"),
-        F.lit("/" + col.replace(".", "/")).as("instance_path"))
-
-  override def violationCountsByPartition(
-      df: DataFrame, idCol: String, partitionCols: Seq[String],
-      dims: Map[String, DataFrame]): Option[DataFrame] =
-    if (partitionCols.isEmpty) None
-    else Some(dangling(df, idCol, partitionCols, dims)
-      .groupBy(partitionCols.map(F.col): _*)
-      .agg(F.count(F.lit(1)).as("_n_ds_viol")))
+        F.lit("/" + col.replace(".", "/")).as("instance_path")) ++
+        partitionCols.map(F.col): _*)
+  }
 }
 
 /**
@@ -178,29 +188,10 @@ final case class DriftCheck(
   require(buckets >= 1, s"drift check '$id': buckets must be >= 1")
   require(hi > lo, s"drift check '$id': need hi > lo")
 
-  private def partKeyCol(partitionCols: Seq[String]): org.apache.spark.sql.Column =
-    F.concat_ws("/", partitionCols.map(p =>
-      F.concat(F.lit(p + "="), F.col(p).cast("string"))): _*)
-
-  def violations(df: DataFrame, idCol: String, partitionCols: Seq[String],
-      dims: Map[String, DataFrame]): DataFrame =
-    metrics(df, partitionCols)
-      .filter(F.col("metric") > threshold)
-      .select(
-        partKeyCol(partitionCols).as("doc_id"),
-        F.lit(id).as("constraint_id"),
-        F.concat(F.lit(metric + "="), F.round(F.col("metric"), 6)
-          .cast("string")).as("observed"),
-        F.lit(expected).as("expected"),
-        F.lit("/" + col.replace(".", "/")).as("instance_path"))
-
-  override def violationCountsByPartition(
-      df: DataFrame, idCol: String, partitionCols: Seq[String],
-      dims: Map[String, DataFrame]): Option[DataFrame] =
-    if (partitionCols.isEmpty) None
-    else Some(metrics(df, partitionCols)
-      .filter(F.col("metric") > threshold)
-      .select(partitionCols.map(F.col) :+ F.lit(1L).as("_n_ds_viol"): _*))
+  def taggedViolations(df: DataFrame, idCol: String,
+      partitionCols: Seq[String], dims: Map[String, DataFrame]): DataFrame =
+    DriftMath.violations(metrics(df, partitionCols), partitionCols, id, col,
+      metric, threshold, expected)
 
   /** The per-partition divergence values `(partitionCols..., metric)` —
     * the inspectable face of the check (all partitions above the
@@ -238,29 +229,10 @@ final case class ArrayDriftCheck(
     extends DatasetCheck {
   require(metric == "psi" || metric == "kl", s"unknown drift metric $metric")
 
-  private def partKeyCol(partitionCols: Seq[String]): Column =
-    F.concat_ws("/", partitionCols.map(p =>
-      F.concat(F.lit(p + "="), F.col(p).cast("string"))): _*)
-
-  def violations(df: DataFrame, idCol: String, partitionCols: Seq[String],
-      dims: Map[String, DataFrame]): DataFrame =
-    metrics(df, partitionCols)
-      .filter(F.col("metric") > threshold)
-      .select(
-        partKeyCol(partitionCols).as("doc_id"),
-        F.lit(id).as("constraint_id"),
-        F.concat(F.lit(metric + "="), F.round(F.col("metric"), 6)
-          .cast("string")).as("observed"),
-        F.lit(expected).as("expected"),
-        F.lit("/" + col.replace(".", "/")).as("instance_path"))
-
-  override def violationCountsByPartition(
-      df: DataFrame, idCol: String, partitionCols: Seq[String],
-      dims: Map[String, DataFrame]): Option[DataFrame] =
-    if (partitionCols.isEmpty) None
-    else Some(metrics(df, partitionCols)
-      .filter(F.col("metric") > threshold)
-      .select(partitionCols.map(F.col) :+ F.lit(1L).as("_n_ds_viol"): _*))
+  def taggedViolations(df: DataFrame, idCol: String,
+      partitionCols: Seq[String], dims: Map[String, DataFrame]): DataFrame =
+    DriftMath.violations(metrics(df, partitionCols), partitionCols, id, col,
+      metric, threshold, expected)
 
   def metrics(df: DataFrame, partitionCols: Seq[String]): DataFrame = {
     require(partitionCols.nonEmpty,
@@ -304,6 +276,24 @@ final case class ArrayDriftCheck(
  * observed live in the AQE plan.)
  */
 private[checks] object DriftMath {
+  /** One violation row per partition whose divergence exceeds
+    * `threshold`, tagged with that partition; `doc_id` is its key. */
+  def violations(metrics: DataFrame, partitionCols: Seq[String], id: String,
+      col: String, metric: String, threshold: Double,
+      expected: String): DataFrame =
+    metrics
+      .filter(F.col("metric") > threshold)
+      .select(Seq(
+        F.concat_ws("/", partitionCols.map(p =>
+          F.concat(F.lit(p + "="), F.col(p).cast("string"))): _*)
+          .as("doc_id"),
+        F.lit(id).as("constraint_id"),
+        F.concat(F.lit(metric + "="), F.round(F.col("metric"), 6)
+          .cast("string")).as("observed"),
+        F.lit(expected).as("expected"),
+        F.lit("/" + col.replace(".", "/")).as("instance_path")) ++
+        partitionCols.map(F.col): _*)
+
   def divergence(hist: DataFrame, partitionCols: Seq[String],
       buckets: Int, metric: String, minTotal: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -44,7 +44,7 @@ object JsonValidator {
   /** `observed` for [[DocumentConstraint]] rows: the first 64 code
     * points of the raw text ("null" for a NULL document) — enough to
     * triage what arrived without widening violation rows at 10^12-row
-    * scale. All three paths render identically (code points, not UTF-16
+    * scale. Both string paths render identically (code points, not UTF-16
     * units, matching Spark's `substring`). */
   private val DocumentObservedLen = 64
   private def truncDoc(js: String): String =
@@ -149,77 +149,34 @@ object JsonValidator {
       .unionAll(malformed)
   }
 
-  /** VARIANT path (Spark 4's semi-structured binary type — the
-    * lakehouse-native storage shape for JSON columns): ONE
-    * `try_parse_json` into a variant, then per-column
-    * `try_variant_get` extractions feed the Catalyst engine. Sits
-    * between the other two paths' contracts: unparseable / NULL input
-    * charges [[DocumentConstraint]] (like both), while a valid
-    * NON-OBJECT document extracts null for every column and validates
-    * with pass-on-null applicability (like the schema-free engine,
-    * unlike `from_json`). Extractions are lenient try-casts; their
-    * coercion nuances follow the variant cast rules. On a table that
-    * already stores a variant column, skip the parse and feed the
-    * extractions directly — the scan then prunes shredded variant
-    * subcolumns.
-    *
-    * Duplicate-key documents: `parse_json` REJECTS duplicate object
-    * keys by default, so `{"a":1,"a":2}` is charged to
-    * [[DocumentConstraint]] here while the sibling engines apply
-    * Jackson/from_json last-key-wins. Scraped corpora that need
-    * last-key-wins on this path set
-    * `spark.sql.variant.allowDuplicateKeys=true` (spec-pinned). */
-  def violationsVariant(df: DataFrame, idCol: String, jsonCol: String,
-      schema: StructType, suite: ConstraintSuite,
-      registry: ConstraintRegistry = ConstraintRegistry.empty): DataFrame = {
-    schema.fieldNames.foreach(n =>
-      require(!n.contains("'") && !n.contains("\\"),
-        s"variant path cannot address field '$n' (quote/backslash in " +
-          "the name) — use violationsTyped for such schemas"))
-    val parsed = df.select(
-      F.col(idCol).cast("string").as("_doc_id"),
-      F.col(jsonCol).cast("string").as("_js"),
-      F.try_parse_json(F.col(jsonCol).cast("string")).as("_v"))
-    variantDetail(parsed, F.col("_js").isNull || F.col("_v").isNull,
-      truncDocCol(F.col("_js")), schema, suite, registry)
-  }
-
-  /** PRE-STORED variant path: the lakehouse table already persists a
-    * `VariantType` column (the shape [[violationsVariant]]'s scaladoc
-    * recommends), so there is NO parse step — `try_variant_get`
-    * extractions run straight off the stored binary, and a shredded
-    * variant scan prunes to the addressed subcolumns. A NULL variant
-    * (the writer's representation of an absent / unparseable source
-    * document) is charged to [[DocumentConstraint]]; its `observed`
-    * renders "null" — the raw text is not in hand on this path. */
+  /** PRE-STORED variant path: the lakehouse table persists a
+    * `VariantType` column (Spark 4's semi-structured binary type), so
+    * there is NO parse step — `try_variant_get` extractions run straight
+    * off the stored binary into the Catalyst engine, and a shredded
+    * variant scan prunes to the addressed subcolumns. A valid NON-OBJECT
+    * document extracts null for every column and validates with
+    * pass-on-null applicability (like the schema-free engine, unlike
+    * `from_json`); extractions are lenient try-casts following the
+    * variant cast rules. A NULL variant (the writer's representation of
+    * an absent / unparseable source document) is charged to
+    * [[DocumentConstraint]]; its `observed` renders "null" — the raw
+    * text is not in hand on this path. */
   def violationsVariantColumn(df: DataFrame, idCol: String,
       variantCol: String, schema: StructType, suite: ConstraintSuite,
       registry: ConstraintRegistry = ConstraintRegistry.empty): DataFrame = {
-    val parsed = df.select(
-      F.col(idCol).cast("string").as("_doc_id"),
-      F.col(variantCol).as("_v"))
-    variantDetail(parsed, F.col("_v").isNull, F.lit("null"),
-      schema, suite, registry)
-  }
-
-  /** Shared tail of the two variant paths: extraction projection +
-    * Catalyst validation + the malformed union. `parsed` must carry
-    * `_doc_id` and `_v`. */
-  private def variantDetail(parsed: DataFrame,
-      badPred: org.apache.spark.sql.Column,
-      badObserved: org.apache.spark.sql.Column, schema: StructType,
-      suite: ConstraintSuite,
-      registry: ConstraintRegistry): DataFrame = {
     schema.fieldNames.foreach(n =>
       require(!n.contains("'") && !n.contains("\\"),
         s"variant path cannot address field '$n' (quote/backslash in " +
           "the name) — use violationsTyped for such schemas"))
-    val malformed = parsed.filter(badPred)
+    val parsed = df.select(
+      F.col(idCol).cast("string").as("_doc_id"),
+      F.col(variantCol).as("_v"))
+    val malformed = parsed.filter(F.col("_v").isNull)
       .select(F.col("_doc_id").as("doc_id"),
         F.lit(DocumentConstraint).as("constraint_id"),
-        badObserved.as("observed"),
+        F.lit("null").as("observed"),
         F.lit(DocumentExpected).as("expected"))
-    val typedRows = parsed.filter(!badPred)
+    val typedRows = parsed.filter(F.col("_v").isNotNull)
       .select((F.col("_doc_id") +: schema.fields.toSeq.map { f =>
         // bracket path form: a field named "a.b" must not parse as
         // a nested path

@@ -1,7 +1,9 @@
 package graft.exec
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField,
+  StructType}
 
 import graft.compile.CompiledSuite
 
@@ -58,17 +60,11 @@ object Validator {
       partitionCols: Seq[String],
       idCol: String = "doc_id",
       dims: Map[String, DataFrame] = Map.empty,
-      globalDf: Option[DataFrame] = None): DataFrame = {
-    val ok = suite.rowPredicate
-    val rowVerdicts = aggVerdict(df, ok, partitionCols)
-    attachDatasetCounts(rowVerdicts, df, globalDf.getOrElse(df), suite,
-      idCol, partitionCols, dims)
-  }
+      globalDf: Option[DataFrame] = None): DataFrame =
+    evaluate(df, suite, partitionCols, idCol, dims, globalDf).verdicts
 
   /** Detail path: violation rows from every source, union'd, plus
-    * verdicts. Row-local violations are built columnar — an array of
-    * per-constraint structs filtered to failures then exploded — so the
-    * whole construction stays inside codegen with zero UDFs. */
+    * verdicts — both views of ONE [[Evaluation]]. */
   def validateWithDetails(
       df: DataFrame,
       suite: CompiledSuite,
@@ -76,171 +72,146 @@ object Validator {
       idCol: String = "doc_id",
       dims: Map[String, DataFrame] = Map.empty,
       globalDf: Option[DataFrame] = None): ValidationReport = {
-
-    val rowViolations: DataFrame =
-      if (suite.rowChecks.isEmpty) emptyViolations(df)
-      else {
-        val structs = F.array(suite.rowChecks.map { c =>
-          F.struct(
-            F.lit(c.id).as("constraint_id"),
-            // NULL predicate results are failures everywhere: without
-            // the coalesce the filter below drops the null element and
-            // a row counted bad by the verdict emits no violation row
-            F.coalesce(c.pred, F.lit(false)).as("ok"),
-            // observed can render decimals/arrays to strings — `when`
-            // branches are lazy in codegen, so pay that only on rows
-            // that failed (passing structs are filtered out below and
-            // their observed value never surfaces)
-            F.when(F.coalesce(c.pred, F.lit(false)), F.lit("null"))
-              .otherwise(F.coalesce(c.observed.cast("string"),
-                F.lit("null")))
-              .as("observed"),
-            F.lit(c.expected).as("expected"),
-            // instance_path can re-scan an array to find the first
-            // failing index — `when` branches are lazy in codegen, so
-            // pay that only on rows that actually failed the check
-            F.when(F.coalesce(c.pred, F.lit(false)), F.lit("/"))
-              .otherwise(F.coalesce(c.instancePath, F.lit("/")))
-              .as("instance_path"))
-        }: _*)
-        // Gate rows through ONE codegen any-constraint-failed
-        // disjunction BEFORE building/exploding the violation structs:
-        // on a mostly-clean table (the normal case) the vast majority
-        // of rows short-circuit out of the scan stage without ever
-        // constructing a struct, and the Generate runs only over the
-        // failing sliver. Result-identical: a row passing every check
-        // contributes zero violation rows either way.
-        val anyFail = suite.rowChecks
-          .map(c => !F.coalesce(c.pred, F.lit(false)))
-          .reduce(_ || _)
-        // Explode ALL structs and drop passing ones with a plain Filter
-        // AFTER the Generate: a higher-order `filter(structs, !ok)`
-        // lambda reads nicer but ArrayFilter is CodegenFallback, which
-        // drags the entire struct construction — every predicate,
-        // observed rendering and instance-path CASE — into interpreted
-        // eval() per row. This shape keeps construction, explode and
-        // drop inside whole-stage codegen; the extra per-row structs
-        // exist only inside the stage, never shuffle.
-        df.filter(anyFail)
-          .select(
-            F.col(idCol).cast("string").as("doc_id"),
-            F.explode(structs).as("_v"))
-          .filter(!F.col("_v.ok"))
-          .select(
-            F.col("doc_id"),
-            F.col("_v.constraint_id").as("constraint_id"),
-            F.col("_v.observed").as("observed"),
-            F.col("_v.expected").as("expected"),
-            F.col("_v.instance_path").as("instance_path"))
-      }
-
-    val dsDf = globalDf.getOrElse(df)
-    val dsViolations = suite.datasetChecks.map(c =>
-      c.violations(if (c.needsGlobalScope) dsDf else df,
-        idCol, partitionCols, dims))
-    val violations = (rowViolations +: dsViolations).reduce(_ unionAll _)
-
-    val verdicts = validate(df, suite, partitionCols, idCol, dims, globalDf)
-    ValidationReport(verdicts, violations)
+    val e = evaluate(df, suite, partitionCols, idCol, dims, globalDf)
+    ValidationReport(e.verdicts, e.violations)
   }
 
-  /** Per-partition verdict aggregate: every(pred), row + bad-row counts —
-    * partial+final hash aggregate, so the shuffle carries one row per
-    * (input-partition × verdict-partition).
+  /** The Catalyst engine's evaluation of `suite` over `df`: the narrow
+    * per-row frame plus one tagged frame per dataset check, each check
+    * seeing the scope it needs — local-scope checks (RI) must not
+    * re-scan the whole table on a partial run. */
+  private[graft] def evaluate(
+      df: DataFrame,
+      suite: CompiledSuite,
+      partitionCols: Seq[String],
+      idCol: String,
+      dims: Map[String, DataFrame],
+      globalDf: Option[DataFrame]): Evaluation = {
+    val ok = F.coalesce(suite.rowPredicate, F.lit(false))
+    // one struct per constraint, NULL where it passed: `when` branches
+    // are lazy in codegen, so observed rendering (decimals/arrays to
+    // strings) and instance_path (which can re-scan an array for the
+    // first failing index) are paid only on rows that failed. NULL
+    // predicate results are failures everywhere.
+    val viols =
+      if (suite.rowChecks.isEmpty) F.lit(null).cast(ArrayType(ViolationType))
+      else F.array(suite.rowChecks.map { c =>
+        F.when(!F.coalesce(c.pred, F.lit(false)), F.struct(
+          F.lit(c.id).as("constraint_id"),
+          F.coalesce(c.observed.cast("string"), F.lit("null"))
+            .as("observed"),
+          F.lit(c.expected).as("expected"),
+          F.coalesce(c.instancePath, F.lit("/")).as("instance_path")))
+      }: _*)
+    // the id column is optional for verdict-only callers: only the
+    // violation derivation reads `_doc_id`
+    val id =
+      if (scala.util.Try(df.select(F.col(idCol))).isFailure) Nil
+      else Seq(F.col(idCol).cast("string").as("_doc_id"))
+    val rows = df.select(partitionCols.map(F.col) ++ id ++ Seq(
+      ok.as("_ok"), F.when(!ok, viols).as("_viols")): _*)
+    val dsDf = globalDf.getOrElse(df)
+    new Evaluation(rows, suite.datasetChecks.map(c => c ->
+      c.taggedViolations(if (c.needsGlobalScope) dsDf else df,
+        idCol, partitionCols, dims)), partitionCols)
+  }
+
+  private val ViolationType = StructType(
+    Seq("constraint_id", "observed", "expected", "instance_path")
+      .map(StructField(_, StringType)))
+}
+
+/**
+ * ONE evaluation of a suite — the single source of both of the
+ * reference's views (boolean verdicts and error rows); the validator,
+ * both resumable runners and the streaming path all derive from it.
+ *
+ *  - `rows`: the narrow per-row frame `(partitionCols..., _doc_id,
+ *    _ok, _viols)`. `_viols` is NULL on passing rows and otherwise an array
+ *    of per-constraint violation structs, NULL for the constraints that
+ *    held. Any engine can produce it (Catalyst, the doc engine).
+ *  - `checks`: each dataset check with its tagged violation frame
+ *    ([[graft.checks.DatasetCheck.taggedViolations]]), built once.
+ *
+ * Both derivations are lazy plans over these frames, so a caller that
+ * persists [[frames]] evaluates every row and every check once however
+ * many of the derived outputs it consumes.
+ */
+private[graft] final class Evaluation(
+    val rows: DataFrame,
+    val checks: Seq[(graft.checks.DatasetCheck, DataFrame)],
+    partitionCols: Seq[String]) {
+
+  /** The frames every derivation reads. */
+  def frames: Seq[DataFrame] = rows +: checks.map(_._2)
+
+  /** Per-partition verdicts: `n_rows`, `n_bad_rows`, `rows_ok`, the
+    * dataset-check counts and `valid`.
     *
-    * The predicate is evaluated ONCE into a projected boolean column and
-    * the aggregates consume that column. Inlining `ok` into both `sum` and
-    * `every` duplicates the whole predicate tree in the generated
-    * aggregate function — double the work, and (pre-freshName) the trigger
-    * for the Janino local-redefinition fallback. */
-  private def aggVerdict(
-      df: DataFrame, ok: Column, partitionCols: Seq[String]): DataFrame = {
-    val okCol = "_graft_ok"
-    // coalesce BEFORE aggregating: a NULL predicate result must read as
-    // one consistent answer (bad) across all three aggregates — raw
-    // nulls are counted by sum's otherwise-branch but SKIPPED by
-    // every(), which would report valid=true with n_bad_rows > 0
-    val projected = df
-      .select(partitionCols.map(F.col) :+
-        F.coalesce(ok, F.lit(false)).as(okCol): _*)
-    val okc = F.col(okCol)
+    * Partition-attributable check violations count against their tagged
+    * partition; table-scope ones (uniqueness) count globally and apply
+    * to every row. A partition is `valid` iff its rows pass, it has no
+    * attributable violations, and no table-scope check failed anywhere
+    * — the per-partition pass/fail the north rule asks for, without
+    * pretending cross-partition facts are local.
+    *
+    * Reads only the partition columns and `_ok` of `rows`, so column
+    * pruning leaves the fast path one predicate projection and one
+    * partial+final hash aggregate. `_ok` is coalesced BEFORE aggregating:
+    * a NULL predicate result must read as one consistent answer (bad)
+    * across all three aggregates — raw nulls are counted by sum's
+    * otherwise-branch but SKIPPED by every(). */
+  lazy val verdicts: DataFrame = {
+    val pcols = partitionCols.map(F.col)
+    val okc = F.col("_ok")
     val aggs = Seq(
       F.count(F.lit(1)).as("n_rows"),
       F.sum(F.when(okc, 0L).otherwise(1L)).as("n_bad_rows"),
       F.coalesce(F.every(okc), F.lit(true)).as("rows_ok"))
-    if (partitionCols.isEmpty)
-      projected.agg(aggs.head, aggs.tail: _*)
-    else
-      projected.groupBy(partitionCols.map(F.col): _*)
-        .agg(aggs.head, aggs.tail: _*)
-  }
+    val rowVerdicts =
+      if (partitionCols.isEmpty) rows.agg(aggs.head, aggs.tail: _*)
+      else rows.groupBy(pcols: _*).agg(aggs.head, aggs.tail: _*)
 
-  /** Dataset-check outcomes folded into the verdict rows.
-    *
-    * Partition-attributable checks (referential integrity, drift) count
-    * per partition and join onto the matching verdict row; table-scope
-    * checks (uniqueness — a duplicate key can span partitions) count
-    * globally and apply to every row. A partition is `valid` iff its
-    * rows pass, it has no attributable violations, and no table-scope
-    * check failed anywhere — the per-partition pass/fail the north rule
-    * asks for, without pretending cross-partition facts are local. */
-  private def attachDatasetCounts(
-      verdicts: DataFrame,
-      localDf: DataFrame,
-      globalDf: DataFrame,
-      suite: CompiledSuite,
-      idCol: String,
-      partitionCols: Seq[String],
-      dims: Map[String, DataFrame]): DataFrame = {
-    if (suite.datasetChecks.isEmpty)
-      return verdicts
-        .withColumn("n_partition_violations", F.lit(0L))
-        .withColumn("n_global_violations", F.lit(0L))
-        .withColumn("valid", F.col("rows_ok"))
-
-    // Build each check's per-partition-count plan ONCE: re-invoking the
-    // method would construct (and for drift, re-derive) the whole subplan
-    // a second time for the same logical question. Each check sees the
-    // scope it needs — local-scope checks (RI) must not re-scan the
-    // whole table on a partial run.
-    def frameFor(c: graft.checks.DatasetCheck): DataFrame =
-      if (c.needsGlobalScope) globalDf else localDf
-    val countPlans = suite.datasetChecks.map(c =>
-      c -> (if (partitionCols.isEmpty) None
-            else c.violationCountsByPartition(
-              frameFor(c), idCol, partitionCols, dims)))
-    val attributableCounts = countPlans.collect { case (_, Some(p)) => p }
-    val global = countPlans.collect { case (c, None) => c }
-
-    val withPart = attributableCounts
-      .reduceOption(_ unionAll _)
-      .map(_.groupBy(partitionCols.map(F.col): _*)
-        .agg(F.sum("_n_ds_viol").as("n_partition_violations")))
-    val v1 = withPart match {
-      case Some(counts) =>
-        verdicts.join(counts, partitionCols, "left")
+    val (global, attributable) =
+      checks.partition(_._1.tableScope || partitionCols.isEmpty)
+    val withPart = attributable.map(_._2.select(pcols: _*))
+      .reduceOption(_ unionAll _) match {
+      case Some(tags) =>
+        rowVerdicts.join(tags.groupBy(pcols: _*)
+            .agg(F.count(F.lit(1)).as("n_partition_violations")),
+          partitionCols, "left")
           .withColumn("n_partition_violations",
             F.coalesce(F.col("n_partition_violations"), F.lit(0L)))
-      case None =>
-        verdicts.withColumn("n_partition_violations", F.lit(0L))
+      case None => rowVerdicts.withColumn("n_partition_violations", F.lit(0L))
     }
-
-    val v2 =
-      if (global.isEmpty) v1.withColumn("n_global_violations", F.lit(0L))
-      else {
-        val total = global
-          .map(c => c.violations(frameFor(c), idCol, partitionCols, dims))
-          .reduce(_ unionAll _)
-          .agg(F.count(F.lit(1)).as("n_global_violations"))
-        v1.crossJoin(F.broadcast(total))
-      }
-    v2.withColumn("valid",
+    val withGlobal = global.map(_._2.select(F.lit(1).as("_one")))
+      .reduceOption(_ unionAll _) match {
+      case Some(all) => withPart.crossJoin(F.broadcast(
+        all.agg(F.count(F.lit(1)).as("n_global_violations"))))
+      case None => withPart.withColumn("n_global_violations", F.lit(0L))
+    }
+    withGlobal.withColumn("valid",
       F.col("rows_ok") && F.col("n_partition_violations") === 0L &&
         F.col("n_global_violations") === 0L)
   }
 
-  private def emptyViolations(df: DataFrame): DataFrame = {
-    import df.sparkSession.implicits._
-    df.sparkSession.emptyDataset[Violation].toDF()
+  /** Violation rows of every source, union'd. Row-local ones explode
+    * from `_viols` behind a plain `_ok` filter: the filter pushes down as
+    * ONE codegen any-constraint-failed gate, so on a mostly-clean table
+    * the vast majority of rows short-circuit out of the scan stage
+    * without constructing a struct, and the Generate runs only over the
+    * failing sliver. NULL elements drop with a plain Filter AFTER the
+    * Generate: a higher-order `filter(_viols, …)` lambda reads nicer but
+    * ArrayFilter is CodegenFallback, which drags the whole struct
+    * construction into interpreted eval() per row. */
+  lazy val violations: DataFrame = {
+    val rowViolations = rows.filter(!F.col("_ok"))
+      .select(F.col("_doc_id").as("doc_id"),
+        F.explode(F.col("_viols")).as("_v"))
+      .filter(F.col("_v").isNotNull)
+      .select("doc_id", "_v.*")
+    (rowViolations +: checks.map(_._2
+      .select(graft.checks.DatasetCheck.violationCols.map(F.col): _*)))
+      .reduce(_ unionAll _)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 import graft.compile.CompiledSuite
+import graft.exec.Validator
 
 /** One streaming-dedup event: a record whose key was already seen. */
 final case class DupEvent(
@@ -25,39 +26,20 @@ final case class DupEvent(
 object StreamValidator {
 
   /** Violation stream: one row per failed constraint per record —
-    * identical construction to the batch detail path (array-of-structs →
-    * filter → explode), appended continuously. */
+    * the batch detail path's derivation, appended continuously. */
   def violations(
-      stream: DataFrame, suite: CompiledSuite, idCol: String): DataFrame = {
-    // dataset-level checks would be SILENTLY dropped here — reject them
-    // outright; the caller must strip them deliberately (batch path owns
-    // unique/RI/drift semantics)
+      stream: DataFrame, suite: CompiledSuite, idCol: String): DataFrame =
+    evaluate(stream, suite, Nil, idCol).violations
+
+  /** The batch evaluation over a stream. Dataset-level checks would be
+    * SILENTLY dropped here — reject them outright; the caller must strip
+    * them deliberately (batch path owns unique/RI/drift semantics). */
+  private def evaluate(stream: DataFrame, suite: CompiledSuite,
+      keys: Seq[String], idCol: String) = {
     require(suite.datasetChecks.isEmpty,
       "streaming path validates row-local checks only; dataset-level " +
         "checks (unique/RI/drift) belong to the batch path")
-    val structs = F.array(suite.rowChecks.map { c =>
-      F.struct(
-        F.lit(c.id).as("constraint_id"),
-        // NULL predicate = failure, like the batch detail path — the
-        // filter below would treat a raw null as "drop", silently
-        // losing the violation
-        F.coalesce(c.pred, F.lit(false)).as("ok"),
-        F.coalesce(c.observed.cast("string"), F.lit("null")).as("observed"),
-        F.lit(c.expected).as("expected"),
-        // lazily computed only on failing rows (see batch detail path)
-        F.when(F.coalesce(c.pred, F.lit(false)), F.lit("/"))
-          .otherwise(F.coalesce(c.instancePath, F.lit("/")))
-          .as("instance_path"))
-    }: _*)
-    stream.select(
-        F.col(idCol).cast("string").as("doc_id"),
-        F.explode(F.filter(structs, s => !s.getField("ok"))).as("_v"))
-      .select(
-        F.col("doc_id"),
-        F.col("_v.constraint_id").as("constraint_id"),
-        F.col("_v.observed").as("observed"),
-        F.col("_v.expected").as("expected"),
-        F.col("_v.instance_path").as("instance_path"))
+    Validator.evaluate(stream, suite, keys, idCol, Map.empty, None)
   }
 
   /** Streaming exact-dedup with CUSTOM STATE — the
@@ -120,10 +102,10 @@ object StreamValidator {
   }
 
   /** Windowed verdicts: per (event-time window × partition) validity,
-    * watermarked so state is bounded — the streaming analogue of the
-    * per-partition verdict row. Late data beyond the watermark is
-    * dropped by Spark; the window's verdict finalizes at watermark
-    * passage (append output mode). */
+    * watermarked so state is bounded — the batch verdict derivation
+    * with the event-time `window` as one more verdict key. Late data
+    * beyond the watermark is dropped by Spark; the window's verdict
+    * finalizes at watermark passage (append output mode). */
   def windowedVerdicts(
       stream: DataFrame,
       suite: CompiledSuite,
@@ -131,23 +113,10 @@ object StreamValidator {
       windowDuration: String,
       watermarkDelay: String,
       partitionCols: Seq[String]): DataFrame = {
-    // predicate evaluated ONCE into a projected column (same reasoning
-    // as Validator.aggVerdict: no duplicated predicate tree under two
-    // aggregate expressions)
-    val okc = F.col("_graft_ok")
-    val keys = F.window(F.col(timeCol), windowDuration) +:
-      partitionCols.map(F.col)
-    stream
-      // coalesce BEFORE aggregating (same reasoning as the batch
-      // aggVerdict): sum counts raw nulls as bad but every() skips
-      // them — a window would report rows_ok=true with n_bad_rows>0
-      .withColumn("_graft_ok", F.coalesce(suite.rowPredicate, F.lit(false)))
+    val windowed = stream
       .withWatermark(timeCol, watermarkDelay)
-      .groupBy(keys: _*)
-      .agg(
-        F.count(F.lit(1)).as("n_rows"),
-        F.sum(F.when(okc, 0L).otherwise(1L)).as("n_bad_rows"),
-        F.coalesce(F.every(okc), F.lit(true)).as("rows_ok"))
+      .withColumn("window", F.window(F.col(timeCol), windowDuration))
+    evaluate(windowed, suite, "window" +: partitionCols, "doc_id").verdicts
   }
 
   /** Windowed distribution drift — the streaming analogue of the batch

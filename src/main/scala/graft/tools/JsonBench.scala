@@ -10,10 +10,10 @@ import graft.exec.JsonValidator
 
 /**
  * Raw-JSON-document validation throughput: a parquet-materialized
- * corpus of JSON strings (the JSONL shape) timed through all THREE
- * execution paths — the schema-free document engine in a distributed
- * map, the from_json + Catalyst lowering, and the Spark 4 variant
- * lowering. Prints one JSON line.
+ * corpus of JSON strings (the JSONL shape) timed through its execution
+ * paths — the schema-free document engine in a distributed map, the
+ * from_json + Catalyst lowering, and a pre-stored Spark 4 variant
+ * column. Prints one JSON line.
  * Run: `sbt "runMain graft.tools.JsonBench [nDocs] [cpus]"`.
  */
 object JsonBench {
@@ -89,8 +89,6 @@ object JsonBench {
       .filter(!F.col("ok")).count()
     JsonValidator.violationsTyped(docs.limit(10000), "id", "js",
       docSchema, suite).count()
-    JsonValidator.violationsVariant(docs.limit(10000), "id", "js",
-      docSchema, suite).count()
 
     val (docSec, docBad) = time(3) {
       JsonValidator.verdicts(docs, "id", "js", compiled)
@@ -101,10 +99,6 @@ object JsonBench {
     }
     val (typedSec, typedRows) = time(3) {
       JsonValidator.violationsTyped(docs, "id", "js", docSchema, suite)
-        .count()
-    }
-    val (varSec, varRows) = time(3) {
-      JsonValidator.violationsVariant(docs, "id", "js", docSchema, suite)
         .count()
     }
 
@@ -157,7 +151,7 @@ object JsonBench {
       s"resume contract broke: ${r1.processed.size}/${r2.processed.size}")
     val runJsonSec = runHalfSec + resumeSec
 
-    println(f"""{"json_bench":{"n_docs":$nDocs,"cpus":$cpus,"doc_engine":{"sec":$docSec%.2f,"docs_per_sec":${nDocs / docSec}%.0f,"bad_docs":$docBad},"doc_engine_details":{"sec":$detailSec%.2f,"docs_per_sec":${nDocs / detailSec}%.0f,"violations":$detailRows},"typed_from_json":{"sec":$typedSec%.2f,"docs_per_sec":${nDocs / typedSec}%.0f,"violations":$typedRows},"variant":{"sec":$varSec%.2f,"docs_per_sec":${nDocs / varSec}%.0f,"violations":$varRows},"variant_stored":{"sec":$vcolSec%.2f,"docs_per_sec":${nDocs / vcolSec}%.0f,"violations":$vcolRows},"run_json":{"sec":$runJsonSec%.2f,"sec_first_half":$runHalfSec%.2f,"sec_resume":$resumeSec%.2f,"docs_per_sec":${nDocs / runJsonSec}%.0f,"partitions":16,"kill_resume_ok":true},"load_start":$loadStart%.2f,"load_end":${load()}%.2f}}""")
+    println(f"""{"json_bench":{"n_docs":$nDocs,"cpus":$cpus,"doc_engine":{"sec":$docSec%.2f,"docs_per_sec":${nDocs / docSec}%.0f,"bad_docs":$docBad},"doc_engine_details":{"sec":$detailSec%.2f,"docs_per_sec":${nDocs / detailSec}%.0f,"violations":$detailRows},"typed_from_json":{"sec":$typedSec%.2f,"docs_per_sec":${nDocs / typedSec}%.0f,"violations":$typedRows},"variant_stored":{"sec":$vcolSec%.2f,"docs_per_sec":${nDocs / vcolSec}%.0f,"violations":$vcolRows},"run_json":{"sec":$runJsonSec%.2f,"sec_first_half":$runHalfSec%.2f,"sec_resume":$resumeSec%.2f,"docs_per_sec":${nDocs / runJsonSec}%.0f,"partitions":16,"kill_resume_ok":true},"load_start":$loadStart%.2f,"load_end":${load()}%.2f}}""")
     spark.stop()
   }
 }

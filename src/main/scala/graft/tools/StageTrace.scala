@@ -45,13 +45,17 @@ object StageTrace {
     })
     val q = graft.SparkEntry.queries(name)
     def body(): Long = q(spark, sfDir).count()
+    def drain(): Unit =
+      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
     body(); body() // warm
+    drain()
     trace = true
     (1 to reps).foreach { _ =>
       stageWallSum = 0L; jobs = 0
       val t0 = System.nanoTime()
       body()
       val tot = (System.nanoTime() - t0) / 1e9
+      drain()
       println(f"[total] $name $tot%.3f s jobs=$jobs " +
         f"stage-wall-sum=${stageWallSum / 1000.0}%.3f s " +
         f"(gap=${tot - stageWallSum / 1000.0}%.3f s driver/planning)")

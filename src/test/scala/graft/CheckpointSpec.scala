@@ -184,6 +184,57 @@ class CheckpointSpec extends SparkSpec {
     assert(r2.processed.isEmpty)
   }
 
+  test("run evaluates once: the verdict action reads the persisted evaluation") {
+    // with violations written, the verdicts must come from the same
+    // evaluation the write materialized — not from a second scan of the
+    // pending partitions and of every dataset check's input
+    val base = Files.createTempDirectory("graft-cp-once").toString
+    val table = mkTable(s"$base/data")
+    val full = ConstraintCompiler.compile(ConstraintSuite("once", Seq(
+      SizeConsistency("sc", "n_tok", "tokens"),
+      Bounds("nt", "n_tok", Some(1), Some(8192)),
+      Unique("uq", "doc_id"),
+      RefIntegrity("src_known", "source", "sources", "source"),
+      NoDrift("nt_stable", "n_tok", 0, 2048, 32, "psi", 0.4))))
+    val dims = Map("sources" -> SequenceGen.sourcesDim(spark, 4))
+    val cp = new CheckpointStore(spark, s"$base/checkpoint")
+    val r = PartitionedRunner.run(table, full, cp, "once", dims = dims,
+      violationsOut = Some(s"$base/violations"), maxPartitions = 3)
+    assert(r.processed.size == 3)
+    val scans = graft.tools.PlanWalk
+      .fileScans(r.verdicts.queryExecution.executedPlan)
+    assert(scans.isEmpty, scans.map(_.relation.location.rootPaths))
+
+    // same answers as the one-shot detail path over the same scope
+    val direct = graft.exec.Validator.validateWithDetails(
+      table.scan(r.processed), full, table.partitionCols, dims = dims,
+      globalDf = Some(table.scanAll()))
+    val entries = cp.load().collect().map(e => e.getAs[String]("partition") ->
+      (e.getAs[Long]("n_bad_rows"), e.getAs[Boolean]("valid"))).toMap
+    val want = direct.verdicts.collect().map(v =>
+      s"source=${v.getAs[String]("source")}" ->
+        (v.getAs[Long]("n_bad_rows"), v.getAs[Boolean]("valid"))).toMap
+    assert(entries == want)
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("constraint_id", "doc_id").collect().toSeq
+    assert(sorted(spark.read.parquet(s"$base/violations")) ==
+      sorted(direct.violations))
+  }
+
+  test("converged run returns empty frames with the output schemas") {
+    val base = Files.createTempDirectory("graft-cp-noop").toString
+    val table = mkTable(s"$base/data")
+    val cp = new CheckpointStore(spark, s"$base/checkpoint")
+    val first = PartitionedRunner.run(table, suite, cp, "r1",
+      violationsOut = Some(s"$base/violations"))
+    val noop = PartitionedRunner.run(table, suite, cp, "r2")
+    assert(noop.processed.isEmpty)
+    assert(noop.verdicts.schema == first.verdicts.schema)
+    assert(noop.verdicts.select("valid").collect().isEmpty)
+    assert(noop.violations.schema == first.violations.schema)
+    assert(noop.violations.count() == 0L)
+  }
+
   test("runJson: resumable raw-JSON corpus validation with lineage") {
     import org.apache.spark.sql.{functions => F}
     val base = Files.createTempDirectory("graft-cp-json").toString
@@ -224,6 +275,7 @@ class CheckpointSpec extends SparkSpec {
     assert((r1.processed ++ r2.processed).toSet == table.partitions().toSet)
     val r3 = PartitionedRunner.runJson(table, jsonSuite, cp, "j3")
     assert(r3.processed.isEmpty)
+    assert(r3.verdicts.select("valid").collect().isEmpty)
 
     // verdicts: src1 (planted 9999 > 8192) invalid, malformed counted
     val rows = cp.load().collect()

@@ -87,62 +87,6 @@ class JsonValidatorSpec extends SparkSpec {
       ("n3", JsonValidator.DocumentConstraint)))
   }
 
-  test("variant path: agrees with the doc engine incl. non-objects") {
-    val schema = StructType(Seq(
-      StructField("doc_id", StringType),
-      StructField("n_tok", IntegerType),
-      StructField("tokens", ArrayType(IntegerType)),
-      StructField("source", StringType)))
-    val variant = JsonValidator
-      .violationsVariant(docs, "id", "js", schema, suite)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2),
-        r.getString(3))).toSet
-    val docEngine = JsonValidator
-      .violations(docs, "id", "js", JsonValidator.compile(suite))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2),
-        r.getString(3))).toSet
-    assert(variant == docEngine)
-
-    // valid NON-OBJECT documents: variant extracts null per column →
-    // pass-on-null, matching the schema-free engine (not from_json)
-    val nonObj = Seq(("n1", "[1,2]"), ("n2", "7"), ("n3", "null"))
-      .toDF("id", "js")
-    val relaxed = ConstraintSuite("r", Seq(
-      Bounds("n_max", "n_tok", None, Some(BigDecimal(100)))))
-    assert(JsonValidator
-      .violationsVariant(nonObj, "id", "js",
-        StructType(Seq(StructField("n_tok", IntegerType))), relaxed)
-      .isEmpty)
-
-    // duplicate-key contract: parse_json rejects duplicates by default
-    // (→ _document), while the sibling engines apply last-key-wins;
-    // the documented conf restores last-key-wins on this path
-    val dup = Seq(("d1", """{"n_tok":1,"n_tok":500}""")).toDF("id", "js")
-    val viaVariant = JsonValidator.violationsVariant(dup, "id", "js",
-      StructType(Seq(StructField("n_tok", IntegerType))), relaxed)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(viaVariant == Set(("d1", JsonValidator.DocumentConstraint)))
-    assert(JsonValidator
-      .violations(dup, "id", "js", JsonValidator.compile(relaxed))
-      .collect().map(_.getString(1)).toSet == Set("n_max")) // last wins
-    val conf = spark.conf
-    conf.set("spark.sql.variant.allowDuplicateKeys", "true")
-    try {
-      val lenient = JsonValidator.violationsVariant(dup, "id", "js",
-        StructType(Seq(StructField("n_tok", IntegerType))), relaxed)
-        .collect().map(_.getString(1)).toSet
-      assert(lenient == Set("n_max"))
-    } finally conf.unset("spark.sql.variant.allowDuplicateKeys")
-
-    // quote/backslash field names refuse loudly (variant path syntax)
-    assert(intercept[IllegalArgumentException] {
-      JsonValidator.violationsVariant(nonObj, "id", "js",
-        StructType(Seq(StructField("it's", IntegerType))), relaxed)
-    }.getMessage.contains("violationsTyped"))
-  }
-
   test("stored-variant column: no parse step, agrees with doc engine") {
     val schema = StructType(Seq(
       StructField("doc_id", StringType),
@@ -176,6 +120,12 @@ class JsonValidatorSpec extends SparkSpec {
     assert(varcol.filter(_._2 == JsonValidator.DocumentConstraint)
       .forall(_._3 == "null"))
     assert(varcol.exists(_._2 == JsonValidator.DocumentConstraint))
+
+    // quote/backslash field names refuse loudly (variant path syntax)
+    assert(intercept[IllegalArgumentException] {
+      JsonValidator.violationsVariantColumn(spark.read.parquet(dir), "id",
+        "v", StructType(Seq(StructField("it's", IntegerType))), suite)
+    }.getMessage.contains("violationsTyped"))
   }
 
   test("round-trip: to_json of a typed table validates like the table") {
