@@ -31,7 +31,7 @@ object SparkEntry {
   /** Spread a narrow scan across the session's cores. The bench tables
     * arrive as ONE small parquet file each, so a plain scan is a single
     * split and every per-row pipeline upstream of the first exchange
-    * (shingle hashing, SimHash, JSON render/parse, codecs) runs on one
+    * (shingle hashing, SimHash, JSON render/parse) runs on one
     * core no matter how many the session has — the input-skew shape of
     * guide §2.5 ("one huge unsplittable file: repartition immediately
     * after the read"). Keyed on `key` (deterministic — a round-robin
@@ -357,27 +357,6 @@ object SparkEntry {
         .select("id_a", "id_b", "jaccard")
         .orderBy("id_a", "id_b")
     }),
-    "d_minhash_staged" -> ((s, dir) => {
-      // The staged-signature variant of d_minhash — the 10^12-scale
-      // shape: signatures computed ONCE and MATERIALIZED (localCheckpoint
-      // standing in for the parquet staging table DedupBench writes),
-      // then banded and verify-joined with no signature recompute.
-      // Must produce the exact same verified pair set as d_minhash.
-      // minJaccard = 0 means the est-Jaccard join-back would prune
-      // nothing — band pairs go straight to the exact verify. The
-      // verify shingle size equals the signature shingle size (5), so
-      // ONE staged projection carries both signatures and gram sets:
-      // the corpus text is read exactly once for the whole pipeline.
-      // Spread into the checkpoint — same rationale as d_minhash.
-      val corpus = spread(s, nearDupCorpus(s, dir), "doc_id")
-      val sg = Dedup.minhashSignaturesWithGrams(corpus, "doc_id", "text",
-        numHashes = 64, shingleK = 5).localCheckpoint()
-      val cands = Dedup.minhashBandPairs(sg, numHashes = 64, bands = 32)
-      Dedup.ngramJaccardFromGrams(cands, sg)
-        .filter(F.col("jaccard") >= 0.8)
-        .select("id_a", "id_b", "jaccard")
-        .orderBy("id_a", "id_b")
-    }),
     "d_simhash" -> ((s, dir) => {
       // SimHash banding pipeline, deterministically checkable: banded
       // candidates at Hamming ≤ 3, verified down to pairs with EQUAL
@@ -446,15 +425,6 @@ object SparkEntry {
       Dedup.substringPairs(substrCorpus(s, dir), "doc_id", "text",
           runWords = 16, shingleK = 8)
         .orderBy("id_a", "id_b")
-    }),
-    "d_substr_staged" -> ((s, dir) => {
-      // the staged variant of d_substr — gram artifacts computed ONCE
-      // and MATERIALIZED (localCheckpoint standing in for the parquet
-      // staging table), then pair detection over the stage. Same oracle
-      // string as d_substr: the two paths cannot drift.
-      val grams = Dedup.substringGrams(substrCorpus(s, dir), "doc_id",
-        "text", runWords = 16, shingleK = 8).localCheckpoint()
-      Dedup.substringPairsFromGrams(grams).orderBy("id_a", "id_b")
     }),
     "d_ngram" -> ((s, dir) => {
       val d = docs(s, dir)
@@ -616,247 +586,6 @@ object SparkEntry {
           F.col("doc_id").cast("string").as("doc_id"),
           TextAnalysis.langId(F.col("text")).as("lang_pred"))
         .orderBy("doc_id")
-    }),
-
-    // ---- multimodal ---------------------------------------------------
-    "m_media" -> ((s, dir) => {
-      // Real header decode across all three modalities over
-      // deterministic payloads: PNG/JPEG (dimensions), WAV (sample
-      // rate, channels, duration), MP4 (duration) bytes are BUILT with
-      // doc-derived parameters, then PARSED back by the pure-JVM
-      // parsers inside the mapPartitions decode batch — the oracle
-      // recomputes every field from doc_id alone, so any
-      // parser/builder disagreement breaks the hash match.
-      import s.implicits._
-      import graft.ops.{ImageHeaders, MediaContainers, MediaRow, Multimodal}
-      val rows = docs(s, dir).filter(F.col("doc_id") < 150)
-        .select(F.col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val (kind, payload) = (id % 3) match {
-            case 0 =>
-              val w = (16 + id % 64).toInt
-              val h = (16 + (id * 7) % 64).toInt
-              ("image", if (id % 2 == 0) ImageHeaders.buildPng(w, h)
-                        else ImageHeaders.buildJpeg(w, h))
-            case 1 =>
-              // square-wave PCM at amplitude 500 + id%5000: decoded
-              // RMS == amplitude exactly (closed-form PCM oracle)
-              ("audio", MediaContainers.buildWav(
-                8000, (1 + id % 2).toInt, 16, 10 + id % 50,
-                amplitude = (500 + id % 5000).toInt))
-            case _ =>
-              // real sample table + media data: frame count/sizes/fill
-              // bytes are closed-form in doc_id, so the oracle
-              // recomputes frames_sampled and frame_mean exactly
-              val nf = (5 + id % 10).toInt
-              ("video", MediaContainers.buildMp4(
-                1000L + (id % 60) * 250L,
-                frameSizes = (0 until nf).map(i => (10 + (id + i) % 20).toInt),
-                frameByte = i => ((id * 31 + 7 * i) % 251).toInt))
-          }
-          MediaRow(id.toString, kind, payload, Map.empty)
-        }
-      Multimodal.extractFeatures(rows).toDF()
-        .select(F.col("doc_id"), F.col("media_type"), F.col("width"),
-          F.col("height"), F.col("duration_ms"), F.col("sample_rate"),
-          F.col("channels"), F.round(F.col("rms"), 6).as("rms"),
-          F.col("frames_sampled"),
-          F.round(F.col("frame_mean"), 6).as("frame_mean"),
-          F.col("byte_len"))
-        .orderBy("doc_id")
-    }),
-    "m_png" -> ((s, dir) => {
-      // the SAME pixel pipeline as m_resize, but round-tripped through
-      // a REAL PNG: zlib-deflated IDAT, filter types cycling 0..4 across
-      // rows, CRC-checked chunks — decoded back to raw RGB by
-      // PngCodec (Inflater + unfiltering, pure JVM), then resized and
-      // feature-extracted. Shares m_resize's oracle string: any
-      // filter/inflate bug breaks the pixel hash.
-      import s.implicits._
-      import graft.ops.{PngCodec, RawImage}
-      docs(s, dir).filter(F.col("doc_id") < 150)
-        .select(F.col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val w = (8 + id % 8).toInt
-          val h = (8 + (id * 3) % 8).toInt
-          val png = PngCodec.encode(w, h, (x, y) =>
-            (((id + x) % 256).toInt, ((id * 3 + y) % 256).toInt,
-              (x + y) % 256))
-          val img = PngCodec.decode(png).get
-          val small = RawImage.resizeNearest(img, 4, 4)
-          val (mr, mg, mb) = RawImage.meanRgb(small)
-          (id.toString, small.width, small.height,
-            math.rint(mr * 1e6) / 1e6, math.rint(mg * 1e6) / 1e6,
-            math.rint(mb * 1e6) / 1e6)
-        }
-        .toDF("doc_id", "out_w", "out_h", "mean_r", "mean_g", "mean_b")
-        .orderBy("doc_id")
-    }),
-    "m_jpeg" -> ((s, dir) => {
-      // REAL JPEG entropy round-trip: gray-content images uniform
-      // within each aligned 8×8 block, encoded at quality 100 (all
-      // quantizers 1) — the regime where baseline JPEG is bit-exact
-      // (single integer DC per block, identity color transform), so a
-      // lossy codec still pins to an analytic pixel oracle. Exercises
-      // marker framing, flat-canonical DHT decode, DC prediction, EOB
-      // runs and the IDCT; lossy regimes are spec-tested with
-      // tolerances instead (OpsSpec).
-      import s.implicits._
-      import graft.ops.{JpegCodec, RawImage}
-      docs(s, dir).filter(F.col("doc_id") < 150)
-        .select(F.col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val w = (8 + id % 8).toInt
-          val h = (8 + (id * 3) % 8).toInt
-          def g(x: Int, y: Int): Int =
-            ((id * 7 + (x / 8) * 31 + (y / 8) * 59) % 256).toInt
-          val jpg = JpegCodec.encode(w, h,
-            (x, y) => (g(x, y), g(x, y), g(x, y)), quality = 100)
-          val img = JpegCodec.decode(jpg).get
-          val small = RawImage.resizeNearest(img, 4, 4)
-          val (mr, mg, mb) = RawImage.meanRgb(small)
-          (id.toString, small.width, small.height,
-            math.rint(mr * 1e6) / 1e6, math.rint(mg * 1e6) / 1e6,
-            math.rint(mb * 1e6) / 1e6)
-        }
-        .toDF("doc_id", "out_w", "out_h", "mean_r", "mean_g", "mean_b")
-        .orderBy("doc_id")
-    }),
-    "m_jpeg_prog" -> ((s, dir) => {
-      // The SAME pixel pipeline as m_jpeg but through the PROGRESSIVE
-      // (SOF2) codec: 10-scan successive-approximation encode
-      // (spectral bands, DC/AC refinements, EOB runs), multi-scan
-      // coefficient accumulation on decode. Successive approximation
-      // is exact in the coefficient domain, so the q100 block-uniform
-      // gray regime stays bit-exact and the query pins to the SAME
-      // oracle string as m_jpeg — the two entropy codecs cannot drift.
-      import s.implicits._
-      import graft.ops.{JpegCodec, RawImage}
-      docs(s, dir).filter(F.col("doc_id") < 150)
-        .select(F.col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val w = (8 + id % 8).toInt
-          val h = (8 + (id * 3) % 8).toInt
-          def g(x: Int, y: Int): Int =
-            ((id * 7 + (x / 8) * 31 + (y / 8) * 59) % 256).toInt
-          val jpg = JpegCodec.encodeProgressive(w, h,
-            (x, y) => (g(x, y), g(x, y), g(x, y)), quality = 100)
-          val img = JpegCodec.decode(jpg).get
-          val small = RawImage.resizeNearest(img, 4, 4)
-          val (mr, mg, mb) = RawImage.meanRgb(small)
-          (id.toString, small.width, small.height,
-            math.rint(mr * 1e6) / 1e6, math.rint(mg * 1e6) / 1e6,
-            math.rint(mb * 1e6) / 1e6)
-        }
-        .toDF("doc_id", "out_w", "out_h", "mean_r", "mean_g", "mean_b")
-        .orderBy("doc_id")
-    }),
-    "m_mixed" -> ((s, dir) => {
-      // A MIXED-FORMAT image column — the real shape of a scraped
-      // corpus — through the single magic-sniffing decodeImage entry
-      // point: per doc the payload is PNG (alternating gray-interlaced
-      // Adam7 / palette, exercising the full-matrix decoder), baseline
-      // JPEG at q100, GIF (real LZW, alternating interlace), or binary
-      // PPM. All carry the SAME gray block-uniform pixels (lossless
-      // formats exactly; JPEG exactly in the q100 regime), so the
-      // query pins to the SAME oracle string as m_jpeg — five formats,
-      // one contract.
-      import s.implicits._
-      import graft.ops.{GifCodec, JpegCodec, PngCodec, RawImage}
-      docs(s, dir).filter(F.col("doc_id") < 150)
-        .select(F.col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val w = (8 + id % 8).toInt
-          val h = (8 + (id * 3) % 8).toInt
-          def g(x: Int, y: Int): Int =
-            ((id * 7 + (x / 8) * 31 + (y / 8) * 59) % 256).toInt
-          def rgb(x: Int, y: Int) = (g(x, y), g(x, y), g(x, y))
-          val payload: Array[Byte] = (id % 4) match {
-            case 0 =>
-              if (id % 2 == 0)
-                PngCodec.encodeFull(w, h, rgb, colorType = 0,
-                  bitDepth = 8, interlaced = true)
-              else PngCodec.encodeFull(w, h, rgb, colorType = 3,
-                bitDepth = 8)
-            case 1 => JpegCodec.encode(w, h, rgb, quality = 100)
-            case 2 => GifCodec.encode(w, h, rgb, interlaced = id % 8 == 2)
-            case _ => RawImage.buildPpm(w, h, rgb)
-          }
-          val img = RawImage.decodeImage(payload).get
-          val small = RawImage.resizeNearest(img, 4, 4)
-          val (mr, mg, mb) = RawImage.meanRgb(small)
-          (id.toString, small.width, small.height,
-            math.rint(mr * 1e6) / 1e6, math.rint(mg * 1e6) / 1e6,
-            math.rint(mb * 1e6) / 1e6)
-        }
-        .toDF("doc_id", "out_w", "out_h", "mean_r", "mean_g", "mean_b")
-        .orderBy("doc_id")
-    }),
-    "m_mjpeg" -> ((s, dir) => {
-      // REAL video pixel decode, end to end: per doc a deterministic
-      // MJPEG AVI is BUILT (2–4 quality-100 baseline-JPEG frames,
-      // gray block-uniform pixels — the bit-exact regime m_jpeg
-      // proved), the RIFF container is PARSED back (avih geometry +
-      // frame-chunk addressing), every 2nd frame is entropy-decoded
-      // to pixels, resized to 4×4, and the sampled-frame mean luma is
-      // extracted. The oracle replays geometry, frame sampling and the
-      // pixel formula analytically — any container-walk, frame-
-      // addressing or JPEG bug breaks the hash.
-      import s.implicits._
-      import graft.ops.{AviCodec, JpegCodec, RawImage}
-      docs(s, dir).filter(F.col("doc_id") < 150)
-        .select(F.col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val w = (8 + id % 8).toInt
-          val h = (8 + (id * 3) % 8).toInt
-          val nf = (2 + id % 3).toInt
-          def g(f: Int)(x: Int, y: Int): Int =
-            ((id * 7 + f * 13 + (x / 8) * 31 + (y / 8) * 59) % 256).toInt
-          val frames = (0 until nf).map { f =>
-            JpegCodec.encode(w, h,
-              (x, y) => (g(f)(x, y), g(f)(x, y), g(f)(x, y)),
-              quality = 100)
-          }
-          val avi = AviCodec.buildAvi(w, h, usPerFrame = 40000, frames)
-          val info = AviCodec.parseAvi(avi).get
-          val sampled = AviCodec.decodeFrames(avi, info, stride = 2)
-          val lumas = sampled.map { case (_, img) =>
-            RawImage.meanRgb(RawImage.resizeNearest(img, 4, 4))._1
-          }
-          (id.toString, info.width, info.height, info.nFrames,
-            sampled.size, math.rint(info.fps * 1e6) / 1e6,
-            math.rint(lumas.sum / lumas.size * 1e6) / 1e6)
-        }
-        .toDF("doc_id", "vid_w", "vid_h", "n_frames", "n_sampled",
-          "fps", "mean_luma")
-        .orderBy("doc_id")
-    }),
-    "m_resize" -> ((s, dir) => {
-      // REAL pixel resize: raw-bitmap (PPM P6) images built with
-      // doc-derived pixel formulas, round-tripped through the parser,
-      // nearest-neighbor-resized to 4×4, then feature-extracted
-      // (per-channel means). The oracle replays the source-coordinate
-      // mapping sx = x·srcW/4, sy = y·srcH/4 and the pixel formulas in
-      // SQL — any resampling disagreement breaks the hash.
-      import s.implicits._
-      import graft.ops.RawImage
-      docs(s, dir).filter(F.col("doc_id") < 150)
-        .select(F.col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val w = (8 + id % 8).toInt
-          val h = (8 + (id * 3) % 8).toInt
-          val src = RawImage.buildPpm(w, h, (x, y) =>
-            (((id + x) % 256).toInt, ((id * 3 + y) % 256).toInt,
-              (x + y) % 256))
-          val parsed = RawImage.parsePpm(src).get
-          val small = RawImage.resizeNearest(parsed, 4, 4)
-          val (mr, mg, mb) = RawImage.meanRgb(small)
-          (id.toString, small.width, small.height,
-            math.rint(mr * 1e6) / 1e6, math.rint(mg * 1e6) / 1e6,
-            math.rint(mb * 1e6) / 1e6)
-        }
-        .toDF("doc_id", "out_w", "out_h", "mean_r", "mean_g", "mean_b")
-        .orderBy("doc_id")
     }))
 
   // --------------------------------------------------------------------
@@ -902,72 +631,8 @@ object SparkEntry {
       |  FROM documents WHERE doc_id IS NULL
       |) ORDER BY doc_id, constraint_id""".stripMargin
 
-  /** Shared by m_resize (raw PPM) and m_png (real PNG round-trip):
-    * identical pixel formulas, so one oracle pins both pipelines. */
-  private val resizeOracle =
-    """WITH px AS (SELECT x, y FROM range(0, 4) a(x), range(0, 4) b(y))
-        |SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-        |  CAST(4 AS INTEGER) AS out_w, CAST(4 AS INTEGER) AS out_h,
-        |  ROUND((SELECT AVG(CAST(
-        |      (doc_id + (x * (8 + doc_id % 8)) // 4) % 256 AS DOUBLE))
-        |    FROM px), 6) AS mean_r,
-        |  ROUND((SELECT AVG(CAST(
-        |      (doc_id * 3 + (y * (8 + (doc_id * 3) % 8)) // 4) % 256
-        |      AS DOUBLE)) FROM px), 6) AS mean_g,
-        |  ROUND((SELECT AVG(CAST(
-        |      ((x * (8 + doc_id % 8)) // 4
-        |       + (y * (8 + (doc_id * 3) % 8)) // 4) % 256 AS DOUBLE))
-        |    FROM px), 6) AS mean_b
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin
-
-  /** m_jpeg: the gray block-uniform pixel formula replayed in SQL —
-    * g(x, y) = (id·7 + ⌊sx/8⌋·31 + ⌊sy/8⌋·59) mod 256 at the resize
-    * source coordinates sx = x·w//4, sy = y·h//4. The JPEG round-trip
-    * is exact in this regime, so the hash must match to the pixel. */
-  private val jpegOracle =
-    """WITH px AS (SELECT x, y FROM range(0, 4) a(x), range(0, 4) b(y))
-        |SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-        |  CAST(4 AS INTEGER) AS out_w, CAST(4 AS INTEGER) AS out_h,
-        |  ROUND((SELECT AVG(CAST(
-        |      (doc_id * 7 + ((x * (8 + doc_id % 8)) // 4 // 8) * 31
-        |       + ((y * (8 + (doc_id * 3) % 8)) // 4 // 8) * 59) % 256
-        |      AS DOUBLE)) FROM px), 6) AS mean_r,
-        |  ROUND((SELECT AVG(CAST(
-        |      (doc_id * 7 + ((x * (8 + doc_id % 8)) // 4 // 8) * 31
-        |       + ((y * (8 + (doc_id * 3) % 8)) // 4 // 8) * 59) % 256
-        |      AS DOUBLE)) FROM px), 6) AS mean_g,
-        |  ROUND((SELECT AVG(CAST(
-        |      (doc_id * 7 + ((x * (8 + doc_id % 8)) // 4 // 8) * 31
-        |       + ((y * (8 + (doc_id * 3) % 8)) // 4 // 8) * 59) % 256
-        |      AS DOUBLE)) FROM px), 6) AS mean_b
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin
-
-  /** m_mjpeg: geometry, stride-2 frame sampling and the per-frame
-    * gray formula g(x, y, f) = (id·7 + f·13 + ⌊sx/8⌋·31 + ⌊sy/8⌋·59)
-    * mod 256 replayed analytically at the resize source coordinates.
-    * Every mean divides by a power of two (16 px, 1–2 frames), so the
-    * 6-digit rounding is exact on both sides. */
-  private val mjpegOracle =
-    """WITH px AS (SELECT x, y FROM range(0, 4) a(x), range(0, 4) b(y)),
-      |d AS (SELECT doc_id, 8 + doc_id % 8 AS w,
-      |             8 + (doc_id * 3) % 8 AS h, 2 + doc_id % 3 AS nf
-      |      FROM documents WHERE doc_id < 150),
-      |fr AS (SELECT doc_id, w, h, nf, f
-      |       FROM d, range(0, 4) t(f) WHERE f < nf AND f % 2 = 0)
-      |SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-      |  CAST(MAX(w) AS INTEGER) AS vid_w,
-      |  CAST(MAX(h) AS INTEGER) AS vid_h,
-      |  CAST(MAX(nf) AS INTEGER) AS n_frames,
-      |  CAST(COUNT(*) // 16 AS INTEGER) AS n_sampled,
-      |  CAST(25.0 AS DOUBLE) AS fps,
-      |  ROUND(AVG(CAST(
-      |    (doc_id * 7 + f * 13 + ((x * w) // 4 // 8) * 31
-      |     + ((y * h) // 4 // 8) * 59) % 256 AS DOUBLE)), 6) AS mean_luma
-      |FROM fr, px
-      |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  /** Shared by d_substr (one-shot) and d_substr_staged (materialized
-    * gram artifacts): one oracle string pins both paths. */
+  /** d_substr: every pair's distinct shared 16-word runs, brute-forced
+    * from the same planted corpus. */
   private val substrOracle =
     """WITH corpus AS (
       |  SELECT CAST(doc_id AS VARCHAR) AS id, text
@@ -994,12 +659,6 @@ object SparkEntry {
       |ORDER BY id_a, id_b""".stripMargin
 
   def oracleSql: Map[String, String] = Map(
-    "m_resize" -> resizeOracle,
-    "m_png" -> resizeOracle,
-    "m_jpeg" -> jpegOracle,
-    "m_jpeg_prog" -> jpegOracle,
-    "m_mixed" -> jpegOracle,
-    "m_mjpeg" -> mjpegOracle,
     "v_import" ->
       """SELECT * FROM (
         |  SELECT CAST(l_orderkey AS VARCHAR) || '-' ||
@@ -1158,7 +817,6 @@ object SparkEntry {
         |  MIN(CAST(doc_id AS VARCHAR)) AS keep_id
         |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin,
     "d_substr" -> substrOracle,
-    "d_substr_staged" -> substrOracle,
     "d_ngram" ->
       """WITH g AS (
         |  SELECT CAST(doc_id AS VARCHAR) AS id,
@@ -1283,10 +941,6 @@ object SparkEntry {
         |       ROUND(l[5], 2) AS q99, TRUE AS q99_ok
         |FROM q""".stripMargin,
     "d_minhash" -> minhashOracleSql,
-    // identical result contract to d_minhash — the staged path must not
-    // change the verified pair set, only the plan shape; ONE oracle
-    // string serves both so the contract cannot silently drift
-    "d_minhash_staged" -> minhashOracleSql,
     "d_simhash" ->
       s"""WITH $NearDupCorpusSql,
          |corpus2 AS (
@@ -1415,41 +1069,7 @@ object SparkEntry {
         |ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
         |    ORDER BY cosine DESC, neighbor_id) AS rank FROM scored)
         |SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank
-        |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-    "m_media" ->
-      """WITH idx AS (SELECT i FROM range(0, 20) t(i))
-        |SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-        |  CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-        |       ELSE 'video' END AS media_type,
-        |  CAST(CASE WHEN doc_id % 3 = 0 THEN 16 + doc_id % 64
-        |       ELSE 0 END AS INTEGER) AS width,
-        |  CAST(CASE WHEN doc_id % 3 = 0 THEN 16 + (doc_id * 7) % 64
-        |       ELSE 0 END AS INTEGER) AS height,
-        |  CAST(CASE doc_id % 3 WHEN 0 THEN 0
-        |       WHEN 1 THEN 10 + doc_id % 50
-        |       ELSE 1000 + (doc_id % 60) * 250 END AS BIGINT)
-        |    AS duration_ms,
-        |  CAST(CASE WHEN doc_id % 3 = 1 THEN 8000 ELSE 0 END AS INTEGER)
-        |    AS sample_rate,
-        |  CAST(CASE WHEN doc_id % 3 = 1 THEN 1 + doc_id % 2
-        |       ELSE 0 END AS INTEGER) AS channels,
-        |  ROUND(CASE WHEN doc_id % 3 = 1 THEN CAST(500 + doc_id % 5000 AS DOUBLE)
-        |       ELSE 0.0 END, 6) AS rms,
-        |  CAST(CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 0
-        |       ELSE (5 + doc_id % 10 + 1) // 2 END AS INTEGER)
-        |    AS frames_sampled,
-        |  ROUND(CASE WHEN doc_id % 3 = 2 THEN
-        |      (SELECT AVG(CAST((doc_id * 31 + 7 * i) % 251 AS DOUBLE))
-        |       FROM idx WHERE i < 5 + doc_id % 10 AND i % 2 = 0)
-        |    ELSE 0.0 END, 6) AS frame_mean,
-        |  CAST(CASE doc_id % 3
-        |       WHEN 0 THEN CASE WHEN doc_id % 2 = 0 THEN 45 ELSE 39 END
-        |       WHEN 1 THEN 44 + 16 * (1 + doc_id % 2) * (10 + doc_id % 50)
-        |       ELSE 192 + 4 * (5 + doc_id % 10) +
-        |         (SELECT SUM(10 + (doc_id + i) % 20) FROM idx
-        |          WHERE i < 5 + doc_id % 10)
-        |       END AS INTEGER) AS byte_len
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin)
+        |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin)
 
   /** Exact-intersection contamination oracle over the near-dup corpus —
     * shared verbatim by `d_decontam` (exact broadcast join) and
@@ -1482,8 +1102,7 @@ object SparkEntry {
        |ORDER BY doc_id""".stripMargin
 
   /** Brute-force exact-Jaccard pair oracle over the near-dup corpus
-    * (with the sound size-ratio prefilter) — shared verbatim by
-    * `d_minhash` and `d_minhash_staged`. */
+    * (with the sound size-ratio prefilter) for `d_minhash`. */
   private lazy val minhashOracleSql: String =
     s"""WITH $NearDupCorpusSql,
        |g AS (SELECT id,

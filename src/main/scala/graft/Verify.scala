@@ -16,7 +16,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // local-iteration filter (driver never sets it): run only the named
-    // queries, e.g. GRAFT_VERIFY_ONLY=m_mixed,m_jpeg_prog
+    // queries, e.g. GRAFT_VERIFY_ONLY=d_minhash,v_unique
     val only = sys.env.get("GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     SparkEntry.queries

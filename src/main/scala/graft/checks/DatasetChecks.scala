@@ -86,6 +86,11 @@ object DatasetCheck {
  * Violations: one row per duplicated key value (not per duplicate row) —
  * violation volume stays proportional to the number of BAD KEYS.
  *
+ * SQL-UNIQUE semantics: uniqueness holds over the NON-NULL keys, so NULL
+ * keys are dropped before grouping and never form a duplicate group
+ * (NULLs are `notNull`'s job). Every reported key is therefore a real
+ * value, and a literal key `"null"` cannot be confused with a NULL.
+ *
  * `colocated = true` (storage bucketed / layout-partitioned by the key):
  * the hash-first narrowing is pointless when no exchange happens at all,
  * so the check groups the RAW key attribute in one phase — the bucketed
@@ -105,14 +110,14 @@ final case class UniqueCheck(id: String, col: String, expected: String,
       if (colocated)
         // raw attribute, no cast: a rewritten expression would not match
         // the scan's output partitioning and would resurrect the shuffle
-        df.select(F.col(col).as("_k"))
+        df.filter(F.col(col).isNotNull).select(F.col(col).as("_k"))
           .groupBy("_k").agg(F.count(F.lit(1)).as("_cnt"))
           .filter(F.col("_cnt") > 1)
           .select(F.col("_k").cast("string").as("_k"), F.col("_cnt"))
       else uniqueTwoPhase(df)
     dupKeys
       .select(
-        F.coalesce(F.col("_k"), F.lit("null")).as("doc_id"),
+        F.col("_k").as("doc_id"),
         F.lit(id).as("constraint_id"),
         F.concat(F.lit("count="), F.col("_cnt").cast("string"))
           .as("observed"),
@@ -123,7 +128,8 @@ final case class UniqueCheck(id: String, col: String, expected: String,
   /** Duplicated keys `(_k string, _cnt)` via the hash-first two-phase
     * shape described in the class doc. */
   private def uniqueTwoPhase(df: DataFrame): DataFrame = {
-    val keys = df.select(F.col(col).cast("string").as("_k"))
+    val keys = df.filter(F.col(col).isNotNull)
+      .select(F.col(col).cast("string").as("_k"))
     val candidateHashes = keys
       .select(F.xxhash64(F.col("_k")).as("_h"))
       .groupBy("_h").agg(F.count(F.lit(1)).as("_hc"))

@@ -390,7 +390,7 @@ object Dedup {
    * runWords-gram hashes. At 10^12 docs MATERIALIZE this to a parquet
    * staging table (the [[minhashSignatures]] pattern) and feed
    * [[substringPairsFromGrams]] — the convenience [[substringPairs]]
-   * re-executes this projection's lineage once per consumer branch.
+   * stages it with `localCheckpoint`, which is not fault-tolerant.
    */
   def substringGrams(df: DataFrame, idCol: String, textCol: String,
       runWords: Int = 16, shingleK: Int = 8): DataFrame = {

@@ -17,9 +17,36 @@ import graft.ops.{Dedup, TextAnalysis}
  * (~10% dup rate) rather than degenerate.
  */
 object DedupBench {
+  /** Big-benchmark size = nDocs / GRAFT_DEDUP_BENCH_DIV (default 10).
+    * div=10 at 10^7 docs probes the FEASIBILITY boundary (broadcast
+    * dies on the 8 GiB cap; the bloom survivor join out-spills a
+    * 48 GB local disk); div=100 keeps both paths feasible so the cost
+    * comparison itself is measurable at 10^7. */
+  private[graft] def benchDiv(env: Option[String]): Long =
+    env.map { v =>
+      v.trim.toLongOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"GRAFT_DEDUP_BENCH_DIV must be a whole number > 0, got '$v'"))
+    }.getOrElse(10L)
+
+  /** A stage whose plan is INFEASIBLE at this scale is itself a
+    * measurement: the broadcast-decontamination path dies on Spark's
+    * hard 8 GiB broadcast cap at a 10^6-doc benchmark, and the bloom
+    * survivor join can fill the local disk. Only those two refusals
+    * count; any other failure is a bug and must end the run. */
+  private[graft] def infeasible(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case t: org.apache.spark.SparkThrowable =>
+        t.getCondition == "_LEGACY_ERROR_TEMP_2249" // broadcast cap
+      case t: java.io.IOException =>
+        String.valueOf(t.getMessage).contains("No space left on device")
+      case _ => false
+    }
+
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(200000L)
     val cpus = args.lift(1).getOrElse("32")
+    val div = benchDiv(sys.env.get("GRAFT_DEDUP_BENCH_DIV"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-dedup-bench")
@@ -55,14 +82,10 @@ object DedupBench {
       val n = body
       (what, (System.nanoTime() - t0) / 1e9, n)
     }
-    // A stage whose plan is INFEASIBLE at this scale (e.g. the
-    // broadcast-decontamination path dies on Spark's hard 8 GiB
-    // broadcast cap at a 10^6-doc benchmark) is itself a measurement:
-    // record the refusal instead of losing the whole run to it.
     def timeOrInfeasible(what: String)(body: => Long): (String, Double, Long) =
       try time(what)(body)
       catch {
-        case e: org.apache.spark.SparkException =>
+        case e: Exception if infeasible(e) =>
           System.err.println(s"[dedupbench] $what infeasible: " +
             String.valueOf(e.getMessage).takeWhile(_ != '\n'))
           (what, -1.0, -2L)
@@ -73,13 +96,6 @@ object DedupBench {
     val onlyStages = sys.env.get("GRAFT_DEDUP_STAGES")
       .map(_.split(",").map(_.trim).toSet)
     def wanted(w: String): Boolean = onlyStages.forall(_.contains(w))
-    // big-benchmark size = nDocs / GRAFT_DEDUP_BENCH_DIV (default 10).
-    // div=10 at 10^7 docs probes the FEASIBILITY boundary (broadcast
-    // dies on the 8 GiB cap; the bloom survivor join out-spills a
-    // 48 GB local disk); div=100 keeps both paths feasible so the
-    // cost comparison itself is measurable at 10^7.
-    val benchDiv = sys.env.get("GRAFT_DEDUP_BENCH_DIV")
-      .map(_.toLong).getOrElse(10L)
 
     // warm-up (JIT + codegen)
     Dedup.exactGroups(docs, "doc_id", "text").filter($"n_dups" > 1).count()
@@ -122,15 +138,21 @@ object DedupBench {
         Dedup.minhashCandidatesFromSigs(sigs,
           numHashes = 64, bands = 16, minJaccard = 0.7).count()
       }),
-      // group assembly over the staged candidates: pairs → components
+      // group assembly over the staged candidates: pairs → components.
+      // It reads the signatures minhash_staged writes in THIS run, so it
+      // is skipped without that stage rather than reading stale ones.
       ("cc_groups", false, () => {
-        val sigs = spark.read.parquet(s"/tmp/graft_dedup_bench/sigs=$nDocs")
-        val pairs = Dedup.minhashCandidatesFromSigs(sigs,
-          numHashes = 64, bands = 16, minJaccard = 0.7)
-        val (g, rounds) =
-          graft.ops.ConnectedComponents.groupsWithRounds(pairs)
-        ccRounds = rounds
-        g.count()
+        if (!wanted("minhash_staged")) -1L
+        else {
+          val sigs =
+            spark.read.parquet(s"/tmp/graft_dedup_bench/sigs=$nDocs")
+          val pairs = Dedup.minhashCandidatesFromSigs(sigs,
+            numHashes = 64, bands = 16, minJaccard = 0.7)
+          val (g, rounds) =
+            graft.ops.ConnectedComponents.groupsWithRounds(pairs)
+          ccRounds = rounds
+          g.count()
+        }
       }),
       ("simhash", false, () => {
         Dedup.simhashCandidates(docs, "doc_id", "text", maxHamming = 3,
@@ -179,14 +201,14 @@ object DedupBench {
       ("decontam_bigbench", true, () => {
         graft.ops.Decontaminate.contaminationHits(
           docs, "doc_id", "text",
-          docs.filter(F.col("doc_id").cast("long") < nDocs / benchDiv)
+          docs.filter(F.col("doc_id").cast("long") < nDocs / div)
             .select("text"),
           "text", k = 8).count()
       }),
       ("decontam_bloom_bigbench", true, () => {
         graft.ops.Decontaminate.contaminationHitsBloom(
           docs, "doc_id", "text",
-          docs.filter(F.col("doc_id").cast("long") < nDocs / benchDiv)
+          docs.filter(F.col("doc_id").cast("long") < nDocs / div)
             .select("text"),
           "text", k = 8, fpp = 0.001).count()
       }),
@@ -234,7 +256,7 @@ object DedupBench {
       case (w, secs, found) =>
         f""""$w":{"sec":$secs%.2f,"docs_per_sec":${nDocs / secs}%.0f,"found":$found}"""
     }.mkString(",")
-    println(f"""{"dedup_bench":{"n_docs":$nDocs,"cpus":$cpus,$fields,"planted_recall":$recall%.4f,"substr_recall":$substrRecall%.4f,"cc_rounds":$ccRounds,"one_shot_skipped":${!runOneShot},"simhash_bucket_cap":$simhashCap,"bigbench_docs":${nDocs / benchDiv}}}""")
+    println(f"""{"dedup_bench":{"n_docs":$nDocs,"cpus":$cpus,$fields,"planted_recall":$recall%.4f,"substr_recall":$substrRecall%.4f,"cc_rounds":$ccRounds,"one_shot_skipped":${!runOneShot},"simhash_bucket_cap":$simhashCap,"bigbench_docs":${nDocs / div}}}""")
     spark.stop()
   }
 }

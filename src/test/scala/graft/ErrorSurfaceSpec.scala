@@ -119,4 +119,26 @@ class ErrorSurfaceSpec extends SparkSpec {
     assert(byName("broken")._3.isEmpty) // died on rep 1, no fake times
     assert(byName("broken")._4.exists(_.nonEmpty))
   }
+
+  test("dedup bench: only the broadcast cap and a full disk are infeasible") {
+    import org.apache.spark.SparkException
+    import graft.tools.DedupBench
+    val cap = new SparkException("_LEGACY_ERROR_TEMP_2249",
+      Map("maxBroadcastTableBytes" -> "8.0 GiB", "dataSize" -> "9.0 GiB"),
+      null)
+    assert(DedupBench.infeasible(new SparkException("aborted", cap)))
+    assert(DedupBench.infeasible(new SparkException("aborted",
+      new java.io.IOException("No space left on device"))))
+    assert(!DedupBench.infeasible(new SparkException("aborted",
+      new ArithmeticException("/ by zero"))))
+    assert(!DedupBench.infeasible(new java.io.IOException("Stream closed")))
+
+    assert(DedupBench.benchDiv(None) == 10L)
+    assert(DedupBench.benchDiv(Some("100")) == 100L)
+    for (bad <- Seq("0", "-3", "ten", "")) {
+      val e = intercept[IllegalArgumentException](
+        DedupBench.benchDiv(Some(bad)))
+      assert(e.getMessage.contains("GRAFT_DEDUP_BENCH_DIV"))
+    }
+  }
 }

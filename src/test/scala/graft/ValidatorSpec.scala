@@ -414,4 +414,27 @@ class ValidatorSpec extends SparkSpec {
       assert(shuffles(viol3) > 0)
     } finally spark.sql("DROP TABLE IF EXISTS uniq_bucketed")
   }
+
+  test("uniqueness: NULL keys are never duplicates (SQL UNIQUE)") {
+    def keys(ks: String*): DataFrame =
+      ks.zipWithIndex.map { case (k, i) => (k, Seq(i), 1, "web") }
+        .toDF("doc_id", "tokens", "n_tok", "source")
+    for (colocated <- Seq(false, true)) {
+      val suite = ConstraintCompiler.compile(ConstraintSuite("s", Seq(
+        Unique("u", "doc_id", colocated = colocated))))
+      def report(df: DataFrame) =
+        Validator.validateWithDetails(df, suite, Seq.empty)
+
+      val nullsOnly = report(keys(null, null, "a", "b"))
+      assert(nullsOnly.violations.isEmpty, s"colocated=$colocated")
+      assert(nullsOnly.verdicts.select("valid").as[Boolean].head(),
+        s"colocated=$colocated")
+
+      // a real key "null" is reported; the NULL key does not join it
+      val literal = report(keys(null, "null", "null")).violations
+        .select("doc_id", "observed").as[(String, String)].collect()
+      assert(literal.toSeq == Seq(("null", "count=2")),
+        s"colocated=$colocated")
+    }
+  }
 }
