@@ -74,13 +74,14 @@ final case class RunResult(
  *
  * SINGLE PASS: [[run]] (Catalyst engine) and [[runJson]] (doc engine)
  * share one driver and differ only in the [[Evaluation]] they supply —
- * the narrow per-row frame and, for [[run]], each dataset check's tagged
- * violation frame. Verdicts and violations both derive from that one
- * evaluation. When `violationsOut` is set its frames persist to executor
- * disk between the two actions, so the violations write materializes
- * them and the verdict aggregate reads the blocks: every pending row and
- * every dataset check is evaluated once (lineage recomputes a lost block
- * — correctness never depends on the cache). Verdict-only runs skip the
+ * the narrow per-row frame and, for [[run]], the suite's dataset checks.
+ * Verdicts, checkpoint entries and violations all derive from that one
+ * evaluation; with dataset checks, its one summary aggregate is
+ * collected once and the verdicts are a local frame. When
+ * `violationsOut` is set the per-row frame persists to executor disk, so
+ * the first action materializes it and the next reads the blocks: every
+ * pending row is evaluated once (lineage recomputes a lost block —
+ * correctness never depends on the cache). Verdict-only runs skip the
  * persist and the returned `violations` plan stays lazy (acting on it
  * re-evaluates — materialize via `violationsOut` when both outputs are
  * consumed).
@@ -173,7 +174,7 @@ object PartitionedRunner {
             viols.isEmpty, if (viols.isEmpty) null else viols))
         }
       }(org.apache.spark.sql.Encoders.row(outSchema))
-      new Evaluation(rows, Nil, table.partitionCols)
+      new Evaluation(rows, table.partitionCols)
     }
   }
 
@@ -188,19 +189,20 @@ object PartitionedRunner {
     val pending = pendingAll.take(maxPartitions)
     val skipped = table.partitions().diff(pendingAll)
     val eval = evaluate(pending)
-    if (pending.isEmpty)
-      return RunResult(runId, pending, skipped,
-        eval.verdicts.limit(0), eval.violations.limit(0))
+    if (pending.isEmpty) {
+      val (verdicts, violations) = eval.empty
+      return RunResult(runId, pending, skipped, verdicts, violations)
+    }
 
-    val persisted = if (violationsOut.isEmpty) Nil else eval.frames
-    persisted.foreach(_.persist(StorageLevel.DISK_ONLY))
+    val persist = violationsOut.isDefined
+    if (persist) eval.rows.persist(StorageLevel.DISK_ONLY)
     try {
       violationsOut.foreach { out =>
         eval.violations.write.mode(SaveMode.Append).parquet(out)
       }
       checkpoint.append(checkpointEntries(
         table, eval.verdicts, constraintHash, runId, pending))
-    } finally persisted.foreach(_.unpersist(blocking = false))
+    } finally if (persist) eval.rows.unpersist(blocking = false)
     RunResult(runId, pending, skipped, eval.verdicts, eval.violations)
   }
 

@@ -1,8 +1,11 @@
 package graft.checks
 
-import org.apache.spark.sql.{DataFrame, Column}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * A dataset-scope validation — no per-document analogue in the reference
@@ -10,22 +13,22 @@ import org.apache.spark.sql.types._
  * generalize `uniqueItems` / `enum` / `$ref` to table scope per the north
  * rule (SURVEY.md §2.C).
  *
+ * A suite's dataset checks do not run as pipelines of their own: each
+ * adds at most one column to the per-row projection
+ * ([[summaryColumn]]), ONE summary aggregate over that projection is
+ * collected to the driver ([[Summary]]), and every check finishes there
+ * in plain Scala ([[finish]]).
+ *
  * Contract: [[taggedViolations]] returns the check's violation rows —
  * exactly the violation schema `(doc_id, constraint_id, observed,
  * expected, instance_path)`, all strings, the same shape the row-local
  * detail path produces — followed by the partition columns of the
  * partition each row counts against. Table-scope checks carry no
  * partition columns: their violations count against every partition.
- * The validator builds this frame ONCE per check and derives both the
- * violation rows and the verdict counts from it.
+ * Evaluated alone, a check goes through the same summary as a suite.
  */
-trait DatasetCheck extends Serializable {
+sealed trait DatasetCheck extends Serializable {
   def id: String
-  def taggedViolations(
-      df: DataFrame,
-      idCol: String,
-      partitionCols: Seq[String],
-      dims: Map[String, DataFrame]): DataFrame
 
   /** Whether a violation counts against EVERY partition rather than the
     * one it is tagged with (uniqueness: a duplicate key may span
@@ -39,6 +42,22 @@ trait DatasetCheck extends Serializable {
     * pending scan — re-running them over the whole table would re-emit
     * already-validated partitions' violations on every resumed run. */
   def needsGlobalScope: Boolean = true
+
+  /** The check's column in the per-row frame and how the summary
+    * aggregate reads it; `None` for a check that needs no column. */
+  private[graft] def summaryColumn(partitionCols: Seq[String],
+      dims: Map[String, DataFrame]): Option[SummaryColumn]
+
+  /** The check's result from `s`, in which it is check `i`. */
+  private[graft] def finish(s: Summary, i: Int): Finished
+
+  /** The tagged violation rows of this check alone over `df`. */
+  final def taggedViolations(
+      df: DataFrame,
+      idCol: String,
+      partitionCols: Seq[String],
+      dims: Map[String, DataFrame]): DataFrame =
+    Summary.alone(this, df, idCol, partitionCols, dims).finished(0).violations
 
   /** The violation rows alone, without their partition tags. */
   final def violations(
@@ -61,6 +80,9 @@ trait DatasetCheck extends Serializable {
     else Some(taggedViolations(df, idCol, partitionCols, dims)
       .groupBy(partitionCols.map(F.col): _*)
       .agg(F.count(F.lit(1)).as("_n_ds_viol")))
+
+  protected def instancePath(col: String): Column =
+    F.lit("/" + col.replace(".", "/")).as("instance_path")
 }
 
 object DatasetCheck {
@@ -68,28 +90,33 @@ object DatasetCheck {
     * `ValidationError` fields, `ValidationError.java:18-22`). */
   val violationCols: Seq[String] =
     Seq("doc_id", "constraint_id", "observed", "expected", "instance_path")
+
+  /** A DataFrame over rows already on the driver: a local relation, so
+    * projecting or collecting it launches no job. */
+  private[graft] def local(spark: SparkSession, rows: Seq[Row],
+      schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 }
 
 /**
- * C3 — table-scope key uniqueness via a HASH-FIRST two-phase aggregate.
+ * C3 — table-scope key uniqueness, HASH FIRST.
  *
- * Keys are near-unique by construction, so partial aggregation cannot
- * compress the shuffle — a direct `groupBy(key)` moves every key string
- * through the exchange (~10^12 × 25+ B at scale). Phase 1 therefore
- * shuffles only `xxhash64(key)` — 8 bytes/row, with map-side partial
- * aggregation collapsing any hot key to one row per map task before the
- * exchange (the skew guard) — and keeps just hashes seen more than
- * once. Phase 2 re-scans the key column, semi-joins the (small)
- * candidate-hash set (AQE broadcasts it when it fits), and recounts
- * EXACTLY on the real key — so xxhash64 collisions (≈ n²/2^65 false
+ * Keys are near-unique by construction, so grouping the key strings
+ * would move every one of them through an exchange (~10^12 × 25+ B at
+ * scale). Phase 1 groups only [[keyHash]], 8 bytes per row, as one
+ * grouping set of the summary aggregate, and only hashes seen more than
+ * once come back to the driver. Phase 2 ([[duplicates]]) runs only when
+ * such candidates exist: it re-reads the key column, keeps the rows whose
+ * hash is a candidate and recounts EXACTLY on the real key in a
+ * distributed aggregate, so xxhash64 collisions (≈ n²/2^65 false
  * candidates: a few ×10^4 at 10^12 rows) are filtered, never reported.
  * Violations: one row per duplicated key value (not per duplicate row) —
  * violation volume stays proportional to the number of BAD KEYS.
  *
  * SQL-UNIQUE semantics: uniqueness holds over the NON-NULL keys, so NULL
- * keys are dropped before grouping and never form a duplicate group
- * (NULLs are `notNull`'s job). Every reported key is therefore a real
- * value, and a literal key `"null"` cannot be confused with a NULL.
+ * keys never form a duplicate group (NULLs are `notNull`'s job). Every
+ * reported key is therefore a real value, and a literal key `"null"`
+ * cannot be confused with a NULL.
  *
  * `colocated = true` (storage bucketed / layout-partitioned by the key):
  * the hash-first narrowing is pointless when no exchange happens at all,
@@ -104,50 +131,67 @@ final case class UniqueCheck(id: String, col: String, expected: String,
     colocated: Boolean = false)
     extends DatasetCheck {
   override def tableScope: Boolean = true
-  def taggedViolations(df: DataFrame, idCol: String,
-      partitionCols: Seq[String], dims: Map[String, DataFrame]): DataFrame = {
-    val dupKeys =
-      if (colocated)
-        // raw attribute, no cast: a rewritten expression would not match
-        // the scan's output partitioning and would resurrect the shuffle
-        df.filter(F.col(col).isNotNull).select(F.col(col).as("_k"))
-          .groupBy("_k").agg(F.count(F.lit(1)).as("_cnt"))
-          .filter(F.col("_cnt") > 1)
-          .select(F.col("_k").cast("string").as("_k"), F.col("_cnt"))
-      else uniqueTwoPhase(df)
-    dupKeys
-      .select(
-        F.col("_k").as("doc_id"),
-        F.lit(id).as("constraint_id"),
-        F.concat(F.lit("count="), F.col("_cnt").cast("string"))
-          .as("observed"),
-        F.lit(expected).as("expected"),
-        F.lit("/" + col.replace(".", "/")).as("instance_path"))
-  }
 
-  /** Duplicated keys `(_k string, _cnt)` via the hash-first two-phase
-    * shape described in the class doc. */
-  private def uniqueTwoPhase(df: DataFrame): DataFrame = {
-    val keys = df.filter(F.col(col).isNotNull)
-      .select(F.col(col).cast("string").as("_k"))
-    val candidateHashes = keys
-      .select(F.xxhash64(F.col("_k")).as("_h"))
-      .groupBy("_h").agg(F.count(F.lit(1)).as("_hc"))
-      .filter(F.col("_hc") > 1)
-      .select("_h")
-    keys
-      .join(candidateHashes,
-        F.xxhash64(F.col("_k")) === F.col("_h"), "left_semi")
+  /** The key's 8-byte hash, NULL for a NULL key. */
+  private[graft] def keyHash: Column =
+    F.when(F.col(col).isNotNull, F.xxhash64(F.col(col).cast("string")))
+
+  private[graft] def summaryColumn(partitionCols: Seq[String],
+      dims: Map[String, DataFrame]): Option[SummaryColumn] =
+    Option.when(!colocated)(SummaryColumn.Hashed(keyHash))
+
+  private[graft] def finish(s: Summary, i: Int): Finished =
+    if (colocated) {
+      lazy val dups = colocatedDuplicates(s.whole)
+      new Finished(Map(Nil -> dups.count()), dups)
+    } else {
+      lazy val dups = duplicates(s.whole, s.repeated(i))
+      new Finished(Map(Nil -> dups.size.toLong),
+        render(DatasetCheck.local(s.whole.sparkSession,
+          dups.map { case (k, n) => Row(k, n) },
+          StructType(Seq(StructField("_k", StringType),
+            StructField("_cnt", LongType))))))
+    }
+
+  /** Phase 2 over `df` for the candidate hashes phase 1 found: each
+    * duplicated key with its count. Only the recount's result is
+    * collected — one row per duplicated key, as many as the candidates
+    * already on the driver up to hash collisions. */
+  private[graft] def duplicates(df: DataFrame,
+      candidates: Set[Long]): Seq[(String, Long)] =
+    if (candidates.isEmpty) Nil
+    else df.where(Summary.inSet(keyHash, candidates.toSet[Any]))
+      .groupBy(F.col(col).cast("string").as("_k"))
+      .agg(F.count(F.lit(1)).as("_cnt"))
+      .where(F.col("_cnt") > 1)
+      .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
+
+  /** The one-phase group over the raw key attribute, for `colocated`. */
+  private[graft] def colocatedDuplicates(df: DataFrame): DataFrame =
+    // raw attribute, no cast: a rewritten expression would not match the
+    // scan's output partitioning and would resurrect the shuffle
+    render(df.filter(F.col(col).isNotNull).select(F.col(col).as("_k"))
       .groupBy("_k").agg(F.count(F.lit(1)).as("_cnt"))
       .filter(F.col("_cnt") > 1)
-  }
+      .select(F.col("_k").cast("string").as("_k"), F.col("_cnt")))
+
+  private def render(dupKeys: DataFrame): DataFrame =
+    dupKeys.select(
+      F.col("_k").as("doc_id"),
+      F.lit(id).as("constraint_id"),
+      F.concat(F.lit("count="), F.col("_cnt").cast("string")).as("observed"),
+      F.lit(expected).as("expected"),
+      instancePath(col))
 }
 
 /**
- * C4 — referential integrity of a fact column against a dimension table
- * via broadcast left-anti join (the dimension is small by construction;
- * `F.broadcast` pins the strategy so no shuffle of the 10^12-row fact side
- * ever happens). One violation row per dangling fact row.
+ * C4 — referential integrity of a fact column against a dimension table.
+ * The dimension is small by construction: its distinct keys are
+ * collected once and inlined into the per-row projection as ONE `InSet`,
+ * so the fact side is never shuffled or joined. Every plan over the
+ * per-row frame carries that set, and the driver holds it: a dimension of
+ * 10^5 keys is spec-tested; one of many millions belongs in a join, not
+ * in this check. One violation row per dangling fact row.
  */
 final case class RefIntegrityCheck(
     id: String, col: String, dimName: String, dimCol: String,
@@ -156,137 +200,97 @@ final case class RefIntegrityCheck(
   // dangling keys are facts about individual rows vs an EXTERNAL
   // dimension — nothing cross-partition; pending-scan scope suffices
   override def needsGlobalScope: Boolean = false
-  def taggedViolations(df: DataFrame, idCol: String,
-      partitionCols: Seq[String], dims: Map[String, DataFrame]): DataFrame = {
+
+  private[graft] def summaryColumn(partitionCols: Seq[String],
+      dims: Map[String, DataFrame]): Option[SummaryColumn] =
+    Some(SummaryColumn.Counted(dangling(dims)))
+
+  private[graft] def finish(s: Summary, i: Int): Finished =
+    new Finished(s.counts(i),
+      violationRows(s.rows, Summary.column(i), s.partitionCols))
+
+  /** The fact key as reported (`"null"` for a NULL key) on a dangling
+    * row, NULL on a row whose key the dimension holds. NULL dimension
+    * keys are dropped before the set is built: an IN list holding NULL
+    * turns every non-matching key into NULL, not into a dangling row. A
+    * dimension held on the driver is read as it is; any other is
+    * deduplicated on the cluster before its keys are collected. */
+  private[graft] def dangling(dims: Map[String, DataFrame]): Column = {
     val dim = dims.getOrElse(dimName, throw new IllegalArgumentException(
       s"referential check '$id': dimension '$dimName' not provided"))
-    val keys = dim.select(F.col(dimCol).cast("string").as("_dk")).distinct()
-    df.select(F.col(idCol).cast("string").as("doc_id") +:
-        F.col(col).cast("string").as("_fk") +:
-        partitionCols.map(F.col): _*)
-      .join(F.broadcast(keys), F.col("_fk") === F.col("_dk"), "left_anti")
-      .select(Seq(
-        F.col("doc_id"),
-        F.lit(id).as("constraint_id"),
-        F.coalesce(F.col("_fk"), F.lit("null")).as("observed"),
-        F.lit(expected).as("expected"),
-        F.lit("/" + col.replace(".", "/")).as("instance_path")) ++
-        partitionCols.map(F.col): _*)
+    val k = F.col(dimCol).cast("string")
+    val keyRows = dim.select(k).where(k.isNotNull)
+    val onDriver = keyRows.queryExecution.optimizedPlan.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    val keys = (if (onDriver) keyRows else keyRows.distinct())
+      .collect().map(r => UTF8String.fromString(r.getString(0)): Any).toSet
+    val fk = F.col(col).cast("string")
+    F.when(fk.isNull, F.lit("null")).when(!Summary.inSet(fk, keys), fk)
   }
+
+  /** The tagged violation rows of a per-row frame whose column
+    * `dangling` holds [[dangling]] and whose `_doc_id` holds the id. */
+  private[graft] def violationRows(rows: DataFrame, dangling: String,
+      partitionCols: Seq[String]): DataFrame =
+    rows.filter(F.col(dangling).isNotNull)
+      .select(Seq(
+        F.col("_doc_id").as("doc_id"),
+        F.lit(id).as("constraint_id"),
+        F.col(dangling).as("observed"),
+        F.lit(expected).as("expected"),
+        instancePath(col)) ++
+        partitionCols.map(F.col): _*)
 }
 
 /**
- * C5 — distribution drift: equal-width histogram of `col` over a fixed
- * [lo, hi) range per partition, compared to the global histogram with
- * PSI (`sum((p-q)·ln(p/q))`) or KL (`sum(p·ln(p/q))`), epsilon-smoothed.
- * One aggregation pass over the data; the per-partition × per-bucket
- * grid is tiny post-aggregation, so the compare is a broadcast join.
- * Violations: one row per drifted partition (doc_id = partition key).
+ * Shared by the two drift checks: a per-(partition, bucket) count
+ * histogram, compared per partition to the global histogram with PSI
+ * (`sum((p-q)·ln(p/q))`) or KL (`sum(p·ln(p/q))`), epsilon-smoothed.
+ * The histogram is at most partitions × buckets cells, so it is
+ * collected and the divergence is computed on the driver
+ * ([[DriftMath.divergence]]). Violations: one row per drifted partition
+ * (doc_id = partition key).
  */
-final case class DriftCheck(
-    id: String, col: String, lo: Double, hi: Double, buckets: Int,
-    metric: String, threshold: Double, expected: String,
-    minRows: Long = 100L)
-    extends DatasetCheck {
-  require(metric == "psi" || metric == "kl", s"unknown drift metric $metric")
-  // a degenerate grid would silently report "no drift ever" (empty
-  // bucket explode) instead of failing fast like every other misconfig
-  require(buckets >= 1, s"drift check '$id': buckets must be >= 1")
-  require(hi > lo, s"drift check '$id': need hi > lo")
+sealed trait DriftBase extends DatasetCheck {
+  def col: String
+  def buckets: Int
+  def metric: String
+  def threshold: Double
+  def expected: String
+  /** Support floor: partitions with fewer counted values cannot evidence
+    * drift and are never flagged. */
+  def support: Long
 
-  def taggedViolations(df: DataFrame, idCol: String,
-      partitionCols: Seq[String], dims: Map[String, DataFrame]): DataFrame =
-    DriftMath.violations(metrics(df, partitionCols), partitionCols, id, col,
-      metric, threshold, expected)
+  /** Counts per partition and bucket, collected: check `i` of `s`. */
+  protected def histogram(s: Summary, i: Int): Seq[(Seq[Any], Array[Long])]
 
   /** The per-partition divergence values `(partitionCols..., metric)` —
     * the inspectable face of the check (all partitions above the
-    * support floor). One pass builds the scalar histogram; the
-    * divergence math is shared with [[ArrayDriftCheck]] via
-    * [[DriftMath.divergence]]. */
-  def metrics(df: DataFrame, partitionCols: Seq[String]): DataFrame = {
-    require(partitionCols.nonEmpty, s"drift check '$id' needs partitionCols")
-    val width = (hi - lo) / buckets
-    val pcols = partitionCols.map(F.col)
-    val bucket = F.least(F.lit(buckets - 1), F.greatest(F.lit(0),
-      F.floor((F.col(col).cast("double") - lo) / width))).as("_b")
-    val hist = df.filter(F.col(col).isNotNull)
-      .select(pcols :+ bucket: _*)
-      .groupBy((pcols :+ F.col("_b")): _*)
-      .agg(F.count(F.lit(1)).as("_c"))
-    DriftMath.divergence(hist, partitionCols, buckets, metric, minRows)
+    * support floor), as a local frame. */
+  final def metrics(df: DataFrame, partitionCols: Seq[String]): DataFrame = {
+    val s = Summary.alone(this, df, "doc_id", partitionCols, Map.empty)
+    metricsFrame(s, DriftMath.divergence(histogram(s, 0), metric, support))
   }
-}
 
-/**
- * C5b — TOKEN-HISTOGRAM drift (the north star's second drift target):
- * the distribution of array ELEMENTS (token ids bucketed by
- * `pmod(token, buckets)`) per partition vs globally, same PSI/KL math
- * as [[DriftCheck]]. The heavy step is one explode → partial-aggregated
- * count: the shuffle after map-side combine carries only
- * (partitions × buckets) rows no matter how many tokens were exploded —
- * the scale-safe shape for 10^12 × n_tok elements. `minCount` is the
- * support floor in ELEMENTS.
- */
-final case class ArrayDriftCheck(
-    id: String, col: String, buckets: Int,
-    metric: String, threshold: Double, expected: String,
-    minCount: Long = 100L)
-    extends DatasetCheck {
-  require(metric == "psi" || metric == "kl", s"unknown drift metric $metric")
-
-  def taggedViolations(df: DataFrame, idCol: String,
-      partitionCols: Seq[String], dims: Map[String, DataFrame]): DataFrame =
-    DriftMath.violations(metrics(df, partitionCols), partitionCols, id, col,
-      metric, threshold, expected)
-
-  def metrics(df: DataFrame, partitionCols: Seq[String]): DataFrame = {
-    require(partitionCols.nonEmpty,
-      s"array drift check '$id' needs partitionCols")
-    val pcols = partitionCols.map(F.col)
-    // per-row bucket counts in ONE codegen pass (no per-element rows —
-    // the element-explode shape is allocation-bound and stops scaling
-    // with cores), then `buckets` declarative sum() columns: the whole
-    // reduction stays inside whole-stage-codegen HashAggregate with
-    // map-side combine (an object-typed array-sum aggregate was tried
-    // and boxes every row). Only the per-PARTITION sums are unpivoted
-    // into (partition, bucket, count) rows.
-    val bc = df.filter(F.col(col).isNotNull)
-      .select(pcols :+
-        graft.functions.BucketCounts(F.col(col), buckets).as("_bc"): _*)
-    val sums = (0 until buckets).map(i =>
-      F.sum(F.element_at(F.col("_bc"), i + 1)).as(s"_s$i"))
-    val summed = bc.groupBy(pcols: _*).agg(sums.head, sums.tail: _*)
-    val hist = summed
-      .select(pcols :+ F.posexplode(F.array(
-        (0 until buckets).map(i => F.col(s"_s$i")): _*))
-        .as(Seq("_b", "_c")): _*)
-      .select(pcols ++ Seq(F.col("_b").cast("long").as("_b"),
-        F.col("_c")): _*)
-      .filter(F.col("_c") > 0) // absent buckets re-densify in the grid
-    DriftMath.divergence(hist, partitionCols, buckets, metric, minCount)
+  private[graft] def finish(s: Summary, i: Int): Finished = {
+    lazy val metrics =
+      DriftMath.divergence(histogram(s, i), metric, support)
+    new Finished(
+      metrics.collect { case (k, m) if m > threshold => k -> 1L }.toMap,
+      violationsOf(metricsFrame(s, metrics), s.partitionCols))
   }
-}
 
-/**
- * Shared PSI/KL divergence over a per-(partition, bucket) count
- * histogram `(partitionCols..., _b, _c)`.
- *
- * SINGLE-LINEAGE construction — the 100 TB property that matters: the
- * input is scanned ONCE into the histogram; everything after
- * (per-partition totals, the dense bucket grid, global per-bucket
- * counts, the grand total) derives from that tiny aggregate via
- * collect_list/explode and window sums, never by re-joining plans that
- * re-reference the input. (DataFrame reuse does not dedupe scans — a
- * parts/global/grid self-join shape re-scans the table up to 3×,
- * observed live in the AQE plan.)
- */
-private[checks] object DriftMath {
+  /** Divergence values as the local frame `(partitionCols..., metric)`. */
+  private[graft] def metricsFrame(s: Summary,
+      metrics: Seq[(Seq[Any], Double)]): DataFrame =
+    DatasetCheck.local(s.whole.sparkSession,
+      metrics.map { case (k, m) => Row.fromSeq(k :+ m) },
+      StructType(s.partitionFields :+ StructField("metric", DoubleType)))
+
   /** One violation row per partition whose divergence exceeds
     * `threshold`, tagged with that partition; `doc_id` is its key. */
-  def violations(metrics: DataFrame, partitionCols: Seq[String], id: String,
-      col: String, metric: String, threshold: Double,
-      expected: String): DataFrame =
+  private[graft] def violationsOf(metrics: DataFrame,
+      partitionCols: Seq[String]): DataFrame =
     metrics
       .filter(F.col("metric") > threshold)
       .select(Seq(
@@ -297,50 +301,117 @@ private[checks] object DriftMath {
         F.concat(F.lit(metric + "="), F.round(F.col("metric"), 6)
           .cast("string")).as("observed"),
         F.lit(expected).as("expected"),
-        F.lit("/" + col.replace(".", "/")).as("instance_path")) ++
+        instancePath(col)) ++
         partitionCols.map(F.col): _*)
 
-  def divergence(hist: DataFrame, partitionCols: Seq[String],
-      buckets: Int, metric: String, minTotal: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pcols = partitionCols.map(F.col)
+  protected def needsPartitions(partitionCols: Seq[String]): Unit =
+    require(partitionCols.nonEmpty, s"drift check '$id' needs partitionCols")
+}
 
-    // one row per partition: bucket→count map + total (≤ buckets entries)
-    val perPart = hist.groupBy(pcols: _*).agg(
-      F.map_from_entries(F.collect_list(F.struct(F.col("_b"), F.col("_c"))))
-        .as("_bm"),
-      F.sum("_c").as("_pt"))
+/**
+ * C5 — distribution drift of a scalar column: an equal-width histogram
+ * of `col` over a fixed [lo, hi) range per partition (out-of-range
+ * values land in the edge buckets). Its counts are one grouping set of
+ * the summary aggregate.
+ */
+final case class DriftCheck(
+    id: String, col: String, lo: Double, hi: Double, buckets: Int,
+    metric: String, threshold: Double, expected: String,
+    minRows: Long = 100L)
+    extends DriftBase {
+  require(metric == "psi" || metric == "kl", s"unknown drift metric $metric")
+  // a degenerate grid would silently report "no drift ever" (empty
+  // bucket explode) instead of failing fast like every other misconfig
+  require(buckets >= 1, s"drift check '$id': buckets must be >= 1")
+  require(hi > lo, s"drift check '$id': need hi > lo")
 
-    // dense grid: every (partition, bucket) with its count (0 if absent)
-    val allBuckets = F.array((0 until buckets).map(b => F.lit(b.toLong)): _*)
-    val grid = perPart
-      .select(pcols ++ Seq(F.col("_bm"), F.col("_pt"),
-        F.explode(allBuckets).as("_b")): _*)
-      .withColumn("_c",
-        F.coalesce(F.try_element_at(F.col("_bm"), F.col("_b")), F.lit(0L)))
-      .drop("_bm")
-      // global per-bucket count and grand total: window sums over the
-      // grid (ALL partitions present, so these equal sums over the raw
-      // histogram — the support-floor filter applies only at the end)
-      .withColumn("_gc", F.sum("_c").over(Window.partitionBy("_b")))
-      .withColumn("_gt", F.sum("_c").over(Window.partitionBy()))
+  def support: Long = minRows
 
-    val eps = 1e-6
-    val p = (F.col("_c").cast("double") + eps) /
-      (F.col("_pt").cast("double") + eps * buckets)
-    val q = (F.col("_gc").cast("double") + eps) /
-      (F.col("_gt").cast("double") + eps * buckets)
-    val term = metric match {
-      case "psi" => (p - q) * F.log(p / q)
-      case "kl"  => p * F.log(p / q)
+  private[graft] def summaryColumn(partitionCols: Seq[String],
+      dims: Map[String, DataFrame]): Option[SummaryColumn] =
+    Some(SummaryColumn.Bucketed(bucket(partitionCols)))
+
+  /** The row's bucket, NULL where `col` is NULL. */
+  private def bucket(partitionCols: Seq[String]): Column = {
+    needsPartitions(partitionCols)
+    val width = (hi - lo) / buckets
+    F.when(F.col(col).isNotNull, F.least(F.lit(buckets - 1),
+      F.greatest(F.lit(0), F.floor((F.col(col).cast("double") - lo) / width))))
+  }
+
+  protected def histogram(s: Summary, i: Int): Seq[(Seq[Any], Array[Long])] =
+    s.histogram(i, buckets)
+}
+
+/**
+ * C5b — TOKEN-HISTOGRAM drift (the north star's second drift target):
+ * the distribution of array ELEMENTS (token ids bucketed by
+ * `pmod(token, buckets)`) per partition vs globally, same PSI/KL math
+ * as [[DriftCheck]]. Its per-partition sums are `buckets` columns wide,
+ * too wide to ride in every row of the summary aggregate, so they keep
+ * a pass of their own ([[histogram]]). `minCount` is the support floor
+ * in ELEMENTS.
+ */
+final case class ArrayDriftCheck(
+    id: String, col: String, buckets: Int,
+    metric: String, threshold: Double, expected: String,
+    minCount: Long = 100L)
+    extends DriftBase {
+  require(metric == "psi" || metric == "kl", s"unknown drift metric $metric")
+
+  def support: Long = minCount
+
+  private[graft] def summaryColumn(partitionCols: Seq[String],
+      dims: Map[String, DataFrame]): Option[SummaryColumn] = None
+
+  /** Per-partition element counts per bucket over `s.whole`. */
+  protected def histogram(s: Summary, i: Int): Seq[(Seq[Any], Array[Long])] = {
+    needsPartitions(s.partitionCols)
+    val pcols = s.partitionCols.map(F.col)
+    // per-row bucket counts in ONE codegen pass (no per-element rows —
+    // the element-explode shape is allocation-bound and stops scaling
+    // with cores), then `buckets` declarative sum() columns: the whole
+    // reduction stays inside whole-stage-codegen HashAggregate with
+    // map-side combine (an object-typed array-sum aggregate was tried
+    // and boxes every row)
+    val bc = s.whole.filter(F.col(col).isNotNull)
+      .select(pcols :+
+        graft.functions.BucketCounts(F.col(col), buckets).as("_bc"): _*)
+    val sums = (0 until buckets).map(i =>
+      F.sum(F.element_at(F.col("_bc"), i + 1)).as(s"_s$i"))
+    val n = s.partitionCols.size
+    bc.groupBy(pcols: _*).agg(sums.head, sums.tail: _*).collect().toSeq
+      .map(r => (r.toSeq.take(n), Array.tabulate(buckets)(i => r.getLong(n + i))))
+  }
+}
+
+/** The PSI/KL divergence of [[DriftBase]], on the driver. */
+private[graft] object DriftMath {
+  val Eps = 1e-6
+
+  /** Per-partition divergence of a `(partition, counts per bucket)`
+    * histogram against the global histogram (the sum over EVERY
+    * partition, the support floor applied only at the end). A partition
+    * with no counts is absent, as if it had no histogram rows. p and q
+    * are epsilon-smoothed: `(c + ε) / (total + ε·buckets)`. */
+  def divergence[K](hist: Seq[(K, Array[Long])], metric: String,
+      minTotal: Long): Seq[(K, Double)] = {
+    val present = hist.filter(_._2.sum > 0)
+    if (present.isEmpty) return Nil
+    val nb = present.head._2.length
+    val global = Array.tabulate(nb)(b => present.map(_._2(b)).sum)
+    val gt = global.sum.toDouble
+    present.collect { case (k, c) if c.sum >= minTotal =>
+      val pt = c.sum.toDouble
+      k -> (0 until nb).map { b =>
+        val p = (c(b) + Eps) / (pt + Eps * nb)
+        val q = (global(b) + Eps) / (gt + Eps * nb)
+        metric match {
+          case "psi" => (p - q) * math.log(p / q)
+          case "kl"  => p * math.log(p / q)
+        }
+      }.sum
     }
-    grid
-      .select(pcols ++ Seq(F.col("_pt"), term.as("_t")): _*)
-      .groupBy(pcols: _*)
-      .agg(F.sum("_t").as("metric"), F.first("_pt").as("_pt"))
-      // partitions below the support floor cannot evidence drift
-      .filter(F.col("_pt") >= minTotal)
-      .drop("_pt")
   }
 }
 

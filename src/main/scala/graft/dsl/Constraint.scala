@@ -265,8 +265,8 @@ object Constraint {
   // Dataset-level constraints (north-rule extensions, SURVEY.md §2.C)
   // ----------------------------------------------------------------
 
-  /** Table-scope uniqueness of a key column (C3): salted two-phase
-    * hash-aggregate; every row of a duplicated key becomes a violation.
+  /** Table-scope uniqueness of a key column (C3): hash-first two-phase
+    * aggregate; every duplicated key value becomes one violation.
     * `colocated = true` declares that equal keys already live in the
     * same storage split (table bucketed / layout-partitioned by `col`):
     * the check then groups the key DIRECTLY, letting Spark elide the

@@ -1,10 +1,11 @@
 package graft.exec
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.types.{ArrayType, StringType, StructField,
-  StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, LongType,
+  StringType, StructField, StructType}
 
+import graft.checks.{DatasetCheck, Summary}
 import graft.compile.CompiledSuite
 
 /** One typed violation row — the engine's `ValidationError`
@@ -46,8 +47,14 @@ final case class ValidationReport(verdicts: DataFrame, violations: DataFrame)
  */
 object Validator {
 
-  /** Fast boolean path: ONE scan, ONE small shuffle (the per-partition
-    * verdict groupBy). Dataset-level checks contribute only a count.
+  /** Fast boolean path: the per-partition verdicts, no violation rows.
+    * The row-local checks run as one codegen'd predicate inside the scan.
+    * Without dataset checks the verdicts stay a lazy per-partition
+    * aggregate. With them, the evaluation's ONE summary aggregate runs
+    * here and is collected, the checks finish on the driver, and the
+    * returned frame is local: one scan and one shuffle, plus a phase-2
+    * key re-read and recount only when uniqueness found candidate
+    * duplicates (and a pass of its own per token-histogram drift).
     *
     * `globalDf`: the frame DATASET-LEVEL checks evaluate over, when it
     * must be wider than `df` — a resumed/partial run validates only the
@@ -77,9 +84,10 @@ object Validator {
   }
 
   /** The Catalyst engine's evaluation of `suite` over `df`: the narrow
-    * per-row frame plus one tagged frame per dataset check, each check
-    * seeing the scope it needs — local-scope checks (RI) must not
-    * re-scan the whole table on a partial run. */
+    * per-row frame, carrying each dataset check's summary column. When
+    * `globalDf` is wider than `df`, the whole-table checks' columns are
+    * projected from it instead, so row-local work and referential
+    * integrity never re-scan the whole table on a partial run. */
   private[graft] def evaluate(
       df: DataFrame,
       suite: CompiledSuite,
@@ -103,17 +111,9 @@ object Validator {
           F.lit(c.expected).as("expected"),
           F.coalesce(c.instancePath, F.lit("/")).as("instance_path")))
       }: _*)
-    // the id column is optional for verdict-only callers: only the
-    // violation derivation reads `_doc_id`
-    val id =
-      if (scala.util.Try(df.select(F.col(idCol))).isFailure) Nil
-      else Seq(F.col(idCol).cast("string").as("_doc_id"))
-    val rows = df.select(partitionCols.map(F.col) ++ id ++ Seq(
-      ok.as("_ok"), F.when(!ok, viols).as("_viols")): _*)
-    val dsDf = globalDf.getOrElse(df)
-    new Evaluation(rows, suite.datasetChecks.map(c => c ->
-      c.taggedViolations(if (c.needsGlobalScope) dsDf else df,
-        idCol, partitionCols, dims)), partitionCols)
+    new Evaluation(new Summary(df, globalDf, suite.datasetChecks,
+      partitionCols, idCol, dims,
+      Seq(ok.as("_ok"), F.when(!ok, viols).as("_viols"))))
   }
 
   private val ViolationType = StructType(
@@ -126,24 +126,26 @@ object Validator {
  * reference's views (boolean verdicts and error rows); the validator,
  * both resumable runners and the streaming path all derive from it.
  *
- *  - `rows`: the narrow per-row frame `(partitionCols..., _doc_id,
- *    _ok, _viols)`. `_viols` is NULL on passing rows and otherwise an array
- *    of per-constraint violation structs, NULL for the constraints that
- *    held. Any engine can produce it (Catalyst, the doc engine).
- *  - `checks`: each dataset check with its tagged violation frame
- *    ([[graft.checks.DatasetCheck.taggedViolations]]), built once.
- *
- * Both derivations are lazy plans over these frames, so a caller that
- * persists [[frames]] evaluates every row and every check once however
- * many of the derived outputs it consumes.
+ * `rows` is the narrow per-row frame `(partitionCols..., _doc_id, _ok,
+ * _viols, ...)`. `_viols` is NULL on passing rows and otherwise an array
+ * of per-constraint violation structs, NULL for the constraints that
+ * held. Any engine can produce it (Catalyst, the doc engine). With
+ * dataset checks, the [[Summary]] over it is collected once: the
+ * verdicts and the checks' results come from it, and the verdicts are a
+ * local frame. Row-local and referential-integrity violation rows stay
+ * lazy plans over `rows`, so a caller that persists `rows` evaluates
+ * every row once however many outputs it consumes.
  */
-private[graft] final class Evaluation(
-    val rows: DataFrame,
-    val checks: Seq[(graft.checks.DatasetCheck, DataFrame)],
-    partitionCols: Seq[String]) {
+private[graft] final class Evaluation(val summary: Summary) {
 
-  /** The frames every derivation reads. */
-  def frames: Seq[DataFrame] = rows +: checks.map(_._2)
+  /** An evaluation without dataset checks over a ready per-row frame. */
+  def this(rows: DataFrame, partitionCols: Seq[String]) =
+    this(new Summary(rows, None, Nil, partitionCols, "_doc_id", Map.empty,
+      Seq(F.col("_ok"), F.col("_viols"))))
+
+  def rows: DataFrame = summary.rows
+  private def checks = summary.checks
+  private def partitionCols = summary.partitionCols
 
   /** Per-partition verdicts: `n_rows`, `n_bad_rows`, `rows_ok`, the
     * dataset-check counts and `valid`.
@@ -153,46 +155,58 @@ private[graft] final class Evaluation(
     * to every row. A partition is `valid` iff its rows pass, it has no
     * attributable violations, and no table-scope check failed anywhere
     * — the per-partition pass/fail the north rule asks for, without
-    * pretending cross-partition facts are local.
-    *
-    * Reads only the partition columns and `_ok` of `rows`, so column
-    * pruning leaves the fast path one predicate projection and one
-    * partial+final hash aggregate. `_ok` is coalesced BEFORE aggregating:
-    * a NULL predicate result must read as one consistent answer (bad)
-    * across all three aggregates — raw nulls are counted by sum's
-    * otherwise-branch but SKIPPED by every(). */
-  lazy val verdicts: DataFrame = {
-    val pcols = partitionCols.map(F.col)
+    * pretending cross-partition facts are local. Only partitions with
+    * rows in scope get a verdict row; unpartitioned input always gets
+    * one. */
+  lazy val verdicts: DataFrame =
+    if (checks.isEmpty) rowVerdicts
+    else DatasetCheck.local(rows.sparkSession, verdictRows, verdictSchema)
+
+  /** The schema of [[rowVerdicts]], written out so that a local verdict
+    * frame needs no analysis of the aggregate. */
+  private def verdictSchema: StructType = StructType(
+    summary.partitionFields ++ Seq(
+      StructField("n_rows", LongType, nullable = false),
+      StructField("n_bad_rows", LongType),
+      StructField("rows_ok", BooleanType, nullable = false),
+      StructField("n_partition_violations", LongType, nullable = false),
+      StructField("n_global_violations", LongType, nullable = false),
+      StructField("valid", BooleanType, nullable = false)))
+
+  /** The verdict aggregate over `rows` alone, lazy. `_ok` is coalesced
+    * BEFORE aggregating: a NULL predicate result must read as one
+    * consistent answer (bad) across all three aggregates — raw nulls are
+    * counted by sum's otherwise-branch but SKIPPED by every(). */
+  private lazy val rowVerdicts: DataFrame = {
     val okc = F.col("_ok")
     val aggs = Seq(
       F.count(F.lit(1)).as("n_rows"),
       F.sum(F.when(okc, 0L).otherwise(1L)).as("n_bad_rows"),
       F.coalesce(F.every(okc), F.lit(true)).as("rows_ok"))
-    val rowVerdicts =
-      if (partitionCols.isEmpty) rows.agg(aggs.head, aggs.tail: _*)
-      else rows.groupBy(pcols: _*).agg(aggs.head, aggs.tail: _*)
-
-    val (global, attributable) =
-      checks.partition(_._1.tableScope || partitionCols.isEmpty)
-    val withPart = attributable.map(_._2.select(pcols: _*))
-      .reduceOption(_ unionAll _) match {
-      case Some(tags) =>
-        rowVerdicts.join(tags.groupBy(pcols: _*)
-            .agg(F.count(F.lit(1)).as("n_partition_violations")),
-          partitionCols, "left")
-          .withColumn("n_partition_violations",
-            F.coalesce(F.col("n_partition_violations"), F.lit(0L)))
-      case None => rowVerdicts.withColumn("n_partition_violations", F.lit(0L))
-    }
-    val withGlobal = global.map(_._2.select(F.lit(1).as("_one")))
-      .reduceOption(_ unionAll _) match {
-      case Some(all) => withPart.crossJoin(F.broadcast(
-        all.agg(F.count(F.lit(1)).as("n_global_violations"))))
-      case None => withPart.withColumn("n_global_violations", F.lit(0L))
-    }
-    withGlobal.withColumn("valid",
-      F.col("rows_ok") && F.col("n_partition_violations") === 0L &&
+    (if (partitionCols.isEmpty) rows.agg(aggs.head, aggs.tail: _*)
+     else rows.groupBy(partitionCols.map(F.col): _*)
+       .agg(aggs.head, aggs.tail: _*))
+      .withColumn("n_partition_violations", F.lit(0L))
+      .withColumn("n_global_violations", F.lit(0L))
+      .withColumn("valid", F.col("rows_ok") &&
+        F.col("n_partition_violations") === 0L &&
         F.col("n_global_violations") === 0L)
+  }
+
+  private def verdictRows: Seq[Row] = {
+    val perPart = summary.partitionRows
+    val parts =
+      if (partitionCols.isEmpty) Map(Nil -> perPart.getOrElse(Nil, (0L, 0L)))
+      else perPart.filter(_._2._1 > 0)
+    val (global, attributable) = checks.indices
+      .partition(i => checks(i).tableScope || partitionCols.isEmpty)
+    val counts = summary.finished.map(_.counts)
+    val nGlobal = global.map(counts(_).values.sum).sum
+    parts.toSeq.map { case (k, (n, bad)) =>
+      val nPart = attributable.map(counts(_).getOrElse(k, 0L)).sum
+      Row.fromSeq(k ++ Seq(n, if (n == 0) null else bad, bad == 0, nPart,
+        nGlobal, bad == 0 && nPart == 0 && nGlobal == 0))
+    }
   }
 
   /** Violation rows of every source, union'd. Row-local ones explode
@@ -210,8 +224,18 @@ private[graft] final class Evaluation(
         F.explode(F.col("_viols")).as("_v"))
       .filter(F.col("_v").isNotNull)
       .select("doc_id", "_v.*")
-    (rowViolations +: checks.map(_._2
-      .select(graft.checks.DatasetCheck.violationCols.map(F.col): _*)))
+    (rowViolations +: summary.finished.map(_.violations
+      .select(DatasetCheck.violationCols.map(F.col): _*)))
       .reduce(_ unionAll _)
+  }
+
+  /** Empty frames with the verdict and violation schemas, for a run with
+    * nothing to evaluate: nothing runs, and no dimension is read. */
+  private[graft] def empty: (DataFrame, DataFrame) = {
+    val spark = summary.whole.sparkSession
+    (DatasetCheck.local(spark, Nil, verdictSchema),
+      if (checks.isEmpty) violations.limit(0)
+      else DatasetCheck.local(spark, Nil, StructType(
+        DatasetCheck.violationCols.map(StructField(_, StringType)))))
   }
 }

@@ -235,6 +235,26 @@ class CheckpointSpec extends SparkSpec {
     assert(noop.violations.count() == 0L)
   }
 
+  test("converged run reads no dimension") {
+    val base = Files.createTempDirectory("graft-cp-nodim").toString
+    val table = mkTable(s"$base/data")
+    val cp = new CheckpointStore(spark, s"$base/checkpoint")
+    val riSuite = ConstraintCompiler.compile(ConstraintSuite("cp-ri", Seq(
+      RefIntegrity("ri", "source", "sources", "source"))))
+    val first = PartitionedRunner.run(table, riSuite, cp, "r1",
+      dims = Map("sources" -> SequenceGen.sourcesDim(spark, 4)))
+    assert(first.processed.size == 5)
+    // a dimension that fails when read: nothing is pending, so the run
+    // must not build the key set
+    val unreadable = spark.range(1).select(org.apache.spark.sql.functions
+      .udf((i: Long) => { if (i >= 0) sys.error("dimension read"); "x" })
+      .apply($"id").as("source"))
+    val noop = PartitionedRunner.run(table, riSuite, cp, "r2",
+      dims = Map("sources" -> unreadable))
+    assert(noop.processed.isEmpty)
+    assert(noop.verdicts.count() == 0L)
+  }
+
   test("runJson: resumable raw-JSON corpus validation with lineage") {
     import org.apache.spark.sql.{functions => F}
     val base = Files.createTempDirectory("graft-cp-json").toString

@@ -31,6 +31,92 @@ class PropertySpec extends SparkSpec {
     assert(after.exceptAll(before).isEmpty)
   }
 
+  test("drift divergence on the driver matches the SQL formula on 200 grids") {
+    // random (partition × bucket) count grids: empty buckets, single
+    // partitions, all-zero partitions, support floors, psi and kl
+    val rnd = new scala.util.Random(7)
+    case class Grid(g: Int, nb: Int, metric: String, minTotal: Long,
+        threshold: Double, counts: Seq[(String, Array[Long])])
+    val grids = (0 until 200).map { g =>
+      val nb = 1 + rnd.nextInt(8)
+      val parts = (0 until 1 + rnd.nextInt(5)).map { p =>
+        val zero = rnd.nextDouble() < 0.15
+        s"p$p" -> Array.fill(nb)(
+          if (zero || rnd.nextDouble() < 0.3) 0L else 1L + rnd.nextInt(60))
+      }
+      Grid(g, nb, if (rnd.nextBoolean()) "psi" else "kl",
+        Seq(0L, 1L, 20L, 100L)(rnd.nextInt(4)), rnd.nextDouble() * 0.5, parts)
+    }
+    assert(grids.exists(_.counts.sizeIs == 1))
+    assert(grids.exists(_.counts.exists(_._2.forall(_ == 0L))))
+    assert(grids.exists(gr =>
+      gr.counts.exists(c => c._2.sum > 0 && c._2.sum < gr.minTotal)))
+    assert(grids.map(_.metric).toSet == Set("psi", "kl"))
+    grids.flatMap(gr => gr.counts.map { case (p, c) => (gr.g, p, c.toSeq) })
+      .toDF("g", "part", "c")
+      .select($"g", $"part", F.posexplode($"c").as(Seq("b", "c")))
+      .createOrReplaceTempView("drift_cells")
+    grids.map(gr => (gr.g, gr.nb, gr.metric, gr.minTotal, gr.threshold))
+      .toDF("g", "nb", "metric", "min_total", "threshold")
+      .createOrReplaceTempView("drift_params")
+    // the histogram holds only non-zero cells; a partition without any
+    // is absent, and the global q sums every partition present
+    val sql = spark.sql("""
+      WITH hist AS (SELECT * FROM drift_cells WHERE c > 0),
+      parts AS (SELECT g, part, SUM(c) AS pt FROM hist GROUP BY g, part),
+      glob AS (SELECT g, b, SUM(c) AS gc FROM hist GROUP BY g, b),
+      tot AS (SELECT g, SUM(c) AS gt FROM hist GROUP BY g),
+      terms AS (
+        SELECT x.g, x.part, k.metric, k.threshold,
+          (CAST(x.c AS DOUBLE) + 1e-6) / (CAST(p.pt AS DOUBLE) + 1e-6 * k.nb) AS p,
+          (CAST(COALESCE(gl.gc, 0) AS DOUBLE) + 1e-6) /
+            (CAST(t.gt AS DOUBLE) + 1e-6 * k.nb) AS q
+        FROM drift_cells x
+        JOIN parts p ON p.g = x.g AND p.part = x.part
+        JOIN tot t ON t.g = x.g
+        JOIN drift_params k ON k.g = x.g
+        LEFT JOIN glob gl ON gl.g = x.g AND gl.b = x.b
+        WHERE p.pt >= k.min_total),
+      m AS (
+        SELECT g, part, metric, threshold,
+          SUM(CASE WHEN metric = 'psi' THEN (p - q) * ln(p / q)
+                   ELSE p * ln(p / q) END) AS m
+        FROM terms GROUP BY g, part, metric, threshold)
+      SELECT g, part, m, m > threshold AS flagged,
+        CONCAT(metric, '=', CAST(ROUND(m, 6) AS STRING)) AS observed
+      FROM m""").collect()
+      .map(r => (r.getInt(0), r.getString(1)) ->
+        (r.getDouble(2), r.getBoolean(3), r.getString(4))).toMap
+    assert(sql.values.exists(_._2) && sql.values.exists(!_._2))
+
+    // relative 1e-9; below 1e-6 the bound is 1e-15 absolute, where KL's
+    // signed terms cancel
+    def close(a: Double, b: Double) =
+      math.abs(a - b) <= 1e-9 * Seq(math.abs(a), math.abs(b), 1e-6).max
+    val cellsDf = Seq(("p", 0.0)).toDF("part", "v")
+    grids.foreach { gr =>
+      val got = graft.checks.DriftMath
+        .divergence(gr.counts.map { case (p, c) => (Seq(p), c) }, gr.metric,
+          gr.minTotal).map { case (k, m) => k.head.asInstanceOf[String] -> m }
+        .toMap
+      val want = sql.collect { case ((gr.g, p), v) => p -> v }
+      assert(got.keySet == want.keySet, s"grid ${gr.g}")
+      got.foreach { case (p, m) =>
+        assert(close(m, want(p)._1), s"grid ${gr.g} $p: $m vs ${want(p)._1}")
+      }
+      val check = graft.checks.DriftCheck("d", "v", 0.0, 1.0, gr.nb,
+        gr.metric, gr.threshold, "e", gr.minTotal)
+      val metrics = check.metricsFrame(
+        graft.checks.Summary.alone(check, cellsDf, "doc_id", Seq("part"),
+          Map.empty),
+        got.toSeq.map { case (p, m) => (Seq(p), m) })
+      val flagged = check.violationsOf(metrics, Seq("part"))
+        .select("part", "observed").as[(String, String)].collect().toMap
+      assert(flagged == want.collect { case (p, (_, true, o)) => p -> o },
+        s"grid ${gr.g}")
+    }
+  }
+
   test("generator determinism across partition counts") {
     val a = SequenceGen.generate(spark, 3000L, 4, 42L, true, 2)
       .toDF().selectExpr("doc_id", "xxhash64(doc_id, tokens, n_tok, source) as h")

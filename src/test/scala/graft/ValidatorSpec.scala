@@ -208,6 +208,33 @@ class ValidatorSpec extends SparkSpec {
       ConstraintCompiler.compile(suite).constraintHash)
   }
 
+  /** What the listener saw while `body` ran: jobs started and shuffle
+    * bytes written. The bus is drained before and after, so no event of
+    * an earlier action leaks in and none of this one's is missed. */
+  private case class Listened(jobs: Int, shuffleWriteBytes: Long)
+
+  private def listened[T](body: => T): (T, Listened) = {
+    import org.apache.spark.GraftSparkBridge.drainListenerBus
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      drainListenerBus(sc)
+      (r, Listened(jobs.get, bytes.get))
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Replays the generator's doc_id assignment on the driver so tests can
     * compute exact expected duplicate sets. */
   private def docIdOf(i: Long): String =
@@ -244,6 +271,23 @@ class ValidatorSpec extends SparkSpec {
     val expected = (1L until 25000L)
       .filter(_ % SequenceGen.BadSourceEvery == 0).map(docIdOf).toSet
     assert(bad == expected)
+  }
+
+  test("referential integrity: a NULL dimension key matches no fact") {
+    // an IN set holding NULL would turn every non-matching key into NULL
+    // instead of a dangling row
+    val dim = Seq("web", null).toDF("source")
+    val facts = Seq(("a", null, "p1"), ("b", "mars", "p1"), ("c", "web", "p2"))
+      .toDF("doc_id", "src", "part")
+    val suite = ConstraintCompiler.compile(ConstraintSuite("s",
+      Seq(RefIntegrity("ri", "src", "sources", "source"))))
+    val rep = Validator.validateWithDetails(facts, suite, Seq("part"),
+      dims = Map("sources" -> dim))
+    assert(rep.violations.select("doc_id", "observed").as[(String, String)]
+      .collect().toSet == Set(("a", "null"), ("b", "mars")))
+    val v = rep.verdicts.select("part", "n_partition_violations", "valid")
+      .as[(String, Long, Boolean)].collect().toSet
+    assert(v == Set(("p1", 2L, false), ("p2", 0L, true)))
   }
 
   test("dataset checks: drift flags exactly the shifted partition") {
@@ -346,6 +390,12 @@ class ValidatorSpec extends SparkSpec {
     assert(mars.getAs[Long]("n_global_violations") == 1L)
     assert(web.getAs[Long]("n_global_violations") == 1L)
     assert(v.forall(!_.getAs[Boolean]("valid")))
+    // the local verdict frame has the lazy row-only aggregate's schema
+    val rowOnly = ConstraintCompiler.compile(ConstraintSuite("r", Seq(
+      NotNull("nn", "doc_id"))))
+    assert(Validator.validate(df, suite, Seq("source"),
+        dims = Map("sources" -> dim)).schema ==
+      Validator.validate(df, rowOnly, Seq("source")).schema)
     // without the global dup, web would be valid
     val suite2 = ConstraintCompiler.compile(ConstraintSuite("s2", Seq(
       RefIntegrity("ri", "source", "sources", "source"))))
@@ -397,13 +447,18 @@ class ValidatorSpec extends SparkSpec {
       assert(shuffles(viol) == 0, viol.queryExecution.executedPlan)
 
       // contrast: the two-phase default against the same source shuffles
+      // its key hashes. Phase 1 runs in the summary aggregate and the
+      // violations finish on the driver, so the shuffle shows in the
+      // bytes written while they are computed, not in their final plan.
       val twoPhase = ConstraintCompiler.compile(ConstraintSuite("s2", Seq(
         Unique("u", "doc_id"))))
-      val viol2 = Validator.validateWithDetails(bucketed, twoPhase, Seq.empty)
-        .violations.select("doc_id", "observed")
-      assert(viol2.as[(String, String)].collect().toSet ==
-        Set(("a", "count=2")))
-      assert(shuffles(viol2) > 0)
+      val (viol2, twoPhaseSpark) = listened {
+        val v = Validator.validateWithDetails(bucketed, twoPhase, Seq.empty)
+          .violations.select("doc_id", "observed")
+        v.as[(String, String)].collect().toSet
+      }
+      assert(viol2 == Set(("a", "count=2")))
+      assert(twoPhaseSpark.shuffleWriteBytes > 0)
 
       // and colocated against a NON-bucketed source: slower (Spark adds
       // the exchange back) but exactly as correct
@@ -413,6 +468,80 @@ class ValidatorSpec extends SparkSpec {
         Set(("a", "count=2")))
       assert(shuffles(viol3) > 0)
     } finally spark.sql("DROP TABLE IF EXISTS uniq_bucketed")
+  }
+
+  test("full suite: one summary scan, at most 5 jobs per verdict call") {
+    val base = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    val dims = Map("sources" -> SequenceGen.sourcesDim(spark, 4))
+    val suite = ConstraintCompiler.compile(Scaling.benchSuite)
+    for (planted <- Seq(true, false)) {
+      val dir = s"$base/planted=$planted"
+      SequenceGen.generate(spark, 12000L, nSources = 4,
+        plantViolations = planted, numPartitions = 4)
+        .write.partitionBy("source").parquet(dir)
+      val df = spark.read.parquet(dir)
+      Validator.validate(df, suite, Seq("source"), dims = dims).collect()
+      val (rows, seen) = listened(
+        Validator.validate(df, suite, Seq("source"), dims = dims).collect())
+      assert(rows.nonEmpty)
+      if (planted) {
+        // the planted keys make uniqueness run phase 2: 2 summary jobs
+        // (shuffle and result) and 2 for the recount of the candidates
+        assert(rows.exists(_.getAs[Long]("n_global_violations") > 0))
+        assert(seen.jobs <= 5, seen)
+      } else {
+        assert(rows.forall(_.getAs[Boolean]("valid")))
+        assert(seen.jobs <= 3, seen)
+        val ev = Validator.evaluate(df, suite, Seq("source"), "doc_id", dims,
+          None)
+        ev.verdicts.collect()
+        val scans = graft.tools.PlanWalk
+          .fileScans(ev.summary.aggregate.queryExecution.executedPlan)
+        assert(scans.size == 1, scans)
+      }
+    }
+  }
+
+  test("uniqueness: phase 2 recounts 32k duplicated keys exactly") {
+    // every key twice: as many candidate hashes as keys
+    val n = 65538L
+    val df = spark.range(n).select(($"id" / 2).cast("long").cast("string")
+      .as("doc_id"))
+    val suite = ConstraintCompiler.compile(ConstraintSuite("s",
+      Seq(Unique("u", "doc_id"))))
+    val rep = Validator.validateWithDetails(df, suite, Seq.empty)
+    assert(rep.verdicts.select("n_global_violations").as[Long].head() == n / 2)
+    val viol = rep.violations.select("observed").distinct()
+      .as[String].collect()
+    assert(viol.toSeq == Seq("count=2"))
+    assert(rep.violations.count() == n / 2)
+  }
+
+  test("referential integrity: a NULL partition value counts its own dangling rows") {
+    val dim = Seq("web").toDF("source")
+    val facts = Seq(("a", "mars", null), ("b", "web", null), ("c", "web", "p1"))
+      .toDF("doc_id", "src", "part")
+    val suite = ConstraintCompiler.compile(ConstraintSuite("s",
+      Seq(RefIntegrity("ri", "src", "sources", "source"))))
+    val v = Validator.validate(facts, suite, Seq("part"),
+      dims = Map("sources" -> dim))
+      .select("part", "n_rows", "n_partition_violations", "valid")
+      .as[(String, Long, Long, Boolean)].collect().toSet
+    assert(v == Set((null, 2L, 1L, false), ("p1", 1L, 0L, true)))
+  }
+
+  test("referential integrity: a dimension of 10^5 keys") {
+    val n = 100000L
+    val dim = spark.range(n).select($"id".cast("string").as("key"))
+    val facts = Seq(("a", "0"), ("b", "99999"), ("c", "100000"), ("d", "-1"))
+      .toDF("doc_id", "k")
+    val suite = ConstraintCompiler.compile(ConstraintSuite("s",
+      Seq(RefIntegrity("ri", "k", "keys", "key"))))
+    val rep = Validator.validateWithDetails(facts, suite, Seq.empty,
+      dims = Map("keys" -> dim))
+    assert(rep.violations.select("doc_id").as[String].collect().toSet ==
+      Set("c", "d"))
+    assert(rep.verdicts.select("n_global_violations").as[Long].head() == 2L)
   }
 
   test("uniqueness: NULL keys are never duplicates (SQL UNIQUE)") {
