@@ -1,6 +1,7 @@
 package graft.checkpoint
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.storage.StorageLevel
 
@@ -21,6 +22,21 @@ final case class CheckpointEntry(
     n_bad_rows: Long,
     run_id: String)
 
+/** The checkpoint entry a run skips a partition by: run `runId`
+  * validated the partition's data at `snapshotId`, which is still its
+  * current snapshot id, under the same constraint hash. */
+final case class Covering(runId: String, snapshotId: String)
+
+/** What a run plans from: one listing of the table (partition → snapshot
+  * id, sorted by partition) and the entry covering each partition the
+  * checkpoint already holds at its current snapshot id. */
+private[graft] final case class ResumePlan(
+    snapshots: Seq[(String, String)],
+    covered: Map[String, Covering]) {
+  def pending: Seq[String] = snapshots.map(_._1).filterNot(covered.contains)
+  def skipped: Seq[String] = snapshots.map(_._1).filter(covered.contains)
+}
+
 /**
  * Append-only checkpoint table (Parquet). A partition is "done" iff an
  * entry matches its CURRENT snapshot id and the CURRENT constraint hash —
@@ -32,45 +48,60 @@ final case class CheckpointEntry(
 final class CheckpointStore(spark: SparkSession, path: String) {
   import spark.implicits._
 
+  /** Every entry, read with the known [[CheckpointEntry]] schema, so
+    * reading infers nothing. */
   def load(): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(path)
+    if (fs.exists(p))
+      spark.read.schema(Encoders.product[CheckpointEntry].schema).parquet(path)
     else spark.emptyDataset[CheckpointEntry].toDF()
   }
 
   def append(entries: Seq[CheckpointEntry]): Unit =
     entries.toDS().toDF().write.mode(SaveMode.Append).parquet(path)
 
-  /** Partitions still needing validation: current (partition, snapshot,
-    * hash) tuples EXCEPT already-checkpointed ones. The partition list is
-    * tiny relative to the data (thousands of entries for a 100 TB table),
-    * so the anti-join runs as a local/broadcast plan. */
-  def pending(table: TableProvider, constraintHash: String): Seq[String] = {
-    val current = table.partitions()
-      .map(p => (p, table.snapshotId(p), constraintHash))
-      .toDF("partition", "snapshot_id", "constraint_hash")
-    current
-      .join(load().select("partition", "snapshot_id", "constraint_hash"),
-        Seq("partition", "snapshot_id", "constraint_hash"), "left_anti")
-      .select("partition").as[String].collect().toSeq.sorted
+  /** Partitions still needing validation, sorted: those no entry records
+    * at their current snapshot id under `constraintHash`. */
+  def pending(table: TableProvider, constraintHash: String): Seq[String] =
+    plan(table, constraintHash).pending
+
+  /** One listing of `table` against the entries of `constraintHash`:
+    * ONE small scan with the hash pushed down collects this hash's
+    * `(partition, snapshot_id, run_id)` triples, and the difference with
+    * the listing is taken on the driver — no join, no shuffle. A
+    * partition covered by several entries names the least run id. */
+  private[graft] def plan(table: TableProvider,
+      constraintHash: String): ResumePlan = {
+    val snapshots = table.snapshots().sortBy(_._1)
+    val current = snapshots.toSet
+    val covered = load()
+      .where(F.col("constraint_hash") === constraintHash)
+      .select("partition", "snapshot_id", "run_id")
+      .as[(String, String, String)].collect()
+      .collect { case (p, snap, run) if current((p, snap)) =>
+        p -> Covering(run, snap) }
+      .groupMapReduce(_._1)(_._2)((a, b) => if (a.runId <= b.runId) a else b)
+    ResumePlan(snapshots, covered)
   }
 }
 
-/** Result of one (possibly partial) validation run. */
+/** Result of one (possibly partial) validation run. `coveredBy` names,
+  * for each skipped partition, the checkpoint entry it was skipped by. */
 final case class RunResult(
     runId: String,
     processed: Seq[String],
     skipped: Seq[String],
     verdicts: DataFrame,
-    violations: DataFrame)
+    violations: DataFrame,
+    coveredBy: Map[String, Covering])
 
 /**
  * The resumable whole-table validation driver (north rule C7): plan =
- * pending partitions (checkpoint anti-join) → ONE partition-pruned scan
- * validates all of them → violations land per partition → checkpoint
- * entries appended with metrics. Kill it anywhere; the next run picks up
- * exactly the unvalidated partitions.
+ * pending partitions (one listing against the checkpoint, on the driver)
+ * → ONE partition-pruned scan validates all of them → violations land
+ * per partition → checkpoint entries appended with metrics. Kill it
+ * anywhere; the next run picks up exactly the unvalidated partitions.
  *
  * SINGLE PASS: [[run]] (Catalyst engine) and [[runJson]] (doc engine)
  * share one driver and differ only in the [[Evaluation]] they supply —
@@ -180,18 +211,21 @@ object PartitionedRunner {
 
   /** The one driver loop: pending partitions → one evaluation →
     * (persisted when violations are written) → violations → checkpoint.
-    * A converged run evaluates nothing and returns empty frames with the
-    * verdict and violation schemas. */
+    * Pending, skipped and every entry's snapshot id come from the one
+    * listing the run planned from. A converged run evaluates nothing and
+    * returns empty frames with the verdict and violation schemas. */
   private def drive(table: TableProvider, checkpoint: CheckpointStore,
       runId: String, constraintHash: String, violationsOut: Option[String],
       maxPartitions: Int)(evaluate: Seq[String] => Evaluation): RunResult = {
-    val pendingAll = checkpoint.pending(table, constraintHash)
-    val pending = pendingAll.take(maxPartitions)
-    val skipped = table.partitions().diff(pendingAll)
+    val plan = checkpoint.plan(table, constraintHash)
+    val pending = plan.pending.take(maxPartitions)
     val eval = evaluate(pending)
+    def result(verdicts: DataFrame, violations: DataFrame) =
+      RunResult(runId, pending, plan.skipped, verdicts, violations,
+        plan.covered)
     if (pending.isEmpty) {
       val (verdicts, violations) = eval.empty
-      return RunResult(runId, pending, skipped, verdicts, violations)
+      return result(verdicts, violations)
     }
 
     val persist = violationsOut.isDefined
@@ -200,38 +234,38 @@ object PartitionedRunner {
       violationsOut.foreach { out =>
         eval.violations.write.mode(SaveMode.Append).parquet(out)
       }
-      checkpoint.append(checkpointEntries(
-        table, eval.verdicts, constraintHash, runId, pending))
+      val snapshot = plan.snapshots.toMap
+      checkpoint.append(checkpointEntries(table.partitionCols, eval.verdicts,
+        constraintHash, runId, pending.map(p => p -> snapshot(p))))
     } finally if (persist) eval.rows.unpersist(blocking = false)
-    RunResult(runId, pending, skipped, eval.verdicts, eval.violations)
+    result(eval.verdicts, eval.violations)
   }
 
   /** Collect per-partition verdict rows into checkpoint entries, plus
     * vacuous entries for pending partitions whose scan produced zero
     * rows (they emit no verdict row and would otherwise be re-queued
-    * and re-scanned on every run forever). */
-  private def checkpointEntries(table: TableProvider, verdicts: DataFrame,
-      constraintHash: String, runId: String,
-      pending: Seq[String]): Seq[CheckpointEntry] = {
+    * and re-scanned on every run forever). `pending` pairs each pending
+    * partition with the snapshot id the run planned from: a partition
+    * rewritten during the run is recorded at the id it was validated
+    * at, so the next run sees a new id and validates it again. */
+  private def checkpointEntries(partitionCols: Seq[String],
+      verdicts: DataFrame, constraintHash: String, runId: String,
+      pending: Seq[(String, String)]): Seq[CheckpointEntry] = {
+    // a verdict row carries DECODED partition values: match it to its
+    // pending partition by the decoded values of the name
+    val byValues = pending.map { case (p, snap) =>
+      TableProvider.decode(p).map(_._2) -> (p, snap) }.toMap
     // Verdicts are small (one row per partition) — collect for checkpoint.
-    val entries = verdicts.collect().map { r =>
-      // multi-column partition specs render as col1=v1/col2=v2 — the same
-      // form TableProvider.partitions() emits. The verdict carries
-      // DECODED values while directory names are Hive-ESCAPED
-      // ('us west' ↔ 'us%20west', null ↔ __HIVE_DEFAULT_PARTITION__),
-      // so re-escape before snapshot lookup or special-char partitions
-      // would miss the checkpoint forever (or crash listStatus).
-      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      val pname = table.partitionCols.map { c =>
-        val v = r.getAs[Any](c)
-        val enc =
-          if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-          else ExternalCatalogUtils.escapePathName(v.toString)
-        s"$c=$enc"
-      }.mkString("/")
+    val entries = verdicts.collect().toSeq.map { r =>
+      val values =
+        partitionCols.map(c => Option(r.getAs[Any](c)).map(_.toString))
+      val (p, snap) = byValues.getOrElse(values,
+        throw new IllegalStateException(s"verdict for " +
+          s"${partitionCols.zip(values).mkString(", ")} matches no pending " +
+          "partition"))
       CheckpointEntry(
-        partition = pname,
-        snapshot_id = table.snapshotId(pname),
+        partition = p,
+        snapshot_id = snap,
         constraint_hash = constraintHash,
         valid = r.getAs[Boolean]("valid"),
         n_rows = r.getAs[Long]("n_rows"),
@@ -239,9 +273,9 @@ object PartitionedRunner {
         run_id = runId)
     }
     val seen = entries.map(_.partition).toSet
-    val empties = pending.filterNot(seen).map(p => CheckpointEntry(
-      p, table.snapshotId(p), constraintHash,
-      valid = true, n_rows = 0L, n_bad_rows = 0L, run_id = runId))
-    entries.toSeq ++ empties
+    entries ++ pending.filterNot(e => seen(e._1)).map { case (p, snap) =>
+      CheckpointEntry(p, snap, constraintHash,
+        valid = true, n_rows = 0L, n_bad_rows = 0L, run_id = runId)
+    }
   }
 }

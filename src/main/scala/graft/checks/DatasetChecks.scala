@@ -51,6 +51,12 @@ sealed trait DatasetCheck extends Serializable {
   /** The check's result from `s`, in which it is check `i`. */
   private[graft] def finish(s: Summary, i: Int): Finished
 
+  /** The check's violation on one row of the per-row frame, given its
+    * summary column `value` there: the violation struct `(constraint_id,
+    * observed, expected, instance_path)`, NULL where the row holds.
+    * `None` for a check whose violations are not facts about one row. */
+  private[graft] def rowViolation(value: Column): Option[Column] = None
+
   /** The tagged violation rows of this check alone over `df`. */
   final def taggedViolations(
       df: DataFrame,
@@ -91,11 +97,21 @@ object DatasetCheck {
   val violationCols: Seq[String] =
     Seq("doc_id", "constraint_id", "observed", "expected", "instance_path")
 
+  /** [[violationCols]], all strings. */
+  private[graft] val violationSchema: StructType =
+    StructType(violationCols.map(StructField(_, StringType)))
+
   /** A DataFrame over rows already on the driver: a local relation, so
     * projecting or collecting it launches no job. */
   private[graft] def local(spark: SparkSession, rows: Seq[Row],
       schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
+
+  /** Whether `df` optimizes to a local relation, whose rows are on the
+    * driver already. */
+  private[graft] def onDriver(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 }
 
 /**
@@ -220,26 +236,29 @@ final case class RefIntegrityCheck(
       s"referential check '$id': dimension '$dimName' not provided"))
     val k = F.col(dimCol).cast("string")
     val keyRows = dim.select(k).where(k.isNotNull)
-    val onDriver = keyRows.queryExecution.optimizedPlan.isInstanceOf[
-      org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-    val keys = (if (onDriver) keyRows else keyRows.distinct())
+    val keys = (if (DatasetCheck.onDriver(keyRows)) keyRows
+      else keyRows.distinct())
       .collect().map(r => UTF8String.fromString(r.getString(0)): Any).toSet
     val fk = F.col(col).cast("string")
     F.when(fk.isNull, F.lit("null")).when(!Summary.inSet(fk, keys), fk)
   }
+
+  private[graft] override def rowViolation(value: Column): Option[Column] =
+    Some(F.when(value.isNotNull, F.struct(
+      F.lit(id).as("constraint_id"),
+      value.as("observed"),
+      F.lit(expected).as("expected"),
+      instancePath(col))))
 
   /** The tagged violation rows of a per-row frame whose column
     * `dangling` holds [[dangling]] and whose `_doc_id` holds the id. */
   private[graft] def violationRows(rows: DataFrame, dangling: String,
       partitionCols: Seq[String]): DataFrame =
     rows.filter(F.col(dangling).isNotNull)
-      .select(Seq(
-        F.col("_doc_id").as("doc_id"),
-        F.lit(id).as("constraint_id"),
-        F.col(dangling).as("observed"),
-        F.lit(expected).as("expected"),
-        instancePath(col)) ++
-        partitionCols.map(F.col): _*)
+      .select((F.col("_doc_id").as("doc_id") +:
+        rowViolation(F.col(dangling)).get.as("_v") +:
+        partitionCols.map(F.col)): _*)
+      .select(("doc_id" +: "_v.*" +: partitionCols).map(F.col): _*)
 }
 
 /**

@@ -209,23 +209,39 @@ private[graft] final class Evaluation(val summary: Summary) {
     }
   }
 
-  /** Violation rows of every source, union'd. Row-local ones explode
-    * from `_viols` behind a plain `_ok` filter: the filter pushes down as
-    * ONE codegen any-constraint-failed gate, so on a mostly-clean table
-    * the vast majority of rows short-circuit out of the scan stage
-    * without constructing a struct, and the Generate runs only over the
-    * failing sliver. NULL elements drop with a plain Filter AFTER the
-    * Generate: a higher-order `filter(_viols, …)` lambda reads nicer but
-    * ArrayFilter is CodegenFallback, which drags the whole struct
-    * construction into interpreted eval() per row. */
+  /** Violation rows of every source, union'd. Row-local ones and those
+    * of checks with a per-row violation (referential integrity) explode
+    * from ONE pass over `rows`, behind a plain gate (`_ok` false or a
+    * per-row violation present): the filter pushes down as ONE codegen
+    * gate, so on a mostly-clean table the vast majority of rows
+    * short-circuit out of the scan stage without constructing a struct,
+    * and the Generate runs only over the failing sliver. NULL elements
+    * drop with a plain Filter AFTER the Generate: a higher-order
+    * `filter(_viols, …)` lambda reads nicer but ArrayFilter is
+    * CodegenFallback, which drags the whole struct construction into
+    * interpreted eval() per row. The other checks' rows that are already
+    * on the driver (uniqueness, drift) join as one single-slice local
+    * frame, so writing the union runs one task per partition of `rows`
+    * plus one. */
   lazy val violations: DataFrame = {
-    val rowViolations = rows.filter(!F.col("_ok"))
-      .select(F.col("_doc_id").as("doc_id"),
-        F.explode(F.col("_viols")).as("_v"))
+    val (perRow, others) = checks.indices.partitionMap(i =>
+      checks(i).rowViolation(F.col(Summary.column(i))).toLeft(i))
+    val viols =
+      if (perRow.isEmpty) F.col("_viols")
+      else F.concat(F.coalesce(F.col("_viols"),
+        F.array().cast(rows.schema("_viols").dataType)), F.array(perRow: _*))
+    val rowViolations = rows
+      .filter(perRow.foldLeft(!F.col("_ok"))(_ || _.isNotNull))
+      .select(F.col("_doc_id").as("doc_id"), F.explode(viols).as("_v"))
       .filter(F.col("_v").isNotNull)
       .select("doc_id", "_v.*")
-    (rowViolations +: summary.finished.map(_.violations
-      .select(DatasetCheck.violationCols.map(F.col): _*)))
+    val (onDriver, distributed) = others.map(summary.finished(_).violations
+      .select(DatasetCheck.violationCols.map(F.col): _*))
+      .partition(DatasetCheck.onDriver)
+    val local = onDriver.flatMap(_.collect())
+    ((rowViolations +: distributed) ++ Option.when(local.nonEmpty)(
+      DatasetCheck.local(rows.sparkSession, local,
+        DatasetCheck.violationSchema).coalesce(1)))
       .reduce(_ unionAll _)
   }
 
@@ -235,7 +251,6 @@ private[graft] final class Evaluation(val summary: Summary) {
     val spark = summary.whole.sparkSession
     (DatasetCheck.local(spark, Nil, verdictSchema),
       if (checks.isEmpty) violations.limit(0)
-      else DatasetCheck.local(spark, Nil, StructType(
-        DatasetCheck.violationCols.map(StructField(_, StringType)))))
+      else DatasetCheck.local(spark, Nil, DatasetCheck.violationSchema))
   }
 }

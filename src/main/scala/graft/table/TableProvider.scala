@@ -13,6 +13,10 @@ import org.apache.spark.sql.{functions => F}
  * drop-in for this trait (partitions → `table.partitions()`, snapshotId →
  * the Iceberg snapshot id, scan → `spark.read.format("iceberg")` with the
  * same partition filter).
+ *
+ * A scan is pinned to the snapshot it was listed at: it reads the files
+ * the listing saw, the way an Iceberg scan reads one snapshot, and a
+ * change to any partition's files gives a scan of the new files.
  */
 trait TableProvider {
   /** The partition column names (verdict granularity). */
@@ -26,18 +30,46 @@ trait TableProvider {
     * stable hash of sorted (name, length) of the partition's files). */
   def snapshotId(partition: String): String
 
+  /** Every partition with its snapshot id, from one listing: the plan a
+    * resumable run validates against. */
+  def snapshots(): Seq[(String, String)] =
+    partitions().map(p => p -> snapshotId(p))
+
   /** Scan restricted to the given partitions — MUST push the filter down
     * to partition pruning (one pruned scan for all pending partitions,
     * not a scan per partition). */
   def scan(parts: Seq[String]): DataFrame
 
+  /** Scan of every partition. */
   def scanAll(): DataFrame
+}
+
+object TableProvider {
+  /** The `(column, value)` pairs of a partition name `c1=v1/c2=v2/...`,
+    * values decoded as the reader surfaces them: directory names carry
+    * Hive-ESCAPED values ('a%3Ab' on disk, 'a:b' in the column), and
+    * `__HIVE_DEFAULT_PARTITION__` reads back as NULL (`None`). */
+  def decode(partition: String): Seq[(String, Option[String])] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    partition.split("/").toSeq.map { seg =>
+      val Array(c, v) = seg.split("=", 2)
+      c -> Option.when(v != ExternalCatalogUtils.DEFAULT_PARTITION_NAME)(
+        ExternalCatalogUtils.unescapePathName(v))
+    }
+  }
 }
 
 /**
  * Hive-layout partitioned Parquet: `root/<c1>=<v1>/<c2>=<v2>/...parquet`
  * for any number of partition columns; partition names render
  * `c1=v1/c2=v2` (the `input_hint` table partitions by `source` alone).
+ *
+ * The relation over `root` is built once and pinned together with the
+ * [[snapshots]] it was built from: building it lists every file and runs
+ * a Spark job to infer the parquet schema. Each scan lists the table
+ * again on the driver and reuses the relation while every partition
+ * keeps its snapshot id; any change rebuilds it, so a rewritten
+ * partition or an added file is read.
  */
 final class ParquetPartitionedTable(
     spark: SparkSession,
@@ -80,28 +112,31 @@ final class ParquetPartitionedTable(
   }
 
   override def scan(parts: Seq[String]): DataFrame = {
-    // each partition name is c1=v1/c2=v2/...; the disjunction of
-    // per-partition conjunctions compiles to a static partition-pruning
-    // predicate — only the pending partitions' files are listed/read.
-    // Directory names carry Hive-ESCAPED values while the reader
-    // surfaces DECODED column values ('a%3Ab' on disk, 'a:b' in the
-    // column; __HIVE_DEFAULT_PARTITION__ reads back as NULL) — compare
-    // against the decoded form or affected partitions silently scan
-    // zero rows and checkpoint a PASS for data never checked.
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    // the disjunction of per-partition conjunctions compiles to a static
+    // partition-pruning predicate — only the pending partitions' files
+    // are read. Compare against the DECODED values, or affected
+    // partitions silently scan zero rows and checkpoint a PASS for data
+    // never checked.
     val pred = parts.map { p =>
-      p.split("/").toSeq.map { seg =>
-        val Array(c, v) = seg.split("=", 2)
-        if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
-          F.col(c).isNull
-        else F.col(c) === F.lit(ExternalCatalogUtils.unescapePathName(v))
+      TableProvider.decode(p).map {
+        case (c, None)    => F.col(c).isNull
+        case (c, Some(v)) => F.col(c) === F.lit(v)
       }.reduce(_ && _)
     }.reduceOption(_ || _).getOrElse(F.lit(false))
     scanAll().filter(pred)
   }
 
-  override def scanAll(): DataFrame =
-    spark.read
-      .option("basePath", root)
-      .parquet(root)
+  /** The relation the last scan built and the listing it was built
+    * from. The listing is taken first, so a change while the relation is
+    * built shows as a different listing on the next scan. */
+  private var pinned: Option[(Seq[(String, String)], DataFrame)] = None
+
+  override def scanAll(): DataFrame = synchronized {
+    val listing = snapshots()
+    pinned.collect { case (l, df) if l == listing => df }.getOrElse {
+      val df = spark.read.option("basePath", root).parquet(root)
+      pinned = Some(listing -> df)
+      df
+    }
+  }
 }

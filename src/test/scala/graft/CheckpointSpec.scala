@@ -2,12 +2,16 @@ package graft
 
 import java.nio.file.Files
 
-import graft.checkpoint.{CheckpointStore, PartitionedRunner}
+import org.apache.spark.sql.DataFrame
+
+import graft.checkpoint.{CheckpointEntry, CheckpointStore, Covering,
+  PartitionedRunner}
 import graft.compile.ConstraintCompiler
 import graft.dsl.Constraint._
 import graft.dsl.ConstraintSuite
 import graft.gen.SequenceGen
-import graft.table.ParquetPartitionedTable
+import graft.exec.Validator
+import graft.table.{ParquetPartitionedTable, TableProvider}
 
 /** North-rule C7: per-partition lineage + resume. Mirrors the reference's
   * compile-once/reuse contract at run scope: a checkpointed partition is
@@ -42,11 +46,16 @@ class CheckpointSpec extends SparkSpec {
     assert(r2.processed.size == 3)
     assert(r2.skipped.toSet == r1.processed.toSet)
     assert(r2.processed.toSet.intersect(r1.processed.toSet).isEmpty)
+    // each skip names the entry it rests on
+    assert(r2.coveredBy == r1.processed.map(p =>
+      p -> Covering("run1", table.snapshotId(p))).toMap)
 
     // third run: nothing pending
     val r3 = PartitionedRunner.run(table, suite, cp, "run3")
     assert(r3.processed.isEmpty)
     assert(r3.skipped.toSet == allParts.toSet)
+    assert(r3.coveredBy.map { case (p, c) => p -> c.runId } ==
+      (r1.processed.map(_ -> "run1") ++ r2.processed.map(_ -> "run2")).toMap)
 
     // union of the two partial runs == one full fresh run
     val fullCp = new CheckpointStore(spark, s"$base/checkpoint-full")
@@ -318,5 +327,112 @@ class CheckpointSpec extends SparkSpec {
     // same suite shape
     assert(rows.forall(_.getAs[String]("constraint_hash")
       .startsWith("docjson:")))
+  }
+
+  test("an entry records the snapshot id the run planned from") {
+    // a partition rewritten while the run reads it must be recorded at
+    // the id it was planned at, so the next run validates the new files
+    val base = Files.createTempDirectory("graft-cp-midrun").toString
+    val data = mkTable(s"$base/data")
+    val table = new TableProvider {
+      @volatile var scanned = Set.empty[String]
+      def partitionCols: Seq[String] = data.partitionCols
+      def partitions(): Seq[String] = data.partitions()
+      def snapshotId(p: String): String =
+        data.snapshotId(p) + (if (scanned(p)) "+rewritten" else "")
+      def scan(parts: Seq[String]): DataFrame = {
+        scanned ++= parts
+        data.scan(parts)
+      }
+      def scanAll(): DataFrame = data.scanAll()
+    }
+    val cp = new CheckpointStore(spark, s"$base/checkpoint")
+    val r1 = PartitionedRunner.run(table, suite, cp, "r1", maxPartitions = 1)
+    val p = r1.processed.head
+    val entry = cp.load().as[CheckpointEntry].collect().toSeq
+    assert(entry.map(e => e.partition -> e.snapshot_id) ==
+      Seq(p -> data.snapshotId(p)))
+    val r2 = PartitionedRunner.run(table, suite, cp, "r2")
+    assert(r2.processed.contains(p), r2.processed)
+  }
+
+  test("a pinned table relation: rebuilt on any file change, no job when unchanged") {
+    val base = Files.createTempDirectory("graft-cp-pin").toString
+    val table = mkTable(s"$base/data")
+    val cp = new CheckpointStore(spark, s"$base/checkpoint")
+    PartitionedRunner.run(table, suite, cp, "r1")
+    def rowsOf(verdicts: DataFrame) = verdicts.collect().map(r =>
+      s"source=${r.getAs[String]("source")}" -> r.getAs[Long]("n_rows")).toMap
+
+    // unchanged: the pinned relation comes back, no schema inference job;
+    // a validation over it launches only the jobs of one over a frame
+    // built beforehand
+    val df = table.scanAll()
+    val (again, seen) = listened(table.scanAll())
+    assert((again eq df) && seen.jobs == 0, seen)
+    assert(listened(table.scan(Seq("source=src1")))._2.jobs == 0)
+    val (_, overScanAll) = listened(
+      Validator.validate(table.scanAll(), suite, table.partitionCols).collect())
+    val (_, overFrame) = listened(
+      Validator.validate(df, suite, table.partitionCols).collect())
+    assert(overScanAll.jobs == overFrame.jobs, (overScanAll, overFrame))
+
+    // one partition rewritten: the same table object reads the new rows
+    SequenceGen.generate(spark, 123L, nSources = 1, numPartitions = 1)
+      .drop("source")
+      .write.mode("overwrite").parquet(s"$base/data/source=src2")
+    assert(rowsOf(Validator.validate(table.scanAll(), suite,
+      table.partitionCols))("source=src2") == 123L)
+    val r2 = PartitionedRunner.run(table, suite, cp, "r2")
+    assert(r2.processed == Seq("source=src2"))
+    assert(cp.load().as[CheckpointEntry].collect()
+      .filter(_.run_id == "r2").map(_.n_rows).toSeq == Seq(123L))
+
+    // a file added to a partition is read
+    val before = rowsOf(Validator.validate(table.scanAll(), suite,
+      table.partitionCols))("source=src1")
+    SequenceGen.generate(spark, 77L, nSources = 1, numPartitions = 1)
+      .drop("source")
+      .write.mode("append").parquet(s"$base/data/source=src1")
+    assert(rowsOf(Validator.validate(table.scanAll(), suite,
+      table.partitionCols))("source=src1") == before + 77L)
+    assert(PartitionedRunner.run(table, suite, cp, "r3").processed ==
+      Seq("source=src1"))
+  }
+
+  test("a resume of one partition: at most 8 jobs and a one-pass violation write") {
+    val base = Files.createTempDirectory("graft-cp-jobs").toString
+    val table = mkTable(s"$base/data")
+    val full = ConstraintCompiler.compile(Scaling.benchSuite)
+    val dims = Map("sources" -> SequenceGen.sourcesDim(spark, 4))
+    val primed = new CheckpointStore(spark, s"$base/primed")
+    PartitionedRunner.run(table, full, primed, "prime", dims = dims)
+    val entries = primed.load().as[CheckpointEntry].collect().toSeq
+    val pending = "source=src2"
+    def resume(n: Int) = {
+      val cp = new CheckpointStore(spark, s"$base/checkpoint$n")
+      cp.append(entries.filterNot(_.partition == pending))
+      listened(PartitionedRunner.run(table, full, cp, s"r$n", dims = dims,
+        violationsOut = Some(s"$base/violations$n")))
+    }
+    resume(0)
+    val (r, seen) = resume(1)
+    assert(r.processed == Seq(pending))
+    assert(r.skipped.size == entries.size - 1)
+    // the pending scan's partitions: the per-row frame's
+    val (_, scan) = listened(table.scan(r.processed).write.format("noop")
+      .mode("overwrite").save())
+    val slices = scan.perJob.map(_.tasks).sum
+    val viol = spark.read.parquet(s"$base/violations1")
+    // row-local rows from the scan, uniqueness and drift rows from the
+    // driver: both halves of the write carry rows
+    val ids = viol.select("constraint_id").as[String].collect().toSet
+    assert(Set("doc_id_unique", "n_tok_stable").subsetOf(ids) &&
+      ids.exists(id => !Set("doc_id_unique", "n_tok_stable")(id)), ids)
+    // two jobs write output: the violations, then the checkpoint entry
+    val writes = seen.perJob.filter(_.recordsWritten > 0)
+    assert(writes.map(_.recordsWritten) == Seq(viol.count(), 1L), seen)
+    assert(writes.head.tasks <= slices + 1, (slices, seen))
+    assert(seen.jobs <= 8, seen)
   }
 }

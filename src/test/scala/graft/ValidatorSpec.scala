@@ -208,33 +208,6 @@ class ValidatorSpec extends SparkSpec {
       ConstraintCompiler.compile(suite).constraintHash)
   }
 
-  /** What the listener saw while `body` ran: jobs started and shuffle
-    * bytes written. The bus is drained before and after, so no event of
-    * an earlier action leaks in and none of this one's is missed. */
-  private case class Listened(jobs: Int, shuffleWriteBytes: Long)
-
-  private def listened[T](body: => T): (T, Listened) = {
-    import org.apache.spark.GraftSparkBridge.drainListenerBus
-    import org.apache.spark.scheduler._
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val bytes = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach(m =>
-          bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
-    }
-    drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      drainListenerBus(sc)
-      (r, Listened(jobs.get, bytes.get))
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** Replays the generator's doc_id assignment on the driver so tests can
     * compute exact expected duplicate sets. */
   private def docIdOf(i: Long): String =
