@@ -69,23 +69,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Without this the default 128 MB packs the small-SF inputs into a
-      // handful of scan splits, capping parallelism regardless of cores
-      // (see Scaling.session + BENCH/BASELINE.md) — the exact knob that
-      // only matters when input-bytes/cores < maxPartitionBytes.
-      .config("spark.sql.files.maxPartitionBytes", (8L << 20).toString)
-      // tmpfs shuffle dir when available — one shared virtual disk is
-      // the box's artifact, not the engine's (see Scaling.session)
-      .config("spark.local.dir", Scaling.localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Session.defaultCores
+    val spark = Session(cpus, "graft-bench")
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
 
@@ -101,7 +86,7 @@ object Bench {
     while (batch == 0 ||
         (spread > MaxSpread && batch <= MaxRetries)) {
       val (_, _, times) = Scaling.validationThroughput(
-        spark, cpus.toInt, nRows = HeadlineRows, reps = Reps)
+        spark, cpus, nRows = HeadlineRows, reps = Reps)
       spread = times.max / times.min
       lastBatch = times.toVector
       allReps ++= times
@@ -124,8 +109,8 @@ object Bench {
     val cleanAccepted = cleanSpread <= MaxSpread
 
     // ---- per-query suite times ---------------------------------------
-    // warm the JVM/codegen once with the cheapest query
-    try SparkEntry.queries("t_tokens")(spark, sfDir).count()
+    // warm the JVM/codegen once with a cheap query
+    try SparkEntry.queries("v_verdict")(spark, sfDir).count()
     catch { case _: Throwable => () }
     val results = measureQueries(spark, sfDir)
 

@@ -147,53 +147,6 @@ object Scaling {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def session(cpus: Int): SparkSession = {
-    // default: one shuffle partition per core (measured best here — a
-    // 2-wave layout added ~20% wall clock at local[32]); override for
-    // experiments via GRAFT_SHUFFLE_PARTITIONS
-    val shufflePartitions = sys.env.getOrElse(
-      "GRAFT_SHUFFLE_PARTITIONS", cpus.toString)
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Split the scan fine enough that the WIDEST level gets multiple
-      // task waves: the default 128 MB packs this ~0.9 GB input into ~8
-      // scan partitions, capping parallelism at 8 regardless of cores
-      // (observed: local[32] ran at ~580% CPU). 8 MB → ~114 splits →
-      // ≥3 waves at 32 threads. At 100 TB the file count dwarfs the
-      // cores and the default is fine; this knob matters exactly when
-      // input-bytes/cores < maxPartitionBytes.
-      .config("spark.sql.files.maxPartitionBytes", (8L << 20).toString)
-      // Shuffle spill dir on tmpfs when available: this box funnels every
-      // thread's shuffle files through ONE virtual disk, which a real
-      // cluster does not (each executor has its own local disks) — the
-      // single-disk artifact otherwise dominates the shuffle-heavy suite
-      // at high thread counts and understates cluster scaling.
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.warehouse.dir", s"$DataDir/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private[graft] def localDir: String =
-    sys.env.get("GRAFT_LOCAL_DIR") match {
-      // tmpfs shuffle is RAM: a spill-heavy run (e.g. DedupBench at
-      // 10^7 docs) can fill /dev/shm and get the JVM OOM-killed by the
-      // OS — point GRAFT_LOCAL_DIR at real disk for those
-      case Some(d) => d
-      case None =>
-        val shm = new java.io.File("/dev/shm")
-        if (shm.isDirectory && shm.canWrite) {
-          val d = new java.io.File(shm, "graft-shuffle")
-          d.mkdirs()
-          d.getAbsolutePath
-        } else System.getProperty("java.io.tmpdir")
-    }
-
   /**
    * Modes:
    *  - `measure <cpus> [nRows]` — ONE parallelism level in THIS JVM,
@@ -211,7 +164,7 @@ object Scaling {
     case "measure" :: cpus :: rest =>
       val nRows = rest.headOption.map(_.toLong).getOrElse(DefaultRows)
       val reps = rest.drop(1).headOption.map(_.toInt).getOrElse(8)
-      val s = session(cpus.toInt)
+      val s = Session(cpus.toInt, s"graft-scaling-$cpus")
       ensureData(s, nRows)
       val (thr, _, times) = validationThroughput(s, cpus.toInt, nRows, reps = reps)
       val ts = times.map(t => f"$t%.3f").mkString("[", ",", "]")

@@ -1,22 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     // local-iteration filter (driver never sets it): run only the named
-    // queries, e.g. GRAFT_VERIFY_ONLY=d_minhash,v_unique
+    // queries, e.g. GRAFT_VERIFY_ONLY=v_drift,v_unique
     val only = sys.env.get("GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     SparkEntry.queries

@@ -42,7 +42,7 @@ private[graft] final case class ResumePlan(
  * entry matches its CURRENT snapshot id and the CURRENT constraint hash —
  * so editing the suite or rewriting a partition's files automatically
  * re-queues it, while a plain re-run skips it. Appends are atomic at the
- * file level (each append writes new files), matching how an Iceberg
+ * file level (each append writes one new file), matching how an Iceberg
  * append would behave.
  */
 final class CheckpointStore(spark: SparkSession, path: String) {
@@ -58,8 +58,10 @@ final class CheckpointStore(spark: SparkSession, path: String) {
     else spark.emptyDataset[CheckpointEntry].toDF()
   }
 
+  /** One parquet file per append: a local frame would otherwise write one
+    * file per slice, and every later pending scan runs a task per file. */
   def append(entries: Seq[CheckpointEntry]): Unit =
-    entries.toDS().toDF().write.mode(SaveMode.Append).parquet(path)
+    entries.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(path)
 
   /** Partitions still needing validation, sorted: those no entry records
     * at their current snapshot id under `constraintHash`. */

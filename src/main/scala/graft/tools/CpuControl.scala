@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Pure-CPU scaling control: hashes 2B longs with zero input I/O, no
   * shuffle beyond one partial-agg merge — calibrates this machine's
@@ -10,9 +10,7 @@ import org.apache.spark.sql.SparkSession
 object CpuControl {
   def main(a: Array[String]): Unit = {
     val cpus = a(0)
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = Session(cpus.toInt, "graft-cpu-control")
     def once(): Double = {
       val t0 = System.nanoTime()
       s.range(0L, 2000000000L, 1L, 256)

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Session
 import graft.compile.ConstraintCompiler
 import graft.exec.Validator
 import graft.gen.SequenceGen
@@ -43,14 +42,7 @@ object Demo {
 
   def main(args: Array[String]): Unit = {
     val nRows = args.headOption.map(_.toLong).getOrElse(100000L)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[8]"))
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(appName = "graft-demo")
 
     val suite = ConstraintCompiler.compileJson(
       suiteJson, ConstraintRegistry.empty)

@@ -2,8 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Session
 import graft.compile.ConstraintCompiler
 import graft.exec.Validator
 import graft.gen.SequenceGen
@@ -19,12 +18,7 @@ import graft.table.ParquetPartitionedTable
  */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(appName = "graft-explain")
 
     // `Explain queries q1,q2,...` — audit the join/exchange skeleton of
     // SparkEntry queries (cartesian products and unexpected join

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Session
 import graft.compile.{ConstraintCompiler, JsonSchemaImport}
 import graft.exec.Validator
 import graft.gen.SequenceGen
@@ -35,12 +34,7 @@ object ImportDemo {
 
   def main(args: Array[String]): Unit = {
     val nRows = args.headOption.map(_.toLong).getOrElse(200000L)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(appName = "graft-import-demo")
 
     val imported = JsonSchemaImport.translate(schemaJson)
     println(s"imported suite '${imported.id}': " +

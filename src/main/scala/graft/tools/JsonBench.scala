@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 
+import graft.Session
 import graft.dsl.Constraint._
 import graft.dsl.ConstraintSuite
 import graft.exec.JsonValidator
@@ -19,17 +19,8 @@ import graft.exec.JsonValidator
 object JsonBench {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val cpus = args.lift(1).getOrElse("32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-json-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", (8L << 20).toString)
-      .config("spark.local.dir", graft.Scaling.localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = args.lift(1).map(_.toInt).getOrElse(Session.defaultCores)
+    val spark = Session(cpus, "graft-json-bench")
     // 1-min load at start/end goes into the artifact: this box has
     // noisy-neighbor windows that swing identical jobs 4-8x (measured
     // round 5: the same verdicts action 0.97 s and 31.1 s in one JVM),

@@ -5,8 +5,8 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /**
- * Executed-plan walkers shared by the pruning demo, the pruning spec
- * and the shuffle-count spec — one place to absorb Spark's AQE wrapper
+ * Executed-plan walkers shared by the specs that count file scans and
+ * shuffles — one place to absorb Spark's AQE wrapper
  * zoo (`AdaptiveSparkPlanExec` holds the re-optimized plan; materialized
  * stages appear as LEAF `QueryStageExec` nodes wrapping the real
  * operator, so a naive `children` recursion undercounts).

@@ -2,8 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Session
 import graft.checkpoint.{CheckpointStore, PartitionedRunner}
 import graft.compile.ConstraintCompiler
 import graft.gen.SequenceGen
@@ -17,12 +16,7 @@ import graft.table.ParquetPartitionedTable
  */
 object ResumeDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]").appName("graft-resume-demo")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(appName = "graft-resume-demo")
 
     val base = Files.createTempDirectory("graft-resume").toString
     println(s"workdir: $base")

@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
+import graft.Session
 import graft.compile.ConstraintCompiler
 import graft.dsl.{Constraint => C, ConstraintSuite}
 import graft.streaming.StreamValidator
@@ -16,12 +16,7 @@ import graft.streaming.StreamValidator
  */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("graft-stream-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(appName = "graft-stream-demo")
 
     // rate source → pseudo-records; every 7th has a bad n_tok
     val records = spark.readStream.format("rate")

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
 
+import graft.Session
 import graft.compile.{ConstraintCompiler, SuiteSuggest}
 import graft.dsl.ConstraintJson
 import graft.exec.Validator
@@ -17,12 +18,7 @@ import graft.exec.Validator
 object SuggestDemo {
   def main(args: Array[String]): Unit = {
     val nRows = args.headOption.map(_.toLong).getOrElse(200000L)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(appName = "graft-suggest-demo")
 
     val df = graft.gen.SequenceGen
       .generate(spark, nRows, nSources = 4, plantViolations = false).toDF()

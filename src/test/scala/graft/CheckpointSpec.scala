@@ -400,6 +400,25 @@ class CheckpointSpec extends SparkSpec {
       Seq("source=src1"))
   }
 
+  test("a run appends one checkpoint file, and its pending scan runs one task") {
+    val base = Files.createTempDirectory("graft-cp-files").toString
+    val table = mkTable(s"$base/data")
+    val cp = new CheckpointStore(spark, s"$base/checkpoint")
+    def files(dir: String): Int = new java.io.File(dir).listFiles()
+      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    PartitionedRunner.run(table, suite, cp, "run1", maxPartitions = 2)
+    assert(files(s"$base/checkpoint") == 1)
+    PartitionedRunner.run(table, suite, cp, "run2")
+    assert(files(s"$base/checkpoint") == 2)
+
+    val four = new CheckpointStore(spark, s"$base/four")
+    four.append(cp.load().as[CheckpointEntry].collect().toSeq.take(4))
+    assert(files(s"$base/four") == 1)
+    val (pending, seen) = listened(four.pending(table, suite.constraintHash))
+    assert(pending.size == 1)
+    assert(seen.perJob.map(_.tasks) == Seq(1), seen)
+  }
+
   test("a resume of one partition: at most 8 jobs and a one-pass violation write") {
     val base = Files.createTempDirectory("graft-cp-jobs").toString
     val table = mkTable(s"$base/data")

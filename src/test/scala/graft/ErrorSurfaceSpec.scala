@@ -61,35 +61,6 @@ class ErrorSurfaceSpec extends SparkSpec {
       ConstraintCompiler.compile(ConstraintSuite("s", Seq(
         C.NoArrayDrift("d", "tokens", 16, "wasserstein", 0.5))))
     }
-    intercept[IllegalArgumentException] { // bands must divide numHashes
-      graft.ops.Dedup.minhashCandidates(
-        Seq(("a", "b c")).toDF("id", "text"), "id", "text",
-        numHashes = 64, bands = 7)
-    }
-    intercept[IllegalArgumentException] { // maxBucket floor
-      graft.ops.Dedup.bucketedPairs(
-        Seq(("k", "a")).toDF("bucket", "id"), Seq("bucket"), "id",
-        Seq.empty, maxBucket = 1)
-    }
-    intercept[IllegalArgumentException] { // nprobe bounds
-      graft.ops.Ivf.topK(
-        Seq(("a", Seq(1.0))).toDF("id", "v"),
-        Seq(("a", Seq(1.0))).toDF("id", "v"),
-        "id", "v", 1, Array(Array(1.0)), nprobe = 5)
-    }
-  }
-
-  test("Ivf.topK rejects query sets too large to broadcast") {
-    import org.apache.spark.sql.{functions => F}
-    val huge = spark.range(graft.ops.Ivf.MaxBroadcastQueries + 1L)
-      .select(F.col("id").cast("string").as("id"),
-        F.array(F.lit(1.0), F.lit(0.0)).as("v"))
-    val corpus = Seq(("c1", Seq(1.0, 0.0))).toDF("id", "v")
-    val e = intercept[IllegalArgumentException] {
-      graft.ops.Ivf.topK(huge, corpus, "id", "v", 1,
-        Array(Array(1.0, 0.0)), nprobe = 1)
-    }
-    assert(e.getMessage.contains(graft.ops.Ivf.MaxBroadcastQueries.toString))
   }
 
   test("streaming path rejects dataset-level checks loudly") {
@@ -118,27 +89,5 @@ class ErrorSurfaceSpec extends SparkSpec {
     assert(byName("broken")._2 == -1.0)
     assert(byName("broken")._3.isEmpty) // died on rep 1, no fake times
     assert(byName("broken")._4.exists(_.nonEmpty))
-  }
-
-  test("dedup bench: only the broadcast cap and a full disk are infeasible") {
-    import org.apache.spark.SparkException
-    import graft.tools.DedupBench
-    val cap = new SparkException("_LEGACY_ERROR_TEMP_2249",
-      Map("maxBroadcastTableBytes" -> "8.0 GiB", "dataSize" -> "9.0 GiB"),
-      null)
-    assert(DedupBench.infeasible(new SparkException("aborted", cap)))
-    assert(DedupBench.infeasible(new SparkException("aborted",
-      new java.io.IOException("No space left on device"))))
-    assert(!DedupBench.infeasible(new SparkException("aborted",
-      new ArithmeticException("/ by zero"))))
-    assert(!DedupBench.infeasible(new java.io.IOException("Stream closed")))
-
-    assert(DedupBench.benchDiv(None) == 10L)
-    assert(DedupBench.benchDiv(Some("100")) == 100L)
-    for (bad <- Seq("0", "-3", "ten", "")) {
-      val e = intercept[IllegalArgumentException](
-        DedupBench.benchDiv(Some(bad)))
-      assert(e.getMessage.contains("GRAFT_DEDUP_BENCH_DIV"))
-    }
   }
 }

@@ -90,42 +90,24 @@ class FunctionsSpec extends SparkSpec {
       // ConvertToLocalRelation and the expressions never reach codegen
       val dir = java.nio.file.Files
         .createTempDirectory("graft-cg").toString + "/docs"
-      Seq(("a", Seq(1, 2, 3), "one two three four five six"),
-        ("b", Seq(4, 5), "seven eight nine ten eleven twelve"))
-        .toDF("id", "arr", "text")
+      Seq(("a", Seq(1, 2, 3), "0.5"), ("b", Seq(4, 5), "12"))
+        .toDF("id", "arr", "num")
         .write.mode("overwrite").parquet(dir)
       val docs = spark.read.parquet(dir)
-      val words = F.split(F.lower($"text"), "\\s+")
+      def db(lo: Int, hi: Int) = graft.functions.DecimalBounds($"num",
+        Some(BigDecimal(lo)), Some(BigDecimal(hi)), false, true)
       val twice = docs.select(
         ArrayAllBetween($"arr", 0L, 10L).as("p1"),
         ArrayAllBetween($"arr", 1L, 9L).as("p2"),
-        graft.functions.SimHash64(words).as("s1"),
-        graft.functions.SimHash64(F.slice(words, 1, 3)).as("s2"),
-        graft.functions.MinHashSig(
-          graft.functions.ShingleHashes(words, 2), 16, 42L).as("m1"),
-        graft.functions.MinHashSig(
-          graft.functions.ShingleHashes(words, 3), 16, 7L).as("m2"),
-        graft.functions.DotProduct(
-          F.transform($"arr", x => x.cast("double")),
-          F.transform($"arr", x => x.cast("double") * 2)).as("dp1"),
-        graft.functions.DotProduct(
-          F.transform($"arr", x => x.cast("double")),
-          F.transform($"arr", x => x.cast("double") + 1)).as("dp2"),
-        graft.functions.CosineSim(
-          F.transform($"arr", x => x.cast("double")),
-          F.transform($"arr", x => x.cast("double"))).as("cs1"),
-        graft.functions.CosineSim(
-          F.transform($"arr", x => x.cast("double") * 3),
-          F.transform($"arr", x => x.cast("double"))).as("cs2"),
-        graft.functions.HyperplaneBucket(
-          F.transform($"arr", x => x.cast("double")), 3, 4, 42L).as("hb1"),
-        graft.functions.HyperplaneBucket(
-          F.transform($"arr", x => x.cast("double")), 3, 4, 7L).as("hb2"),
-        graft.functions.WinnowedMins(
-          graft.functions.ShingleHashes(words, 2), 3).as("wm1"),
-        graft.functions.WinnowedMins(
-          graft.functions.ShingleHashes(words, 2), 2).as("wm2"))
-      assert(twice.collect().length == 2)
+        graft.functions.BucketCounts($"arr", 4).as("b1"),
+        graft.functions.BucketCounts($"arr", 8).as("b2"),
+        db(0, 1).as("d1"),
+        db(1, 20).as("d2"))
+      val got = twice.collect().map(r => r.getSeq[Long](2) ->
+        (r.getBoolean(4), r.getBoolean(5)))
+      assert(got.toSet == Set(
+        Seq(0L, 1L, 1L, 1L) -> (true, false),
+        Seq(1L, 1L, 0L, 0L) -> (false, true)))
 
       // the original trigger: the same predicate under sum(when) AND
       // every() in the verdict aggregate
@@ -211,35 +193,6 @@ class FunctionsSpec extends SparkSpec {
         .queryExecution.executedPlan.toString
       assert(executed.contains("*("), executed)
     }
-  }
-
-  test("winnowed mins: sliding-window minima, distinct, guarantee holds") {
-    import graft.functions.WinnowedMins
-    val arrs = Seq(
-      ("a", Seq(5L, 3L, 8L, 1L, 9L, 2L)),
-      ("short", Seq(7L, 4L)),   // shorter than w → single global min
-      ("empty", Seq.empty[Long]))
-      .toDF("id", "h")
-    val got = arrs.select($"id", WinnowedMins($"h", 3).as("m"))
-      .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-    // windows of 3 over (5,3,8,1,9,2): mins 3,1,1,1 → distinct {1,3}
-    assert(got("a") == Seq(1L, 3L))
-    assert(got("short") == Seq(4L))
-    assert(got("empty") == Seq.empty)
-
-    // the winnowing guarantee, end to end: equal runs of w+k-1 tokens
-    // share a selected fingerprint whatever surrounds them
-    val k = 2; val w = 3
-    val shared = "alpha beta gamma delta epsilon" // 5 words = w+k-1+1
-    val docs = Seq(
-      ("x", s"one two three $shared xx yy"),
-      ("y", s"$shared completely different tail here"))
-      .toDF("id", "text")
-    val words = F.split(F.lower($"text"), "\\s+")
-    val fps = docs.select($"id", F.explode(WinnowedMins(
-      graft.functions.ShingleHashes(words, k), w)).as("fp"))
-    val common = fps.groupBy("fp").count().filter($"count" > 1)
-    assert(common.count() >= 1)
   }
 
   test("compiler routes EachElement+Bounds through the fast path") {

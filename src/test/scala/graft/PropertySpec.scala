@@ -125,136 +125,6 @@ class PropertySpec extends SparkSpec {
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 
-  test("vector expressions: reference parity and invariances") {
-    import graft.functions.{CosineSim, DotProduct, HyperplaneBucket}
-    val rnd = new scala.util.Random(7)
-    val rows = Seq.tabulate(200) { i =>
-      (i.toLong, Array.fill(16)(rnd.nextGaussian()),
-        Array.fill(16)(rnd.nextGaussian()))
-    }
-    val df = rows.toDF("id", "a", "b")
-    val got = df.select($"id",
-      DotProduct($"a", $"b").as("dot"),
-      CosineSim($"a", $"b").as("cab"),
-      CosineSim($"b", $"a").as("cba"),
-      CosineSim($"a", $"a").as("caa"),
-      CosineSim($"a", F.transform($"a", x => x * 2.5)).as("cas"),
-      HyperplaneBucket($"a", 16, 8, 42L).as("ha"),
-      HyperplaneBucket(F.transform($"a", x => x * 3.5), 16, 8, 42L)
-        .as("has"))
-      .collect()
-    val byId = rows.map(r => r._1 -> r).toMap
-    got.foreach { r =>
-      val (_, a, b) = byId(r.getLong(0))
-      val refDot = a.zip(b).map { case (x, y) => x * y }.sum
-      assert(math.abs(r.getDouble(1) - refDot) < 1e-9)
-      assert(r.getDouble(2) == r.getDouble(3))          // symmetric
-      assert(math.abs(r.getDouble(2)) <= 1.0 + 1e-12)   // bounded
-      assert(math.abs(r.getDouble(4) - 1.0) < 1e-12)    // cos(a,a)=1
-      assert(math.abs(r.getDouble(5) - 1.0) < 1e-12)    // scale-invariant
-      assert(r.getLong(6) == r.getLong(7))              // bucket too
-    }
-  }
-
-  test("shingle hashes equal the xxhash64(concat_ws(slice)) formulation") {
-    val texts = Seq(
-      "the quick brown fox jumps over the lazy dog",
-      "one two three four five",
-      "one two", // shorter than k → one hash of the whole join
-      "single").zipWithIndex.map(_.swap)
-    val df = texts.toDF("id", "text")
-      .withColumn("w", F.split(F.trim(F.lower($"text")), "\\s+"))
-    val k = 3
-    val ref = F.when(F.size($"w") < k,
-        F.array(F.xxhash64(F.concat_ws(" ", $"w"))))
-      .otherwise(F.transform(
-        F.sequence(F.lit(1), F.size($"w") - (k - 1)),
-        i => F.xxhash64(F.concat_ws(" ", F.slice($"w", i, F.lit(k))))))
-    val got = df.select($"id",
-      graft.functions.ShingleHashes($"w", k).as("fast"), ref.as("ref"))
-      .collect()
-    got.foreach { r =>
-      assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"id=${r.get(0)}")
-    }
-  }
-
-  test("winnowed mins agree with the naive sliding-min on random input") {
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val rnd = new scala.util.Random(42)
-    (1 to 200).foreach { _ =>
-      val n = rnd.nextInt(50)
-      val w = 1 + rnd.nextInt(8)
-      // small value range on purpose: duplicate hash values exercise
-      // the deque's >= pop and the distinct pass
-      val xs = Array.fill(n)(rnd.nextInt(10).toLong)
-      val got = graft.functions.WinnowedMins
-        .minsAll(new GenericArrayData(xs), w).toSeq
-      val ww = math.min(w, math.max(n, 1))
-      val naive =
-        if (n == 0) Seq.empty[Long]
-        else xs.sliding(ww, 1).map(_.min).toSeq.distinct.sorted
-      assert(got == naive, s"n=$n w=$w xs=${xs.toSeq}")
-    }
-
-    // the winnowing guarantee on random texts: any two documents given
-    // a common run of w+k-1 tokens share at least one selected value
-    val k = 4; val w = 5
-    (1 to 50).foreach { i =>
-      val r = new scala.util.Random(1000 + i)
-      def words(m: Int) = Seq.fill(m)("t" + r.nextInt(5000))
-      val shared = words(w + k - 1).mkString(" ")
-      val a = (words(r.nextInt(10)) :+ shared) ++ words(r.nextInt(10))
-      val b = (words(r.nextInt(10)) :+ shared) ++ words(r.nextInt(10))
-      val df = Seq(("a", a.mkString(" ")), ("b", b.mkString(" ")))
-        .toDF("id", "text")
-      val ws = F.split(F.lower($"text"), "\\s+")
-      val common = df.select($"id", F.explode(graft.functions.WinnowedMins(
-          graft.functions.ShingleHashes(ws, k), w)).as("fp"))
-        .groupBy("fp").agg(F.countDistinct("id").as("n"))
-        .filter($"n" === 2).count()
-      assert(common >= 1, s"guarantee violated at seed ${1000 + i}")
-    }
-  }
-
-  test("connected components agree with union-find on random graphs") {
-    import org.scalacheck.Gen
-    import org.scalacheck.rng.Seed
-    // reference: classic driver-side union-find with path compression
-    def unionFind(edges: Seq[(String, String)]): Map[String, String] = {
-      val parent = scala.collection.mutable.Map[String, String]()
-      def find(x: String): String = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x
-        else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.Ordering.String.max(ra, rb)) = math.Ordering.String.min(ra, rb)
-      }
-      // root label must be the component MIN, which min-directed unions give
-      parent.keys.map(k => k -> find(k)).toMap
-    }
-    val genEdges = for {
-      n <- Gen.choose(2, 40)
-      m <- Gen.choose(1, 60)
-      es <- Gen.listOfN(m, for {
-        a <- Gen.choose(0, n - 1)
-        b <- Gen.choose(0, n - 1)
-      } yield (f"v$a%02d", f"v$b%02d"))
-    } yield es
-    (1 to 8).foreach { i =>
-      val edges = genEdges(Gen.Parameters.default, Seed(1000L + i)).get
-        .filter { case (a, b) => a != b }
-      if (edges.nonEmpty) {
-        val expected = unionFind(edges)
-        val got = graft.ops.ConnectedComponents.groups(
-            edges.toDF("id_a", "id_b"))
-          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-        assert(got == expected, s"seed=${1000 + i} edges=$edges")
-      }
-    }
-  }
-
   test("importer fuzz: random schemas translate/compile/validate, " +
       "never crash") {
     import org.scalacheck.Gen
