@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 /**
  * `shingle_hashes(words, k)` — xxhash64 (seed 42) of every k-word window
  * of a string array, space-joined: the rolling-fingerprint primitive
- * under MinHash, n-gram Jaccard, and containment checks. Arrays shorter
+ * under [[graft.ops.TextAnalysis]]'s n-gram profiles. Arrays shorter
  * than k yield one hash of the whole join (matching the column-function
  * formulation's semantics).
  *

@@ -4,10 +4,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 
 /**
- * Distributed connected components over a duplicate-pair table — the
- * downstream half of dedup that [[Dedup.bucketedPairs]]'s star-pair
- * contract presumes: near-dup candidates arrive as PAIRS, but a
- * pipeline keeps/drops GROUPS (one representative per component).
+ * Distributed connected components over a duplicate-pair table:
+ * near-dup candidates arrive as PAIRS (a degenerate bucket as star
+ * pairs around its minimum id), but a pipeline keeps/drops GROUPS (one
+ * representative per component).
  *
  * Algorithm: alternating large-star / small-star (Kiveris et al.,
  * "Connected Components in MapReduce and Beyond", SoCC'14 — public
@@ -47,19 +47,13 @@ object ConnectedComponents {
    * assignment is needed.
    */
   def groups(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-      maxIter: Int = 50): DataFrame =
-    groupsWithRounds(pairs, idA, idB, maxIter)._1
-
-  /** [[groups]] plus the number of large-star/small-star rounds to
-    * convergence — the O(log n) claim as a measurable artifact. */
-  def groupsWithRounds(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b", maxIter: Int = 50): (DataFrame, Int) = {
-    val (assignment, rounds) = roots(pairs, idA, idB, maxIter)
-    (assignment
+      maxIter: Int = 50): DataFrame = {
+    val assignment = roots(pairs, idA, idB, maxIter)
+    assignment
       .unionByName(assignment.select(F.col("group_id").as("doc_id"),
         F.col("group_id")).distinct())
       .select(F.col("doc_id"), F.col("group_id"),
-        (F.col("doc_id") === F.col("group_id")).as("keep")), rounds)
+        (F.col("doc_id") === F.col("group_id")).as("keep"))
   }
 
   /**
@@ -84,9 +78,9 @@ object ConnectedComponents {
   }
 
   /** Non-root edges `(doc_id, group_id)` at convergence (roots are the
-    * `group_id` side only), with the round count. */
+    * `group_id` side only). */
   private def roots(pairs: DataFrame, idA: String, idB: String,
-      maxIter: Int): (DataFrame, Int) = {
+      maxIter: Int): DataFrame = {
     // LAZY localCheckpoint throughout this loop: the fingerprint
     // aggregate that immediately follows each checkpoint is the action
     // that materializes it, so checkpoint + convergence check cost ONE
@@ -128,8 +122,7 @@ object ConnectedComponents {
       s"connected components did not converge in $maxIter rounds — " +
         "the alternation converges in O(log n); an input this deep " +
         "indicates a corrupt pair table")
-    (edges.select(F.col("u").as("doc_id"), F.col("v").as("group_id")),
-      iter)
+    edges.select(F.col("u").as("doc_id"), F.col("v").as("group_id"))
   }
 
   /** Connect every neighbor larger than the center to the neighborhood

@@ -153,9 +153,7 @@ object TextAnalysis {
     df.filter(F.length(F.trim(F.col(textCol))) > 0)
       // the id keeps its NATIVE type: a cast("long") here silently
       // turned non-numeric string ids ("doc-abc") into NULL and merged
-      // every such document into one doc_id=NULL profile group —
-      // sibling ops (Decontaminate.docShingles) keep/normalize ids for
-      // exactly this reason
+      // every such document into one doc_id=NULL profile group
       .select(F.col(idCol).as("doc_id"),
         F.explode(shingleHashes(F.col(textCol), n)).as("_g"))
       .groupBy("doc_id", "_g").agg(F.count(F.lit(1)).as("_cnt"))

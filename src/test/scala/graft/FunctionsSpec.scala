@@ -90,24 +90,29 @@ class FunctionsSpec extends SparkSpec {
       // ConvertToLocalRelation and the expressions never reach codegen
       val dir = java.nio.file.Files
         .createTempDirectory("graft-cg").toString + "/docs"
-      Seq(("a", Seq(1, 2, 3), "0.5"), ("b", Seq(4, 5), "12"))
-        .toDF("id", "arr", "num")
+      Seq(("a", Seq(1, 2, 3), "0.5", "one two three"),
+        ("b", Seq(4, 5), "12", "four five six seven"))
+        .toDF("id", "arr", "num", "text")
         .write.mode("overwrite").parquet(dir)
       val docs = spark.read.parquet(dir)
       def db(lo: Int, hi: Int) = graft.functions.DecimalBounds($"num",
         Some(BigDecimal(lo)), Some(BigDecimal(hi)), false, true)
+      val words = F.split($"text", " ")
       val twice = docs.select(
         ArrayAllBetween($"arr", 0L, 10L).as("p1"),
         ArrayAllBetween($"arr", 1L, 9L).as("p2"),
         graft.functions.BucketCounts($"arr", 4).as("b1"),
         graft.functions.BucketCounts($"arr", 8).as("b2"),
         db(0, 1).as("d1"),
-        db(1, 20).as("d2"))
+        db(1, 20).as("d2"),
+        graft.functions.ShingleHashes(words, 2).as("s1"),
+        graft.functions.ShingleHashes(words, 3).as("s2"))
       val got = twice.collect().map(r => r.getSeq[Long](2) ->
-        (r.getBoolean(4), r.getBoolean(5)))
+        ((r.getBoolean(4), r.getBoolean(5)),
+          (r.getSeq[Long](6).size, r.getSeq[Long](7).size)))
       assert(got.toSet == Set(
-        Seq(0L, 1L, 1L, 1L) -> (true, false),
-        Seq(1L, 1L, 0L, 0L) -> (false, true)))
+        Seq(0L, 1L, 1L, 1L) -> ((true, false), (2, 1)),
+        Seq(1L, 1L, 0L, 0L) -> ((false, true), (3, 2))))
 
       // the original trigger: the same predicate under sum(when) AND
       // every() in the verdict aggregate
