@@ -86,7 +86,7 @@ object Bench {
     while (batch == 0 ||
         (spread > MaxSpread && batch <= MaxRetries)) {
       val (_, _, times) = Scaling.validationThroughput(
-        spark, cpus, nRows = HeadlineRows, reps = Reps)
+        spark, nRows = HeadlineRows, reps = Reps)
       spread = times.max / times.min
       lastBatch = times.toVector
       allReps ++= times

@@ -11,11 +11,13 @@ import graft.gen.SequenceGen
 
 /**
  * Scaling-evidence harness (north rule, sandbox form — SURVEY.md §7.6):
- * the same fast-path validation job over the same parquet-materialized
- * seeded table at two parallelism levels (local[8] vs local[32],
- * substituting for N vs 4N executors), reporting sequences/sec at both
- * and efficiency = T(8-core)·? → throughput(32)/(4·throughput(8)).
- * Writes `BENCH/BASELINE.md`. Run: `sbt "runMain graft.Scaling [nRows]"`.
+ * the full-suite validation job over the same parquet-materialized seeded
+ * table at two parallelism levels (local[lo] vs local[hi], substituting
+ * for N vs 4N executors), one fresh JVM per level, reporting sequences/sec
+ * at both and efficiency = throughput(hi)/(4·throughput(lo)).
+ * Run: `sbt "runMain graft.Scaling measure <cpus> [nRows] [reps]"` per
+ * level, then `sbt "runMain graft.Scaling report <loCpus> <hiCpus>
+ * <thrLo> <thrHi> [nRows]"` to write `BENCH/SCALING_RUN.md`.
  */
 object Scaling {
 
@@ -23,9 +25,9 @@ object Scaling {
   val DefaultRows = 8000000L
 
   /** The FULL suite of the north star — row-local keyword checks plus
-    * the dataset-level checks (uniqueness shuffle, broadcast-anti RI,
-    * drift histogram agg). Throughput is measured over this whole
-    * pipeline, not a scan microbench. */
+    * the dataset-level checks (hash-first uniqueness, RI as one `InSet`
+    * over the dimension's keys, drift histogram). Throughput is measured
+    * over this whole pipeline, not a scan microbench. */
   val benchSuite: ConstraintSuite = ConstraintSuite("bench-v1", Seq(
     C.NotNull("doc_id_present", "doc_id"),
     C.Matches("doc_id_shape", "doc_id", "^seq-[a-z0-9-]+$"),
@@ -59,84 +61,21 @@ object Scaling {
     * MEDIAN, not best-of: the round-2 driver run showed a 3.2× rep
     * spread on a loaded box, and best-of under that variance is a
     * lottery (VERDICT r2 What's-wrong #1). */
-  def validationThroughput(
-      spark: SparkSession, cpus: Int,
+  def validationThroughput(spark: SparkSession,
       nRows: Long = DefaultRows, reps: Int = 2): (Double, Long, Seq[Double]) = {
     val dir = ensureData(spark, nRows)
-    // GRAFT_BENCH_SUITE: "rowlocal" = scan+predicate path alone (no
-    // dataset-check shuffles); "drop:unique,drift,ri" = full suite minus
-    // the named checks (per-check cost attribution). The two regimes
-    // scale differently on one box and the report presents both.
-    val mode = sys.env.getOrElse("GRAFT_BENCH_SUITE", "full")
-    val dropped: C => Boolean = mode match {
-      case "rowlocal" => c =>
-        c.isInstanceOf[C.Unique] || c.isInstanceOf[C.RefIntegrity] ||
-          c.isInstanceOf[C.NoDrift]
-      case m if m.startsWith("drop:") =>
-        val names = m.stripPrefix("drop:").split(",").toSet
-        c => (names.contains("unique") && c.isInstanceOf[C.Unique]) ||
-          (names.contains("ri") && c.isInstanceOf[C.RefIntegrity]) ||
-          (names.contains("drift") && c.isInstanceOf[C.NoDrift])
-      case _ => _ => false
-    }
-    // "withtokens": the full suite PLUS token-histogram drift — priced
-    // separately because exploding every token dominates the pass.
-    // "colocated": the full suite against a doc_id-BUCKETED copy of the
-    // table with Unique(colocated = true) — the 10^12 deployment shape
-    // where the uniqueness exchange disappears entirely.
-    val constraints0 =
-      (if (mode == "withtokens")
-         benchSuite.constraints :+ C.NoArrayDrift("token_hist_stable",
-           "tokens", 64, "psi", 0.2, 1000L)
-       else benchSuite.constraints).filterNot(dropped)
-    val constraints =
-      if (mode == "colocated")
-        constraints0.map {
-          case u: C.Unique => u.copy(colocated = true)
-          case c           => c
-        }
-      else constraints0
-    val suite = ConstraintCompiler.compile(
-      ConstraintSuite(benchSuite.id, constraints))
+    val suite = ConstraintCompiler.compile(benchSuite)
     // DataFrame (and its file index) built once, outside the timed loop —
     // the validate-many analogue of the reference's reusable compiled
     // template; file listing is a constant driver cost at any cluster
     // size and would otherwise drown the scalable portion at this SF.
-    val df =
-      if (mode == "colocated") bucketedTable(spark, dir, nRows)
-      else spark.read.parquet(dir)
+    val df = spark.read.parquet(dir)
     // warm-up passes (JIT + codegen: steady state arrives after ~2)
     runOnce(spark, df, suite); runOnce(spark, df, suite)
     val times = (1 to reps).map { _ => runOnce(spark, df, suite) }
     System.err.println(
       f"[scaling] times=${times.map(t => f"$t%.2f").mkString(",")}s")
     (nRows / median(times), nRows, times)
-  }
-
-  /** A doc_id-bucketed copy of the bench table (the storage layout the
-    * colocated uniqueness path presumes). Bucket metadata lives in the
-    * session catalog, so the table is (re)registered per JVM — a
-    * one-time cost outside the timed loop, the local stand-in for an
-    * Iceberg `bucket(doc_id)` partition transform. Bucket count is
-    * FIXED (32) across parallelism levels: layout is a property of the
-    * table, not of the reader. */
-  private def bucketedTable(spark: SparkSession, parquetDir: String,
-      nRows: Long): org.apache.spark.sql.DataFrame = {
-    val name = s"graft_bucketed_$nRows"
-    // the exists-guard only spans THIS JVM (in-memory catalog): each
-    // `measure` run starts fresh, so a regenerated parquet source can't
-    // be shadowed by a stale bucketed copy across runs; within a JVM the
-    // source is immutable (ensureData writes once)
-    if (!spark.catalog.tableExists(name)) {
-      // repartition by the SAME hash the bucketing applies so each
-      // writer task holds exactly one bucket → one file per bucket
-      // (bucketBy alone writes files-per-input-task × buckets — 2048
-      // shards whose open/rowgroup overhead dominates the scan)
-      spark.read.parquet(parquetDir)
-        .repartition(32, org.apache.spark.sql.functions.col("doc_id"))
-        .write.bucketBy(32, "doc_id").mode("overwrite").saveAsTable(name)
-    }
-    spark.table(name)
   }
 
   private def runOnce(spark: SparkSession,
@@ -149,16 +88,17 @@ object Scaling {
 
   /**
    * Modes:
-   *  - `measure <cpus> [nRows]` — ONE parallelism level in THIS JVM,
-   *    prints a JSON line. Each level must run in a fresh JVM: a single
-   *    JVM measuring both levels hands the second session the first's
-   *    JIT-compiled code and skews efficiency (observed 3.9 "efficiency"
-   *    when 8 ran cold first).
-   *  - `report <thr8> <thr32> [nRows]` — write BENCH/BASELINE.md.
+   *  - `measure <cpus> [nRows] [reps]` — ONE parallelism level in THIS
+   *    JVM, prints a JSON line. Each level must run in a fresh JVM: a
+   *    single JVM measuring both levels hands the second session the
+   *    first's JIT-compiled code and skews efficiency (observed 3.9
+   *    "efficiency" when 8 ran cold first).
+   *  - `report <loCpus> <hiCpus> <thrLo> <thrHi> [nRows]` — write
+   *    BENCH/SCALING_RUN.md.
    * Orchestration (documented in BENCH/BASELINE.md):
-   *   sbt "runMain graft.Scaling measure 8"  → thr8
-   *   sbt "runMain graft.Scaling measure 32" → thr32
-   *   sbt "runMain graft.Scaling report <thr8> <thr32>"
+   *   sbt "runMain graft.Scaling measure 8"  → thrLo
+   *   sbt "runMain graft.Scaling measure 32" → thrHi
+   *   sbt "runMain graft.Scaling report 8 32 <thrLo> <thrHi>"
    */
   def main(args: Array[String]): Unit = args.toList match {
     case "measure" :: cpus :: rest =>
@@ -166,7 +106,7 @@ object Scaling {
       val reps = rest.drop(1).headOption.map(_.toInt).getOrElse(8)
       val s = Session(cpus.toInt, s"graft-scaling-$cpus")
       ensureData(s, nRows)
-      val (thr, _, times) = validationThroughput(s, cpus.toInt, nRows, reps = reps)
+      val (thr, _, times) = validationThroughput(s, nRows, reps = reps)
       val ts = times.map(t => f"$t%.3f").mkString("[", ",", "]")
       println(f"""{"scaling_measure":{"cpus":$cpus,"rows":$nRows,"seq_per_sec":$thr%.0f,"rep_sec":$ts}}""")
       s.stop()
@@ -175,7 +115,7 @@ object Scaling {
       writeReport(lo.toInt, hi.toInt, tLo.toDouble, tHi.toDouble, nRows)
     case _ =>
       System.err.println(
-        "usage: graft.Scaling measure <cpus> [nRows] | " +
+        "usage: graft.Scaling measure <cpus> [nRows] [reps] | " +
           "report <loCpus> <hiCpus> <thrLo> <thrHi> [nRows]")
       sys.exit(2)
   }
@@ -191,7 +131,8 @@ object Scaling {
          |table must scale with efficiency ≥ 0.8 from N to 4N executors.
          |No multi-node cluster exists in this sandbox, so the evidence is
          |the same job at two parallelism levels in local mode (SURVEY.md
-         |§7.6): one JVM, 8 vs 32 executor threads, same seeded input.
+         |§7.6): one JVM per level, $lo vs $hi executor threads, same seeded
+         |input.
          |
          || quantity | value |
          || --- | --- |
@@ -205,8 +146,8 @@ object Scaling {
          |Method: table materialized to parquet once (seed 42); ONE fresh
          |JVM per parallelism level (`sbt "runMain graft.Scaling measure
          |<cpus> <rows> <reps>"`) so neither level inherits the other's
-         |JIT-compiled code; per level 2 warm-up passes then best of the
-         |timed passes (scan + validate + collect; DataFrame/file-index
+         |JIT-compiled code; per level 2 warm-up passes then the median of
+         |the timed passes (scan + validate + collect; DataFrame/file-index
          |built once — the validate-many analogue of the reference's
          |reusable compiled template); shuffle dirs on tmpfs when
          |available (one shared virtual disk is the box's artifact, not

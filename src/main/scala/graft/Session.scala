@@ -31,8 +31,8 @@ object Session {
       // matters exactly when input-bytes/cores < maxPartitionBytes.
       .config("spark.sql.files.maxPartitionBytes", (8L << 20).toString)
       .config("spark.local.dir", localDir)
-      // Scaling's bucketed table is a catalog table; keep it beside the
-      // data it is built from
+      // the session catalog's warehouse sits beside the bench data, not in
+      // the working directory
       .config("spark.sql.warehouse.dir", s"${Scaling.DataDir}/warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

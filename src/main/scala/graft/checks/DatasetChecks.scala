@@ -133,18 +133,8 @@ object DatasetCheck {
  * keys never form a duplicate group (NULLs are `notNull`'s job). Every
  * reported key is therefore a real value, and a literal key `"null"`
  * cannot be confused with a NULL.
- *
- * `colocated = true` (storage bucketed / layout-partitioned by the key):
- * the hash-first narrowing is pointless when no exchange happens at all,
- * so the check groups the RAW key attribute in one phase — the bucketed
- * scan reports `HashPartitioning(col)`, `EnsureRequirements` sees the
- * aggregation's requirement already met, and the plan carries ZERO
- * shuffles (spec-asserted). Declaring it against a non-bucketed source
- * is slow (full-key exchange) but never wrong — Spark reinserts the
- * exchange the layout doesn't provide.
  */
-final case class UniqueCheck(id: String, col: String, expected: String,
-    colocated: Boolean = false)
+final case class UniqueCheck(id: String, col: String, expected: String)
     extends DatasetCheck {
   override def tableScope: Boolean = true
 
@@ -154,20 +144,16 @@ final case class UniqueCheck(id: String, col: String, expected: String,
 
   private[graft] def summaryColumn(partitionCols: Seq[String],
       dims: Map[String, DataFrame]): Option[SummaryColumn] =
-    Option.when(!colocated)(SummaryColumn.Hashed(keyHash))
+    Some(SummaryColumn.Hashed(keyHash))
 
-  private[graft] def finish(s: Summary, i: Int): Finished =
-    if (colocated) {
-      lazy val dups = colocatedDuplicates(s.whole)
-      new Finished(Map(Nil -> dups.count()), dups)
-    } else {
-      lazy val dups = duplicates(s.whole, s.repeated(i))
-      new Finished(Map(Nil -> dups.size.toLong),
-        render(DatasetCheck.local(s.whole.sparkSession,
-          dups.map { case (k, n) => Row(k, n) },
-          StructType(Seq(StructField("_k", StringType),
-            StructField("_cnt", LongType))))))
-    }
+  private[graft] def finish(s: Summary, i: Int): Finished = {
+    lazy val dups = duplicates(s.whole, s.repeated(i))
+    new Finished(Map(Nil -> dups.size.toLong),
+      render(DatasetCheck.local(s.whole.sparkSession,
+        dups.map { case (k, n) => Row(k, n) },
+        StructType(Seq(StructField("_k", StringType),
+          StructField("_cnt", LongType))))))
+  }
 
   /** Phase 2 over `df` for the candidate hashes phase 1 found: each
     * duplicated key with its count. Only the recount's result is
@@ -181,15 +167,6 @@ final case class UniqueCheck(id: String, col: String, expected: String,
       .agg(F.count(F.lit(1)).as("_cnt"))
       .where(F.col("_cnt") > 1)
       .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
-
-  /** The one-phase group over the raw key attribute, for `colocated`. */
-  private[graft] def colocatedDuplicates(df: DataFrame): DataFrame =
-    // raw attribute, no cast: a rewritten expression would not match the
-    // scan's output partitioning and would resurrect the shuffle
-    render(df.filter(F.col(col).isNotNull).select(F.col(col).as("_k"))
-      .groupBy("_k").agg(F.count(F.lit(1)).as("_cnt"))
-      .filter(F.col("_cnt") > 1)
-      .select(F.col("_k").cast("string").as("_k"), F.col("_cnt")))
 
   private def render(dupKeys: DataFrame): DataFrame =
     dupKeys.select(

@@ -919,7 +919,7 @@ object ConstraintCompiler {
     case Ref(_, name)        => s"ref $name"
     case DynamicRef(_, name) => s"dynamicRef $name"
     case Defs(_, _)          => "true"
-    case Unique(_, col, _) => s"$col unique across dataset"
+    case Unique(_, col) => s"$col unique across dataset"
     case RefIntegrity(_, col, dn, dc) => s"$col exists in $dn.$dc"
     case NoDrift(_, col, _, _, _, m, t, _) => s"$m($col) <= $t"
     case NoArrayDrift(_, col, _, m, t, _) => s"$m(elements of $col) <= $t"
@@ -931,7 +931,7 @@ object ConstraintCompiler {
 
   private def lowerDataset(c: Constraint): DatasetCheck = c match {
     case u: Unique       =>
-      UniqueCheck(u.id, u.col, expectedOf(u), u.colocated)
+      UniqueCheck(u.id, u.col, expectedOf(u))
     case r: RefIntegrity =>
       RefIntegrityCheck(r.id, r.col, r.dimName, r.dimCol, expectedOf(r))
     case d: NoDrift =>

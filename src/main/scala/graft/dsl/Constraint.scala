@@ -266,21 +266,12 @@ object Constraint {
   // ----------------------------------------------------------------
 
   /** Table-scope uniqueness of a key column (C3): hash-first two-phase
-    * aggregate; every duplicated key value becomes one violation.
-    * `colocated = true` declares that equal keys already live in the
-    * same storage split (table bucketed / layout-partitioned by `col`):
-    * the check then groups the key DIRECTLY, letting Spark elide the
-    * exchange against the scan's hash partitioning — the 10^12-row
-    * deployment shape, where the uniqueness shuffle is otherwise the
-    * single most expensive stage. The flag only changes PLAN SHAPE,
-    * never the answer: on a non-bucketed source Spark simply reinserts
-    * the (full-key) exchange. */
-  final case class Unique(id: String, col: String,
-      colocated: Boolean = false) extends Constraint
+    * aggregate; every duplicated key value becomes one violation. */
+  final case class Unique(id: String, col: String) extends Constraint
 
   /** Referential integrity (C4): `col` values must exist in
-    * `dimName.dimCol` (dimension resolved at validate time; joined via
-    * broadcast left-anti). */
+    * `dimName.dimCol` (dimension resolved at validate time; its distinct
+    * keys are collected once and tested with one `InSet`). */
   final case class RefIntegrity(
       id: String, col: String, dimName: String, dimCol: String)
       extends Constraint

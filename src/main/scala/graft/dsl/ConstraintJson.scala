@@ -113,7 +113,7 @@ object ConstraintJson {
       case "ref"        => Ref(id, str(n, "name"))
       case "dynamicRef" => DynamicRef(id, str(n, "name"))
       case "defs"       => Defs(id, arr(n, "cs").map(parseConstraint))
-      case "unique"     => Unique(id, str(n, "col"), bool(n, "colocated"))
+      case "unique"     => Unique(id, str(n, "col"))
       case "refIntegrity" =>
         RefIntegrity(id, str(n, "col"), str(n, "dimName"), str(n, "dimCol"))
       case "noDrift" =>
@@ -237,9 +237,7 @@ object ConstraintJson {
       case Defs(_, cs) =>
         o.put("kind", "defs")
         val a = o.putArray("cs"); cs.foreach(x => a.add(toNode(x)))
-      case Unique(_, col, coloc) =>
-        o.put("kind", "unique").put("col", col)
-        if (coloc) o.put("colocated", true)
+      case Unique(_, col) => o.put("kind", "unique").put("col", col)
       case RefIntegrity(_, col, dn, dc) =>
         o.put("kind", "refIntegrity").put("col", col)
           .put("dimName", dn).put("dimCol", dc)

@@ -2,14 +2,13 @@ package graft.tools
 
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /**
- * Executed-plan walkers shared by the specs that count file scans and
- * shuffles — one place to absorb Spark's AQE wrapper
- * zoo (`AdaptiveSparkPlanExec` holds the re-optimized plan; materialized
- * stages appear as LEAF `QueryStageExec` nodes wrapping the real
- * operator, so a naive `children` recursion undercounts).
+ * Executed-plan walker shared by the specs that count file scans — one
+ * place to absorb Spark's AQE wrapper zoo (`AdaptiveSparkPlanExec` holds
+ * the re-optimized plan; materialized stages appear as LEAF
+ * `QueryStageExec` nodes wrapping the real operator, so a naive
+ * `children` recursion undercounts).
  */
 object PlanWalk {
 
@@ -22,13 +21,5 @@ object PlanWalk {
     case qs: QueryStageExec       => fileScans(qs.plan)
     case s: FileSourceScanExec    => Seq(s)
     case other                    => other.children.flatMap(fileScans)
-  }
-
-  /** Number of shuffle exchanges anywhere in the plan. */
-  def shuffleCount(p: SparkPlan): Int = p match {
-    case a: AdaptiveSparkPlanExec => shuffleCount(a.executedPlan)
-    case qs: QueryStageExec       => shuffleCount(qs.plan)
-    case s: ShuffleExchangeLike   => 1 + s.children.map(shuffleCount).sum
-    case other                    => other.children.map(shuffleCount).sum
   }
 }

@@ -125,67 +125,6 @@ class PropertySpec extends SparkSpec {
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 
-  test("shingle hashes equal the xxhash64(concat_ws(slice)) formulation") {
-    val texts = Seq(
-      "the quick brown fox jumps over the lazy dog",
-      "one two three four five",
-      "one two", // shorter than k → one hash of the whole join
-      "single").zipWithIndex.map(_.swap)
-    val df = texts.toDF("id", "text")
-      .withColumn("w", F.split(F.trim(F.lower($"text")), "\\s+"))
-    val k = 3
-    val ref = F.when(F.size($"w") < k,
-        F.array(F.xxhash64(F.concat_ws(" ", $"w"))))
-      .otherwise(F.transform(
-        F.sequence(F.lit(1), F.size($"w") - (k - 1)),
-        i => F.xxhash64(F.concat_ws(" ", F.slice($"w", i, F.lit(k))))))
-    val got = df.select($"id",
-      graft.functions.ShingleHashes($"w", k).as("fast"), ref.as("ref"))
-      .collect()
-    got.foreach { r =>
-      assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"id=${r.get(0)}")
-    }
-  }
-
-  test("connected components agree with union-find on random graphs") {
-    import org.scalacheck.Gen
-    import org.scalacheck.rng.Seed
-    // reference: classic driver-side union-find with path compression
-    def unionFind(edges: Seq[(String, String)]): Map[String, String] = {
-      val parent = scala.collection.mutable.Map[String, String]()
-      def find(x: String): String = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x
-        else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.Ordering.String.max(ra, rb)) = math.Ordering.String.min(ra, rb)
-      }
-      // root label must be the component MIN, which min-directed unions give
-      parent.keys.map(k => k -> find(k)).toMap
-    }
-    val genEdges = for {
-      n <- Gen.choose(2, 40)
-      m <- Gen.choose(1, 60)
-      es <- Gen.listOfN(m, for {
-        a <- Gen.choose(0, n - 1)
-        b <- Gen.choose(0, n - 1)
-      } yield (f"v$a%02d", f"v$b%02d"))
-    } yield es
-    (1 to 8).foreach { i =>
-      val edges = genEdges(Gen.Parameters.default, Seed(1000L + i)).get
-        .filter { case (a, b) => a != b }
-      if (edges.nonEmpty) {
-        val expected = unionFind(edges)
-        val got = graft.ops.ConnectedComponents.groups(
-            edges.toDF("id_a", "id_b"))
-          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-        assert(got == expected, s"seed=${1000 + i} edges=$edges")
-      }
-    }
-  }
-
   test("importer fuzz: random schemas translate/compile/validate, " +
       "never crash") {
     import org.scalacheck.Gen

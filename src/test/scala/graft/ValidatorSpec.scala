@@ -395,12 +395,7 @@ class ValidatorSpec extends SparkSpec {
     assert(v(1).getAs[Long]("n_rows") == 2L)
   }
 
-  test("colocated uniqueness: bucketed source runs with ZERO shuffles") {
-    def shuffles(df: DataFrame): Int = {
-      df.collect() // materialize so AQE finalizes the plan
-      graft.tools.PlanWalk.shuffleCount(df.queryExecution.executedPlan)
-    }
-
+  test("uniqueness over a bucketed source: exact counts, key hashes shuffled") {
     val df = seqDf(
       ("a", Seq(1), 1, "web"), ("b", Seq(2), 1, "web"),
       ("a", Seq(3), 1, "books"), ("c", Seq(4), 1, "web"))
@@ -408,39 +403,41 @@ class ValidatorSpec extends SparkSpec {
     try {
       df.write.bucketBy(4, "doc_id").saveAsTable("uniq_bucketed")
       val bucketed = spark.table("uniq_bucketed")
-
-      val coloc = ConstraintCompiler.compile(ConstraintSuite("s", Seq(
-        Unique("u", "doc_id", colocated = true))))
-      val viol = Validator.validateWithDetails(bucketed, coloc, Seq.empty)
-        .violations.select("doc_id", "observed")
-      assert(viol.as[(String, String)].collect().toSet ==
-        Set(("a", "count=2")))
-      // the whole point: the bucketed scan's HashPartitioning(doc_id)
-      // satisfies the aggregation, so NO exchange exists anywhere
-      assert(shuffles(viol) == 0, viol.queryExecution.executedPlan)
-
-      // contrast: the two-phase default against the same source shuffles
-      // its key hashes. Phase 1 runs in the summary aggregate and the
-      // violations finish on the driver, so the shuffle shows in the
-      // bytes written while they are computed, not in their final plan.
-      val twoPhase = ConstraintCompiler.compile(ConstraintSuite("s2", Seq(
+      // the storage layout does not change the path: phase 1 runs in the
+      // summary aggregate and the violations finish on the driver, so
+      // the shuffle of key hashes shows in the bytes written while they
+      // are computed, not in their final plan
+      val suite = ConstraintCompiler.compile(ConstraintSuite("s", Seq(
         Unique("u", "doc_id"))))
-      val (viol2, twoPhaseSpark) = listened {
-        val v = Validator.validateWithDetails(bucketed, twoPhase, Seq.empty)
+      val (viol, seen) = listened {
+        Validator.validateWithDetails(bucketed, suite, Seq.empty)
           .violations.select("doc_id", "observed")
-        v.as[(String, String)].collect().toSet
+          .as[(String, String)].collect().toSet
       }
-      assert(viol2 == Set(("a", "count=2")))
-      assert(twoPhaseSpark.shuffleWriteBytes > 0)
-
-      // and colocated against a NON-bucketed source: slower (Spark adds
-      // the exchange back) but exactly as correct
-      val viol3 = Validator.validateWithDetails(df, coloc, Seq.empty)
-        .violations.select("doc_id", "observed")
-      assert(viol3.as[(String, String)].collect().toSet ==
-        Set(("a", "count=2")))
-      assert(shuffles(viol3) > 0)
+      assert(viol == Set(("a", "count=2")))
+      assert(seen.shuffleWriteBytes > 0)
     } finally spark.sql("DROP TABLE IF EXISTS uniq_bucketed")
+  }
+
+  test("uniqueness: the retired colocated key is ignored by parse, render and hash") {
+    val withKey = """{"id":"s","constraints":[""" +
+      """{"kind":"unique","id":"u","col":"doc_id","colocated":true}]}"""
+    val without = """{"id":"s","constraints":[""" +
+      """{"kind":"unique","id":"u","col":"doc_id"}]}"""
+    val a = ConstraintCompiler.compileJson(withKey)
+    val b = ConstraintCompiler.compileJson(without)
+    assert(a.constraintHash == b.constraintHash)
+    assert(!ConstraintJson.renderSuite(ConstraintJson.parseSuite(withKey))
+      .contains("colocated"))
+    val df = seqDf(
+      ("a", Seq(1), 1, "web"), ("b", Seq(2), 1, "web"),
+      ("a", Seq(3), 1, "books"))
+    def violations(suite: graft.compile.CompiledSuite) =
+      Validator.validateWithDetails(df, suite, Seq.empty).violations
+        .select("doc_id", "constraint_id", "observed", "expected")
+        .as[(String, String, String, String)].collect().toSet
+    assert(violations(a) == Set(("a", "u", "count=2", "doc_id unique across dataset")))
+    assert(violations(a) == violations(b))
   }
 
   test("full suite: one summary scan, at most 5 jobs per verdict call") {
@@ -521,22 +518,18 @@ class ValidatorSpec extends SparkSpec {
     def keys(ks: String*): DataFrame =
       ks.zipWithIndex.map { case (k, i) => (k, Seq(i), 1, "web") }
         .toDF("doc_id", "tokens", "n_tok", "source")
-    for (colocated <- Seq(false, true)) {
-      val suite = ConstraintCompiler.compile(ConstraintSuite("s", Seq(
-        Unique("u", "doc_id", colocated = colocated))))
-      def report(df: DataFrame) =
-        Validator.validateWithDetails(df, suite, Seq.empty)
+    val suite = ConstraintCompiler.compile(ConstraintSuite("s", Seq(
+      Unique("u", "doc_id"))))
+    def report(df: DataFrame) =
+      Validator.validateWithDetails(df, suite, Seq.empty)
 
-      val nullsOnly = report(keys(null, null, "a", "b"))
-      assert(nullsOnly.violations.isEmpty, s"colocated=$colocated")
-      assert(nullsOnly.verdicts.select("valid").as[Boolean].head(),
-        s"colocated=$colocated")
+    val nullsOnly = report(keys(null, null, "a", "b"))
+    assert(nullsOnly.violations.isEmpty)
+    assert(nullsOnly.verdicts.select("valid").as[Boolean].head())
 
-      // a real key "null" is reported; the NULL key does not join it
-      val literal = report(keys(null, "null", "null")).violations
-        .select("doc_id", "observed").as[(String, String)].collect()
-      assert(literal.toSeq == Seq(("null", "count=2")),
-        s"colocated=$colocated")
-    }
+    // a real key "null" is reported; the NULL key does not join it
+    val literal = report(keys(null, "null", "null")).violations
+      .select("doc_id", "observed").as[(String, String)].collect()
+    assert(literal.toSeq == Seq(("null", "count=2")))
   }
 }
