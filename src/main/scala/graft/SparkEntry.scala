@@ -11,7 +11,7 @@ import graft.exec.Validator
 import graft.sketch.TDigestQuantiles
 
 /**
- * Driver contract (see SURVEY.md §7): the 14 `v_*` queries of the
+ * Driver contract (see SURVEY.md §7): the 13 `v_*` queries of the
  * validator — row-local verdicts and violations, the dataset checks
  * (uniqueness, referential integrity, drift), column profiles, JSON
  * Schema import, raw-JSON documents, event-time windows and quantile
@@ -53,9 +53,7 @@ object SparkEntry {
     Matches("src_shape", "source", "^src[0-9]+$"),
     TypeIs("nchars_int", "n_chars", "integer")))
 
-  /** One schema literal for every schema-known JSON path — editing it
-    * in one query but not its sibling would silently break the
-    * shared-oracle parity. */
+  /** The stored-variant query's extraction schema. */
   private val docJsonSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
@@ -158,22 +156,12 @@ object SparkEntry {
         .violations(jsonDocs(s, dir), "id", "js", compiled)
         .orderBy("doc_id", "constraint_id")
     }),
-    "v_docjson_typed" -> ((s, dir) => {
-      // same documents, same suite, SCHEMA-KNOWN lowering: one
-      // from_json projection onto typed columns, then the Catalyst
-      // engine (codegen). Shares v_docjson's oracle string — the
-      // execution paths are pinned to identical results.
-      graft.exec.JsonValidator
-        .violationsTyped(jsonDocs(s, dir), "id", "js", docJsonSchema,
-          jsonDocSuite)
-        .orderBy("doc_id", "constraint_id")
-    }),
     "v_docjson_varcol" -> ((s, dir) => {
-      // third execution path: the table PERSISTS a VariantType column
+      // second execution path: the table PERSISTS a VariantType column
       // (the lakehouse storage shape) — parse once at write time, then
       // validate straight off the stored binary: NO parse_json in the
       // read plan, and a shredded variant scan prunes to the addressed
-      // subcolumns. Shares the same oracle string as the other two.
+      // subcolumns. Shares v_docjson's oracle string.
       val vdir = new java.io.File(
         System.getProperty("java.io.tmpdir"),
         "graft-varcol-" + dir.replaceAll("[^A-Za-z0-9.]", "_")).toString
@@ -270,12 +258,11 @@ object SparkEntry {
     "(doc_id IS NOT NULL) AND (n_chars <= 400) AND " +
       "(lang IN ('en','de','fr','es')) AND (n_chars = length(text))"
 
-  /** Shared by v_docjson (doc-engine map), v_docjson_typed
-    * (from_json + Catalyst) and v_docjson_varcol (stored variant):
-    * ONE oracle string pins all three execution paths to identical
-    * results, re-derived from the TYPED columns the JSON was rendered
-    * from. `expected` texts are the compiler's own `expectedOf`
-    * renderings. */
+  /** Shared by v_docjson (doc-engine map) and v_docjson_varcol
+    * (stored variant): ONE oracle string pins both execution paths to
+    * identical results, re-derived from the TYPED columns the JSON was
+    * rendered from. `expected` texts are the compiler's own
+    * `expectedOf` renderings. */
   private val docJsonOracle =
     """SELECT * FROM (
       |  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
@@ -329,7 +316,6 @@ object SparkEntry {
         |  FROM lineitem WHERE NOT regexp_matches(l_linestatus, '^[OF]$')
         |) ORDER BY doc_id, instance_path""".stripMargin,
     "v_docjson" -> docJsonOracle,
-    "v_docjson_typed" -> docJsonOracle,
     "v_docjson_varcol" -> docJsonOracle,
     "v_violations" ->
       s"""SELECT * FROM (

@@ -1,12 +1,11 @@
 package graft.checkpoint
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode,
-  SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.storage.StorageLevel
 
 import graft.compile.CompiledSuite
-import graft.exec.{Evaluation, Validator}
+import graft.exec.{Evaluation, JsonValidator, Validator}
 import graft.table.TableProvider
 
 /** One line of per-partition lineage — the north rule's
@@ -121,15 +120,6 @@ final case class RunResult(
  */
 object PartitionedRunner {
 
-  /** Instrumentation: rows evaluated by the doc engine inside
-    * [[runJson]]'s map. Local mode shares one JVM, so the spec pins the
-    * single-pass contract by asserting the per-run delta equals the
-    * pending row count exactly (a second evaluation pass would double
-    * it). One atomic add per row ≈ 10 ns against ~5 µs of parse +
-    * validate — measurement noise. */
-  private[graft] val docEngineRows =
-    new java.util.concurrent.atomic.AtomicLong
-
   /** Resumable validation of a partitioned table by the Catalyst engine.
     * Dataset-level checks (uniqueness, drift baseline) evaluate over the
     * WHOLE table, not the pending subset: a duplicate key can span
@@ -155,12 +145,12 @@ object PartitionedRunner {
    * Resumable validation of a partitioned RAW-JSON corpus — the
    * reference's literal instance shape (a JSON string per row) under
    * the north rule's checkpoint/lineage contract. The suite compiles
-   * for the DOCUMENT engine once on the driver; one `mapPartitions`
-   * gives every pending row its doc-engine verdict and violations
-   * (malformed → invalid, never a crash), and verdicts land in the same
-   * checkpoint table `run` uses. The constraint hash is prefixed
-   * (`docjson:`) so the same suite validated through the typed-column
-   * engine and through this path keep distinct lineages.
+   * for the DOCUMENT engine once on the driver; its per-row frame
+   * ([[JsonValidator.evaluate]]) gives every pending row its verdict
+   * and violations (malformed → invalid, never a crash), and verdicts
+   * land in the same checkpoint table `run` uses. The constraint hash
+   * is prefixed (`docjson:`) so the same suite validated through the
+   * typed-column engine and through this path keep distinct lineages.
    */
   def runJson(
       table: TableProvider,
@@ -173,41 +163,13 @@ object PartitionedRunner {
       idCol: String = "doc_id",
       violationsOut: Option[String] = None,
       maxPartitions: Int = Int.MaxValue): RunResult = {
-    val compiled = graft.exec.JsonValidator.compile(suite, registry)
+    val compiled = JsonValidator.compile(suite, registry)
     val chash = "docjson:" + graft.compile.ConstraintCompiler.hashOf(
       graft.compile.ConstraintCompiler.resolve(suite, registry))
     drive(table, checkpoint, runId, chash, violationsOut,
         maxPartitions) { pending =>
-      import org.apache.spark.sql.types._
-      // narrow projection BEFORE the map: partition cols + id + json only
-      // (the corpus may carry arbitrarily wide payload columns), with the
-      // json column cast to string so binary/variant inputs share
-      // JsonValidator.pairs' contract instead of ClassCastException-ing
-      val nPart = table.partitionCols.length
-      val src = table.scan(pending).select(
-        (table.partitionCols.map(F.col) :+
-          F.col(idCol).cast("string").as("_doc_id") :+
-          F.col(jsonCol).cast("string").as("_js")): _*)
-      val violType = ArrayType(StructType(Seq(
-        StructField("constraint_id", StringType, nullable = false),
-        StructField("observed", StringType, nullable = false),
-        StructField("expected", StringType, nullable = false))),
-        containsNull = false)
-      val outSchema = StructType(src.schema.fields.take(nPart) ++ Seq(
-        StructField("_doc_id", StringType),
-        StructField("_ok", BooleanType, nullable = false),
-        StructField("_viols", violType)))
-      val rows = src.mapPartitions { it =>
-        it.map { r =>
-          docEngineRows.incrementAndGet()
-          val viols = graft.exec.JsonValidator
-            .detailRows(compiled, r.getString(nPart), r.getString(nPart + 1))
-            .map(t => Row(t._2, t._3, t._4)).toSeq
-          Row.fromSeq(r.toSeq.take(nPart) ++ Seq(r.getString(nPart),
-            viols.isEmpty, if (viols.isEmpty) null else viols))
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-      new Evaluation(rows, table.partitionCols)
+      JsonValidator.evaluate(table.scan(pending), table.partitionCols,
+        idCol, jsonCol, compiled)
     }
   }
 

@@ -19,11 +19,9 @@ import graft.dsl.ConstraintSuite
  *    counts, exact distinct counts, numeric bounds, string-length and
  *    array-size bounds, array-element bounds) — identical shuffle shape
  *    to [[graft.checks.ColumnStats.profile]] (map-side partial
- *    aggregation, one exchange). `exactDistinct = false` swaps the
- *    exact `countDistinct` (which Catalyst expands into one scan branch
- *    per distinct column) for HyperLogLog `approx_count_distinct` — the
- *    10^12-row default; exact is kept ON here because the DuckDB oracle
- *    replays it value-for-value.
+ *    aggregation, one exchange). Distinct counts are exact
+ *    (`countDistinct`), so the DuckDB oracle replays them
+ *    value-for-value.
  *  - pass 2 collects sorted distinct values ONLY for columns pass 1
  *    proved low-cardinality (`n_distinct <= enumMax`), so the unbounded
  *    `collect_set` memory hazard on high-cardinality columns (doc_id at
@@ -60,8 +58,7 @@ object SuiteSuggest {
     case _ => false
   }
 
-  def profile(df: DataFrame, enumMax: Int = 16,
-      exactDistinct: Boolean = true): DataFrame = {
+  def profile(df: DataFrame, enumMax: Int = 16): DataFrame = {
     require(enumMax >= 0, s"enumMax must be >= 0, got $enumMax")
     val fields = df.schema.fields.toSeq
     val aggs = Seq.newBuilder[Column]
@@ -70,8 +67,7 @@ object SuiteSuggest {
       val c = F.col(f.name); val n = f.name
       aggs += F.sum(F.when(c.isNull, 1L).otherwise(0L)).as(s"${n}__nulls")
       if (isAtomic(f.dataType))
-        aggs += (if (exactDistinct) F.countDistinct(c)
-                 else F.approx_count_distinct(c)).as(s"${n}__nd")
+        aggs += F.countDistinct(c).as(s"${n}__nd")
       f.dataType match {
         case _: NumericType =>
           aggs += F.min(c.cast("double")).as(s"${n}__min")
@@ -182,7 +178,6 @@ object SuiteSuggest {
 
   /** One-call form: profile `df` and emit the suggested suite. */
   def suggest(df: DataFrame, suiteId: String = "suggested",
-      enumMax: Int = 16, exactDistinct: Boolean = true): ConstraintSuite =
-    suggestFromProfile(
-      profile(df, enumMax, exactDistinct).collect().toSeq, suiteId)
+      enumMax: Int = 16): ConstraintSuite =
+    suggestFromProfile(profile(df, enumMax).collect().toSeq, suiteId)
 }

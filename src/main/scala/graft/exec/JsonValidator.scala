@@ -1,8 +1,8 @@
 package graft.exec
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.compile.ConstraintCompiler
 import graft.dsl.ConstraintSuite
@@ -16,19 +16,16 @@ import graft.registry.ConstraintRegistry
  * is the most common LLM-pipeline input; this is the operator that
  * validates it without a pre-parse ETL step.
  *
- * Two execution paths, chosen by what the caller knows:
- *
- *  - **Schema-free** ([[verdicts]]/[[violations]]): the suite is
- *    compiled ONCE on the driver ([[DocValidator.compile]] — the same
- *    resolved AST as the Catalyst engine) and shipped in the task
- *    closure; each task interprets it over Jackson trees at ~5 µs/doc.
- *    Embarrassingly parallel: one narrow projection, no shuffle, scales
- *    linearly to 10^12 rows. Handles documents whose shape is unknown
- *    or heterogeneous (map-flavored keys, mixed types).
- *  - **Schema-known** ([[violationsTyped]]): one `from_json` projection
- *    lowers the column onto typed columns, then the CATALYST engine
- *    validates (whole-stage codegen, short-circuit conjunction) — the
- *    scale path when the document shape is fixed.
+ * One engine for a string column: the suite is compiled ONCE on the
+ * driver ([[DocValidator.compile]] — the same resolved AST as the
+ * Catalyst engine) and shipped in the task closure; each task
+ * interprets it over Jackson trees at ~5 µs/doc. One projection, no
+ * shuffle. Handles documents whose shape is unknown or heterogeneous
+ * (map-flavored keys, mixed types, non-object documents). [[verdicts]],
+ * [[violations]] and the resumable `PartitionedRunner.runJson` are all
+ * views of the one per-row frame [[evaluate]] builds. A table that
+ * stores a parsed `VariantType` column validates through
+ * [[violationsVariantColumn]] instead, with no parse step.
  *
  * Malformed input is a VIOLATION, never a crash — the reference maps
  * any evaluation exception to `false` (`blaze_wrapper.cpp:140-146`);
@@ -44,15 +41,21 @@ object JsonValidator {
   /** `observed` for [[DocumentConstraint]] rows: the first 64 code
     * points of the raw text ("null" for a NULL document) — enough to
     * triage what arrived without widening violation rows at 10^12-row
-    * scale. Both string paths render identically (code points, not UTF-16
-    * units, matching Spark's `substring`). */
+    * scale. */
   private val DocumentObservedLen = 64
   private def truncDoc(js: String): String =
     if (js == null) "null"
     else if (js.codePointCount(0, js.length) <= DocumentObservedLen) js
     else js.substring(0, js.offsetByCodePoints(0, DocumentObservedLen))
-  private def truncDocCol(js: org.apache.spark.sql.Column) =
-    F.coalesce(F.substring(js, 1, DocumentObservedLen), F.lit("null"))
+
+  /** Instrumentation: documents the doc engine evaluated in
+    * [[evaluate]]. Local mode shares one JVM, so a spec pins the
+    * single-pass contract of a resumable run by asserting the per-run
+    * delta equals the pending row count exactly (a second evaluation
+    * pass would double it). One atomic add per row ≈ 10 ns against
+    * ~5 µs of parse + validate — measurement noise. */
+  private[graft] val docEngineRows =
+    new java.util.concurrent.atomic.AtomicLong
 
   def compile(suite: ConstraintSuite,
       registry: ConstraintRegistry = ConstraintRegistry.empty): CompiledDocSuite =
@@ -61,15 +64,9 @@ object JsonValidator {
   /** Fast boolean path: one verdict row per input row —
     * `(doc_id string, ok boolean)`. */
   def verdicts(df: DataFrame, idCol: String, jsonCol: String,
-      compiled: CompiledDocSuite): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    pairs(df, idCol, jsonCol).mapPartitions { it =>
-      // compiled suite deserialized once per task, reused per row —
-      // the compile-once/validate-many contract at executor scope
-      it.map { case (id, js) => (id, check(compiled, js)) }
-    }.toDF("doc_id", "ok")
-  }
+      compiled: CompiledDocSuite): DataFrame =
+    evaluate(df, Nil, idCol, jsonCol, compiled).rows
+      .select(F.col("_doc_id").as("doc_id"), F.col("_ok").as("ok"))
 
   /** Detail path: `(doc_id, constraint_id, observed, expected)` — one
     * row per failing top-level constraint, with the compiler's own
@@ -78,75 +75,52 @@ object JsonValidator {
     * the north rule's four-field violation shape, the reference's
     * `ValidationError.message` carries the same observed value). */
   def violations(df: DataFrame, idCol: String, jsonCol: String,
-      compiled: CompiledDocSuite): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    pairs(df, idCol, jsonCol).mapPartitions { it =>
-      it.flatMap { case (id, js) => detailRows(compiled, id, js) }
-    }.toDF("doc_id", "constraint_id", "observed", "expected")
+      compiled: CompiledDocSuite): DataFrame =
+    evaluate(df, Nil, idCol, jsonCol, compiled).violations
+
+  /** One failing top-level constraint of one document: an element of
+    * the doc engine's `_viols`. */
+  private[exec] final case class DocFailure(constraint_id: String,
+      observed: String, expected: String)
+
+  /** The doc engine's evaluation of `compiled` over `df`: the per-row
+    * frame `(partitionCols..., _doc_id, _ok, _viols)` the Catalyst
+    * engine produces too. The id and JSON columns are cast to string, so
+    * binary and variant inputs validate as their text. `_viols` holds
+    * one [[DocFailure]] per failing top-level constraint and is NULL on
+    * passing rows; `_ok` is true exactly when it is NULL. */
+  private[graft] def evaluate(df: DataFrame, partitionCols: Seq[String],
+      idCol: String, jsonCol: String,
+      compiled: CompiledDocSuite): Evaluation = {
+    // the compiled suite ships once per task in the function's closure
+    // — compile once, validate many. Nondeterministic, so the optimizer
+    // neither pushes a filter on `_ok` below the call nor inlines it
+    // twice: each document is parsed and validated exactly once.
+    val failing = F.udf { (js: String) =>
+      docEngineRows.incrementAndGet()
+      val f = failures(compiled, js)
+      if (f.isEmpty) null else f
+    }.asNondeterministic()
+    val pcols = partitionCols.map(F.col)
+    val rows = df
+      .select(pcols :+ F.col(idCol).cast("string").as("_doc_id") :+
+        failing(F.col(jsonCol).cast("string")).as("_viols"): _*)
+      .select(pcols :+ F.col("_doc_id") :+ F.col("_viols").isNull.as("_ok") :+
+        F.col("_viols"): _*)
+    new Evaluation(rows, partitionCols)
   }
 
-  /** One (doc_id, constraint_id, observed, expected) tuple per failing
-    * constraint of one document — shared by [[violations]] and the
-    * single-pass resumable runner. */
-  private[graft] def detailRows(compiled: CompiledDocSuite, id: String,
-      js: String): Iterator[(String, String, String, String)] =
-    if (js == null)
-      Iterator((id, DocumentConstraint, truncDoc(js), DocumentExpected))
+  /** The failing constraints of one document; a NULL or unparseable
+    * document fails [[DocumentConstraint]] alone. */
+  private def failures(compiled: CompiledDocSuite,
+      js: String): Seq[DocFailure] = {
+    def malformed = Seq(DocFailure(DocumentConstraint, truncDoc(js),
+      DocumentExpected))
+    if (js == null) malformed
     else try {
-      DocValidator.validateWithDetails(compiled, js).iterator
-        .map(v => (id, v.constraintId, v.observed, v.expected))
-    } catch {
-      case _: IllegalArgumentException =>
-        Iterator((id, DocumentConstraint, truncDoc(js), DocumentExpected))
-    }
-
-  /** Schema-known path: lower the JSON column onto typed columns with
-    * ONE `from_json` projection, then run the CATALYST engine — codegen
-    * predicates, the same verdict/violation semantics as validating a
-    * pre-parsed table. Unparseable rows (from_json → NULL struct while
-    * the source string is non-null) are charged to
-    * [[DocumentConstraint]], mirroring the schema-free path.
-    *
-    * Contract DELTA vs the schema-free path, by design: this path
-    * requires OBJECT documents (that is what a struct schema means). A
-    * valid non-object JSON document — a bare scalar, array, or `null`
-    * literal — is charged to [[DocumentConstraint]] here, while the
-    * schema-free engine validates it with pass-on-null applicability
-    * (the reference's behavior for such instances). Feed non-object
-    * corpora through [[verdicts]]/[[violations]]. */
-  def violationsTyped(df: DataFrame, idCol: String, jsonCol: String,
-      schema: StructType, suite: ConstraintSuite,
-      registry: ConstraintRegistry = ConstraintRegistry.empty): DataFrame = {
-    // PERMISSIVE from_json returns an ALL-NULL struct (not a null
-    // struct) for unparseable records — detection needs the corrupt-
-    // record column, which carries the raw text on parse failure
-    val corrupt = "_graft_corrupt"
-    require(!schema.fieldNames.contains(corrupt),
-      s"schema may not declare the reserved field $corrupt")
-    val withCorrupt = schema.add(StructField(corrupt, StringType))
-    val parsed = df.select(
-      F.col(idCol).cast("string").as("_doc_id"),
-      F.col(jsonCol).cast("string").as("_js"),
-      F.from_json(F.col(jsonCol).cast("string"), withCorrupt,
-        Map("columnNameOfCorruptRecord" -> corrupt)).as("_d"))
-    val badPred = F.col("_js").isNull || F.col("_d").isNull ||
-      F.col(s"_d.$corrupt").isNotNull
-    val malformed = parsed.filter(badPred)
-      .select(F.col("_doc_id").as("doc_id"),
-        F.lit(DocumentConstraint).as("constraint_id"),
-        truncDocCol(F.col("_js")).as("observed"),
-        F.lit(DocumentExpected).as("expected"))
-    val typedRows = parsed.filter(!badPred) // isNull/isNotNull never null
-      // getField, not a string path: a field literally named "a.b"
-      // (legal JSON, legal StructType) must not parse as a nested path
-      .select((F.col("_doc_id") +: schema.fieldNames.toSeq
-        .map(f => F.col("_d").getField(f).as(f))): _*)
-    val compiled = ConstraintCompiler.compile(suite, registry)
-    Validator.validateWithDetails(typedRows, compiled, Seq.empty, "_doc_id")
-      .violations
-      .select("doc_id", "constraint_id", "observed", "expected")
-      .unionAll(malformed)
+      DocValidator.validateWithDetails(compiled, js)
+        .map(v => DocFailure(v.constraintId, v.observed, v.expected))
+    } catch { case _: IllegalArgumentException => malformed }
   }
 
   /** PRE-STORED variant path: the lakehouse table persists a
@@ -155,9 +129,8 @@ object JsonValidator {
     * off the stored binary into the Catalyst engine, and a shredded
     * variant scan prunes to the addressed subcolumns. A valid NON-OBJECT
     * document extracts null for every column and validates with
-    * pass-on-null applicability (like the schema-free engine, unlike
-    * `from_json`); extractions are lenient try-casts following the
-    * variant cast rules. A NULL variant (the writer's representation of
+    * pass-on-null applicability, like the string engine; extractions
+    * are lenient try-casts following the variant cast rules. A NULL variant (the writer's representation of
     * an absent / unparseable source document) is charged to
     * [[DocumentConstraint]]; its `observed` renders "null" — the raw
     * text is not in hand on this path. */
@@ -167,7 +140,7 @@ object JsonValidator {
     schema.fieldNames.foreach(n =>
       require(!n.contains("'") && !n.contains("\\"),
         s"variant path cannot address field '$n' (quote/backslash in " +
-          "the name) — use violationsTyped for such schemas"))
+          "the name) — validate the JSON text with violations instead"))
     val parsed = df.select(
       F.col(idCol).cast("string").as("_doc_id"),
       F.col(variantCol).as("_v"))
@@ -189,18 +162,4 @@ object JsonValidator {
       .select("doc_id", "constraint_id", "observed", "expected")
       .unionAll(malformed)
   }
-
-  private def pairs(df: DataFrame, idCol: String,
-      jsonCol: String): Dataset[(String, String)] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(F.col(idCol).cast("string"), F.col(jsonCol).cast("string"))
-      .as[(String, String)]
-  }
-
-  /** Per-row verdict of the schema-free path (malformed/NULL → false) —
-    * shared with the resumable JSON-corpus runner. */
-  private[graft] def check(suite: CompiledDocSuite, js: String): Boolean =
-    js != null && (try DocValidator.validate(suite, js)
-    catch { case _: IllegalArgumentException => false })
 }

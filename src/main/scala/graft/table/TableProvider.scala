@@ -3,6 +3,7 @@ package graft.table
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /**
  * Abstraction over the partitioned fact table being validated — the slot
@@ -63,6 +64,8 @@ object TableProvider {
  * Hive-layout partitioned Parquet: `root/<c1>=<v1>/<c2>=<v2>/...parquet`
  * for any number of partition columns; partition names render
  * `c1=v1/c2=v2` (the `input_hint` table partitions by `source` alone).
+ * Partition columns are strings holding the decoded directory values
+ * ([[TableProvider.decode]]), whatever they look like.
  *
  * The relation over `root` is built once and pinned together with the
  * [[snapshots]] it was built from: building it lists every file and runs
@@ -134,7 +137,14 @@ final class ParquetPartitionedTable(
   override def scanAll(): DataFrame = synchronized {
     val listing = snapshots()
     pinned.collect { case (l, df) if l == listing => df }.getOrElse {
-      val df = spark.read.option("basePath", root).parquet(root)
+      // partition columns read as the strings their directory names
+      // decode to: inferred types would read `part=07` back as 7 and
+      // `part=1.50` as 1.5, and neither the scan filter nor a verdict's
+      // checkpoint match would find its partition again
+      val inferred = spark.read.option("basePath", root).parquet(root).schema
+      val schema = StructType(inferred.filterNot(f => cols.contains(f.name)) ++
+        cols.map(StructField(_, StringType)))
+      val df = spark.read.schema(schema).option("basePath", root).parquet(root)
       pinned = Some(listing -> df)
       df
     }

@@ -11,9 +11,9 @@ import graft.exec.JsonValidator
 /**
  * Raw-JSON-document validation throughput: a parquet-materialized
  * corpus of JSON strings (the JSONL shape) timed through its execution
- * paths — the schema-free document engine in a distributed map, the
- * from_json + Catalyst lowering, and a pre-stored Spark 4 variant
- * column. Prints one JSON line.
+ * paths — the document engine in a distributed map (verdicts, details
+ * and the resumable runner) and a pre-stored Spark 4 variant column.
+ * Prints one JSON line.
  * Run: `sbt "runMain graft.tools.JsonBench [nDocs] [cpus]"`.
  */
 object JsonBench {
@@ -75,11 +75,9 @@ object JsonBench {
       (median(ts), n)
     }
 
-    // warm both paths (JIT, codegen, parquet footer cache)
+    // warm up (JIT, parquet footer cache)
     JsonValidator.verdicts(docs.limit(10000), "id", "js", compiled)
       .filter(!F.col("ok")).count()
-    JsonValidator.violationsTyped(docs.limit(10000), "id", "js",
-      docSchema, suite).count()
 
     val (docSec, docBad) = time(3) {
       JsonValidator.verdicts(docs, "id", "js", compiled)
@@ -87,10 +85,6 @@ object JsonBench {
     }
     val (detailSec, detailRows) = time(3) {
       JsonValidator.violations(docs, "id", "js", compiled).count()
-    }
-    val (typedSec, typedRows) = time(3) {
-      JsonValidator.violationsTyped(docs, "id", "js", docSchema, suite)
-        .count()
     }
 
     // ---- pre-stored VARIANT column (the lakehouse storage shape):
@@ -142,7 +136,7 @@ object JsonBench {
       s"resume contract broke: ${r1.processed.size}/${r2.processed.size}")
     val runJsonSec = runHalfSec + resumeSec
 
-    println(f"""{"json_bench":{"n_docs":$nDocs,"cpus":$cpus,"doc_engine":{"sec":$docSec%.2f,"docs_per_sec":${nDocs / docSec}%.0f,"bad_docs":$docBad},"doc_engine_details":{"sec":$detailSec%.2f,"docs_per_sec":${nDocs / detailSec}%.0f,"violations":$detailRows},"typed_from_json":{"sec":$typedSec%.2f,"docs_per_sec":${nDocs / typedSec}%.0f,"violations":$typedRows},"variant_stored":{"sec":$vcolSec%.2f,"docs_per_sec":${nDocs / vcolSec}%.0f,"violations":$vcolRows},"run_json":{"sec":$runJsonSec%.2f,"sec_first_half":$runHalfSec%.2f,"sec_resume":$resumeSec%.2f,"docs_per_sec":${nDocs / runJsonSec}%.0f,"partitions":16,"kill_resume_ok":true},"load_start":$loadStart%.2f,"load_end":${load()}%.2f}}""")
+    println(f"""{"json_bench":{"n_docs":$nDocs,"cpus":$cpus,"doc_engine":{"sec":$docSec%.2f,"docs_per_sec":${nDocs / docSec}%.0f,"bad_docs":$docBad},"doc_engine_details":{"sec":$detailSec%.2f,"docs_per_sec":${nDocs / detailSec}%.0f,"violations":$detailRows},"variant_stored":{"sec":$vcolSec%.2f,"docs_per_sec":${nDocs / vcolSec}%.0f,"violations":$vcolRows},"run_json":{"sec":$runJsonSec%.2f,"sec_first_half":$runHalfSec%.2f,"sec_resume":$resumeSec%.2f,"docs_per_sec":${nDocs / runJsonSec}%.0f,"partitions":16,"kill_resume_ok":true},"load_start":$loadStart%.2f,"load_end":${load()}%.2f}}""")
     spark.stop()
   }
 }

@@ -154,6 +154,34 @@ class CheckpointSpec extends SparkSpec {
     assert(PartitionedRunner.run(table, suite, cp, "m3").processed.isEmpty)
   }
 
+  test("numeric-looking partition values checkpoint and resume as written") {
+    // `part=07` and `part=1.50` must not read back as 7.0 and 1.5: the
+    // verdicts would match no pending partition after the violations
+    // were already written
+    val base = Files.createTempDirectory("graft-cp-numeric").toString
+    Seq(("a", Seq(1), 1, "07"), ("b", Seq(2, 3), 1, "1.50"))
+      .toDF("doc_id", "tokens", "n_tok", "part")
+      .write.partitionBy("part").parquet(s"$base/data")
+    val table = new ParquetPartitionedTable(spark, s"$base/data", "part")
+    val parts = Seq("part=07", "part=1.50")
+    assert(table.partitions() == parts)
+    val cp = new CheckpointStore(spark, s"$base/checkpoint")
+    val viol = s"$base/violations"
+    val r1 = PartitionedRunner.run(table, suite, cp, "r1",
+      violationsOut = Some(viol))
+    assert(r1.processed == parts)
+    assert(r1.verdicts.select("part").as[String].collect().sorted.toSeq ==
+      Seq("07", "1.50"))
+    assert(cp.load().select("partition").as[String].collect().sorted.toSeq ==
+      parts)
+    val r2 = PartitionedRunner.run(table, suite, cp, "r2",
+      violationsOut = Some(viol))
+    assert(r2.processed.isEmpty && r2.skipped == parts)
+    // b's n_tok disagrees with its two tokens: one violation, written once
+    assert(spark.read.parquet(viol).select("doc_id", "constraint_id")
+      .as[(String, String)].collect().toSeq == Seq(("b", "sc")))
+  }
+
   test("checkpoint entries carry lineage + metrics") {
     val base = Files.createTempDirectory("graft-cp4").toString
     val table = mkTable(s"$base/data")
@@ -289,14 +317,14 @@ class CheckpointSpec extends SparkSpec {
     val cp = new CheckpointStore(spark, s"$base/checkpoint")
 
     // kill after 2 partitions, resume, converge
-    val rows0 = PartitionedRunner.docEngineRows.get()
+    val rows0 = graft.exec.JsonValidator.docEngineRows.get()
     val r1 = PartitionedRunner.runJson(table, jsonSuite, cp, "j1",
       violationsOut = Some(s"$base/viol"), maxPartitions = 2)
     assert(r1.processed.size == 2)
     // SINGLE PASS: even with BOTH outputs consumed (violations written,
     // verdicts checkpointed), the doc engine evaluated each pending row
     // exactly once — a second scan would double this delta
-    assert(PartitionedRunner.docEngineRows.get() - rows0 ==
+    assert(graft.exec.JsonValidator.docEngineRows.get() - rows0 ==
       table.scan(r1.processed).count())
     val r2 = PartitionedRunner.runJson(table, jsonSuite, cp, "j2",
       violationsOut = Some(s"$base/viol"))

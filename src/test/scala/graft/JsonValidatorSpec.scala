@@ -8,9 +8,8 @@ import graft.dsl.ConstraintSuite
 import graft.exec.JsonValidator
 
 /** Distributed raw-JSON-document validation: the reference's literal
-  * instance shape (a JSON string) at table scale — schema-free doc
-  * engine in a distributed map, and the from_json + Catalyst lowering,
-  * pinned to each other. */
+  * instance shape (a JSON string) at table scale — the doc engine in a
+  * distributed map, and the stored-variant column pinned to it. */
 class JsonValidatorSpec extends SparkSpec {
   import spark.implicits._
 
@@ -45,31 +44,25 @@ class JsonValidatorSpec extends SparkSpec {
       ("r6", JsonValidator.DocumentConstraint)))
   }
 
-  test("typed lowering agrees with the doc engine; malformed rows flagged") {
-    val schema = StructType(Seq(
-      StructField("doc_id", StringType),
-      StructField("n_tok", IntegerType),
-      StructField("tokens", ArrayType(IntegerType)),
-      StructField("source", StringType)))
-    // FULL four-field parity (incl. observed/expected rendering) — the
-    // shared-oracle contract is that the engines emit identical rows
-    val typed = JsonValidator
-      .violationsTyped(docs, "id", "js", schema, suite)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2),
-        r.getString(3))).toSet
-    val docEngine = JsonValidator
-      .violations(docs, "id", "js", JsonValidator.compile(suite))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2),
-        r.getString(3))).toSet
-    assert(typed == docEngine)
+  test("verdicts are false exactly for the documents with a violation row") {
+    // both views read one per-row frame: a document fails iff it has at
+    // least one violation row
+    val compiled = JsonValidator.compile(suite)
+    val failed = JsonValidator.verdicts(docs, "id", "js", compiled)
+      .filter(!F.col("ok")).select("doc_id").as[String].collect().toSet
+    val seen = JsonValidator.docEngineRows.get()
+    val violated = JsonValidator.violations(docs, "id", "js", compiled)
+      .select("doc_id").as[String].collect().toSet
+    assert(failed == violated && failed == Set("r2", "r3", "r4", "r5", "r6"))
+    // the violation rows' filter on `_ok` does not evaluate a failing
+    // document a second time
+    assert(JsonValidator.docEngineRows.get() - seen == 6L)
   }
 
-  test("typed path requires objects — the documented divergence") {
+  test("non-object documents pass under pass-on-null") {
     // a bare array / scalar / null literal is a VALID JSON document: the
-    // schema-free engine applies pass-on-null semantics, while the
-    // struct-schema'd typed path charges _document (its contract)
+    // doc engine applies pass-on-null applicability, as the reference
+    // does for such instances
     val nonObj = Seq(("n1", "[1,2]"), ("n2", "7"), ("n3", "null"))
       .toDF("id", "js")
     val relaxed = ConstraintSuite("r", Seq(
@@ -78,13 +71,6 @@ class JsonValidatorSpec extends SparkSpec {
       .verdicts(nonObj, "id", "js", JsonValidator.compile(relaxed))
       .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
     assert(free == Map("n1" -> true, "n2" -> true, "n3" -> true))
-    val schema = StructType(Seq(StructField("n_tok", IntegerType)))
-    val typed = JsonValidator
-      .violationsTyped(nonObj, "id", "js", schema, relaxed)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(typed == Set(("n1", JsonValidator.DocumentConstraint),
-      ("n2", JsonValidator.DocumentConstraint),
-      ("n3", JsonValidator.DocumentConstraint)))
   }
 
   test("stored-variant column: no parse step, agrees with doc engine") {
@@ -125,7 +111,7 @@ class JsonValidatorSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException] {
       JsonValidator.violationsVariantColumn(spark.read.parquet(dir), "id",
         "v", StructType(Seq(StructField("it's", IntegerType))), suite)
-    }.getMessage.contains("violationsTyped"))
+    }.getMessage.contains("validate the JSON text with violations"))
   }
 
   test("round-trip: to_json of a typed table validates like the table") {
