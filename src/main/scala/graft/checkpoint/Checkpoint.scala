@@ -1,7 +1,17 @@
 package graft.checkpoint
 
-import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
-import org.apache.spark.sql.{functions => F}
+import java.io.IOException
+import java.util.UUID
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter,
+  GroupReadSupport}
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.{MessageType, MessageTypeParser}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import graft.compile.CompiledSuite
@@ -40,50 +50,121 @@ private[graft] final case class ResumePlan(
  * Append-only checkpoint table (Parquet). A partition is "done" iff an
  * entry matches its CURRENT snapshot id and the CURRENT constraint hash —
  * so editing the suite or rewriting a partition's files automatically
- * re-queues it, while a plain re-run skips it. Appends are atomic at the
- * file level (each append writes one new file), matching how an Iceberg
- * append would behave.
+ * re-queues it, while a plain re-run skips it.
+ *
+ * The table holds one small row per partition per run, so it is read and
+ * written on the driver with parquet-hadoop, never by a Spark job: a
+ * read lists the directory and reads every entry file, skipping names
+ * that start with `_` or `.` as Spark does (`_SUCCESS`, `_temporary/`,
+ * `.crc`, this store's own temp files). An append writes ONE file under a
+ * hidden temp name and renames it into place: the rename is the commit
+ * point, so an append is atomic at the file level and a failed one leaves
+ * nothing a reader lists. The file has the schema Spark's writer gives
+ * [[CheckpointEntry]], so checkpoints written by Spark and by this store
+ * mix in one directory, and `spark.read.parquet` reads either.
  */
 final class CheckpointStore(spark: SparkSession, path: String) {
   import spark.implicits._
+  import CheckpointStore.{FileSchema, entry, group}
 
-  /** Every entry, read with the known [[CheckpointEntry]] schema, so
-    * reading infers nothing. */
-  def load(): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      spark.read.schema(Encoders.product[CheckpointEntry].schema).parquet(path)
-    else spark.emptyDataset[CheckpointEntry].toDF()
+  private val dir = new Path(path)
+  private def conf = spark.sparkContext.hadoopConfiguration
+
+  /** Every entry, as a local frame with the [[CheckpointEntry]] columns. */
+  def load(): DataFrame = entries().toDF()
+
+  /** Every entry, read file by file on the driver. */
+  private def entries(): Seq[CheckpointEntry] = {
+    val fs = dir.getFileSystem(conf)
+    if (!fs.exists(dir)) return Nil
+    fs.listStatus(dir).toSeq
+      .filter { f =>
+        val name = f.getPath.getName
+        f.isFile && !name.startsWith("_") && !name.startsWith(".")
+      }
+      .sortBy(_.getPath.getName)
+      .flatMap { f =>
+        val reader = ParquetReader.builder(new GroupReadSupport, f.getPath)
+          .withConf(conf).build()
+        try Iterator.continually(reader.read()).takeWhile(_ != null)
+          .map(entry).toVector
+        finally reader.close()
+      }
   }
 
-  /** One parquet file per append: a local frame would otherwise write one
-    * file per slice, and every later pending scan runs a task per file. */
-  def append(entries: Seq[CheckpointEntry]): Unit =
-    entries.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(path)
+  /** Writes `entries` as one `part-<uuid>.parquet`, published by a rename
+    * from a hidden temp name; a failed write deletes its temp file. */
+  def append(entries: Seq[CheckpointEntry]): Unit = {
+    val name = s"part-${UUID.randomUUID}.parquet"
+    val tmp = new Path(dir, s".$name.tmp")
+    val fs = dir.getFileSystem(conf)
+    try {
+      val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+        tmp, conf)).withConf(conf).withType(FileSchema).build()
+      try entries.foreach(e => writer.write(group(e)))
+      finally writer.close()
+      if (!fs.rename(tmp, new Path(dir, name)))
+        throw new IOException(s"cannot publish $tmp as $name")
+    } catch {
+      case t: Throwable =>
+        fs.delete(tmp, false)
+        throw t
+    }
+  }
 
   /** Partitions still needing validation, sorted: those no entry records
     * at their current snapshot id under `constraintHash`. */
   def pending(table: TableProvider, constraintHash: String): Seq[String] =
     plan(table, constraintHash).pending
 
-  /** One listing of `table` against the entries of `constraintHash`:
-    * ONE small scan with the hash pushed down collects this hash's
-    * `(partition, snapshot_id, run_id)` triples, and the difference with
-    * the listing is taken on the driver — no join, no shuffle. A
-    * partition covered by several entries names the least run id. */
+  /** One listing of `table` against this hash's entries, diffed on the
+    * driver. A partition covered by several entries names the least run
+    * id. */
   private[graft] def plan(table: TableProvider,
       constraintHash: String): ResumePlan = {
     val snapshots = table.snapshots().sortBy(_._1)
     val current = snapshots.toSet
-    val covered = load()
-      .where(F.col("constraint_hash") === constraintHash)
-      .select("partition", "snapshot_id", "run_id")
-      .as[(String, String, String)].collect()
-      .collect { case (p, snap, run) if current((p, snap)) =>
-        p -> Covering(run, snap) }
+    val covered = entries()
+      .collect { case e if e.constraint_hash == constraintHash &&
+          current((e.partition, e.snapshot_id)) =>
+        e.partition -> Covering(e.run_id, e.snapshot_id) }
       .groupMapReduce(_._1)(_._2)((a, b) => if (a.runId <= b.runId) a else b)
     ResumePlan(snapshots, covered)
+  }
+}
+
+private object CheckpointStore {
+  /** The parquet schema Spark's writer produces for [[CheckpointEntry]]. */
+  val FileSchema: MessageType = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  optional binary partition (STRING);
+      |  optional binary snapshot_id (STRING);
+      |  optional binary constraint_hash (STRING);
+      |  required boolean valid;
+      |  required int64 n_rows;
+      |  required int64 n_bad_rows;
+      |  optional binary run_id (STRING);
+      |}""".stripMargin)
+
+  def group(e: CheckpointEntry): Group = {
+    val g = new SimpleGroup(FileSchema)
+    def str(field: String, v: String): Unit = if (v != null) g.add(field, v)
+    str("partition", e.partition)
+    str("snapshot_id", e.snapshot_id)
+    str("constraint_hash", e.constraint_hash)
+    g.add("valid", e.valid)
+    g.add("n_rows", e.n_rows)
+    g.add("n_bad_rows", e.n_bad_rows)
+    str("run_id", e.run_id)
+    g
+  }
+
+  def entry(g: Group): CheckpointEntry = {
+    def str(field: String): String =
+      if (g.getFieldRepetitionCount(field) == 0) null else g.getString(field, 0)
+    CheckpointEntry(str("partition"), str("snapshot_id"),
+      str("constraint_hash"), g.getBoolean("valid", 0), g.getLong("n_rows", 0),
+      g.getLong("n_bad_rows", 0), str("run_id"))
   }
 }
 

@@ -1,8 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.io.{File, FilterOutputStream, IOException, OutputStream}
+import java.net.URI
+import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.{DataFrame, Encoders}
 
 import graft.checkpoint.{CheckpointEntry, CheckpointStore, Covering,
   PartitionedRunner}
@@ -428,26 +432,33 @@ class CheckpointSpec extends SparkSpec {
       Seq("source=src1"))
   }
 
-  test("a run appends one checkpoint file, and its pending scan runs one task") {
+  /** The checkpoint's entry files, by path. */
+  private def partFiles(dir: String): Seq[String] =
+    Option(new File(dir).listFiles()).toSeq.flatten
+      .filter(f => f.getName.startsWith("part-") &&
+        f.getName.endsWith(".parquet"))
+      .map(_.getPath).sorted
+
+  test("a run appends one checkpoint file, and planning a resume launches no job") {
     val base = Files.createTempDirectory("graft-cp-files").toString
     val table = mkTable(s"$base/data")
     val cp = new CheckpointStore(spark, s"$base/checkpoint")
-    def files(dir: String): Int = new java.io.File(dir).listFiles()
-      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
     PartitionedRunner.run(table, suite, cp, "run1", maxPartitions = 2)
-    assert(files(s"$base/checkpoint") == 1)
+    assert(partFiles(s"$base/checkpoint").size == 1)
     PartitionedRunner.run(table, suite, cp, "run2")
-    assert(files(s"$base/checkpoint") == 2)
+    assert(partFiles(s"$base/checkpoint").size == 2)
 
     val four = new CheckpointStore(spark, s"$base/four")
     four.append(cp.load().as[CheckpointEntry].collect().toSeq.take(4))
-    assert(files(s"$base/four") == 1)
+    assert(partFiles(s"$base/four").size == 1)
     val (pending, seen) = listened(four.pending(table, suite.constraintHash))
     assert(pending.size == 1)
-    assert(seen.perJob.map(_.tasks) == Seq(1), seen)
+    assert(seen.jobs == 0, seen)
   }
 
-  test("a resume of one partition: at most 8 jobs and a one-pass violation write") {
+  /** A resume of one pending partition under the bench suite, its second
+    * run listened; shared by the two job-count tests below. */
+  private lazy val resumeOne = {
     val base = Files.createTempDirectory("graft-cp-jobs").toString
     val table = mkTable(s"$base/data")
     val full = ConstraintCompiler.compile(Scaling.benchSuite)
@@ -457,29 +468,147 @@ class CheckpointSpec extends SparkSpec {
     val entries = primed.load().as[CheckpointEntry].collect().toSeq
     val pending = "source=src2"
     def resume(n: Int) = {
-      val cp = new CheckpointStore(spark, s"$base/checkpoint$n")
+      val dir = s"$base/checkpoint$n"
+      val cp = new CheckpointStore(spark, dir)
       cp.append(entries.filterNot(_.partition == pending))
-      listened(PartitionedRunner.run(table, full, cp, s"r$n", dims = dims,
-        violationsOut = Some(s"$base/violations$n")))
+      val before = partFiles(dir)
+      val (r, seen) = listened(PartitionedRunner.run(table, full, cp,
+        s"r$n", dims = dims, violationsOut = Some(s"$base/violations$n")))
+      (r, seen, partFiles(dir).diff(before))
     }
     resume(0)
-    val (r, seen) = resume(1)
+    val (r, seen, added) = resume(1)
     assert(r.processed == Seq(pending))
     assert(r.skipped.size == entries.size - 1)
     // the pending scan's partitions: the per-row frame's
     val (_, scan) = listened(table.scan(r.processed).write.format("noop")
       .mode("overwrite").save())
     val slices = scan.perJob.map(_.tasks).sum
-    val viol = spark.read.parquet(s"$base/violations1")
+    (pending, seen, added, slices, spark.read.parquet(s"$base/violations1"))
+  }
+
+  test("a resume of one partition: at most 8 jobs and a one-pass violation write") {
+    val (_, seen, _, slices, viol) = resumeOne
     // row-local rows from the scan, uniqueness and drift rows from the
     // driver: both halves of the write carry rows
     val ids = viol.select("constraint_id").as[String].collect().toSet
     assert(Set("doc_id_unique", "n_tok_stable").subsetOf(ids) &&
       ids.exists(id => !Set("doc_id_unique", "n_tok_stable")(id)), ids)
-    // two jobs write output: the violations, then the checkpoint entry
     val writes = seen.perJob.filter(_.recordsWritten > 0)
-    assert(writes.map(_.recordsWritten) == Seq(viol.count(), 1L), seen)
+    assert(writes.map(_.recordsWritten).headOption == Some(viol.count()), seen)
     assert(writes.head.tasks <= slices + 1, (slices, seen))
     assert(seen.jobs <= 8, seen)
   }
+
+  test("a resume of one partition: at most 6 jobs and one Spark write, of the violations") {
+    val (pending, seen, added, _, viol) = resumeOne
+    // the checkpoint gains one file, holding the pending entry
+    assert(added.size == 1, added)
+    assert(spark.read.parquet(added.head).as[CheckpointEntry].collect()
+      .map(e => (e.partition, e.run_id)).toSeq == Seq((pending, "r1")))
+    // one job writes output: the violations (the checkpoint entry is
+    // written on the driver)
+    val writes = seen.perJob.filter(_.recordsWritten > 0)
+    assert(writes.map(_.recordsWritten) == Seq(viol.count()), seen)
+    assert(seen.jobs <= 6, seen)
+  }
+
+  test("a checkpoint written by Spark's parquet writer plans and takes appends alike") {
+    val base = Files.createTempDirectory("graft-cp-compat").toString
+    val table = mkTable(s"$base/data")
+    val hash = suite.constraintHash
+    val driver = new CheckpointStore(spark, s"$base/driver")
+    PartitionedRunner.run(table, suite, driver, "r1", maxPartitions = 3)
+    val written = driver.load().as[CheckpointEntry].collect().toSeq
+    assert(written.size == 3)
+
+    // the same entries through Spark's writer, as checkpoints were
+    // written before: `_SUCCESS` and `.crc` files beside the data
+    val dir = s"$base/spark"
+    written.toDS().coalesce(1).write.parquet(dir)
+    val names = new File(dir).listFiles().map(_.getName)
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")),
+      names.toSeq)
+    val old = new CheckpointStore(spark, dir)
+    val (a, b) = (old.plan(table, hash), driver.plan(table, hash))
+    assert(a.pending == b.pending && a.skipped == b.skipped &&
+      a.covered == b.covered && a.pending.size == 2, (a, b))
+
+    // an append lands beside the file Spark wrote, and both read back
+    val before = partFiles(dir)
+    val r2 = PartitionedRunner.run(table, suite, old, "r2")
+    assert(r2.processed == a.pending)
+    val after = partFiles(dir)
+    assert(after.size == 2 && before.forall(after.contains), after)
+    val all = spark.read.parquet(dir)
+    assert(all.schema.map(f => f.name -> f.dataType) ==
+      Encoders.product[CheckpointEntry].schema.map(f => f.name -> f.dataType))
+    assert(all.as[CheckpointEntry].collect().toSet ==
+      old.load().as[CheckpointEntry].collect().toSet)
+    assert(all.select("run_id").as[String].collect().sorted.toSeq ==
+      Seq.fill(3)("r1") ++ Seq.fill(2)("r2"))
+    assert(old.pending(table, hash).isEmpty)
+  }
+
+  test("a kill during an append publishes nothing, and the partition runs again") {
+    val base = Files.createTempDirectory("graft-cp-kill").toString
+    val table = mkTable(s"$base/data")
+    val dir = s"$base/checkpoint"
+    val cp = new CheckpointStore(spark, dir)
+    PartitionedRunner.run(table, suite, cp, "r1", maxPartitions = 2)
+    val pending = cp.pending(table, suite.constraintHash)
+    assert(pending.size == 3)
+
+    // what a killed writer leaves behind: a hidden temp file cut short,
+    // and a Spark writer's `_temporary/` directory
+    Files.write(Paths.get(dir, ".part-killed.parquet.tmp"),
+      "PAR1 cut short".getBytes)
+    val temporary = Paths.get(dir, "_temporary", "0")
+    Files.createDirectories(temporary)
+    Files.write(temporary.resolve("part-00000.parquet"), "garbage".getBytes)
+    assert(cp.pending(table, suite.constraintHash) == pending)
+    assert(cp.load().count() == 2L)
+    assert(spark.read.parquet(dir).count() == 2L)
+
+    // an append whose write fails after its first bytes
+    val files = new File(dir).list().toSet
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.failing.impl", classOf[FailingFs].getName)
+    spark.sparkContext.hadoopConfiguration
+      .setBoolean("fs.failing.impl.disable.cache", true)
+    val failing = new CheckpointStore(spark, s"failing:$dir")
+    val err = intercept[IOException](PartitionedRunner.run(table, suite,
+      failing, "r2", maxPartitions = 1))
+    assert(err.getMessage == FailingFs.Message)
+    assert(new File(dir).list().toSet == files)
+    assert(cp.pending(table, suite.constraintHash) == pending)
+
+    val r3 = PartitionedRunner.run(table, suite, cp, "r3")
+    assert(r3.processed == pending)
+    assert(cp.pending(table, suite.constraintHash).isEmpty)
+  }
+}
+
+/** A local file system whose writes fail after their first
+  * [[FailingFs.Bytes]] bytes: a write that dies mid-file. */
+final class FailingFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("failing:///")
+  override def getScheme: String = "failing"
+  override protected def createOutputStreamWithMode(f: HPath,
+      append: Boolean, permission: FsPermission): OutputStream = {
+    new FilterOutputStream(
+        super.createOutputStreamWithMode(f, append, permission)) {
+      private var written = 0
+      override def write(b: Int): Unit = {
+        written += 1
+        if (written > FailingFs.Bytes) throw new IOException(FailingFs.Message)
+        out.write(b)
+      }
+    }
+  }
+}
+
+object FailingFs {
+  val Bytes = 16
+  val Message = "disk failed mid-write"
 }
