@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -19,13 +20,16 @@ import org.apache.spark.unsafe.types.UTF8String
  * collected to the driver ([[Summary]]), and every check finishes there
  * in plain Scala ([[finish]]).
  *
- * Contract: [[taggedViolations]] returns the check's violation rows —
- * exactly the violation schema `(doc_id, constraint_id, observed,
- * expected, instance_path)`, all strings, the same shape the row-local
- * detail path produces — followed by the partition columns of the
- * partition each row counts against. Table-scope checks carry no
- * partition columns: their violations count against every partition.
- * Evaluated alone, a check goes through the same summary as a suite.
+ * Contract: a check finishes to its violation counts per partition and
+ * its violation rows on the driver ([[Finished]]). A check whose
+ * violations are facts about single rows (referential integrity) has no
+ * driver rows: its violations explode from the per-row frame
+ * ([[rowViolation]]). Every violation row has the violation schema
+ * `(doc_id, constraint_id, observed, expected, instance_path)`, all
+ * strings, the shape the row-local detail path produces; [[Summary]]
+ * assembles both kinds. Table-scope checks count under the empty key:
+ * their violations count against every partition. Evaluated alone, a
+ * check goes through the same summary as a suite.
  */
 sealed trait DatasetCheck extends Serializable {
   def id: String
@@ -57,38 +61,32 @@ sealed trait DatasetCheck extends Serializable {
     * `None` for a check whose violations are not facts about one row. */
   private[graft] def rowViolation(value: Column): Option[Column] = None
 
-  /** The tagged violation rows of this check alone over `df`. */
-  final def taggedViolations(
-      df: DataFrame,
-      idCol: String,
-      partitionCols: Seq[String],
-      dims: Map[String, DataFrame]): DataFrame =
-    Summary.alone(this, df, idCol, partitionCols, dims).finished(0).violations
-
-  /** The violation rows alone, without their partition tags. */
+  /** The violation rows of this check alone over `df`. */
   final def violations(
       df: DataFrame,
       idCol: String,
       partitionCols: Seq[String],
       dims: Map[String, DataFrame]): DataFrame =
-    taggedViolations(df, idCol, partitionCols, dims)
-      .select(DatasetCheck.violationCols.map(F.col): _*)
+    Summary.alone(this, df, idCol, partitionCols, dims).violations
 
-  /** Per-partition violation counts `(partitionCols..., _n_ds_viol)`
-    * from the tagged rows; `None` for table-scope checks and
-    * unpartitioned input. */
+  /** Per-partition violation counts `(partitionCols..., _n_ds_viol)` of
+    * the partitions with any, as a local frame; `None` for table-scope
+    * checks and unpartitioned input. */
   final def violationCountsByPartition(
       df: DataFrame,
       idCol: String,
       partitionCols: Seq[String],
       dims: Map[String, DataFrame]): Option[DataFrame] =
-    if (tableScope || partitionCols.isEmpty) None
-    else Some(taggedViolations(df, idCol, partitionCols, dims)
-      .groupBy(partitionCols.map(F.col): _*)
-      .agg(F.count(F.lit(1)).as("_n_ds_viol")))
+    Option.when(!tableScope && partitionCols.nonEmpty) {
+      val s = Summary.alone(this, df, idCol, partitionCols, dims)
+      DatasetCheck.local(df.sparkSession,
+        s.finished(0).counts.toSeq.collect { case (k, n) if n > 0 =>
+          Row.fromSeq(k :+ n) },
+        StructType(s.partitionFields :+
+          StructField("_n_ds_viol", LongType, nullable = false)))
+    }
 
-  protected def instancePath(col: String): Column =
-    F.lit("/" + col.replace(".", "/")).as("instance_path")
+  protected def instancePath(col: String): String = "/" + col.replace(".", "/")
 }
 
 object DatasetCheck {
@@ -108,7 +106,7 @@ object DatasetCheck {
     spark.createDataFrame(rows.asJava, schema)
 
   /** Whether `df` optimizes to a local relation, whose rows are on the
-    * driver already. */
+    * driver already (a dimension given as one needs no distinct pass). */
   private[graft] def onDriver(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.isInstanceOf[
       org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
@@ -146,13 +144,11 @@ final case class UniqueCheck(id: String, col: String, expected: String)
       dims: Map[String, DataFrame]): Option[SummaryColumn] =
     Some(SummaryColumn.Hashed(keyHash))
 
+  /** One violation row per duplicated key, `doc_id` the key. */
   private[graft] def finish(s: Summary, i: Int): Finished = {
     lazy val dups = duplicates(s.whole, s.repeated(i))
-    new Finished(Map(Nil -> dups.size.toLong),
-      render(DatasetCheck.local(s.whole.sparkSession,
-        dups.map { case (k, n) => Row(k, n) },
-        StructType(Seq(StructField("_k", StringType),
-          StructField("_cnt", LongType))))))
+    new Finished(Map(Nil -> dups.size.toLong), dups.map { case (k, n) =>
+      Row(k, id, s"count=$n", expected, instancePath(col)) })
   }
 
   /** Phase 2 over `df` for the candidate hashes phase 1 found: each
@@ -167,14 +163,6 @@ final case class UniqueCheck(id: String, col: String, expected: String)
       .agg(F.count(F.lit(1)).as("_cnt"))
       .where(F.col("_cnt") > 1)
       .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
-
-  private def render(dupKeys: DataFrame): DataFrame =
-    dupKeys.select(
-      F.col("_k").as("doc_id"),
-      F.lit(id).as("constraint_id"),
-      F.concat(F.lit("count="), F.col("_cnt").cast("string")).as("observed"),
-      F.lit(expected).as("expected"),
-      instancePath(col))
 }
 
 /**
@@ -199,8 +187,7 @@ final case class RefIntegrityCheck(
     Some(SummaryColumn.Counted(dangling(dims)))
 
   private[graft] def finish(s: Summary, i: Int): Finished =
-    new Finished(s.counts(i),
-      violationRows(s.rows, Summary.column(i), s.partitionCols))
+    new Finished(s.counts(i), Nil)
 
   /** The fact key as reported (`"null"` for a NULL key) on a dangling
     * row, NULL on a row whose key the dimension holds. NULL dimension
@@ -225,17 +212,7 @@ final case class RefIntegrityCheck(
       F.lit(id).as("constraint_id"),
       value.as("observed"),
       F.lit(expected).as("expected"),
-      instancePath(col))))
-
-  /** The tagged violation rows of a per-row frame whose column
-    * `dangling` holds [[dangling]] and whose `_doc_id` holds the id. */
-  private[graft] def violationRows(rows: DataFrame, dangling: String,
-      partitionCols: Seq[String]): DataFrame =
-    rows.filter(F.col(dangling).isNotNull)
-      .select((F.col("_doc_id").as("doc_id") +:
-        rowViolation(F.col(dangling)).get.as("_v") +:
-        partitionCols.map(F.col)): _*)
-      .select(("doc_id" +: "_v.*" +: partitionCols).map(F.col): _*)
+      F.lit(instancePath(col)).as("instance_path"))))
 }
 
 /**
@@ -269,11 +246,10 @@ sealed trait DriftBase extends DatasetCheck {
   }
 
   private[graft] def finish(s: Summary, i: Int): Finished = {
-    lazy val metrics =
-      DriftMath.divergence(histogram(s, i), metric, support)
+    lazy val metrics = DriftMath.divergence(histogram(s, i), metric, support)
     new Finished(
       metrics.collect { case (k, m) if m > threshold => k -> 1L }.toMap,
-      violationsOf(metricsFrame(s, metrics), s.partitionCols))
+      flaggedRows(s, metrics))
   }
 
   /** Divergence values as the local frame `(partitionCols..., metric)`. */
@@ -284,21 +260,21 @@ sealed trait DriftBase extends DatasetCheck {
       StructType(s.partitionFields :+ StructField("metric", DoubleType)))
 
   /** One violation row per partition whose divergence exceeds
-    * `threshold`, tagged with that partition; `doc_id` is its key. */
-  private[graft] def violationsOf(metrics: DataFrame,
-      partitionCols: Seq[String]): DataFrame =
-    metrics
-      .filter(F.col("metric") > threshold)
-      .select(Seq(
-        F.concat_ws("/", partitionCols.map(p =>
-          F.concat(F.lit(p + "="), F.col(p).cast("string"))): _*)
-          .as("doc_id"),
-        F.lit(id).as("constraint_id"),
-        F.concat(F.lit(metric + "="), F.round(F.col("metric"), 6)
-          .cast("string")).as("observed"),
-        F.lit(expected).as("expected"),
-        instancePath(col)) ++
-        partitionCols.map(F.col): _*)
+    * `threshold`: `doc_id` is the partition's key, `p=value/...`, a NULL
+    * value written as the directory name it is read back from. Rendered
+    * by Catalyst over a local frame, so collecting them runs no job. */
+  private[graft] def flaggedRows(s: Summary,
+      metrics: Seq[(Seq[Any], Double)]): Seq[Row] =
+    metricsFrame(s, metrics.filter(_._2 > threshold)).select(
+      F.concat_ws("/", s.partitionCols.map(p => F.concat(F.lit(p + "="),
+        F.coalesce(F.col(p).cast("string"),
+          F.lit(ExternalCatalogUtils.DEFAULT_PARTITION_NAME)))): _*)
+        .as("doc_id"),
+      F.lit(id).as("constraint_id"),
+      F.concat(F.lit(metric + "="), F.round(F.col("metric"), 6)
+        .cast("string")).as("observed"),
+      F.lit(expected).as("expected"),
+      F.lit(instancePath(col)).as("instance_path")).collect().toSeq
 
   protected def needsPartitions(partitionCols: Seq[String]): Unit =
     require(partitionCols.nonEmpty, s"drift check '$id' needs partitionCols")

@@ -17,15 +17,16 @@ private[graft] object SummaryColumn {
   final case class Hashed(value: Column) extends SummaryColumn
 }
 
-/** A check's result: its violation count per partition key (a
-  * table-scope check counts under the empty key) and its tagged
-  * violation rows ([[DatasetCheck.taggedViolations]]). Each is computed
-  * when first asked for, so a verdict-only call builds no violation
-  * frame. */
+/** A check's result, on the driver: its violation count per partition
+  * key (a table-scope check counts under the empty key) and its
+  * violation rows in [[DatasetCheck.violationCols]] order — none for a
+  * check whose violations explode from the per-row frame
+  * ([[DatasetCheck.rowViolation]]). Each is computed when first asked
+  * for, so a verdict-only call renders no row. */
 private[graft] final class Finished(
-    countsOf: => Map[Seq[Any], Long], violationsOf: => DataFrame) {
+    countsOf: => Map[Seq[Any], Long], rowsOf: => Seq[Row]) {
   lazy val counts: Map[Seq[Any], Long] = countsOf
-  lazy val violations: DataFrame = violationsOf
+  lazy val rows: Seq[Row] = rowsOf
 }
 
 /**
@@ -163,6 +164,43 @@ private[graft] final class Summary(
   /** Every check's result, in `checks` order. */
   lazy val finished: IndexedSeq[Finished] =
     checks.indices.map(i => checks(i).finish(this, i))
+
+  /** The violation rows of every source, union'd. The per-row ones — the
+    * engine's `_viols` when `rows` has it, plus each check's
+    * [[DatasetCheck.rowViolation]] — explode from ONE pass over `rows`
+    * behind one gate (`_ok` false or a per-row violation present): the
+    * filter pushes down as ONE codegen gate, so on a mostly-clean table
+    * the vast majority of rows short-circuit out of the scan stage
+    * without constructing a struct, and the Generate runs only over the
+    * failing sliver. NULL elements drop with a plain Filter AFTER the
+    * Generate: a higher-order `filter(_viols, …)` lambda reads nicer but
+    * ArrayFilter is CodegenFallback, which drags the whole struct
+    * construction into interpreted eval() per row. The checks' driver
+    * rows join as one single-slice local frame, so writing the union runs
+    * one task per partition of `rows` plus one. */
+  lazy val violations: DataFrame = {
+    val engine = Option.when(rows.columns.contains("_viols"))(F.col("_viols"))
+    val perRow = checks.indices.flatMap(i =>
+      checks(i).rowViolation(F.col(column(i))))
+    val exploded = Option.when(engine.nonEmpty || perRow.nonEmpty) {
+      require(rows.columns.contains("_doc_id"),
+        s"violation rows need the id column '$idCol', which the input lacks")
+      val viols = engine.fold(F.array(perRow: _*))(v =>
+        if (perRow.isEmpty) v
+        else F.concat(F.coalesce(v,
+          F.array().cast(rows.schema("_viols").dataType)), F.array(perRow: _*)))
+      rows.filter((engine.map(_ => !F.col("_ok")) ++ perRow.map(_.isNotNull))
+          .reduce(_ || _))
+        .select(F.col("_doc_id").as("doc_id"), F.explode(viols).as("_v"))
+        .filter(F.col("_v").isNotNull)
+        .select("doc_id", "_v.*")
+    }
+    val driverRows = finished.flatMap(_.rows)
+    val local = DatasetCheck.local(whole.sparkSession, driverRows,
+      DatasetCheck.violationSchema)
+    exploded.fold(local)(e =>
+      if (driverRows.isEmpty) e else e.unionAll(local.coalesce(1)))
+  }
 }
 
 private[graft] object Summary {

@@ -3,7 +3,7 @@ package graft.exec
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, LongType,
-  StringType, StructField, StructType}
+  StructField, StructType}
 
 import graft.checks.{DatasetCheck, Summary}
 import graft.compile.CompiledSuite
@@ -102,7 +102,8 @@ object Validator {
     // first failing index) are paid only on rows that failed. NULL
     // predicate results are failures everywhere.
     val viols =
-      if (suite.rowChecks.isEmpty) F.lit(null).cast(ArrayType(ViolationType))
+      if (suite.rowChecks.isEmpty) F.lit(null).cast(ArrayType(StructType(
+        DatasetCheck.violationSchema.filterNot(_.name == "doc_id"))))
       else F.array(suite.rowChecks.map { c =>
         F.when(!F.coalesce(c.pred, F.lit(false)), F.struct(
           F.lit(c.id).as("constraint_id"),
@@ -115,10 +116,6 @@ object Validator {
       partitionCols, idCol, dims,
       Seq(ok.as("_ok"), F.when(!ok, viols).as("_viols"))))
   }
-
-  private val ViolationType = StructType(
-    Seq("constraint_id", "observed", "expected", "instance_path")
-      .map(StructField(_, StringType)))
 }
 
 /**
@@ -209,41 +206,10 @@ private[graft] final class Evaluation(val summary: Summary) {
     }
   }
 
-  /** Violation rows of every source, union'd. Row-local ones and those
-    * of checks with a per-row violation (referential integrity) explode
-    * from ONE pass over `rows`, behind a plain gate (`_ok` false or a
-    * per-row violation present): the filter pushes down as ONE codegen
-    * gate, so on a mostly-clean table the vast majority of rows
-    * short-circuit out of the scan stage without constructing a struct,
-    * and the Generate runs only over the failing sliver. NULL elements
-    * drop with a plain Filter AFTER the Generate: a higher-order
-    * `filter(_viols, …)` lambda reads nicer but ArrayFilter is
-    * CodegenFallback, which drags the whole struct construction into
-    * interpreted eval() per row. The other checks' rows that are already
-    * on the driver (uniqueness, drift) join as one single-slice local
-    * frame, so writing the union runs one task per partition of `rows`
-    * plus one. */
-  lazy val violations: DataFrame = {
-    val (perRow, others) = checks.indices.partitionMap(i =>
-      checks(i).rowViolation(F.col(Summary.column(i))).toLeft(i))
-    val viols =
-      if (perRow.isEmpty) F.col("_viols")
-      else F.concat(F.coalesce(F.col("_viols"),
-        F.array().cast(rows.schema("_viols").dataType)), F.array(perRow: _*))
-    val rowViolations = rows
-      .filter(perRow.foldLeft(!F.col("_ok"))(_ || _.isNotNull))
-      .select(F.col("_doc_id").as("doc_id"), F.explode(viols).as("_v"))
-      .filter(F.col("_v").isNotNull)
-      .select("doc_id", "_v.*")
-    val (onDriver, distributed) = others.map(summary.finished(_).violations
-      .select(DatasetCheck.violationCols.map(F.col): _*))
-      .partition(DatasetCheck.onDriver)
-    val local = onDriver.flatMap(_.collect())
-    ((rowViolations +: distributed) ++ Option.when(local.nonEmpty)(
-      DatasetCheck.local(rows.sparkSession, local,
-        DatasetCheck.violationSchema).coalesce(1)))
-      .reduce(_ unionAll _)
-  }
+  /** Violation rows of every source, union'd ([[Summary.violations]]):
+    * row-local and referential-integrity rows stay a lazy plan over
+    * `rows`, uniqueness and drift rows are on the driver. */
+  def violations: DataFrame = summary.violations
 
   /** Empty frames with the verdict and violation schemas, for a run with
     * nothing to evaluate: nothing runs, and no dimension is read. */

@@ -106,12 +106,11 @@ class PropertySpec extends SparkSpec {
       }
       val check = graft.checks.DriftCheck("d", "v", 0.0, 1.0, gr.nb,
         gr.metric, gr.threshold, "e", gr.minTotal)
-      val metrics = check.metricsFrame(
+      val flagged = check.flaggedRows(
         graft.checks.Summary.alone(check, cellsDf, "doc_id", Seq("part"),
           Map.empty),
         got.toSeq.map { case (p, m) => (Seq(p), m) })
-      val flagged = check.violationsOf(metrics, Seq("part"))
-        .select("part", "observed").as[(String, String)].collect().toMap
+        .map(r => r.getString(0).stripPrefix("part=") -> r.getString(2)).toMap
       assert(flagged == want.collect { case (p, (_, true, o)) => p -> o },
         s"grid ${gr.g}")
     }

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 import graft.dsl._
 import graft.dsl.Constraint._
+import graft.checks.{DatasetCheck, DriftCheck, RefIntegrityCheck, UniqueCheck}
 import graft.compile.ConstraintCompiler
-import graft.exec.Validator
+import graft.exec.{Validator, Violation}
 import graft.gen.SequenceGen
 import graft.registry.ConstraintRegistry
 
@@ -232,7 +233,7 @@ class ValidatorSpec extends SparkSpec {
     assert(hot == s"count=${(0L until n).map(docIdOf).count(_ == "seq-hot")}")
   }
 
-  test("dataset checks: referential integrity via broadcast anti-join") {
+  test("dataset checks: referential integrity flags exactly the dangling rows") {
     val ds = SequenceGen.generate(spark, 25000L, nSources = 4,
       numPartitions = 8)
     val dim = SequenceGen.sourcesDim(spark, 4)
@@ -531,5 +532,73 @@ class ValidatorSpec extends SparkSpec {
     val literal = report(keys(null, "null", "null")).violations
       .select("doc_id", "observed").as[(String, String)].collect()
     assert(literal.toSeq == Seq(("null", "count=2")))
+  }
+
+  test("dataset checks: each check alone agrees with the suite's rows and verdicts") {
+    val df = SequenceGen.generate(spark, 12000L, nSources = 4,
+      numPartitions = 4).toDF()
+    val dims = Map("sources" -> SequenceGen.sourcesDim(spark, 4))
+    val suite = ConstraintCompiler.compile(Scaling.benchSuite)
+    val rep = Validator.validateWithDetails(df, suite, Seq("source"),
+      dims = dims)
+    val all = rep.violations.as[Violation].collect().toSeq
+    def sorted(vs: Seq[Violation]) = vs.sortBy(_.productIterator.mkString("\u0000"))
+    suite.datasetChecks.foreach { c =>
+      val alone = c.violations(df, "doc_id", Seq("source"), dims)
+        .as[Violation].collect().toSeq
+      assert(alone.nonEmpty, c.id)
+      assert(sorted(alone) == sorted(all.filter(_.constraint_id == c.id)), c.id)
+    }
+
+    def counts(c: DatasetCheck): Option[Map[String, Long]] =
+      c.violationCountsByPartition(df, "doc_id", Seq("source"), dims)
+        .map(_.as[(String, Long)].collect().toMap)
+    def check[T](pf: PartialFunction[DatasetCheck, T]): T =
+      suite.datasetChecks.collectFirst(pf).get
+    assert(counts(check { case u: UniqueCheck => u }).isEmpty)
+    val drift = check { case d: DriftCheck => d }
+    val driftCounts = counts(drift).get
+    assert(driftCounts.nonEmpty && driftCounts.values.forall(_ == 1L))
+    assert(driftCounts.keySet.map("source=" + _) ==
+      all.filter(_.constraint_id == drift.id).map(_.doc_id).toSet)
+    // the verdicts count RI's dangling rows and drift's flagged partitions
+    val riCounts = counts(check { case r: RefIntegrityCheck => r }).get
+    val verdicts = rep.verdicts.filter($"n_partition_violations" > 0)
+      .select("source", "n_partition_violations").as[(String, Long)]
+      .collect().toMap
+    assert(riCounts.nonEmpty)
+    assert(verdicts.map { case (p, n) => p -> (n - driftCounts.getOrElse(p, 0L)) }
+      .filter(_._2 > 0) == riCounts)
+  }
+
+  test("drift: a flagged NULL partition value is named as its directory") {
+    // p1 and p2 spread over the ten buckets, the NULL partition fills one
+    val rows = (0 until 600).map { i =>
+      val part = Seq("p1", "p2", null)(i % 3)
+      (s"d$i", if (part == null) 0.05 else (i % 10) / 10.0 + 0.05, "x", part)
+    }.toDF("doc_id", "v", "a", "part")
+    val suite = ConstraintCompiler.compile(ConstraintSuite("s",
+      Seq(NoDrift("drift", "v", 0, 1, 10, "psi", 2.0))))
+    def drifted(partitionCols: String*): Set[String] =
+      Validator.validateWithDetails(rows, suite, partitionCols)
+        .violations.select("doc_id").as[String].collect().toSet
+    assert(drifted("part") == Set("part=__HIVE_DEFAULT_PARTITION__"))
+    assert(drifted("a", "part") == Set("a=x/part=__HIVE_DEFAULT_PARTITION__"))
+  }
+
+  test("violation rows name a missing id column; verdicts need none") {
+    val df = seqDf(("a", Seq(1), 1, "web"), ("a", Seq(2), 1, "mars"))
+    val dims = Map("sources" -> Seq("web").toDF("source"))
+    val suite = ConstraintCompiler.compile(ConstraintSuite("s", Seq(
+      NotNull("nn", "doc_id"), Unique("u", "doc_id"),
+      RefIntegrity("ri", "source", "sources", "source"))))
+    assert(Validator.validate(df, suite, Seq("source"), idCol = "nope",
+      dims = dims).filter($"valid").isEmpty)
+    val e = intercept[IllegalArgumentException](Validator.validateWithDetails(
+      df, suite, Seq("source"), idCol = "nope", dims = dims))
+    assert(e.getMessage.contains("'nope'"), e.getMessage)
+    val ri = suite.datasetChecks.collectFirst { case r: RefIntegrityCheck => r }.get
+    assert(intercept[IllegalArgumentException](
+      ri.violations(df, "nope", Seq("source"), dims)).getMessage.contains("'nope'"))
   }
 }
