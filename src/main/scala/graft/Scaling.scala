@@ -137,7 +137,7 @@ object Scaling {
          || quantity | value |
          || --- | --- |
          || input | `input_hint` table, $nRows rows, 64 files, partitioned by `source` (8 sources + planted) |
-         || suite | FULL north-star suite: 5 row-local constraints (notNull, pattern, bounds, size-consistency, per-token range via the codegen ArrayAllBetween) + uniqueness (hash-first two-phase) + referential integrity (dimension key set) + PSI drift |
+         || suite | FULL north-star suite: 5 row-local constraints (notNull, pattern, bounds, size-consistency, per-token range via the codegen ArrayFirstOutside) + uniqueness (hash-first two-phase) + referential integrity (dimension key set) + PSI drift |
          || job | one validate() action: pruned parquet scan → codegen predicate conjunction → one summary aggregate (verdict counts, RI counts, drift histogram, key hashes) collected to the driver, plus a key re-read when hashes repeat |
          || throughput @ local[$lo] | ${results(lo)}%.0f seq/s |
          || throughput @ local[$hi] | ${results(hi)}%.0f seq/s |

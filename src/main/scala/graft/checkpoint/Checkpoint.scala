@@ -11,11 +11,12 @@ import org.apache.parquet.hadoop.example.{ExampleParquetWriter,
   GroupReadSupport}
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
+import graft.checks.{DatasetCheck, Evaluation}
 import graft.compile.CompiledSuite
-import graft.exec.{Evaluation, JsonValidator, Validator}
+import graft.exec.{JsonValidator, Validator}
 import graft.table.TableProvider
 
 /** One line of per-partition lineage — the north rule's
@@ -188,16 +189,17 @@ final case class RunResult(
  * SINGLE PASS: [[run]] (Catalyst engine) and [[runJson]] (doc engine)
  * share one driver and differ only in the [[Evaluation]] they supply —
  * the narrow per-row frame and, for [[run]], the suite's dataset checks.
- * Verdicts, checkpoint entries and violations all derive from that one
- * evaluation; with dataset checks, its one summary aggregate is
- * collected once and the verdicts are a local frame. When
- * `violationsOut` is set the per-row frame persists to executor disk, so
- * the first action materializes it and the next reads the blocks: every
- * pending row is evaluated once (lineage recomputes a lost block —
- * correctness never depends on the cache). Verdict-only runs skip the
- * persist and the returned `violations` plan stays lazy (acting on it
- * re-evaluates — materialize via `violationsOut` when both outputs are
- * consumed).
+ * Checkpoint entries and violations derive from that one evaluation.
+ * Its verdicts are collected once, on the driver, and those rows are
+ * both the entries appended and the returned `verdicts`: a local frame,
+ * so acting on it launches no job and reads exactly what the run
+ * checkpointed. When `violationsOut` is set the per-row frame persists
+ * to executor disk, so the first action materializes it and the next
+ * reads the blocks: every pending row is evaluated once (lineage
+ * recomputes a lost block — correctness never depends on the cache).
+ * Verdict-only runs skip the persist and the returned `violations` plan
+ * stays lazy (acting on it re-evaluates — materialize via
+ * `violationsOut` when both outputs are consumed).
  */
 object PartitionedRunner {
 
@@ -219,7 +221,7 @@ object PartitionedRunner {
     drive(table, checkpoint, runId, suite.constraintHash, violationsOut,
         maxPartitions) { pending =>
       Validator.evaluate(table.scan(pending), suite, table.partitionCols,
-        idCol, dims, globalDf = Some(table.scanAll()))
+        idCol, dims, Some(table.scanAll()))
     }
 
   /**
@@ -255,10 +257,11 @@ object PartitionedRunner {
   }
 
   /** The one driver loop: pending partitions → one evaluation →
-    * (persisted when violations are written) → violations → checkpoint.
-    * Pending, skipped and every entry's snapshot id come from the one
-    * listing the run planned from. A converged run evaluates nothing and
-    * returns empty frames with the verdict and violation schemas. */
+    * (persisted when violations are written) → violations → verdicts
+    * collected → checkpoint. Pending, skipped and every entry's snapshot
+    * id come from the one listing the run planned from. A converged run
+    * evaluates nothing and returns empty frames with the verdict and
+    * violation schemas. */
   private def drive(table: TableProvider, checkpoint: CheckpointStore,
       runId: String, constraintHash: String, violationsOut: Option[String],
       maxPartitions: Int)(evaluate: Seq[String] => Evaluation): RunResult = {
@@ -275,18 +278,20 @@ object PartitionedRunner {
 
     val persist = violationsOut.isDefined
     if (persist) eval.rows.persist(StorageLevel.DISK_ONLY)
-    try {
+    val verdicts = try {
       violationsOut.foreach { out =>
         eval.violations.write.mode(SaveMode.Append).parquet(out)
       }
+      val rows = eval.verdicts.collect().toSeq
       val snapshot = plan.snapshots.toMap
-      checkpoint.append(checkpointEntries(table.partitionCols, eval.verdicts,
+      checkpoint.append(checkpointEntries(table.partitionCols, rows,
         constraintHash, runId, pending.map(p => p -> snapshot(p))))
+      DatasetCheck.local(eval.rows.sparkSession, rows, eval.verdicts.schema)
     } finally if (persist) eval.rows.unpersist(blocking = false)
-    result(eval.verdicts, eval.violations)
+    result(verdicts, eval.violations)
   }
 
-  /** Collect per-partition verdict rows into checkpoint entries, plus
+  /** Per-partition verdict rows as checkpoint entries, plus
     * vacuous entries for pending partitions whose scan produced zero
     * rows (they emit no verdict row and would otherwise be re-queued
     * and re-scanned on every run forever). `pending` pairs each pending
@@ -294,14 +299,13 @@ object PartitionedRunner {
     * rewritten during the run is recorded at the id it was validated
     * at, so the next run sees a new id and validates it again. */
   private def checkpointEntries(partitionCols: Seq[String],
-      verdicts: DataFrame, constraintHash: String, runId: String,
+      verdicts: Seq[Row], constraintHash: String, runId: String,
       pending: Seq[(String, String)]): Seq[CheckpointEntry] = {
     // a verdict row carries DECODED partition values: match it to its
     // pending partition by the decoded values of the name
     val byValues = pending.map { case (p, snap) =>
       TableProvider.decode(p).map(_._2) -> (p, snap) }.toMap
-    // Verdicts are small (one row per partition) — collect for checkpoint.
-    val entries = verdicts.collect().toSeq.map { r =>
+    val entries = verdicts.map { r =>
       val values =
         partitionCols.map(c => Option(r.getAs[Any](c)).map(_.toString))
       val (p, snap) = byValues.getOrElse(values,

@@ -17,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * A suite's dataset checks do not run as pipelines of their own: each
  * adds at most one column to the per-row projection
  * ([[summaryColumn]]), ONE summary aggregate over that projection is
- * collected to the driver ([[Summary]]), and every check finishes there
- * in plain Scala ([[finish]]).
+ * collected to the driver ([[Evaluation.aggregate]]), and every check
+ * finishes there in plain Scala ([[finish]]).
  *
  * Contract: a check finishes to its violation counts per partition and
  * its violation rows on the driver ([[Finished]]). A check whose
@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * driver rows: its violations explode from the per-row frame
  * ([[rowViolation]]). Every violation row has the violation schema
  * `(doc_id, constraint_id, observed, expected, instance_path)`, all
- * strings, the shape the row-local detail path produces; [[Summary]]
+ * strings, the shape the row-local detail path produces; [[Evaluation]]
  * assembles both kinds. Table-scope checks count under the empty key:
  * their violations count against every partition. Evaluated alone, a
  * check goes through the same summary as a suite.
@@ -53,7 +53,7 @@ sealed trait DatasetCheck extends Serializable {
       dims: Map[String, DataFrame]): Option[SummaryColumn]
 
   /** The check's result from `s`, in which it is check `i`. */
-  private[graft] def finish(s: Summary, i: Int): Finished
+  private[graft] def finish(s: Evaluation, i: Int): Finished
 
   /** The check's violation on one row of the per-row frame, given its
     * summary column `value` there: the violation struct `(constraint_id,
@@ -67,7 +67,7 @@ sealed trait DatasetCheck extends Serializable {
       idCol: String,
       partitionCols: Seq[String],
       dims: Map[String, DataFrame]): DataFrame =
-    Summary.alone(this, df, idCol, partitionCols, dims).violations
+    Evaluation.alone(this, df, idCol, partitionCols, dims).violations
 
   /** Per-partition violation counts `(partitionCols..., _n_ds_viol)` of
     * the partitions with any, as a local frame; `None` for table-scope
@@ -78,7 +78,7 @@ sealed trait DatasetCheck extends Serializable {
       partitionCols: Seq[String],
       dims: Map[String, DataFrame]): Option[DataFrame] =
     Option.when(!tableScope && partitionCols.nonEmpty) {
-      val s = Summary.alone(this, df, idCol, partitionCols, dims)
+      val s = Evaluation.alone(this, df, idCol, partitionCols, dims)
       DatasetCheck.local(df.sparkSession,
         s.finished(0).counts.toSeq.collect { case (k, n) if n > 0 =>
           Row.fromSeq(k :+ n) },
@@ -145,7 +145,7 @@ final case class UniqueCheck(id: String, col: String, expected: String)
     Some(SummaryColumn.Hashed(keyHash))
 
   /** One violation row per duplicated key, `doc_id` the key. */
-  private[graft] def finish(s: Summary, i: Int): Finished = {
+  private[graft] def finish(s: Evaluation, i: Int): Finished = {
     lazy val dups = duplicates(s.whole, s.repeated(i))
     new Finished(Map(Nil -> dups.size.toLong), dups.map { case (k, n) =>
       Row(k, id, s"count=$n", expected, instancePath(col)) })
@@ -158,7 +158,7 @@ final case class UniqueCheck(id: String, col: String, expected: String)
   private[graft] def duplicates(df: DataFrame,
       candidates: Set[Long]): Seq[(String, Long)] =
     if (candidates.isEmpty) Nil
-    else df.where(Summary.inSet(keyHash, candidates.toSet[Any]))
+    else df.where(Evaluation.inSet(keyHash, candidates.toSet[Any]))
       .groupBy(F.col(col).cast("string").as("_k"))
       .agg(F.count(F.lit(1)).as("_cnt"))
       .where(F.col("_cnt") > 1)
@@ -186,7 +186,7 @@ final case class RefIntegrityCheck(
       dims: Map[String, DataFrame]): Option[SummaryColumn] =
     Some(SummaryColumn.Counted(dangling(dims)))
 
-  private[graft] def finish(s: Summary, i: Int): Finished =
+  private[graft] def finish(s: Evaluation, i: Int): Finished =
     new Finished(s.counts(i), Nil)
 
   /** The fact key as reported (`"null"` for a NULL key) on a dangling
@@ -204,7 +204,7 @@ final case class RefIntegrityCheck(
       else keyRows.distinct())
       .collect().map(r => UTF8String.fromString(r.getString(0)): Any).toSet
     val fk = F.col(col).cast("string")
-    F.when(fk.isNull, F.lit("null")).when(!Summary.inSet(fk, keys), fk)
+    F.when(fk.isNull, F.lit("null")).when(!Evaluation.inSet(fk, keys), fk)
   }
 
   private[graft] override def rowViolation(value: Column): Option[Column] =
@@ -235,17 +235,17 @@ sealed trait DriftBase extends DatasetCheck {
   def support: Long
 
   /** Counts per partition and bucket, collected: check `i` of `s`. */
-  protected def histogram(s: Summary, i: Int): Seq[(Seq[Any], Array[Long])]
+  protected def histogram(s: Evaluation, i: Int): Seq[(Seq[Any], Array[Long])]
 
   /** The per-partition divergence values `(partitionCols..., metric)` —
     * the inspectable face of the check (all partitions above the
     * support floor), as a local frame. */
   final def metrics(df: DataFrame, partitionCols: Seq[String]): DataFrame = {
-    val s = Summary.alone(this, df, "doc_id", partitionCols, Map.empty)
+    val s = Evaluation.alone(this, df, "doc_id", partitionCols, Map.empty)
     metricsFrame(s, DriftMath.divergence(histogram(s, 0), metric, support))
   }
 
-  private[graft] def finish(s: Summary, i: Int): Finished = {
+  private[graft] def finish(s: Evaluation, i: Int): Finished = {
     lazy val metrics = DriftMath.divergence(histogram(s, i), metric, support)
     new Finished(
       metrics.collect { case (k, m) if m > threshold => k -> 1L }.toMap,
@@ -253,7 +253,7 @@ sealed trait DriftBase extends DatasetCheck {
   }
 
   /** Divergence values as the local frame `(partitionCols..., metric)`. */
-  private[graft] def metricsFrame(s: Summary,
+  private[graft] def metricsFrame(s: Evaluation,
       metrics: Seq[(Seq[Any], Double)]): DataFrame =
     DatasetCheck.local(s.whole.sparkSession,
       metrics.map { case (k, m) => Row.fromSeq(k :+ m) },
@@ -263,7 +263,7 @@ sealed trait DriftBase extends DatasetCheck {
     * `threshold`: `doc_id` is the partition's key, `p=value/...`, a NULL
     * value written as the directory name it is read back from. Rendered
     * by Catalyst over a local frame, so collecting them runs no job. */
-  private[graft] def flaggedRows(s: Summary,
+  private[graft] def flaggedRows(s: Evaluation,
       metrics: Seq[(Seq[Any], Double)]): Seq[Row] =
     metricsFrame(s, metrics.filter(_._2 > threshold)).select(
       F.concat_ws("/", s.partitionCols.map(p => F.concat(F.lit(p + "="),
@@ -311,7 +311,7 @@ final case class DriftCheck(
       F.greatest(F.lit(0), F.floor((F.col(col).cast("double") - lo) / width))))
   }
 
-  protected def histogram(s: Summary, i: Int): Seq[(Seq[Any], Array[Long])] =
+  protected def histogram(s: Evaluation, i: Int): Seq[(Seq[Any], Array[Long])] =
     s.histogram(i, buckets)
 }
 
@@ -337,7 +337,7 @@ final case class ArrayDriftCheck(
       dims: Map[String, DataFrame]): Option[SummaryColumn] = None
 
   /** Per-partition element counts per bucket over `s.whole`. */
-  protected def histogram(s: Summary, i: Int): Seq[(Seq[Any], Array[Long])] = {
+  protected def histogram(s: Evaluation, i: Int): Seq[(Seq[Any], Array[Long])] = {
     needsPartitions(s.partitionCols)
     val pcols = s.partitionCols.map(F.col)
     // per-row bucket counts in ONE codegen pass (no per-element rows —

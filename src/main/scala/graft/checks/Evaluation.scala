@@ -3,9 +3,9 @@ package graft.checks
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.catalyst.expressions.InSet
-import org.apache.spark.sql.types.StructField
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** How a dataset check's per-row column feeds the [[Summary]] aggregate. */
+/** How a dataset check's per-row column feeds the summary aggregate. */
 private[graft] sealed trait SummaryColumn { def value: Column }
 
 private[graft] object SummaryColumn {
@@ -30,27 +30,40 @@ private[graft] final class Finished(
 }
 
 /**
- * The ONE summary aggregate a suite's dataset checks finish from.
+ * ONE evaluation of a suite — the single source of both of the
+ * reference's views (`ValidationResult {valid, errors}`,
+ * `ValidationResult.java:13-26`): per-partition [[verdicts]] and
+ * [[violations]]. The validator, both resumable runners and the
+ * streaming path all build one; any engine (Catalyst, the doc engine)
+ * can supply the per-row columns.
  *
- *  - `rows`: the per-row frame `(partitionCols..., _doc_id, rowCols...,
- *    _s<i>...)`. `rowCols` are the caller's and hold at least `_ok`, the
- *    row-local verdict; `_s<i>` is check i's [[SummaryColumn]].
+ *  - `rows`: the narrow per-row frame `(partitionCols..., _doc_id,
+ *    rowCols..., _s<i>...)`. `rowCols` are the engine's and hold at
+ *    least `_ok`, the row-local verdict, and usually `_viols`: NULL on
+ *    passing rows, otherwise an array of per-constraint violation
+ *    structs, NULL for the constraints that held. `_s<i>` is dataset
+ *    check i's [[SummaryColumn]].
  *  - `whole`: the frame the whole-table checks read. When it is wider
  *    than `df` (a partial run), their columns are projected from it
  *    instead, so row-local work never re-scans the whole table.
  *
- * Grouping sets: `(partitionCols..., first bucket)` — rows, failing
- * rows and each counted column's non-NULL rows per partition, plus that
- * histogram — one `(partitionCols..., bucket)` per further bucketed
- * column, and one `(hash)` per hashed column, of which only values seen
- * more than once come back. The result is collected once and each check
- * finishes from it on the driver ([[DatasetCheck.finish]]).
+ * ONE summary [[aggregate]] over grouping sets: `(partitionCols...,
+ * first bucket)` — rows, failing rows and each counted column's non-NULL
+ * rows per partition, plus that histogram — one `(partitionCols...,
+ * bucket)` per further bucketed column, and one `(hash)` per hashed
+ * column, of which only values seen more than once come back. Every
+ * verdict frame is a projection of it. Without dataset checks the
+ * verdicts stay a lazy plan over it (so they work on streams); with
+ * them it is collected once, each check finishes on the driver
+ * ([[DatasetCheck.finish]]), and the verdicts are a local frame.
  *
  * Nothing runs until a result is asked for; in particular `rows` is
  * built on first use, because referential integrity reads its dimension
- * keys to build its column.
+ * keys to build its column. Row-local and referential-integrity
+ * violation rows stay lazy plans over `rows`, so a caller that persists
+ * `rows` evaluates every row once however many outputs it consumes.
  */
-private[graft] final class Summary(
+private[graft] final class Evaluation(
     df: DataFrame,
     globalDf: Option[DataFrame],
     val checks: Seq[DatasetCheck],
@@ -58,8 +71,14 @@ private[graft] final class Summary(
     idCol: String,
     dims: Map[String, DataFrame],
     rowCols: Seq[Column]) {
-  import Summary.column
+  import Evaluation.column
   import SummaryColumn._
+
+  /** An evaluation without dataset checks over a ready per-row frame
+    * `(partitionCols..., _doc_id, _ok, _viols)`. */
+  def this(rows: DataFrame, partitionCols: Seq[String]) =
+    this(rows, None, Nil, partitionCols, "_doc_id", Map.empty,
+      Seq(F.col("_ok"), F.col("_viols")))
 
   val whole: DataFrame = globalDf.getOrElse(df)
   val partitionFields: Seq[StructField] = partitionCols.map(df.schema(_))
@@ -136,12 +155,6 @@ private[graft] final class Summary(
 
   private def key(r: Row): Seq[Any] = partitionCols.map(r.getAs[Any])
 
-  /** Rows and failing rows of `rows`' scope per partition key. */
-  def partitionRows: Map[Seq[Any], (Long, Long)] =
-    rowsOf(baseSet).groupMapReduce(key)(r =>
-      (r.getAs[Long]("_n"), r.getAs[Long]("_bad")))((a, b) =>
-      (a._1 + b._1, a._2 + b._2))
-
   /** Check i's counted column: its non-NULL rows per partition key. */
   def counts(i: Int): Map[Seq[Any], Long] =
     rowsOf(baseSet).groupMapReduce(key)(_.getAs[Long](column(i)))(_ + _)
@@ -164,6 +177,60 @@ private[graft] final class Summary(
   /** Every check's result, in `checks` order. */
   lazy val finished: IndexedSeq[Finished] =
     checks.indices.map(i => checks(i).finish(this, i))
+
+  /** Per-partition verdicts: `n_rows`, `n_bad_rows`, `rows_ok`, the
+    * dataset-check counts and `valid`.
+    *
+    * Partition-attributable check violations count against their tagged
+    * partition; table-scope ones (uniqueness) count globally and apply
+    * to every row. A partition is `valid` iff its rows pass, it has no
+    * attributable violations, and no table-scope check failed anywhere
+    * — the per-partition pass/fail the north rule asks for, without
+    * pretending cross-partition facts are local. Only partitions with
+    * rows in scope get a verdict row; unpartitioned input always gets
+    * one. */
+  lazy val verdicts: DataFrame =
+    if (checks.isEmpty) verdictsOf(aggregate.select(pcols ++ Seq(F.col("_n"),
+      F.col("_bad"), F.lit(0L).as("_np"), F.lit(0L).as("_ng")): _*))
+    else verdictsOf(
+      DatasetCheck.local(whole.sparkSession, totals, totalsSchema))
+
+  /** `(partitionCols..., _n, _bad, _np, _ng)`: rows, failing rows, and
+    * attributable and table-scope check violations per partition. */
+  private def totalsSchema: StructType = StructType(partitionFields ++
+    Seq("_n", "_bad", "_np", "_ng").map(StructField(_, LongType, false)))
+
+  /** The totals of a checked evaluation, from the collected aggregate and
+    * the checks' counts. */
+  private def totals: Seq[Row] = {
+    val perPart = rowsOf(baseSet).groupMapReduce(key)(r =>
+      (r.getAs[Long]("_n"), r.getAs[Long]("_bad")))((a, b) =>
+      (a._1 + b._1, a._2 + b._2))
+    val parts =
+      if (partitionCols.isEmpty) Map(Nil -> perPart.getOrElse(Nil, (0L, 0L)))
+      else perPart.filter(_._2._1 > 0)
+    val (global, attributable) = checks.indices
+      .partition(i => checks(i).tableScope || partitionCols.isEmpty)
+    val counts = finished.map(_.counts)
+    val nGlobal = global.map(counts(_).values.sum).sum
+    parts.toSeq.map { case (k, (n, bad)) =>
+      Row.fromSeq(k ++ Seq(n, bad,
+        attributable.map(counts(_).getOrElse(k, 0L)).sum, nGlobal))
+    }
+  }
+
+  /** The verdict columns over per-partition totals: ONE formula for
+    * `rows_ok` and `valid`, lazy or local alike. `n_bad_rows` is NULL for
+    * an unpartitioned input with no rows. */
+  private def verdictsOf(totals: DataFrame): DataFrame = {
+    val (n, bad, np, ng) =
+      (F.col("_n"), F.col("_bad"), F.col("_np"), F.col("_ng"))
+    val rowsOk = bad === 0L
+    totals.select(pcols ++ Seq(n.as("n_rows"), F.when(n > 0L, bad)
+      .as("n_bad_rows"), rowsOk.as("rows_ok"), np.as("n_partition_violations"),
+      ng.as("n_global_violations"),
+      (rowsOk && np === 0L && ng === 0L).as("valid")): _*)
+  }
 
   /** The violation rows of every source, union'd. The per-row ones — the
     * engine's `_viols` when `rows` has it, plus each check's
@@ -201,16 +268,25 @@ private[graft] final class Summary(
     exploded.fold(local)(e =>
       if (driverRows.isEmpty) e else e.unionAll(local.coalesce(1)))
   }
+
+  /** Empty frames with the verdict and violation schemas, for a run with
+    * nothing to evaluate: nothing runs, and no dimension is read. */
+  def empty: (DataFrame, DataFrame) = {
+    val spark = whole.sparkSession
+    (verdictsOf(DatasetCheck.local(spark, Nil, totalsSchema)),
+      if (checks.isEmpty) violations.limit(0)
+      else DatasetCheck.local(spark, Nil, DatasetCheck.violationSchema))
+  }
 }
 
-private[graft] object Summary {
+private[graft] object Evaluation {
   /** Dataset check i's column in the per-row frame. */
   def column(i: Int): String = s"_s$i"
 
   /** `check` alone over `df`: no row-local checks, every row passes. */
   def alone(check: DatasetCheck, df: DataFrame, idCol: String,
-      partitionCols: Seq[String], dims: Map[String, DataFrame]): Summary =
-    new Summary(df, None, Seq(check), partitionCols, idCol, dims,
+      partitionCols: Seq[String], dims: Map[String, DataFrame]): Evaluation =
+    new Evaluation(df, None, Seq(check), partitionCols, idCol, dims,
       Seq(F.lit(true).as("_ok")))
 
   /** `value IN values` as ONE `InSet` over values already on the driver,

@@ -478,6 +478,24 @@ object ConstraintCompiler {
       else col.drop(2).split('.').foldLeft(base)(_.getField(_))
     } else F.col(col)
 
+  /** The element check [[graft.functions.ArrayFirstOutside]] serves:
+    * `Bounds` on the element with BOTH bounds whole, inclusive and
+    * Long-representable. Inclusive only: a ±1 exclusive adjustment would
+    * be wrong for fractional element types, which are not known until
+    * analysis. Both bounds: a MinValue/MaxValue sentinel for a one-sided
+    * bound is a REAL bound to the expression (double elements beyond
+    * ±9.2e18 would falsely fail), and BigDecimal.toLong of an
+    * out-of-range bound truncates to garbage — those shapes take the
+    * `forall` path instead. */
+  private object WholeBounds {
+    def unapply(elem: Constraint): Option[(Long, Long)] = elem match {
+      case Bounds(_, "$", Some(mn), Some(mx), false, false)
+          if Seq(mn, mx).forall(b => b.isWhole && b.isValidLong) =>
+        Some((mn.toLong, mx.toLong))
+      case _ => None
+    }
+  }
+
   /** Pass-on-null wrapper: JSON Schema applicability semantics. */
   private def nullPasses(c: Column, raw: Column): Column =
     c.isNull || F.coalesce(raw, F.lit(false))
@@ -568,25 +586,13 @@ object ConstraintCompiler {
       nullPasses(v, F.size(F.array_distinct(v)) === F.size(v))
 
     // Fast path for the hottest constraint shape (every token in
-    // [lo, hi]): a custom codegen Expression with a primitive early-exit
-    // loop — Spark's `forall` evaluates its lambda interpreted
-    // (ArrayForAll is CodegenFallback), which costs ~3× on 10^9-token
-    // scans. Whole-number bounds only (fractional bounds fall through).
-    // Whole-number INCLUSIVE bounds only: a ±1 exclusive adjustment
-    // would be wrong for fractional element types, which we can't see
-    // until analysis. Everything else falls through to `forall`.
-    case EachElement(_, col, Bounds(_, "$", mn, mx, false, false))
-        if mn.isDefined && mx.isDefined &&
-          Seq(mn.get, mx.get).forall(b => b.isWhole && b.isValidLong) =>
-      // BOTH bounds present and Long-representable: a MinValue/MaxValue
-      // sentinel for a one-sided bound is a REAL bound to the
-      // expression (double elements beyond ±9.2e18 would falsely
-      // fail), and BigDecimal.toLong of an out-of-range whole bound
-      // silently truncates to garbage — those shapes take the forall
-      // path below instead.
+    // [lo, hi], see [[WholeBounds]]): a custom codegen Expression with a
+    // primitive early-exit loop — Spark's `forall` evaluates its lambda
+    // interpreted (ArrayForAll is CodegenFallback), which costs ~3× on
+    // 10^9-token scans. Everything else falls through to `forall`.
+    case EachElement(_, col, WholeBounds(lo, hi)) =>
       val v = res(col, scope)
-      nullPasses(v,
-        graft.functions.ArrayAllBetween(v, mn.get.toLong, mx.get.toLong))
+      nullPasses(v, graft.functions.ArrayFirstOutside(v, lo, hi) === -1)
 
     case EachElement(_, col, elem) =>
       val v = res(col, scope)
@@ -831,6 +837,12 @@ object ConstraintCompiler {
   private[compile] def instancePathOf(c: Constraint): Column = {
     def slash(col: String): String = "/" + col.replace(".", "/")
     c match {
+      // the fast shape's index: `transform` is CodegenFallback and would
+      // take the whole per-row projection out of whole-stage codegen
+      case EachElement(_, col, WholeBounds(lo, hi)) if col != "$" =>
+        val pos = graft.functions.ArrayFirstOutside(F.col(col), lo, hi)
+        F.when(pos >= 0, F.concat(F.lit(slash(col) + "/"), pos.cast("string")))
+          .otherwise(F.lit(slash(col)))
       case EachElement(_, col, elem) if col != "$" =>
         val v = F.col(col)
         val pos = F.coalesce(F.array_position(

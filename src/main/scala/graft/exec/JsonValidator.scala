@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types.StructType
 
+import graft.checks.Evaluation
 import graft.compile.ConstraintCompiler
 import graft.dsl.ConstraintSuite
 import graft.exec.DocValidator.CompiledDocSuite

@@ -7,20 +7,25 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /**
- * `array_all_between(arr, lo, hi)` — true iff every non-null element of
- * an integral array lies in [lo, hi]. The hot predicate of token-range
- * validation (`EachElement(tokens, Bounds(...))`).
+ * `array_first_outside(arr, lo, hi)` — the 0-based index of the first
+ * non-null element of a numeric array outside [lo, hi], or -1 when every
+ * non-null element lies in it; NULL for a NULL array. The hot shape of
+ * token-range validation (`EachElement(tokens, Bounds(...))`): the
+ * predicate tests the index against -1, and the violation's
+ * `instance_path` renders it.
  *
  * Why a custom Expression (SURVEY.md preference (b)): Spark's
- * higher-order functions (`forall`) evaluate their lambda INTERPRETED —
- * `ArrayForAll` is CodegenFallback — so the per-token check pays a
- * megamorphic eval() call per element. This expression generates a tight
- * primitive loop with early exit inside whole-stage codegen: no lambda
- * dispatch, no boxing, and the enclosing conjunction keeps
+ * higher-order functions (`forall`, `transform`) evaluate their lambda
+ * INTERPRETED — they are CodegenFallback — so the per-token check pays a
+ * megamorphic eval() call per element, and a projection holding one
+ * drops out of whole-stage codegen altogether. This expression generates
+ * a tight primitive loop with early exit inside whole-stage codegen: no
+ * lambda dispatch, no boxing, and the enclosing conjunction keeps
  * short-circuiting. Null elements pass (JSON Schema applicability
- * semantics — presence is `required`'s job).
+ * semantics — presence is `required`'s job); NaN lies outside every
+ * range.
  */
-case class ArrayAllBetween(child: Expression, lo: Long, hi: Long)
+case class ArrayFirstOutside(child: Expression, lo: Long, hi: Long)
     extends UnaryExpression {
 
   override def checkInputDataTypes()
@@ -31,10 +36,10 @@ case class ArrayAllBetween(child: Expression, lo: Long, hi: Long)
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"array_all_between requires array<numeric>, got $other")
+          s"array_first_outside requires array<numeric>, got $other")
     }
 
-  override def dataType: DataType = BooleanType
+  override def dataType: DataType = IntegerType
 
   private def elementType: DataType =
     child.dataType.asInstanceOf[ArrayType].elementType
@@ -62,29 +67,28 @@ case class ArrayAllBetween(child: Expression, lo: Long, hi: Long)
             case ShortType   => arr.getShort(i).toLong
             case _           => arr.getByte(i).toLong
           }
-          if (v < lo || v > hi) return false
+          if (v < lo || v > hi) return i
         } else {
           val v: Double =
             if (et == DoubleType) arr.getDouble(i)
             else arr.getFloat(i).toDouble
-          // NaN is not within ANY range (v<lo || v>hi is false for
-          // NaN); the forall fallback also fails NaN, keep parity
-          if (v.isNaN || v < lo || v > hi) return false
+          // NaN is not within ANY range (v<lo || v>hi is false for NaN)
+          if (v.isNaN || v < lo || v > hi) return i
         }
       }
       i += 1
     }
-    true
+    -1
   }
 
   override protected def doGenCode(
       ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, arr => {
       // Every local via ctx.freshName: this body can be emitted more than
-      // once in a single generated function (e.g. the same predicate under
-      // two aggregate expressions) and fixed names make Janino reject the
-      // whole stage ("Redefinition of local variable"), silently dropping
-      // to interpreted execution.
+      // once in a single generated function (e.g. the predicate and the
+      // instance path of one constraint) and fixed names make Janino
+      // reject the whole stage ("Redefinition of local variable"),
+      // silently dropping to interpreted execution.
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val v = ctx.freshName("v")
@@ -101,19 +105,15 @@ case class ArrayAllBetween(child: Expression, lo: Long, hi: Long)
         else (s"${lo}.0d", s"${hi}.0d")
       val nullGuard =
         if (elementNullable) s"if ($arr.isNullAt($i)) continue;" else ""
-      // NaN fails the range check (plain comparisons are false for NaN)
-      val nanGuard =
-        if (jt == "double")
-          s"if (Double.isNaN($v)) { ${ev.value} = false; break; }"
-        else ""
+      // NaN is outside (plain comparisons are false for NaN)
+      val nanTest = if (jt == "double") s"Double.isNaN($v) || " else ""
       s"""
-         |${ev.value} = true;
+         |${ev.value} = -1;
          |int $n = $arr.numElements();
          |for (int $i = 0; $i < $n; $i++) {
          |  $nullGuard
          |  $jt $v = $get;
-         |  $nanGuard
-         |  if ($v < $loLit || $v > $hiLit) { ${ev.value} = false; break; }
+         |  if ($nanTest$v < $loLit || $v > $hiLit) { ${ev.value} = $i; break; }
          |}
        """.stripMargin
     })
@@ -122,10 +122,10 @@ case class ArrayAllBetween(child: Expression, lo: Long, hi: Long)
     copy(child = c)
 }
 
-object ArrayAllBetween {
+object ArrayFirstOutside {
   /** Column-facing constructor. */
   def apply(c: Column, lo: Long, hi: Long): Column =
     org.apache.spark.sql.GraftSqlBridge.column(
-      ArrayAllBetween(org.apache.spark.sql.GraftSqlBridge.expression(c),
+      ArrayFirstOutside(org.apache.spark.sql.GraftSqlBridge.expression(c),
         lo, hi))
 }

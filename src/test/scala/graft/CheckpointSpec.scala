@@ -247,9 +247,8 @@ class CheckpointSpec extends SparkSpec {
     assert(scans.isEmpty, scans.map(_.relation.location.rootPaths))
 
     // same answers as the one-shot detail path over the same scope
-    val direct = graft.exec.Validator.validateWithDetails(
-      table.scan(r.processed), full, table.partitionCols, dims = dims,
-      globalDf = Some(table.scanAll()))
+    val direct = graft.exec.Validator.evaluate(table.scan(r.processed), full,
+      table.partitionCols, "doc_id", dims, Some(table.scanAll()))
     val entries = cp.load().collect().map(e => e.getAs[String]("partition") ->
       (e.getAs[Long]("n_bad_rows"), e.getAs[Boolean]("valid"))).toMap
     val want = direct.verdicts.collect().map(v =>
@@ -586,6 +585,38 @@ class CheckpointSpec extends SparkSpec {
     val r3 = PartitionedRunner.run(table, suite, cp, "r3")
     assert(r3.processed == pending)
     assert(cp.pending(table, suite.constraintHash).isEmpty)
+  }
+
+  test("a run returns the verdicts it checkpointed, and reading them runs no job") {
+    import org.apache.spark.sql.{functions => F}
+    val base = Files.createTempDirectory("graft-cp-returned").toString
+    val table = mkTable(s"$base/data")
+    SequenceGen.generate(spark, 4000L, nSources = 4, numPartitions = 4)
+      .toDF().select(F.col("source"), F.col("doc_id"), F.to_json(F.struct(
+        F.col("doc_id"), F.col("n_tok"))).as("js"))
+      .write.partitionBy("source").parquet(s"$base/json")
+    val jsonTable = new ParquetPartitionedTable(spark, s"$base/json", "source")
+    val jsonSuite = ConstraintSuite("js-ret", Seq(
+      Bounds("n_max", "n_tok", None, Some(BigDecimal(1000)))))
+    def returnsItsEntries(r: graft.checkpoint.RunResult,
+        cp: CheckpointStore): Unit = {
+      val (rows, seen) = listened(r.verdicts.collect())
+      assert(seen.jobs == 0, seen)
+      val entries = cp.load().collect().toSeq
+        .filter(_.getAs[String]("run_id") == r.runId)
+        .map(e => (e.getAs[String]("partition"), e.getAs[Boolean]("valid"),
+          e.getAs[Long]("n_rows"), e.getAs[Long]("n_bad_rows")))
+      assert(entries.size == r.processed.size && entries.nonEmpty)
+      assert(rows.toSeq.map(v => (s"source=${v.getAs[String]("source")}",
+        v.getAs[Boolean]("valid"), v.getAs[Long]("n_rows"),
+        v.getAs[Long]("n_bad_rows"))).sorted == entries.sorted)
+    }
+    val rowCp = new CheckpointStore(spark, s"$base/cp-row")
+    returnsItsEntries(PartitionedRunner.run(table, suite, rowCp, "row",
+      violationsOut = Some(s"$base/viol-row"), maxPartitions = 3), rowCp)
+    val jsonCp = new CheckpointStore(spark, s"$base/cp-json")
+    returnsItsEntries(PartitionedRunner.runJson(jsonTable, jsonSuite, jsonCp,
+      "json", violationsOut = Some(s"$base/viol-json")), jsonCp)
   }
 }
 

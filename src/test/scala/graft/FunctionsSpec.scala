@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{functions => F}
 
-import graft.functions.ArrayAllBetween
+import graft.compile.ConstraintCompiler
+import graft.functions.ArrayFirstOutside
 
 /** Custom codegen expression: parity with forall semantics, null
   * handling, both codegen and interpreted paths, and that the compiler
@@ -18,15 +19,19 @@ class FunctionsSpec extends SparkSpec {
     ("empty", Seq.empty[Int]))
     .toDF("id", "arr")
 
+  /** The first out-of-range index of each row of [[df]]. */
+  private val firstOutside = Map("in" -> -1, "edge" -> -1, "below" -> 0,
+    "above" -> 1, "empty" -> -1)
+
   test("matches forall semantics on int arrays (codegen path)") {
     val got = df.select($"id",
-      ArrayAllBetween($"arr", 0L, 50256L).as("fast"),
+      ArrayFirstOutside($"arr", 0L, 50256L).as("fast"),
       F.forall($"arr", x => x >= 0 && x <= 50256).as("ref"))
       .collect()
     got.foreach { r =>
-      assert(r.getBoolean(1) == r.getBoolean(2), s"id=${r.getString(0)}")
+      assert((r.getInt(1) == -1) == r.getBoolean(2), s"id=${r.getString(0)}")
     }
-    assert(got.count(_.getBoolean(1)) == 3) // in, edge, empty
+    assert(got.map(r => r.getString(0) -> r.getInt(1)).toMap == firstOutside)
   }
 
   test("interpreted path agrees (eval without codegen)") {
@@ -34,10 +39,9 @@ class FunctionsSpec extends SparkSpec {
     // with codegen disabled
     withSQLConf("spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
-      val got = df.select($"id", ArrayAllBetween($"arr", 0L, 50256L))
-        .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
-      assert(got("in") && got("edge") && got("empty"))
-      assert(!got("below") && !got("above"))
+      val got = df.select($"id", ArrayFirstOutside($"arr", 0L, 50256L))
+        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+      assert(got == firstOutside)
     }
   }
 
@@ -54,27 +58,27 @@ class FunctionsSpec extends SparkSpec {
   test("null array is null (wrapped to pass by the compiler)") {
     val withNull = Seq(("a", Seq(1)), ("b", null)).toDF("id", "arr")
     val got = withNull.select($"id",
-      ArrayAllBetween($"arr", 0L, 10L).as("v")).collect()
+      ArrayFirstOutside($"arr", 0L, 10L).as("v")).collect()
     assert(got.find(_.getString(0) == "b").get.isNullAt(1))
   }
 
   test("null elements pass (applicability semantics)") {
-    val withNullElems = Seq(("a", Seq[Integer](1, null, 3)))
-      .toDF("id", "arr")
-    val got = withNullElems
-      .select(ArrayAllBetween($"arr", 0L, 10L)).head().getBoolean(0)
-    assert(got)
+    val withNullElems = Seq(("a", Seq[Integer](1, null, 3)),
+      ("b", Seq[Integer](null, 11))).toDF("id", "arr")
+    val got = withNullElems.select($"id", ArrayFirstOutside($"arr", 0L, 10L))
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    assert(got == Map("a" -> -1, "b" -> 1))
   }
 
   test("long and double arrays supported") {
     val longs = Seq(Tuple1(Seq(1L, 99999999999L))).toDF("arr")
-    assert(!longs.select(ArrayAllBetween($"arr", 0L, 100L))
-      .head().getBoolean(0))
+    assert(longs.select(ArrayFirstOutside($"arr", 0L, 100L))
+      .head().getInt(0) == 1)
     val doubles = Seq(Tuple1(Seq(0.5, 1.5))).toDF("arr")
-    assert(doubles.select(ArrayAllBetween($"arr", 0L, 2L))
-      .head().getBoolean(0))
-    assert(!doubles.select(ArrayAllBetween($"arr", 1L, 2L))
-      .head().getBoolean(0))
+    assert(doubles.select(ArrayFirstOutside($"arr", 0L, 2L))
+      .head().getInt(0) == -1)
+    assert(doubles.select(ArrayFirstOutside($"arr", 1L, 2L))
+      .head().getInt(0) == 0)
   }
 
   test("duplicate emission in one codegen function compiles (freshName)") {
@@ -97,8 +101,8 @@ class FunctionsSpec extends SparkSpec {
       def db(lo: Int, hi: Int) = graft.functions.DecimalBounds($"num",
         Some(BigDecimal(lo)), Some(BigDecimal(hi)), false, true)
       val twice = docs.select(
-        ArrayAllBetween($"arr", 0L, 10L).as("p1"),
-        ArrayAllBetween($"arr", 1L, 9L).as("p2"),
+        ArrayFirstOutside($"arr", 0L, 10L).as("p1"),
+        ArrayFirstOutside($"arr", 1L, 9L).as("p2"),
         graft.functions.BucketCounts($"arr", 4).as("b1"),
         graft.functions.BucketCounts($"arr", 8).as("b2"),
         db(0, 1).as("d1"),
@@ -203,8 +207,8 @@ class FunctionsSpec extends SparkSpec {
         Bounds("b", "$", Some(0), Some(50256))))))
     val plan = df.select(suite.rowPredicate.as("ok"))
       .queryExecution.analyzed.toString
-    assert(plan.contains("arrayallbetween") ||
-      plan.contains("ArrayAllBetween"), plan)
+    assert(plan.contains("arrayfirstoutside") ||
+      plan.contains("ArrayFirstOutside"), plan)
     // and fractional bounds fall back to forall
     val frac = graft.compile.ConstraintCompiler.compile(
       ConstraintSuite("f2", Seq(EachElement("e", "arr",
@@ -212,5 +216,78 @@ class FunctionsSpec extends SparkSpec {
     val plan2 = df.select(frac.rowPredicate.as("ok"))
       .queryExecution.analyzed.toString
     assert(plan2.contains("forall"), plan2)
+  }
+
+  test("token-range index: equals the transform index on random arrays") {
+    // the lambda form the fast shape's instance path replaced: the first
+    // element whose bound check is false, NULL elements passing
+    import graft.dsl.Constraint._
+    import graft.dsl.ConstraintSuite
+    import graft.functions.DecimalBounds
+    def transformIndex(v: org.apache.spark.sql.Column, lo: Long, hi: Long) =
+      F.coalesce(F.array_position(F.transform(v, x => F.coalesce(
+        x.isNull || F.coalesce(DecimalBounds(x, Some(BigDecimal(lo)),
+          Some(BigDecimal(hi)), false, false), F.lit(false)), F.lit(true))),
+        F.lit(false)), F.lit(0L)) - 1
+    val rnd = new scala.util.Random(11)
+    val base = java.nio.file.Files.createTempDirectory("graft-first").toString
+    for (t <- Seq("int", "long", "double"); round <- 0 until 4) {
+      val lo = rnd.nextInt(11) - 5L
+      val hi = lo + rnd.nextInt(11)
+      def elem: String =
+        if (rnd.nextInt(10) == 0) "NULL"
+        else if (t == "double" && rnd.nextInt(10) == 0) "double('NaN')"
+        else {
+          val v = lo - 3 + rnd.nextInt((hi - lo + 7).toInt)
+          if (t == "double") s"${v + Seq(0.0, 0.5, -0.5)(rnd.nextInt(3))}D"
+          else if (t == "long") s"${v}L" else v.toString
+        }
+      val arrays = (0 until 300).map { i =>
+        if (i % 50 == 0) s"CAST(NULL AS array<$t>)"
+        else s"CAST(array(${Seq.fill(rnd.nextInt(9))(elem).mkString(", ")})" +
+          s" AS array<$t>)"
+      }
+      val dir = s"$base/$t-$round"
+      spark.sql(arrays.zipWithIndex.map { case (a, i) =>
+        s"SELECT $i AS id, $a AS arr" }.mkString(" UNION ALL "))
+        .write.parquet(dir)
+      val path = ConstraintCompiler.compile(ConstraintSuite("r", Seq(
+        EachElement("t", "arr", Bounds("b", "$", Some(lo), Some(hi))))))
+        .rowChecks.head.instancePath
+      val old = transformIndex($"arr", lo, hi)
+      val oldPath = F.when(old >= 0, F.concat(F.lit("/arr/"),
+        old.cast("string"))).otherwise(F.lit("/arr"))
+      // codegen'd over the parquet scan, interpreted over the local rows
+      val scanned = spark.read.parquet(dir)
+      val local = spark.createDataFrame(
+        java.util.Arrays.asList(scanned.collect(): _*), scanned.schema)
+      for (in <- Seq(scanned, local)) {
+        val got = in.select(F.coalesce(ArrayFirstOutside($"arr", lo, hi),
+          F.lit(-1)).cast("long"), old, path, oldPath).collect()
+        got.foreach(r => assert(r.getLong(0) == r.getLong(1) &&
+          r.getString(2) == r.getString(3), s"$t [$lo, $hi]: $r"))
+        assert(got.exists(_.getLong(0) >= 0) && got.exists(_.getLong(0) < 0))
+      }
+    }
+  }
+
+  test("the bench suite's per-row frame is one codegen stage over the scan") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec,
+      WholeStageCodegenExec}
+    val dir = java.nio.file.Files.createTempDirectory("graft-wscg")
+      .toString + "/rows"
+    graft.gen.SequenceGen.generate(spark, 2000L, nSources = 4,
+      plantViolations = true, numPartitions = 2)
+      .write.partitionBy("source").parquet(dir)
+    val rows = graft.exec.Validator.evaluate(spark.read.parquet(dir),
+      ConstraintCompiler.compile(graft.Scaling.benchSuite), Seq("source"),
+      "doc_id", Map("sources" -> graft.gen.SequenceGen.sourcesDim(spark, 4)),
+      None).rows
+    assert(rows.columns.contains("_viols"))
+    val plan = rows.queryExecution.executedPlan
+    val stages = plan.collect { case w: WholeStageCodegenExec => w }
+    assert(plan.isInstanceOf[WholeStageCodegenExec] && stages.size == 1 &&
+      plan.collect { case s: FileSourceScanExec => s }.size == 1, plan)
+    assert(rows.count() == 2000L)
   }
 }

@@ -114,6 +114,36 @@ class JsonValidatorSpec extends SparkSpec {
     }.getMessage.contains("validate the JSON text with violations"))
   }
 
+  test("stored-variant column: extractions pushed into the scan, each once") {
+    // the r6 regression re-inlined the extraction chain ~11x per row;
+    // pushed into the scan, each field is read once off the binary
+    val schema = StructType(Seq(
+      StructField("doc_id", StringType),
+      StructField("n_tok", IntegerType),
+      StructField("tokens", ArrayType(IntegerType)),
+      StructField("source", StringType)))
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-varplan").toString
+    docs.select($"id", F.try_parse_json($"js").as("v"))
+      .write.mode("overwrite").parquet(dir)
+    val out = JsonValidator.violationsVariantColumn(
+      spark.read.parquet(dir), "id", "v", schema, suite)
+    val plan = out.queryExecution.executedPlan
+    val text = plan.toString.toLowerCase
+    assert(!text.contains("parse_json") && !text.contains("variant_get"), plan)
+    // a pushed extraction is a field of the scanned variant struct whose
+    // metadata names its path; the NULL-variant branch's scan reads a
+    // placeholder field only
+    val pushed = graft.tools.PlanWalk.fileScans(plan).flatMap(
+      _.requiredSchema("v").dataType.asInstanceOf[StructType].fields.map(f =>
+        f.metadata.getMetadata("__VARIANT_METADATA_KEY").getString("path") ->
+          f.dataType))
+      .filterNot(_._1.contains("__placeholder_field__"))
+    assert(pushed.sortBy(_._1) ==
+      schema.fields.toSeq.map(f => s"$$['${f.name}']" -> f.dataType)
+        .sortBy(_._1), plan)
+  }
+
   test("round-trip: to_json of a typed table validates like the table") {
     val base = Seq(
       ("a", Seq(1, 2, 3), 3, "web"),

@@ -107,7 +107,7 @@ class PropertySpec extends SparkSpec {
       val check = graft.checks.DriftCheck("d", "v", 0.0, 1.0, gr.nb,
         gr.metric, gr.threshold, "e", gr.minTotal)
       val flagged = check.flaggedRows(
-        graft.checks.Summary.alone(check, cellsDf, "doc_id", Seq("part"),
+        graft.checks.Evaluation.alone(check, cellsDf, "doc_id", Seq("part"),
           Map.empty),
         got.toSeq.map { case (p, m) => (Seq(p), m) })
         .map(r => r.getString(0).stripPrefix("part=") -> r.getString(2)).toMap

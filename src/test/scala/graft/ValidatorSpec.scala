@@ -467,7 +467,7 @@ class ValidatorSpec extends SparkSpec {
           None)
         ev.verdicts.collect()
         val scans = graft.tools.PlanWalk
-          .fileScans(ev.summary.aggregate.queryExecution.executedPlan)
+          .fileScans(ev.aggregate.queryExecution.executedPlan)
         assert(scans.size == 1, scans)
       }
     }
@@ -600,5 +600,24 @@ class ValidatorSpec extends SparkSpec {
     val ri = suite.datasetChecks.collectFirst { case r: RefIntegrityCheck => r }.get
     assert(intercept[IllegalArgumentException](
       ri.violations(df, "nope", Seq("source"), dims)).getMessage.contains("'nope'"))
+  }
+
+  test("verdicts: a check-free and a checked evaluation share one schema") {
+    // check-free verdicts stay a lazy aggregate; with a dataset check
+    // they are a local frame built on the driver. Both are projections
+    // of one summary aggregate, so they agree field for field
+    val df = Seq(("a", "p1", 1), ("b", "p1", 5), ("c", "p2", 0))
+      .toDF("doc_id", "part", "n")
+    val bound = Bounds("b", "n", Some(0), Some(3))
+    val free = ConstraintCompiler.compile(ConstraintSuite("f", Seq(bound)))
+    val checked = ConstraintCompiler.compile(ConstraintSuite("c",
+      Seq(bound, Unique("u", "doc_id"))))
+    for (in <- Seq(df, df.limit(0)); parts <- Seq(Seq("part"), Nil)) {
+      val lazyV = Validator.validate(in, free, parts)
+      val localV = Validator.validate(in, checked, parts)
+      assert(DatasetCheck.onDriver(localV))
+      assert(lazyV.schema == localV.schema)
+      assert(lazyV.collect().toSet == localV.collect().toSet, parts)
+    }
   }
 }
