@@ -11,12 +11,13 @@ import graft.exec.Validator
 import graft.sketch.TDigestQuantiles
 
 /**
- * Driver contract (see SURVEY.md §7): the 13 `v_*` queries of the
+ * Driver contract (see SURVEY.md §7): the 12 `v_*` queries of the
  * validator — row-local verdicts and violations, the dataset checks
  * (uniqueness, referential integrity, drift), column profiles, JSON
- * Schema import, raw-JSON documents, event-time windows and quantile
- * sketches — each runnable on an `sf*` test-data directory and paired
- * with equivalent DuckDB SQL in [[SparkEntry.oracleSql]].
+ * Schema import, raw-JSON documents, verdicts over a computed timestamp
+ * partition and quantile sketches — each runnable on an `sf*` test-data
+ * directory and paired with equivalent DuckDB SQL in
+ * [[SparkEntry.oracleSql]].
  *
  * The engine's own input table (`input_hint` tokenized sequences) is
  * synthesized by [[graft.gen.SequenceGen]]; these queries bind the same
@@ -90,24 +91,6 @@ object SparkEntry {
       val suite = ConstraintCompiler.compile(docSuite)
       Validator.validate(docs(s, dir), suite, Seq("source"))
         .orderBy("source")
-    }),
-    "v_suggest" -> ((s, dir) => {
-      // constraint-suite bootstrapping: the tall per-column profile
-      // SuiteSuggest folds into a suggested DSL suite; the oracle
-      // replays every statistic (incl. the enum-candidacy rule and its
-      // comma guard) per column in SQL. Sentinels stand in for
-      // type-inapplicable stats so the frame carries no NULL cells.
-      val prof = graft.compile.SuiteSuggest.profile(docs(s, dir))
-      prof.select(
-        F.col("column").as("col_name"),
-        F.col("n_rows"), F.col("null_count"),
-        F.coalesce(F.col("n_distinct"), F.lit(-1L)).as("n_distinct"),
-        F.round(F.coalesce(F.col("min_num"), F.lit(-1.0)), 6).as("min_num"),
-        F.round(F.coalesce(F.col("max_num"), F.lit(-1.0)), 6).as("max_num"),
-        F.coalesce(F.col("len_min"), F.lit(-1L)).as("len_min"),
-        F.coalesce(F.col("len_max"), F.lit(-1L)).as("len_max"),
-        F.coalesce(F.col("enum_vals"), F.lit("")).as("enum_vals"))
-        .orderBy("col_name")
     }),
     "v_stats" -> ((s, dir) => {
       val prof = ColumnStats.profile(docs(s, dir), Seq("source"))
@@ -199,8 +182,9 @@ object SparkEntry {
         .orderBy("partition")
     }),
     "v_window" -> ((s, dir) => {
-      // event-time windowed verdicts (batch face of the streaming path):
-      // the window-start becomes a verdict partition column
+      // hourly verdicts: the window start, a computed timestamp, is a
+      // verdict partition column, so the oracle checks that a timestamp
+      // partition value survives the verdicts' round-trip via the driver
       val suite = ConstraintCompiler.compile(ConstraintSuite("w", Seq(
         Bounds("value_range", "value", Some(BigDecimal(0)),
           Some(BigDecimal(400))))))
@@ -340,44 +324,6 @@ object SparkEntry {
          |  CAST(0 AS BIGINT) AS n_global_violations,
          |  bool_and($docPred) AS valid
          |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "v_suggest" -> {
-      // one UNION ALL branch per documents column, replaying the
-      // profile arithmetic exactly: null/distinct counts, numeric
-      // bounds (as rounded doubles), string-length bounds, and the
-      // enum-candidacy rule (1 <= n_distinct <= 16, no value carries
-      // the ',' list separator) with lexicographic value order
-      def branch(col: String, numeric: Boolean, string: Boolean) = {
-        val lenMin = if (string) s"CAST(MIN(LENGTH($col)) AS BIGINT)"
-          else "CAST(-1 AS BIGINT)"
-        val lenMax = if (string) s"CAST(MAX(LENGTH($col)) AS BIGINT)"
-          else "CAST(-1 AS BIGINT)"
-        val minN = if (numeric) s"ROUND(CAST(MIN($col) AS DOUBLE), 6)"
-          else "CAST(-1.0 AS DOUBLE)"
-        val maxN = if (numeric) s"ROUND(CAST(MAX($col) AS DOUBLE), 6)"
-          else "CAST(-1.0 AS DOUBLE)"
-        s"""SELECT '$col' AS col_name,
-           |  CAST(count(*) AS BIGINT) AS n_rows,
-           |  CAST(SUM(CASE WHEN $col IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-           |    AS null_count,
-           |  CAST(count(DISTINCT $col) AS BIGINT) AS n_distinct,
-           |  $minN AS min_num, $maxN AS max_num,
-           |  $lenMin AS len_min, $lenMax AS len_max,
-           |  CASE WHEN count(DISTINCT $col) BETWEEN 1 AND 16
-           |    AND MAX(CASE WHEN CAST($col AS VARCHAR) LIKE '%,%'
-           |             THEN 1 ELSE 0 END) = 0
-           |   THEN string_agg(DISTINCT CAST($col AS VARCHAR), ','
-           |                   ORDER BY CAST($col AS VARCHAR))
-           |   ELSE '' END AS enum_vals
-           |FROM documents""".stripMargin
-      }
-      Seq(branch("doc_id", numeric = true, string = false),
-        branch("text", numeric = false, string = true),
-        branch("lang", numeric = false, string = true),
-        branch("source", numeric = false, string = true),
-        branch("n_chars", numeric = true, string = false))
-        .mkString("SELECT * FROM (\n", "\nUNION ALL\n",
-          "\n) ORDER BY col_name")
-    },
     "v_stats" ->
       """SELECT source,
         |  CAST(count(*) AS BIGINT) AS n_rows,

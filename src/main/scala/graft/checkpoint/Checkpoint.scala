@@ -14,7 +14,7 @@ import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-import graft.checks.{DatasetCheck, Evaluation}
+import graft.checks.Evaluation
 import graft.compile.CompiledSuite
 import graft.exec.{JsonValidator, Validator}
 import graft.table.TableProvider
@@ -278,17 +278,16 @@ object PartitionedRunner {
 
     val persist = violationsOut.isDefined
     if (persist) eval.rows.persist(StorageLevel.DISK_ONLY)
-    val verdicts = try {
+    try {
       violationsOut.foreach { out =>
         eval.violations.write.mode(SaveMode.Append).parquet(out)
       }
-      val rows = eval.verdicts.collect().toSeq
       val snapshot = plan.snapshots.toMap
-      checkpoint.append(checkpointEntries(table.partitionCols, rows,
-        constraintHash, runId, pending.map(p => p -> snapshot(p))))
-      DatasetCheck.local(eval.rows.sparkSession, rows, eval.verdicts.schema)
+      checkpoint.append(checkpointEntries(table.partitionCols,
+        eval.verdicts.collect().toSeq, constraintHash, runId,
+        pending.map(p => p -> snapshot(p))))
     } finally if (persist) eval.rows.unpersist(blocking = false)
-    result(verdicts, eval.violations)
+    result(eval.verdicts, eval.violations)
   }
 
   /** Per-partition verdict rows as checkpoint entries, plus

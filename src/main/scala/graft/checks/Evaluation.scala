@@ -33,9 +33,8 @@ private[graft] final class Finished(
  * ONE evaluation of a suite — the single source of both of the
  * reference's views (`ValidationResult {valid, errors}`,
  * `ValidationResult.java:13-26`): per-partition [[verdicts]] and
- * [[violations]]. The validator, both resumable runners and the
- * streaming path all build one; any engine (Catalyst, the doc engine)
- * can supply the per-row columns.
+ * [[violations]]. The validator and both resumable runners build one;
+ * any engine (Catalyst, the doc engine) can supply the per-row columns.
  *
  *  - `rows`: the narrow per-row frame `(partitionCols..., _doc_id,
  *    rowCols..., _s<i>...)`. `rowCols` are the engine's and hold at
@@ -51,11 +50,10 @@ private[graft] final class Finished(
  * first bucket)` — rows, failing rows and each counted column's non-NULL
  * rows per partition, plus that histogram — one `(partitionCols...,
  * bucket)` per further bucketed column, and one `(hash)` per hashed
- * column, of which only values seen more than once come back. Every
- * verdict frame is a projection of it. Without dataset checks the
- * verdicts stay a lazy plan over it (so they work on streams); with
- * them it is collected once, each check finishes on the driver
- * ([[DatasetCheck.finish]]), and the verdicts are a local frame.
+ * column, of which only values seen more than once come back. It is
+ * collected once, each check finishes on the driver
+ * ([[DatasetCheck.finish]]), and the verdicts are a local frame built
+ * from the collected rows.
  *
  * Nothing runs until a result is asked for; in particular `rows` is
  * built on first use, because referential integrity reads its dimension
@@ -190,18 +188,14 @@ private[graft] final class Evaluation(
     * rows in scope get a verdict row; unpartitioned input always gets
     * one. */
   lazy val verdicts: DataFrame =
-    if (checks.isEmpty) verdictsOf(aggregate.select(pcols ++ Seq(F.col("_n"),
-      F.col("_bad"), F.lit(0L).as("_np"), F.lit(0L).as("_ng")): _*))
-    else verdictsOf(
-      DatasetCheck.local(whole.sparkSession, totals, totalsSchema))
+    verdictsOf(DatasetCheck.local(whole.sparkSession, totals, totalsSchema))
 
   /** `(partitionCols..., _n, _bad, _np, _ng)`: rows, failing rows, and
     * attributable and table-scope check violations per partition. */
   private def totalsSchema: StructType = StructType(partitionFields ++
     Seq("_n", "_bad", "_np", "_ng").map(StructField(_, LongType, false)))
 
-  /** The totals of a checked evaluation, from the collected aggregate and
-    * the checks' counts. */
+  /** The totals, from the collected aggregate and the checks' counts. */
   private def totals: Seq[Row] = {
     val perPart = rowsOf(baseSet).groupMapReduce(key)(r =>
       (r.getAs[Long]("_n"), r.getAs[Long]("_bad")))((a, b) =>
@@ -220,8 +214,8 @@ private[graft] final class Evaluation(
   }
 
   /** The verdict columns over per-partition totals: ONE formula for
-    * `rows_ok` and `valid`, lazy or local alike. `n_bad_rows` is NULL for
-    * an unpartitioned input with no rows. */
+    * `rows_ok` and `valid`. `n_bad_rows` is NULL for an unpartitioned
+    * input with no rows. */
   private def verdictsOf(totals: DataFrame): DataFrame = {
     val (n, bad, np, ng) =
       (F.col("_n"), F.col("_bad"), F.col("_np"), F.col("_ng"))
@@ -239,12 +233,16 @@ private[graft] final class Evaluation(
     * filter pushes down as ONE codegen gate, so on a mostly-clean table
     * the vast majority of rows short-circuit out of the scan stage
     * without constructing a struct, and the Generate runs only over the
-    * failing sliver. NULL elements drop with a plain Filter AFTER the
-    * Generate: a higher-order `filter(_viols, …)` lambda reads nicer but
-    * ArrayFilter is CodegenFallback, which drags the whole struct
-    * construction into interpreted eval() per row. The checks' driver
-    * rows join as one single-slice local frame, so writing the union runs
-    * one task per partition of `rows` plus one. */
+    * failing sliver. The generator is `explode_outer`: Spark infers a
+    * `size(array) > 0` filter from an inner `explode` and pushes it below
+    * the per-row Project, so on a frame that is not persisted every
+    * failing row would build its violation array twice. NULL elements,
+    * and the NULL `explode_outer` emits for an empty array, drop with a
+    * plain Filter AFTER the Generate: a higher-order `filter(_viols, …)`
+    * lambda reads nicer but ArrayFilter is CodegenFallback, which drags
+    * the whole struct construction into interpreted eval() per row. The
+    * checks' driver rows join as one single-slice local frame, so writing
+    * the union runs one task per partition of `rows` plus one. */
   lazy val violations: DataFrame = {
     val engine = Option.when(rows.columns.contains("_viols"))(F.col("_viols"))
     val perRow = checks.indices.flatMap(i =>
@@ -258,7 +256,7 @@ private[graft] final class Evaluation(
           F.array().cast(rows.schema("_viols").dataType)), F.array(perRow: _*)))
       rows.filter((engine.map(_ => !F.col("_ok")) ++ perRow.map(_.isNotNull))
           .reduce(_ || _))
-        .select(F.col("_doc_id").as("doc_id"), F.explode(viols).as("_v"))
+        .select(F.col("_doc_id").as("doc_id"), F.explode_outer(viols).as("_v"))
         .filter(F.col("_v").isNotNull)
         .select("doc_id", "_v.*")
     }

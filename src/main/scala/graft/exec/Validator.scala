@@ -23,8 +23,7 @@ final case class Violation(
 /** Detail-path result — the engine's `ValidationResult`
   * (`ValidationResult.java:13-26`): a per-partition verdict DataFrame plus
   * the typed violation rows, both views of ONE evaluation. Row-local and
-  * referential-integrity violation rows are lazy plans. Without dataset
-  * checks the verdicts are a lazy plan too. With them, the evaluation's
+  * referential-integrity violation rows are lazy plans. The evaluation's
   * summary aggregate (and uniqueness phase 2 when hashes repeat) has
   * already run inside the call that returned the report: the verdicts
   * are a local frame, and the uniqueness and drift violation rows are
@@ -53,10 +52,9 @@ object Validator {
 
   /** Fast boolean path: the per-partition verdicts, no violation rows.
     * The row-local checks run as one codegen'd predicate inside the scan.
-    * Without dataset checks the verdicts stay a lazy per-partition
-    * aggregate. With them, the evaluation's ONE summary aggregate runs
-    * here and is collected, the checks finish on the driver, and the
-    * returned frame is local: one scan and one shuffle, plus a phase-2
+    * The evaluation's ONE summary aggregate runs here and is collected,
+    * the checks finish on the driver, and the returned frame is local
+    * (so `df` cannot be a stream): one scan and one shuffle, plus a phase-2
     * key re-read and recount only when uniqueness found candidate
     * duplicates (and a pass of its own per token-histogram drift). */
   def validate(

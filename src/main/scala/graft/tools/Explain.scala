@@ -54,10 +54,13 @@ object Explain {
         l.contains("PartitionCount") || l.contains("FileScan"))
       .foreach(l => println(l.trim.take(240)))
 
-    println("==== fast validate path ====")
-    Validator.validate(table.scanAll(), suite, Seq("source"),
-        dims = dims)
-      .explain("formatted")
+    // the verdicts are a local frame built from the collected summary
+    // aggregate, so the aggregate's plan is the fast path's plan
+    def evaluation = Validator.evaluate(table.scanAll(), suite, Seq("source"),
+      "doc_id", dims, None)
+
+    println("==== fast validate path (the summary aggregate) ====")
+    evaluation.aggregate.explain("formatted")
 
     println("==== detail path (violations) ====")
     Validator.validateWithDetails(table.scanAll(), suite, Seq("source"),
@@ -65,17 +68,18 @@ object Explain {
       .violations.explain("formatted")
 
     println("==== runtime AQE plan (after execution): exchange reuse ====")
-    val v = Validator.validate(table.scanAll(), suite, Seq("source"),
-      dims = dims)
-    v.collect()
-    val finalPlan = v.queryExecution.executedPlan.toString
+    val ev = evaluation
+    ev.verdicts.collect()
+    val plan = ev.aggregate.queryExecution.executedPlan
+    val finalPlan = plan.toString
     val reused = finalPlan.linesIterator.count(_.contains("ReusedExchange"))
     val stages = finalPlan.linesIterator.count(_.contains("ShuffleQueryStage"))
-    val scans = finalPlan.linesIterator.count(_.contains("Scan parquet"))
+    // walk the final plan: its string also prints the initial plan, so
+    // counting scan lines there counts every scan twice
+    val scans = PlanWalk.fileScans(plan)
     println(s"ReusedExchange nodes: $reused; ShuffleQueryStages: $stages; " +
-      s"parquet scans: $scans")
-    finalPlan.linesIterator.filter(_.contains("ReadSchema"))
-      .foreach(l => println("  scan: " + l.trim.take(160)))
+      s"parquet scans: ${scans.size}")
+    scans.foreach(s => println("  scan: " + s.requiredSchema.simpleString.take(160)))
 
     spark.stop()
   }

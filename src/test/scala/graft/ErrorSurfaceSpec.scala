@@ -9,7 +9,6 @@ import graft.dsl.{Constraint => C, ConstraintJson, ConstraintSuite}
   * reflection soup, never a silent wrong answer, and data-plane
   * malformation is a violation, not an error (covered in ValidatorSpec). */
 class ErrorSurfaceSpec extends SparkSpec {
-  import spark.implicits._
   import ConstraintCompiler.CompileException
   import ConstraintJson.ConstraintParseException
 
@@ -61,16 +60,6 @@ class ErrorSurfaceSpec extends SparkSpec {
       ConstraintCompiler.compile(ConstraintSuite("s", Seq(
         C.NoArrayDrift("d", "tokens", 16, "wasserstein", 0.5))))
     }
-  }
-
-  test("streaming path rejects dataset-level checks loudly") {
-    val suite = ConstraintCompiler.compile(ConstraintSuite("s", Seq(
-      C.Unique("u", "doc_id"))))
-    val e = intercept[IllegalArgumentException] {
-      graft.streaming.StreamValidator.violations(
-        Seq(("a", 1)).toDF("doc_id", "n"), suite, "doc_id")
-    }
-    assert(e.getMessage.contains("batch path"))
   }
 
   test("bench records a per-query err for a dying query, not a time") {

@@ -121,12 +121,13 @@ class FunctionsSpec extends SparkSpec {
         ConstraintSuite("cg", Seq(
           EachElement("e1", "arr", Bounds("b1", "$", Some(0), Some(10))),
           EachElement("e2", "arr", Bounds("b2", "$", Some(1), Some(9))))))
-      val verdict = graft.exec.Validator
-        .validate(docs.withColumn("doc_id", $"id"), suite, Seq.empty)
-      assert(verdict.collect().length == 1)
-      // and the executed plan really is whole-stage-codegen'd (printed as
-      // the `*(n)` prefix on codegen'd spans)
-      val executed = verdict.queryExecution.executedPlan.toString
+      val ev = graft.exec.Validator.evaluate(docs.withColumn("doc_id", $"id"),
+        suite, Seq.empty, "doc_id", Map.empty, None)
+      assert(ev.verdicts.collect().length == 1)
+      // and the executed plan of the summary aggregate the verdicts are
+      // collected from really is whole-stage-codegen'd (printed as the
+      // `*(n)` prefix on codegen'd spans)
+      val executed = ev.aggregate.queryExecution.executedPlan.toString
       assert(executed.contains("*("), executed)
     }
   }

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 
 import graft.dsl.Constraint._
@@ -157,5 +159,42 @@ class JsonValidatorSpec extends SparkSpec {
       .verdicts(js, "id", "js", JsonValidator.compile(suite))
       .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
     assert(v == Map("a" -> true, "b" -> true, "c" -> false))
+  }
+
+  test("raw-JSON validation runs unchanged on a stream (JSONL firehose)") {
+    // JsonValidator's schema-free path is a stateless per-row map, so a
+    // STREAMING DataFrame flows through the same code: doc engine
+    // compiled once on the driver, applied per micro-batch record,
+    // malformed documents becoming violations — the streaming face of
+    // the reference's validate(template, json) contract
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, String)] // (id, raw json)
+    val compiled = graft.exec.JsonValidator.compile(
+      ConstraintSuite("js", Seq(
+        NotNull("id_req", "doc_id"),
+        Bounds("n_max", "n_tok", None, Some(BigDecimal(10))))))
+    val q = graft.exec.JsonValidator
+      .violations(mem.toDF().toDF("id", "js"), "id", "js", compiled)
+      .writeStream.format("memory").queryName("json_sink")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      mem.addData(
+        ("r1", """{"doc_id":"a","n_tok":3}"""),
+        ("r2", """{"n_tok":3}"""),
+        ("r3", """not json {"""))
+      q.processAllAvailable()
+      val b1 = spark.table("json_sink")
+        .select("doc_id", "constraint_id").as[(String, String)]
+        .collect().toSet
+      assert(b1 == Set(("r2", "id_req"),
+        ("r3", graft.exec.JsonValidator.DocumentConstraint)))
+      // later micro-batch appends through the same compiled suite
+      mem.addData(("r4", """{"doc_id":"d","n_tok":99}"""))
+      q.processAllAvailable()
+      assert(spark.table("json_sink").count() == 3)
+      assert(spark.table("json_sink")
+        .filter($"doc_id" === "r4" && $"constraint_id" === "n_max")
+        .count() == 1)
+    } finally q.stop()
   }
 }

@@ -6,9 +6,9 @@ class SparkEntrySpec extends SparkSpec {
 
   test("every query has exactly one oracle and vice versa") {
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
-    // the driver surface is the validator's 13 queries and no other
+    // the driver surface is the validator's 12 queries and no other
     assert(SparkEntry.queries.keySet == Set("v_violations", "v_verdict",
-      "v_suggest", "v_stats", "v_import", "v_docjson", "v_docjson_varcol",
+      "v_stats", "v_import", "v_docjson", "v_docjson_varcol",
       "v_unique", "v_ri", "v_drift", "v_window", "v_tokdrift", "v_tdigest"))
   }
 

@@ -603,9 +603,9 @@ class ValidatorSpec extends SparkSpec {
   }
 
   test("verdicts: a check-free and a checked evaluation share one schema") {
-    // check-free verdicts stay a lazy aggregate; with a dataset check
-    // they are a local frame built on the driver. Both are projections
-    // of one summary aggregate, so they agree field for field
+    // with or without a dataset check the verdicts are a local frame
+    // built on the driver from one summary aggregate, so they agree
+    // field for field
     val df = Seq(("a", "p1", 1), ("b", "p1", 5), ("c", "p2", 0))
       .toDF("doc_id", "part", "n")
     val bound = Bounds("b", "n", Some(0), Some(3))
@@ -619,5 +619,40 @@ class ValidatorSpec extends SparkSpec {
       assert(lazyV.schema == localV.schema)
       assert(lazyV.collect().toSet == localV.collect().toSet, parts)
     }
+  }
+
+  test("validate: a row-only suite's verdicts are on the driver when it returns") {
+    val df = seqDf(
+      ("a", Seq(1), 1, "web"), ("b", Seq(2), 9, "web"),
+      ("c", Seq(3), 1, "books"))
+    val suite = ConstraintCompiler.compile(ConstraintSuite("s", Seq(
+      Bounds("n_max", "n_tok", None, Some(5)))))
+    val v = Validator.validate(df, suite, Seq("source"))
+    val (rows, seen) = listened(v.collect())
+    assert(seen.jobs == 0, seen)
+    assert(rows.map(r => (r.getAs[String]("source"), r.getAs[Long]("n_rows"),
+      r.getAs[Long]("n_bad_rows"), r.getAs[Boolean]("valid"))).toSet ==
+      Set(("web", 2L, 1L, false), ("books", 1L, 0L, true)))
+  }
+
+  test("violations: an unpersisted frame infers no size filter below the structs") {
+    // an inner explode makes Spark infer `size(_viols) > 0` and push it
+    // below the per-row Project, where it would build every failing
+    // row's violation array a second time
+    val dir = java.nio.file.Files.createTempDirectory("graft-viols").toString
+    seqDf(("a", Seq(1), 9, "web"), ("b", Seq(2), 1, "mars"),
+      ("c", Seq(3), 1, "web")).write.mode("overwrite").parquet(dir)
+    val suite = ConstraintCompiler.compile(ConstraintSuite("s", Seq(
+      Bounds("n_max", "n_tok", None, Some(5)),
+      IsIn("src", "source", Seq("web", "books")))))
+    val v = Validator.validateWithDetails(spark.read.parquet(dir), suite,
+      Seq("source")).violations
+    val conds = v.queryExecution.executedPlan.collect {
+      case f: org.apache.spark.sql.execution.FilterExec => f.condition.sql
+    }
+    assert(conds.nonEmpty)
+    assert(!conds.exists(_.contains("size(")), conds)
+    assert(v.select("doc_id", "constraint_id").as[(String, String)]
+      .collect().toSet == Set(("a", "n_max"), ("b", "src")))
   }
 }
