@@ -231,9 +231,8 @@ object PartitionedRunner {
    * for the DOCUMENT engine once on the driver; its per-row frame
    * ([[JsonValidator.evaluate]]) gives every pending row its verdict
    * and violations (malformed → invalid, never a crash), and verdicts
-   * land in the same checkpoint table `run` uses. The constraint hash
-   * is prefixed (`docjson:`) so the same suite validated through the
-   * typed-column engine and through this path keep distinct lineages.
+   * land in the same checkpoint table `run` uses, under the compiled
+   * suite's `docjson:` constraint hash.
    */
   def runJson(
       table: TableProvider,
@@ -247,9 +246,7 @@ object PartitionedRunner {
       violationsOut: Option[String] = None,
       maxPartitions: Int = Int.MaxValue): RunResult = {
     val compiled = JsonValidator.compile(suite, registry)
-    val chash = "docjson:" + graft.compile.ConstraintCompiler.hashOf(
-      graft.compile.ConstraintCompiler.resolve(suite, registry))
-    drive(table, checkpoint, runId, chash, violationsOut,
+    drive(table, checkpoint, runId, compiled.constraintHash, violationsOut,
         maxPartitions) { pending =>
       JsonValidator.evaluate(table.scan(pending), table.partitionCols,
         idCol, jsonCol, compiled)

@@ -82,53 +82,44 @@ object ConstraintCompiler {
       registry: ConstraintRegistry = ConstraintRegistry.empty): CompiledSuite =
     compile(ConstraintJson.parseSuite(json), registry)
 
+  /** Unroll budget for recursive ref chains that make data progress
+    * (see [[resolveRefs]]), shared by [[JsonSchemaImport]]: deep enough
+    * for any realistic document nesting, small enough that the inlined
+    * tree stays bounded. */
+  val MaxUnroll = 16
+
   /** Ref-inline + coverage-resolve a suite WITHOUT lowering to Catalyst
     * — the shared front half of [[compile]], also consumed by the
     * single-document evaluator ([[graft.exec.DocValidator]]), which
     * interprets the resolved AST directly. */
-  /** Default unroll budget for recursive ref chains that make data
-    * progress (see [[resolveRefs]]): deep enough for any realistic
-    * document nesting, small enough that the inlined tree stays
-    * bounded. */
-  val DefaultMaxUnroll = 16
-
   def resolve(suite: ConstraintSuite,
-      registry: ConstraintRegistry = ConstraintRegistry.empty,
-      maxUnroll: Int = DefaultMaxUnroll): ConstraintSuite =
-    resolveUnevaluated(resolveRefs(suite, registry, maxUnroll))
+      registry: ConstraintRegistry = ConstraintRegistry.empty)
+      : ConstraintSuite =
+    resolveUnevaluated(resolveRefs(suite, registry))
 
   def compile(suite: ConstraintSuite,
-      registry: ConstraintRegistry = ConstraintRegistry.empty,
-      maxUnroll: Int = DefaultMaxUnroll): CompiledSuite = {
-    val resolved = resolve(suite, registry, maxUnroll)
+      registry: ConstraintRegistry = ConstraintRegistry.empty)
+      : CompiledSuite = {
+    val resolved = resolve(suite, registry)
     // A whole-suite Ref inlines its target as an AllOf — if the target
     // carried dataset-level constraints they would sit inside a
     // "row-local" conjunction and crash the lowering. Hoist them back to
     // the top level (splitting a conjunction is semantics-preserving);
     // a dataset check under a NON-conjunctive combinator has no
     // compilable meaning and refuses with a ref-aware message.
-    def isDs(c: Constraint): Boolean = c match {
-      case _: Unique | _: RefIntegrity | _: NoDrift | _: NoArrayDrift =>
-        true
-      case _ => false
-    }
-    def containsDs(c: Constraint): Boolean = {
-      var found = false
-      Constraint.walk(c)(x => found ||= isDs(x))
-      found
-    }
     def hoist(c: Constraint): Seq[Constraint] = c match {
-      case c0 if !containsDs(c0) => Seq(c0)
-      case c0 if isDs(c0)        => Seq(c0)
-      case AllOf(_, cs)          => cs.flatMap(hoist)
+      case c0 if Constraint.isDataset(c0) => Seq(c0)
+      case c0 if Constraint.find(c0)(Constraint.isDataset).isEmpty =>
+        Seq(c0)
+      case AllOf(_, cs) => cs.flatMap(hoist)
       case other => throw new CompileException(
         s"dataset-level constraint nested under non-conjunctive " +
           s"combinator '${other.id}' — uniqueness/RI/drift apply to the " +
           "whole table and cannot be disjoined, negated or made " +
           "conditional")
     }
-    val (rowCs, dsCs) = resolved.constraints.flatMap(hoist)
-      .partition(isRowLocal)
+    val (dsCs, rowCs) = resolved.constraints.flatMap(hoist)
+      .partition(Constraint.isDataset)
     val rowChecks = rowCs.map(c => CompiledRowCheck(
       c.id, lowerPred(c, None), observedOf(c), expectedOf(c),
       instancePathOf(c)))
@@ -171,26 +162,40 @@ object ConstraintCompiler {
   //    error exactly as before;
   //  - re-entry BELOW at least one container boundary consumes one
   //    level of instance nesting per round, so it UNROLLS up to
-  //    `maxUnroll` levels. At the cut the residual is a fail-closed
-  //    `BoolSchema(false)`: instance data nested deeper than the unroll
-  //    budget is INVALID — never silently accepted. Every cut site sits
-  //    under a container check, so documents shallower than the budget
-  //    never reach it and validate exactly. For the Catalyst engine
-  //    choose `maxUnroll` = the bound column type's nesting depth (a
-  //    StructType is finite, so the depth is statically known); the
-  //    document engine's default budget covers any realistic JSON.
+  //    `MaxUnroll` levels. At the cut the residual is fail-closed (see
+  //    [[cut]]): instance data nested deeper than the unroll budget is
+  //    INVALID — never silently accepted. Every cut site sits under a
+  //    container check, so documents shallower than the budget never
+  //    reach it and validate exactly.
   // ------------------------------------------------------------------
 
-  private def resolveRefs(suite: ConstraintSuite, reg: ConstraintRegistry,
-      maxUnroll: Int): ConstraintSuite = {
+  /** The residual of a recursive ref cut at the unroll budget. It must
+    * stay fail-closed (reject instances past the budget), so it depends
+    * on the POLARITY of its position:
+    *  - +1 (truth helps validity): false, guarded on `col` being PRESENT,
+    *    so only instances that reach this depth fail (a bare false would
+    *    also fail shallow documents through a missing map key);
+    *  - −1 (under an odd number of negations): the identity `true`, which
+    *    keeps deep matching instances true for the enclosing negation;
+    *  - 0 (oneOf branch, if-condition, bounded-contains element): no sound
+    *    constant exists, so `refuse` is thrown.
+    * `ids` names the residual's nodes by role ("", "present", "fail", in
+    * that call order): each resolver keeps its own ids. */
+  private[compile] def cut(pol: Int, col: String, ids: String => String,
+      refuse: => Nothing): Constraint = pol match {
+    case 1 =>
+      IfThen(ids(""), NotNull(ids("present"), col),
+        BoolSchema(ids("fail"), value = false))
+    case -1 => BoolSchema(ids(""), value = true)
+    case _  => refuse
+  }
 
-    def findFragment(root: ConstraintSuite, cid: String): Option[Constraint] = {
-      var found: Option[Constraint] = None
-      root.constraints.foreach(Constraint.walk(_) { c =>
-        if (found.isEmpty && c.id == cid) found = Some(c)
-      })
-      found
-    }
+  private def resolveRefs(suite: ConstraintSuite,
+      reg: ConstraintRegistry): ConstraintSuite = {
+
+    def findFragment(root: ConstraintSuite, cid: String): Option[Constraint] =
+      root.constraints.view.flatMap(Constraint.find(_)(_.id == cid))
+        .headOption
 
     // name → (lexically-resolved target suite, optional fragment id)
     def target(name: String,
@@ -215,19 +220,13 @@ object ConstraintCompiler {
     // same-named self-fragments in different suites don't false-cycle;
     // per key it records (container depth at last entry, entries so
     // far): same-depth re-entry = no data progress = cycle error;
-    // deeper re-entry unrolls until `maxUnroll`, then cuts fail-closed.
+    // deeper re-entry unrolls until `MaxUnroll`, then cuts fail-closed.
     // `scope` is the dynamic scope — suites entered so far, outermost
     // first; `lexical` is the suite whose body is being walked;
     // `cdepth` counts container boundaries (array-element / map-value /
-    // key scopes) crossed so far.
+    // key scopes) crossed so far; `pol` is the position's polarity
+    // (see [[cut]]).
     final case class Entry(depthAtEntry: Int, times: Int)
-    // `pol` is the POLARITY of the position being resolved: +1 the
-    // constraint's truth helps validity (monotone positive), −1 it is
-    // under an odd number of negations, 0 non-monotone (oneOf branch,
-    // if-condition, bounded-contains element). The unroll CUT must stay
-    // fail-closed — reject instances past the budget — which means
-    // `false` in positive positions, `true` under negation, and NO
-    // sound constant exists in non-monotone positions (refuse there).
     def go(c: Constraint, visiting: Map[String, Entry],
         scope: List[ConstraintSuite],
         lexical: ConstraintSuite, cdepth: Int, pol: Int): Constraint = {
@@ -245,37 +244,26 @@ object ConstraintCompiler {
                   "container boundary between entries — consumes no " +
                   "instance nesting, cannot terminate)"
                  else ""))
-          case Some(Entry(_, n)) if n >= maxUnroll => None
+          case Some(Entry(_, n)) if n >= MaxUnroll => None
           case Some(Entry(_, n)) =>
             Some(visiting + (key -> Entry(cdepth, n + 1)))
           case None => Some(visiting + (key -> Entry(cdepth, 1)))
         }
-      def cut(id: String, name: String): Constraint = pol match {
-        // PRESENCE-GUARDED false: the cut must reject only instances
-        // that actually REACH this depth. A bare false would also fail
-        // shallow documents through PropertyValues (missing key
-        // evaluates the element with an absent scope) — over-strict is
-        // still wrong. Every cut sits under ≥1 container descent, so
-        // '$' (the nearest element/value scope) is always bound here.
-        case 1 => IfThen(id, NotNull(s"$id.present", "$"),
-          BoolSchema(s"$id.fail", value = false))
-        // under negation the IDENTITY true is the fail-closed cut: deep
-        // matching instances keep the inner schema true, so the
-        // enclosing Not rejects them; shallow instances see a no-op
-        case -1 => BoolSchema(id, value = true)
-        case _ => throw new CompileException(
-          s"Schema compilation failed: recursive ref '$name' exceeds " +
-            s"the unroll budget ($maxUnroll) inside a NON-MONOTONE " +
-            "context (oneOf branch / if-condition / bounded contains) " +
-            "— no fail-closed cut exists there; raise maxUnroll or " +
-            "restructure the schema")
-      }
+      // every cut sits under ≥1 container descent, so '$' (the nearest
+      // element/value scope) is always bound there
+      def cutAt(id: String, name: String): Constraint =
+        cut(pol, "$", r => if (r.isEmpty) id else s"$id.$r",
+          throw new CompileException(
+            s"Schema compilation failed: recursive ref '$name' exceeds " +
+              s"the unroll budget ($MaxUnroll) inside a NON-MONOTONE " +
+              "context (oneOf branch / if-condition / bounded contains) " +
+              "— no fail-closed cut exists there; restructure the schema"))
       c match {
         case Ref(id, name) =>
           val (t, frag) = target(name, lexical)
           val key = frag.fold(t.id)(cid => s"${t.id}#$cid")
           admit(key, name, dynamic = false) match {
-            case None => cut(id, name)
+            case None => cutAt(id, name)
             case Some(v2) =>
               // A referenced suite/fragment inlines as the conjunction
               // of its constraints, re-rooted under the Ref's own id.
@@ -298,7 +286,7 @@ object ConstraintCompiler {
                 findFragment(s, anchor).isDefined).getOrElse(lexT)
           val key = s"${chosen.id}#$anchor"
           admit(key, name, dynamic = true) match {
-            case None => cut(id, name)
+            case None => cutAt(id, name)
             case Some(v2) =>
               AllOf(id, Seq(go(fragment(chosen, anchor, name),
                 v2, enter(chosen), chosen, cdepth, pol)))
@@ -307,10 +295,6 @@ object ConstraintCompiler {
           // definitions assert nothing; fragments inside them resolve
           // against the ORIGINAL suites, so the body need not survive
           BoolSchema(id, true)
-        case AllOf(id, cs) =>
-          AllOf(id, cs.map(go(_, visiting, scope, lexical, cdepth, pol)))
-        case AnyOf(id, cs) =>
-          AnyOf(id, cs.map(go(_, visiting, scope, lexical, cdepth, pol)))
         case OneOf(id, cs) =>
           // exactly-one is non-monotone: a branch's truth can invalidate
           OneOf(id, cs.map(go(_, visiting, scope, lexical, cdepth, 0)))
@@ -320,35 +304,15 @@ object ConstraintCompiler {
           IfThen(id, go(i, visiting, scope, lexical, cdepth, 0),
             go(t, visiting, scope, lexical, cdepth, pol),
             e.map(go(_, visiting, scope, lexical, cdepth, pol)))
-        case EachElement(id, col, e) =>
-          EachElement(id, col,
-            go(e, visiting, scope, lexical, cdepth + 1, pol))
-        case EachElementFrom(id, col, st, e) =>
-          EachElementFrom(id, col, st,
-            go(e, visiting, scope, lexical, cdepth + 1, pol))
-        case EachKey(id, col, e) =>
-          EachKey(id, col, go(e, visiting, scope, lexical, cdepth + 1, pol))
-        case ContainsCount(id, col, e, mn, mx) =>
-          // a max-bounded contains is non-monotone in its element
-          ContainsCount(id, col,
-            go(e, visiting, scope, lexical, cdepth + 1,
-              if (mx.isDefined) 0 else pol), mn, mx)
-        case PrefixItems(id, col, es) =>
-          PrefixItems(id, col,
-            es.map(go(_, visiting, scope, lexical, cdepth + 1, pol)))
-        case PropertyValues(id, col, k, e) =>
-          PropertyValues(id, col, k,
-            go(e, visiting, scope, lexical, cdepth + 1, pol))
-        case PatternValues(id, col, p, e) =>
-          PatternValues(id, col, p,
-            go(e, visiting, scope, lexical, cdepth + 1, pol))
-        case UnevaluatedItems(id, col, e) =>
-          UnevaluatedItems(id, col,
-            go(e, visiting, scope, lexical, cdepth + 1, pol))
-        case UnevaluatedProperties(id, col, e, ks, ps) =>
-          UnevaluatedProperties(id, col,
-            go(e, visiting, scope, lexical, cdepth + 1, pol), ks, ps)
-        case other => other
+        case other =>
+          // an OnColumn kind's subschemas sit one container level down
+          val (d, p) = other match {
+            // a max-bounded contains is non-monotone in its element
+            case ContainsCount(_, _, _, _, Some(_)) => (cdepth + 1, 0)
+            case _: OnColumn                       => (cdepth + 1, pol)
+            case _                                 => (cdepth, pol)
+          }
+          Constraint.mapChildren(other)(go(_, visiting, scope, lexical, d, p))
       }
     }
     ConstraintSuite(suite.id,
@@ -435,31 +399,12 @@ object ConstraintCompiler {
         if (full) BoolSchema(id, true)
         else UnevaluatedProperties(id, col, rw(elem),
           (ks0 ++ ks).distinct, (ps0 ++ ps).distinct)
-      case AllOf(id, cs)  => AllOf(id, cs.map(rw))
-      case AnyOf(id, cs)  => AnyOf(id, cs.map(rw))
-      case OneOf(id, cs)  => OneOf(id, cs.map(rw))
-      case Not(id, c0)    => Not(id, rw(c0))
-      case IfThen(id, i, t, e) => IfThen(id, rw(i), rw(t), e.map(rw))
-      case EachElement(id, col, e)         => EachElement(id, col, rw(e))
-      case EachElementFrom(id, col, st, e) =>
-        EachElementFrom(id, col, st, rw(e))
-      case EachKey(id, col, e) => EachKey(id, col, rw(e))
-      case ContainsCount(id, col, e, mn, mx) =>
-        ContainsCount(id, col, rw(e), mn, mx)
-      case PrefixItems(id, col, es) => PrefixItems(id, col, es.map(rw))
-      case PropertyValues(id, col, k, e) => PropertyValues(id, col, k, rw(e))
-      case PatternValues(id, col, p, e)  => PatternValues(id, col, p, rw(e))
-      case other => other
+      case other => Constraint.mapChildren(other)(rw)
     }
     // preserve dynamicAnchors: resolve() is public and DocValidator /
     // render round-trips would otherwise lose the declarations
     ConstraintSuite(suite.id, suite.constraints.map(rw),
       suite.dynamicAnchors)
-  }
-
-  private def isRowLocal(c: Constraint): Boolean = c match {
-    case _: Unique | _: RefIntegrity | _: NoDrift | _: NoArrayDrift => false
-    case _                                                          => true
   }
 
   // ------------------------------------------------------------------
@@ -734,34 +679,11 @@ object ConstraintCompiler {
     * summarize the same columns. */
   private[graft] def refCols(c: Constraint): Seq[String] = {
     val buf = scala.collection.mutable.LinkedHashSet[String]()
+    def add(col: String): Unit = if (!col.startsWith("$")) buf += col
     Constraint.walk(c) {
-      case NotNull(_, col)            => if (!col.startsWith("$")) buf += col
-      case IsIn(_, col, _)            => if (!col.startsWith("$")) buf += col
-      case ConstEq(_, col, _)         => if (!col.startsWith("$")) buf += col
-      case Bounds(_, col, _, _, _, _) => if (!col.startsWith("$")) buf += col
-      case MultipleOf(_, col, _)      => if (!col.startsWith("$")) buf += col
-      case LengthBounds(_, col, _, _) => if (!col.startsWith("$")) buf += col
-      case Matches(_, col, _)         => if (!col.startsWith("$")) buf += col
-      case FormatIs(_, col, _, _)     => if (!col.startsWith("$")) buf += col
-      case SizeBounds(_, col, _, _)   => if (!col.startsWith("$")) buf += col
-      case UniqueItems(_, col)        => if (!col.startsWith("$")) buf += col
-      case EachElement(_, col, _)     => if (!col.startsWith("$")) buf += col
-      case EachElementFrom(_, col, _, _) => if (!col.startsWith("$")) buf += col
-      case ContainsCount(_, col, _, _, _) => if (!col.startsWith("$")) buf += col
-      case PrefixItems(_, col, _)     => if (!col.startsWith("$")) buf += col
-      case KeysIn(_, col, _)          => if (!col.startsWith("$")) buf += col
-      case KeyCountBounds(_, col, _, _) => if (!col.startsWith("$")) buf += col
-      case EachKey(_, col, _)         => if (!col.startsWith("$")) buf += col
-      case PropertyValues(_, col, _, _) => if (!col.startsWith("$")) buf += col
-      case PatternValues(_, col, _, _)  => if (!col.startsWith("$")) buf += col
-      case UnevaluatedItems(_, col, _)  => if (!col.startsWith("$")) buf += col
-      case UnevaluatedProperties(_, col, _, _, _) =>
-        if (!col.startsWith("$")) buf += col
-      case TypeIs(_, col, _)          => if (!col.startsWith("$")) buf += col
-      case SizeConsistency(_, i, a) =>
-        if (!i.startsWith("$")) buf += i
-        if (!a.startsWith("$")) buf += a
-      case _                          => ()
+      case SizeConsistency(_, i, a) => add(i); add(a)
+      case x: OnColumn              => add(x.col)
+      case _                        => ()
     }
     buf.toSeq
   }
@@ -777,24 +699,27 @@ object ConstraintCompiler {
       .otherwise(head)
   }
 
+  /** The array kinds whose `observed` is their column's size (`size=N`),
+    * on both engines. */
+  private[graft] object SizeObserved {
+    def unapply(c: OnColumn): Option[String] = c match {
+      case _: SizeBounds | _: EachElement | _: ContainsCount |
+          _: PrefixItems | _: EachElementFrom | _: UnevaluatedItems =>
+        Some(c.col)
+      case _ => None
+    }
+  }
+
   /** Expression for the violation row's `observed` field. Arrays are
     * summarized by size, not dumped — violation rows must stay narrow at
     * 10^12-row scale. */
   private[compile] def observedOf(c: Constraint): Column = c match {
-    case SizeBounds(_, col, _, _) =>
+    case SizeObserved(col) =>
       F.concat(F.lit("size="), F.size(F.col(col)).cast("string"))
     case UniqueItems(_, col) =>
       F.concat(F.lit("distinct="),
         F.size(F.array_distinct(F.col(col))).cast("string"),
         F.lit("/"), F.size(F.col(col)).cast("string"))
-    case EachElement(_, col, _) =>
-      F.concat(F.lit("size="), F.size(F.col(col)).cast("string"))
-    case ContainsCount(_, col, _, _, _) =>
-      F.concat(F.lit("size="), F.size(F.col(col)).cast("string"))
-    case PrefixItems(_, col, _) =>
-      F.concat(F.lit("size="), F.size(F.col(col)).cast("string"))
-    case EachElementFrom(_, col, _, _) =>
-      F.concat(F.lit("size="), F.size(F.col(col)).cast("string"))
     case KeysIn(_, col, allowed) =>
       keySummary(F.filter(F.map_keys(F.col(col)),
         k => if (allowed.isEmpty) F.lit(true) else !k.isin(allowed: _*)))
@@ -808,8 +733,6 @@ object ConstraintCompiler {
         F.lit("null"))
     case PatternValues(_, col, p, _) =>
       keySummary(F.filter(F.map_keys(F.col(col)), k => k.rlike(p)))
-    case UnevaluatedItems(_, col, _) =>
-      F.concat(F.lit("size="), F.size(F.col(col)).cast("string"))
     case UnevaluatedProperties(_, col, _, ks, ps) =>
       keySummary(F.filter(F.map_keys(F.col(col)), uncoveredKey(ks, ps)))
     case SizeConsistency(_, i, a) =>
@@ -957,8 +880,8 @@ object ConstraintCompiler {
   }
 
   /** Stable identity of the compiled suite for checkpoint lineage
-    * (also consumed by the JSON-corpus runner, which compiles with the
-    * DOCUMENT engine but checkpoints by the same suite identity). */
+    * (also consumed by `DocValidator.compile`, whose suite the
+    * JSON-corpus runner checkpoints by the same suite identity). */
   private[graft] def hashOf(suite: ConstraintSuite): String = {
     val canon = ConstraintJson.renderSuite(suite)
     val md = MessageDigest.getInstance("SHA-256")

@@ -45,8 +45,9 @@ import graft.dsl.{Constraint, ConstraintSuite}
  * refs inside a target resolve against the TARGET document's base.
  * Unresolvable refs name the unknown document/anchor/pointer and the
  * known document set. RECURSIVE refs that consume instance nesting (the ref
- * re-enters below a container/property boundary) unroll to `maxUnroll`
- * levels and then cut FAIL-CLOSED (deeper instances are invalid, never
+ * re-enters below a container/property boundary) unroll to
+ * `ConstraintCompiler.MaxUnroll` levels and then take the compiler's
+ * fail-closed `cut` (deeper instances are invalid, never
  * silently accepted); a ref re-entered at the same instance depth
  * cannot terminate and raises a descriptive error. `$dynamicRef`
  * resolves like `$ref` here (a single imported document has the trivial
@@ -153,7 +154,6 @@ object JsonSchemaImport {
    */
   def translate(schemaJson: String, suiteId: String = null,
       typedColumns: Boolean = true,
-      maxUnroll: Int = ConstraintCompiler.DefaultMaxUnroll,
       remotes: Map[String, String] = Map.empty): ConstraintSuite = {
     val root =
       try mapper.readTree(schemaJson)
@@ -293,30 +293,16 @@ object JsonSchemaImport {
       * vacuously-true oneOf branches → count ≠ 1), and a `false` schema
       * has no column to anchor on; those need an explicit presence
       * guard. */
-    def absentUnsafe(c: Constraint): Boolean = {
-      var bad = false
-      Constraint.walk(c) {
-        case _: Not | _: OneOf        => bad = true
-        case BoolSchema(_, false)     => bad = true
-        case _                        => ()
-      }
-      bad
-    }
+    def absentUnsafe(c: Constraint): Boolean = Constraint.find(c) {
+      case _: Not | _: OneOf | BoolSchema(_, false) => true
+      case _                                        => false
+    }.isDefined
     def presenceGuard(col: String, c: Constraint): Constraint =
       if (absentUnsafe(c))
         IfThen(fresh(col, "appliesIfPresent"),
           NotNull(fresh(col, "present"), col), c)
       else c
 
-    /** Lower subschema `s` applied at column path `path` ("" = the row:
-      * only object-with-properties is meaningful there). `refs` tracks
-      * in-flight `$ref` inlining as name → (instance depth at last
-      * entry, entries so far); `depth` counts instance-nesting
-      * boundaries crossed (element scopes and struct property drills).
-      * Re-entering a ref at the SAME depth consumes no instance nesting
-      * — genuinely unbounded, refused; re-entry deeper UNROLLS up to
-      * `maxUnroll`, then cuts to a fail-closed `false` schema (data
-      * nested past the budget is invalid, never silently accepted). */
     // The DYNAMIC SCOPE of the lowering walk: the chain of schema
     // resources entered along the current inline path, outermost
     // first. Static inlining makes this stack at each inline site
@@ -327,6 +313,17 @@ object JsonSchemaImport {
     // predictable per inlined path).
     val dynScope = scala.collection.mutable.ListBuffer[String]()
 
+    /** Lower subschema `s` applied at column path `path` ("" = the row:
+      * only object-with-properties is meaningful there). `refs` tracks
+      * in-flight `$ref` inlining as name → (instance depth at last
+      * entry, entries so far); `depth` counts instance-nesting
+      * boundaries crossed (element scopes and struct property drills).
+      * Re-entering a ref at the SAME depth consumes no instance nesting
+      * — genuinely unbounded, refused; re-entry deeper UNROLLS up to
+      * `ConstraintCompiler.MaxUnroll`, then takes the compiler's
+      * fail-closed `cut` (data nested past the budget is invalid, never
+      * silently accepted). `pol` is the position's polarity, as in
+      * `ConstraintCompiler.cut`. */
     def lower(s: JsonNode, path: String,
         refs: Map[String, (Int, Int)], depth: Int,
         pol: Int, base: String): Seq[Constraint] = {
@@ -407,24 +404,14 @@ object JsonSchemaImport {
               throw new ImportException(s"cyclic ref '$ref' with no " +
                 "container boundary between entries — consumes no " +
                 "instance nesting, cannot terminate")
-            case Some((_, n)) if n >= maxUnroll => pol match {
-              // fail-closed AND presence-guarded: reject exactly the
-              // instances that reach this depth (a bare false would
-              // also fail shallow documents whose path never gets
-              // here); under negation the identity `true` keeps deep
-              // matches true so the enclosing not rejects them
-              case 1 =>
-                out += IfThen(fresh(path, "depthCut"),
-                  NotNull(fresh(path, "depthCutPresent"), path),
-                  BoolSchema(fresh(path, "depthCutFail"), value = false))
-              case -1 =>
-                out += BoolSchema(fresh(path, "depthCut"), value = true)
-              case _ => throw new ImportException(
-                s"recursive ref '$ref' exceeds the unroll budget " +
-                  s"($maxUnroll) inside a non-monotone context " +
-                  "(oneOf/if-condition/bounded contains) — no " +
-                  "fail-closed cut exists there; raise maxUnroll")
-            }
+            case Some((_, n)) if n >= ConstraintCompiler.MaxUnroll =>
+              out += ConstraintCompiler.cut(pol, path,
+                r => fresh(path, "depthCut" + r.capitalize),
+                throw new ImportException(
+                  s"recursive ref '$ref' exceeds the unroll budget " +
+                    s"(${ConstraintCompiler.MaxUnroll}) inside a " +
+                    "non-monotone context (oneOf/if-condition/bounded " +
+                    "contains) — no fail-closed cut exists there"))
             case prior =>
               val n = prior.map(_._2).getOrElse(0)
               val (target, targetBase) = resolveRef(ref, curBase)
@@ -523,6 +510,11 @@ object JsonSchemaImport {
         out += FormatIs(fresh(path, "format"), path, f.asText(),
           strict = false))
 
+      // a container keyword's subschema applies one instance level
+      // down, to the element, value or key bound as `$`
+      def below(sub: JsonNode, p: Int = pol): Constraint =
+        allOfWrap("$", lower(sub, "$", refs, depth + 1, p, curBase))
+
       // ---- arrays ---------------------------------------------------
       if (s.has("minItems") || s.has("maxItems"))
         out += SizeBounds(fresh(path, "size"), path,
@@ -536,7 +528,7 @@ object JsonSchemaImport {
           .map(_.elements().asScala.toSeq).getOrElse(Nil)
       if (prefix.nonEmpty)
         out += PrefixItems(fresh(path, "prefix"), path,
-          prefix.map(p => allOfWrap("$", lower(p, "$", refs, depth + 1, pol, curBase))))
+          prefix.map(below(_)))
       val tailSchema: Option[JsonNode] =
         Option(s.get("items")).filterNot(_.isArray)
           // draft-7 form: additionalItems binds ONLY alongside
@@ -544,21 +536,19 @@ object JsonSchemaImport {
           .orElse(Option(s.get("additionalItems"))
             .filter(_ => Option(s.get("items")).exists(_.isArray)))
       tailSchema.foreach { it =>
-        val elem = allOfWrap("$", lower(it, "$", refs, depth + 1, pol, curBase))
+        val elem = below(it)
         out += (if (prefix.isEmpty) EachElement(fresh(path, "items"), path, elem)
                 else EachElementFrom(fresh(path, "items"), path,
                   prefix.size, elem))
       }
       Option(s.get("contains")).foreach { c =>
         // a max-bounded contains is non-monotone in its element schema
-        val elemPol = if (s.has("maxContains")) 0 else pol
         out += ContainsCount(fresh(path, "contains"), path,
-          allOfWrap("$", lower(c, "$", refs, depth + 1, elemPol, curBase)),
+          below(c, if (s.has("maxContains")) 0 else pol),
           int(s, "minContains").getOrElse(1), int(s, "maxContains"))
       }
       Option(s.get("unevaluatedItems")).foreach(u =>
-        out += UnevaluatedItems(fresh(path, "unevalItems"), path,
-          allOfWrap("$", lower(u, "$", refs, depth + 1, pol, curBase))))
+        out += UnevaluatedItems(fresh(path, "unevalItems"), path, below(u)))
 
       // ---- objects --------------------------------------------------
       // draft-4/6/7 `dependencies` folds into the 2019+ split keywords:
@@ -586,17 +576,15 @@ object JsonSchemaImport {
           // evaluates under a null `$` scope, so guard non-monotone
           // subschemas on key presence
           out += PropertyValues(fresh(path, s"prop_${e.getKey}"), path,
-            e.getKey, presenceGuard("$", allOfWrap("$",
-              lower(e.getValue, "$", refs, depth + 1, pol, curBase))))
+            e.getKey, presenceGuard("$", below(e.getValue)))
         })
         Option(s.get("patternProperties")).foreach(
           _.properties().asScala.foreach { e =>
             out += PatternValues(fresh(path, "patternProps"), path,
-              e.getKey, allOfWrap("$", lower(e.getValue, "$", refs, depth + 1, pol, curBase)))
+              e.getKey, below(e.getValue))
           })
         Option(s.get("propertyNames")).foreach { pn =>
-          out += EachKey(fresh(path, "propNames"), path,
-            allOfWrap("$", lower(pn, "$", refs, depth + 1, pol, curBase)))
+          out += EachKey(fresh(path, "propNames"), path, below(pn))
         }
         Option(s.get("additionalProperties")).foreach { ap =>
           val covered = props.map(
@@ -614,7 +602,7 @@ object JsonSchemaImport {
                 covered, coveredPats)
           } else if (!ap.isBoolean)
             out += UnevaluatedProperties(fresh(path, "addlProps"), path,
-              allOfWrap("$", lower(ap, "$", refs, depth + 1, pol, curBase)), covered, coveredPats)
+              below(ap), covered, coveredPats)
         }
         if (s.has("minProperties") || s.has("maxProperties"))
           out += KeyCountBounds(fresh(path, "keyCount"), path,
@@ -665,8 +653,7 @@ object JsonSchemaImport {
           }
           val (ck, cp) = staticCoverage(s)
           out += UnevaluatedProperties(fresh(path, "unevalProps"), path,
-            allOfWrap("$", lower(u, "$", refs, depth + 1, pol, curBase)),
-            ck.distinct, cp.distinct)
+            below(u), ck.distinct, cp.distinct)
         }
       } else {
         def childPath(p: String): String =
@@ -706,8 +693,7 @@ object JsonSchemaImport {
           if (path.isEmpty) throw new ImportException(
             "unevaluatedProperties at the ROW level is not meaningful " +
               "for a fixed table schema")
-          out += UnevaluatedProperties(fresh(path, "unevalProps"), path,
-            allOfWrap("$", lower(u, "$", refs, depth + 1, pol, curBase)))
+          out += UnevaluatedProperties(fresh(path, "unevalProps"), path, below(u))
         }
       }
 

@@ -31,22 +31,28 @@ sealed trait Constraint {
 
 object Constraint {
 
+  /** A row-local constraint on one column `col`. Its subschemas, if any,
+    * apply one container level down: to an element, key or value of
+    * `col`, bound as `"$"`. Dataset-level kinds, [[SizeConsistency]] and
+    * [[ExprIs]] are not `OnColumn`. */
+  sealed trait OnColumn extends Constraint { def col: String }
+
   // ----------------------------------------------------------------
   // Row-local leaf constraints (JSON Schema keyword analogues)
   // ----------------------------------------------------------------
 
   /** `required` / NOT NULL (reference: `required`, Draft2020Runner.java:100). */
-  final case class NotNull(id: String, col: String) extends Constraint
+  final case class NotNull(id: String, col: String) extends OnColumn
 
   /** `enum` — value ∈ declared set (Draft2020Runner.java:75). Values are
     * compared after casting the column to string, so they serialize
     * uniformly. */
   final case class IsIn(id: String, col: String, values: Seq[String])
-      extends Constraint
+      extends OnColumn
 
   /** `const` — value == literal (Draft2020Runner.java:68). Null-safe. */
   final case class ConstEq(id: String, col: String, value: String)
-      extends Constraint
+      extends OnColumn
 
   /** `minimum`/`maximum`/`exclusiveMinimum`/`exclusiveMaximum`
     * (Draft2020Runner.java:83-88). Either bound optional. */
@@ -57,22 +63,22 @@ object Constraint {
       max: Option[BigDecimal] = None,
       exclusiveMin: Boolean = false,
       exclusiveMax: Boolean = false)
-      extends Constraint
+      extends OnColumn
 
   /** `multipleOf` (Draft2020Runner.java:92). Tolerance-aware for doubles. */
   final case class MultipleOf(id: String, col: String, k: BigDecimal)
-      extends Constraint
+      extends OnColumn
 
   /** `minLength`/`maxLength` — string length in codepoints
     * (Draft2020Runner.java:85,90). */
   final case class LengthBounds(
       id: String, col: String, min: Option[Int], max: Option[Int])
-      extends Constraint
+      extends OnColumn
 
   /** `pattern` — unanchored regex match (Draft2020Runner.java:95).
     * Java regex dialect; ECMA-262 deltas documented in SURVEY.md §7.4. */
   final case class Matches(id: String, col: String, pattern: String)
-      extends Constraint
+      extends OnColumn
 
   /** `format` (Draft2020Runner.java:78). Annotation-only unless
     * `strict` — matching the reference's default where format does not
@@ -81,7 +87,7 @@ object Constraint {
     * `uuid`, `uri`, `ipv4`, `ipv6`, `hostname`, `json-pointer`. */
   final case class FormatIs(
       id: String, col: String, format: String, strict: Boolean = false)
-      extends Constraint
+      extends OnColumn
 
   // ----------------------------------------------------------------
   // Array constraints (the core ones for tokens: array<int32>)
@@ -90,15 +96,15 @@ object Constraint {
   /** `minItems`/`maxItems` — array size bounds (Draft2020Runner.java:84,89). */
   final case class SizeBounds(
       id: String, col: String, min: Option[Int], max: Option[Int])
-      extends Constraint
+      extends OnColumn
 
   /** `uniqueItems` (Draft2020Runner.java:60). */
-  final case class UniqueItems(id: String, col: String) extends Constraint
+  final case class UniqueItems(id: String, col: String) extends OnColumn
 
   /** `items` — every element satisfies the subschema
     * (Draft2020Runner.java:81). `elem.col` must be `"$"`. */
   final case class EachElement(id: String, col: String, elem: Constraint)
-      extends Constraint
+      extends OnColumn
 
   /** `contains`/`minContains`/`maxContains` (Draft2020Runner.java:69,82,87):
     * the count of elements matching `elem` is within [minCount, maxCount]. */
@@ -108,20 +114,20 @@ object Constraint {
       elem: Constraint,
       minCount: Int = 1,
       maxCount: Option[Int] = None)
-      extends Constraint
+      extends OnColumn
 
   /** `prefixItems` — positional element subschemas (Draft2020Runner.java:97).
     * Absent positions (array shorter than the prefix) pass, per spec. */
   final case class PrefixItems(
       id: String, col: String, elems: Seq[Constraint])
-      extends Constraint
+      extends OnColumn
 
   /** `additionalItems` (Draft 4-2019) / `items`-after-`prefixItems`
     * (2020-12): every element from 0-based position `startIdx` on
     * satisfies the subschema. */
   final case class EachElementFrom(
       id: String, col: String, startIdx: Int, elem: Constraint)
-      extends Constraint
+      extends OnColumn
 
   // ----------------------------------------------------------------
   // Object (map-typed column) constraints — the `*Properties` keywords
@@ -131,17 +137,17 @@ object Constraint {
   /** `additionalProperties: false` with an allowlist — every key of the
     * map column is in `allowed`. */
   final case class KeysIn(id: String, col: String, allowed: Seq[String])
-      extends Constraint
+      extends OnColumn
 
   /** `minProperties`/`maxProperties` — key-count bounds. */
   final case class KeyCountBounds(
       id: String, col: String, min: Option[Int], max: Option[Int])
-      extends Constraint
+      extends OnColumn
 
   /** `propertyNames` — every key satisfies the subschema (`elem.col`
     * must be `"$"`, bound to the key string). */
   final case class EachKey(id: String, col: String, elem: Constraint)
-      extends Constraint
+      extends OnColumn
 
   /** `properties` for a map column: the value at `key` (when present)
     * satisfies the subschema (`elem.col` must be `"$"`). Absent keys
@@ -151,7 +157,7 @@ object Constraint {
     * nested paths; this node is the dynamic-map form.) */
   final case class PropertyValues(
       id: String, col: String, key: String, elem: Constraint)
-      extends Constraint
+      extends OnColumn
 
   /** `patternProperties` for a map column: values of every key matching
     * `keyPattern` (unanchored regex) satisfy the subschema
@@ -159,7 +165,7 @@ object Constraint {
     * `forall(map_values(map_filter(m, (k,_) => k rlike p)), …)`. */
   final case class PatternValues(
       id: String, col: String, keyPattern: String, elem: Constraint)
-      extends Constraint
+      extends OnColumn
 
   /** `unevaluatedItems` (Draft2020Runner.java:57): elements NOT covered
     * by sibling `prefixItems`/`items`(-after-prefix) constraints on the
@@ -170,7 +176,7 @@ object Constraint {
     * annotation-flow semantics; cf. the reference's own skip list,
     * Draft2020Runner.java:196-201). */
   final case class UnevaluatedItems(id: String, col: String, elem: Constraint)
-      extends Constraint
+      extends OnColumn
 
   /** `unevaluatedProperties` (Draft2020Runner.java:58): values of map
     * keys NOT covered by sibling [[PropertyValues]] keys,
@@ -185,7 +191,7 @@ object Constraint {
       id: String, col: String, elem: Constraint,
       coveredKeys: Seq[String] = Nil,
       coveredPatterns: Seq[String] = Nil)
-      extends Constraint
+      extends OnColumn
 
   /** `type` — the value parses as the declared JSON-ish type. For
     * statically typed columns this is enforced by the table schema; the
@@ -193,7 +199,7 @@ object Constraint {
     * `number`, per the suite's type.json). Types: `integer`, `number`,
     * `boolean`, `string`. */
   final case class TypeIs(id: String, col: String, tpe: String)
-      extends Constraint
+      extends OnColumn
 
   // ----------------------------------------------------------------
   // Cross-column / escape hatch
@@ -256,9 +262,9 @@ object Constraint {
     * compile exactly; bookending applies (a lexical target that does not
     * DECLARE the anchor dynamic degrades this to a plain [[Ref]]).
     * 2019-09's `$recursiveRef`/`$recursiveAnchor` is the special case of a
-    * single distinguished anchor name. Recursive chains still raise the
-    * cycle error: data nesting is bounded by the Spark column type, so a
-    * recursive schema must be unrolled to that depth by the author. */
+    * single distinguished anchor name. A recursive chain unrolls as
+    * [[Ref]] chains do (`ConstraintCompiler.MaxUnroll` levels, when each
+    * round crosses a container boundary; a cycle error otherwise). */
   final case class DynamicRef(id: String, name: String) extends Constraint
 
   // ----------------------------------------------------------------
@@ -306,27 +312,54 @@ object Constraint {
       minCount: Long = 100L)
       extends Constraint
 
-  /** Walk the tree depth-first (combinators included). */
-  def walk(c: Constraint)(f: Constraint => Unit): Unit = {
-    f(c)
+  // ----------------------------------------------------------------
+  // The tree's shape: every pass over a suite goes through these
+  // ----------------------------------------------------------------
+
+  /** `c` with `f` applied to each direct subconstraint, in declaration
+    * order (an [[IfThen]]'s condition, then, else); every other field is
+    * kept. A leaf is returned as it is. The one place that lists the
+    * tree's shape. */
+  def mapChildren(c: Constraint)(f: Constraint => Constraint): Constraint =
     c match {
-      case AllOf(_, cs)          => cs.foreach(walk(_)(f))
-      case AnyOf(_, cs)          => cs.foreach(walk(_)(f))
-      case OneOf(_, cs)          => cs.foreach(walk(_)(f))
-      case Not(_, c0)            => walk(c0)(f)
-      case IfThen(_, i, t, e)    => walk(i)(f); walk(t)(f); e.foreach(walk(_)(f))
-      case EachElement(_, _, e)  => walk(e)(f)
-      case EachElementFrom(_, _, _, e) => walk(e)(f)
-      case EachKey(_, _, e)      => walk(e)(f)
-      case ContainsCount(_, _, e, _, _) => walk(e)(f)
-      case PrefixItems(_, _, es) => es.foreach(walk(_)(f))
-      case PropertyValues(_, _, _, e)  => walk(e)(f)
-      case PatternValues(_, _, _, e)   => walk(e)(f)
-      case UnevaluatedItems(_, _, e)   => walk(e)(f)
-      case UnevaluatedProperties(_, _, e, _, _) => walk(e)(f)
-      case Defs(_, cs)           => cs.foreach(walk(_)(f))
-      case _                     => ()
+      case x: AllOf                 => x.copy(cs = x.cs.map(f))
+      case x: AnyOf                 => x.copy(cs = x.cs.map(f))
+      case x: OneOf                 => x.copy(cs = x.cs.map(f))
+      case x: Defs                  => x.copy(cs = x.cs.map(f))
+      case x: Not                   => x.copy(c = f(x.c))
+      case IfThen(id, i, t, e)      => IfThen(id, f(i), f(t), e.map(f))
+      case x: EachElement           => x.copy(elem = f(x.elem))
+      case x: EachElementFrom       => x.copy(elem = f(x.elem))
+      case x: EachKey               => x.copy(elem = f(x.elem))
+      case x: ContainsCount         => x.copy(elem = f(x.elem))
+      case x: PrefixItems           => x.copy(elems = x.elems.map(f))
+      case x: PropertyValues        => x.copy(elem = f(x.elem))
+      case x: PatternValues         => x.copy(elem = f(x.elem))
+      case x: UnevaluatedItems      => x.copy(elem = f(x.elem))
+      case x: UnevaluatedProperties => x.copy(elem = f(x.elem))
+      case leaf                     => leaf
     }
+
+  /** The direct subconstraints of `c`, in [[mapChildren]]'s order. */
+  def children(c: Constraint): Seq[Constraint] = {
+    val out = Seq.newBuilder[Constraint]
+    mapChildren(c) { x => out += x; x }
+    out.result()
+  }
+
+  /** Walk the tree depth-first, `c` before its children. */
+  def walk(c: Constraint)(f: Constraint => Unit): Unit = {
+    f(c); children(c).foreach(walk(_)(f))
+  }
+
+  /** The first constraint of [[walk]]'s order that satisfies `p`. */
+  def find(c: Constraint)(p: Constraint => Boolean): Option[Constraint] =
+    if (p(c)) Some(c) else children(c).view.flatMap(find(_)(p)).headOption
+
+  /** A dataset-level kind: checked over the whole table, never per row. */
+  def isDataset(c: Constraint): Boolean = c match {
+    case _: Unique | _: RefIntegrity | _: NoDrift | _: NoArrayDrift => true
+    case _                                                          => false
   }
 }
 

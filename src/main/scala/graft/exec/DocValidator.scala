@@ -30,20 +30,21 @@ object DocValidator {
   final case class DocViolation(constraintId: String, observed: String,
       expected: String)
 
-  /** Compile-once artifact for the document path: resolved AST +
-    * the row-local/top-level split. Immutable and thread-safe. */
+  /** Compile-once artifact for the document path: the resolved
+    * top-level constraints, and the suite's checkpoint identity
+    * (`docjson:` + the resolved suite's hash, so the two engines keep
+    * distinct lineages for one suite). Immutable and thread-safe. */
   final case class CompiledDocSuite private[exec] (
-      suiteId: String, checks: Seq[Constraint])
+      suiteId: String, checks: Seq[Constraint], constraintHash: String)
 
   private val mapper = new ObjectMapper()
 
   def compile(suite: ConstraintSuite,
-      registry: ConstraintRegistry = ConstraintRegistry.empty,
-      maxUnroll: Int = ConstraintCompiler.DefaultMaxUnroll): CompiledDocSuite = {
-    val resolved = ConstraintCompiler.resolve(suite, registry, maxUnroll)
+      registry: ConstraintRegistry = ConstraintRegistry.empty)
+      : CompiledDocSuite = {
+    val resolved = ConstraintCompiler.resolve(suite, registry)
     resolved.constraints.foreach(Constraint.walk(_) {
-      case c @ (_: Unique | _: RefIntegrity | _: NoDrift |
-          _: NoArrayDrift) =>
+      case c if Constraint.isDataset(c) =>
         throw new IllegalArgumentException(
           s"constraint '${c.id}' is dataset-scope — single-document " +
             "validation has no table; use Validator over a DataFrame")
@@ -59,7 +60,8 @@ object DocValidator {
           s"constraint '$id': unsupported strict format: $format")
       case _ => ()
     })
-    CompiledDocSuite(resolved.id, resolved.constraints)
+    CompiledDocSuite(resolved.id, resolved.constraints,
+      "docjson:" + ConstraintCompiler.hashOf(resolved))
   }
 
   /** Fast boolean path. */
@@ -160,6 +162,14 @@ object DocValidator {
       n.elements().asScala.map(canonical).mkString("[", ",", "]")
     else n.toString
 
+  /** An array element's identity for `uniqueItems`, in the verdict and
+    * in `observed` alike: numbers by value, containers canonicalized,
+    * other scalars by their JSON text. */
+  private def elementKey(x: JsonNode): String =
+    numeric(x).map(d => "n:" + d.bigDecimal.stripTrailingZeros.toPlainString)
+      .getOrElse(if (x.isContainerNode) "c:" + canonical(x)
+        else "v:" + x.toString)
+
   private def elems(n: JsonNode): Option[Seq[JsonNode]] =
     if (n.isArray) Some(n.elements().asScala.toSeq) else None
 
@@ -225,11 +235,7 @@ object DocValidator {
       // Containers canonicalize (object keys sorted recursively,
       // numbers by value): 2020-12 equality ignores property order.
       withValue(doc, col, scope)(v => elems(v).forall { xs =>
-        val keys = xs.map(x => numeric(x)
-          .map(d => "n:" + d.bigDecimal.stripTrailingZeros.toPlainString)
-          .getOrElse(
-            if (x.isContainerNode) "c:" + canonical(x)
-            else "v:" + x.toString))
+        val keys = xs.map(elementKey)
         keys.distinct.size == keys.size
       })
     case EachElement(_, col, elem) =>
@@ -372,24 +378,12 @@ object DocValidator {
     def keysOf(col: String): Seq[String] =
       node(col).flatMap(fields).map(_.map(_._1)).getOrElse(Seq.empty)
     c match {
-      case SizeBounds(_, col, _, _)          => sized(col)
-      case EachElement(_, col, _)            => sized(col)
-      case EachElementFrom(_, col, _, _)     => sized(col)
-      case ContainsCount(_, col, _, _, _)    => sized(col)
-      case PrefixItems(_, col, _)            => sized(col)
-      case UnevaluatedItems(_, col, _)       => sized(col)
+      case ConstraintCompiler.SizeObserved(col) => sized(col)
       case UniqueItems(_, col) =>
+        // array_distinct on the equivalent typed column coerces as
+        // elementKey does
         node(col).flatMap(elems).map { xs =>
-          // same element-identity keys as the verdict (numbers by
-          // value, containers canonicalized) — array_distinct on the
-          // equivalent typed column coerces identically
-          val keys = xs.map(x => numeric(x)
-            .map(d => "n:" +
-              d.bigDecimal.stripTrailingZeros.toPlainString)
-            .getOrElse(
-              if (x.isContainerNode) "c:" + canonical(x)
-              else "v:" + x.toString))
-          s"distinct=${keys.distinct.size}/${keys.size}"
+          s"distinct=${xs.map(elementKey).distinct.size}/${xs.size}"
         }.getOrElse("null")
       case KeysIn(_, col, allowed) =>
         keySummary(keysOf(col).filter(k =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types.StructType
 
 import graft.checks.Evaluation
-import graft.compile.ConstraintCompiler
+import graft.compile.{CompiledRowCheck, ConstraintCompiler}
 import graft.dsl.ConstraintSuite
 import graft.exec.DocValidator.CompiledDocSuite
 import graft.registry.ConstraintRegistry
@@ -142,25 +142,25 @@ object JsonValidator {
       require(!n.contains("'") && !n.contains("\\"),
         s"variant path cannot address field '$n' (quote/backslash in " +
           "the name) — validate the JSON text with violations instead"))
-    val parsed = df.select(
-      F.col(idCol).cast("string").as("_doc_id"),
-      F.col(variantCol).as("_v"))
-    val malformed = parsed.filter(F.col("_v").isNull)
-      .select(F.col("_doc_id").as("doc_id"),
-        F.lit(DocumentConstraint).as("constraint_id"),
-        F.lit("null").as("observed"),
-        F.lit(DocumentExpected).as("expected"))
-    val typedRows = parsed.filter(F.col("_v").isNotNull)
-      .select((F.col("_doc_id") +: schema.fields.toSeq.map { f =>
+    // ONE scan: the variant's presence is projected beside the pushed
+    // extractions (the scan still reads only the addressed fields, not
+    // the whole variant), and a NULL variant fails `_document` alone
+    val rows = df.select((F.col(idCol).cast("string").as("_doc_id") +:
+      F.col(variantCol).isNotNull.as("_present") +:
+      schema.fields.toSeq.map { f =>
         // bracket path form: a field named "a.b" must not parse as
         // a nested path
-        F.try_variant_get(F.col("_v"), s"$$['${f.name}']",
+        F.try_variant_get(F.col(variantCol), s"$$['${f.name}']",
           f.dataType.sql).as(f.name)
       }): _*)
+    val present = F.col("_present")
     val compiled = ConstraintCompiler.compile(suite, registry)
-    Validator.validateWithDetails(typedRows, compiled, Seq.empty, "_doc_id")
+    val gated = compiled.copy(rowChecks =
+      CompiledRowCheck(DocumentConstraint, present, F.lit("null"),
+        DocumentExpected, F.lit("/")) +:
+        compiled.rowChecks.map(c => c.copy(pred = !present || c.pred)))
+    Validator.evaluate(rows, gated, Seq.empty, "_doc_id", Map.empty, None)
       .violations
       .select("doc_id", "constraint_id", "observed", "expected")
-      .unionAll(malformed)
   }
 }

@@ -4,6 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
+import graft.compile.ConstraintCompiler.MaxUnroll
 import graft.compile.JsonSchemaImport
 import graft.dsl.{ConstraintJson, ConstraintSuite}
 import graft.dsl.Constraint._
@@ -166,8 +167,8 @@ class DocValidatorSpec extends AnyFunSuite {
   }
 
   test("recursive refs: declared unroll budget, fail-closed past it") {
-    // recursive tree with an explicit small budget: exact within it,
-    // invalid (never silently valid) beyond it
+    // recursive tree at the compiler's budget: exact within it, invalid
+    // (never silently valid) beyond it
     val tree = ConstraintSuite("tree", Seq(
       Defs("d", Seq(AllOf("node", Seq(
         Bounds("val_ok", "$.value", Some(BigDecimal(0)),
@@ -176,15 +177,15 @@ class DocValidatorSpec extends AnyFunSuite {
           DynamicRef("again", "#node")))))),
       EachElement("roots", "roots", DynamicRef("start", "#node"))),
       dynamicAnchors = Seq("node"))
-    val k4 = DocValidator.compile(tree, maxUnroll = 4)
+    val k = DocValidator.compile(tree)
     def nested(depth: Int): String = {
       var n = """{"value":5}"""
       (2 to depth).foreach(_ => n = s"""{"value":5,"children":[$n]}""")
       s"""{"roots":[$n]}"""
     }
-    assert(DocValidator.validate(k4, nested(4)))
-    assert(!DocValidator.validate(k4, nested(5))) // past budget: closed
-    assert(!DocValidator.validate(k4,
+    assert(DocValidator.validate(k, nested(MaxUnroll)))
+    assert(!DocValidator.validate(k, nested(MaxUnroll + 1))) // closed
+    assert(!DocValidator.validate(k,
       """{"roots":[{"value":5,"children":[{"value":999}]}]}"""))
 
     // recursion with NO container boundary between entries still errors
@@ -213,11 +214,11 @@ class DocValidatorSpec extends AnyFunSuite {
       nodeDefs,
       Not("no_tree",
         EachElement("roots", "roots", DynamicRef("start", "#node")))),
-      dynamicAnchors = Seq("node")), maxUnroll = 3)
+      dynamicAnchors = Seq("node")))
     // shallow matching tree → inner true → rejected (plain semantics)
     assert(!DocValidator.validate(notTree, nested(2)))
     // DEEP matching tree → cut=true keeps inner true → still rejected
-    assert(!DocValidator.validate(notTree, nested(8)))
+    assert(!DocValidator.validate(notTree, nested(MaxUnroll + 5)))
     // non-tree (value out of range) → inner false → accepted
     assert(DocValidator.validate(notTree,
       """{"roots":[{"value":500}]}"""))
@@ -230,7 +231,7 @@ class DocValidatorSpec extends AnyFunSuite {
         OneOf("either", Seq(
           EachElement("roots", "roots", DynamicRef("start", "#node")),
           BoolSchema("alt", value = false)))),
-        dynamicAnchors = Seq("node")), maxUnroll = 2)
+        dynamicAnchors = Seq("node")))
     }
     assert(e.getMessage.contains("non-monotone".toUpperCase.toLowerCase)
       || e.getMessage.contains("NON-MONOTONE"))

@@ -133,14 +133,15 @@ class JsonValidatorSpec extends SparkSpec {
     val plan = out.queryExecution.executedPlan
     val text = plan.toString.toLowerCase
     assert(!text.contains("parse_json") && !text.contains("variant_get"), plan)
-    // a pushed extraction is a field of the scanned variant struct whose
-    // metadata names its path; the NULL-variant branch's scan reads a
-    // placeholder field only
-    val pushed = graft.tools.PlanWalk.fileScans(plan).flatMap(
+    // ONE scan of the table, NULL-variant rows included; a pushed
+    // extraction is a field of the scanned variant struct whose metadata
+    // names its path
+    val scans = graft.tools.PlanWalk.fileScans(plan)
+    assert(scans.size == 1, plan)
+    val pushed = scans.flatMap(
       _.requiredSchema("v").dataType.asInstanceOf[StructType].fields.map(f =>
         f.metadata.getMetadata("__VARIANT_METADATA_KEY").getString("path") ->
           f.dataType))
-      .filterNot(_._1.contains("__placeholder_field__"))
     assert(pushed.sortBy(_._1) ==
       schema.fields.toSeq.map(f => s"$$['${f.name}']" -> f.dataType)
         .sortBy(_._1), plan)
