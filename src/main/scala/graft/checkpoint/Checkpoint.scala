@@ -12,7 +12,6 @@ import org.apache.parquet.hadoop.example.{ExampleParquetWriter,
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 import graft.checks.Evaluation
 import graft.compile.CompiledSuite
@@ -190,16 +189,22 @@ final case class RunResult(
  * share one driver and differ only in the [[Evaluation]] they supply —
  * the narrow per-row frame and, for [[run]], the suite's dataset checks.
  * Checkpoint entries and violations derive from that one evaluation.
- * Its verdicts are collected once, on the driver, and those rows are
- * both the entries appended and the returned `verdicts`: a local frame,
- * so acting on it launches no job and reads exactly what the run
- * checkpointed. When `violationsOut` is set the per-row frame persists
- * to executor disk, so the first action materializes it and the next
- * reads the blocks: every pending row is evaluated once (lineage
- * recomputes a lost block — correctness never depends on the cache).
- * Verdict-only runs skip the persist and the returned `violations` plan
- * stays lazy (acting on it re-evaluates — materialize via
- * `violationsOut` when both outputs are consumed).
+ *
+ * When `violationsOut` is set, the violations write is the only pass
+ * over the pending rows ([[Evaluation.writeViolations]]): it evaluates
+ * each row once, writes the failing ones' violations and counts every
+ * partition's rows, failing rows and dangling keys as it goes. Nothing
+ * is cached. Before it, the summary aggregate reads only the whole-table
+ * checks' columns (uniqueness, drift) and uniqueness phase 2 recounts
+ * its candidates; a run without dataset checks launches the write
+ * alone. A verdict-only run counts in the summary aggregate instead, and
+ * the returned `violations` plan stays lazy: acting on it evaluates the
+ * pending rows again.
+ *
+ * The verdicts are built once, on the driver, and those rows are both
+ * the entries appended and the returned `verdicts`: a local frame, so
+ * acting on it launches no job and reads exactly what the run
+ * checkpointed.
  */
 object PartitionedRunner {
 
@@ -254,8 +259,8 @@ object PartitionedRunner {
   }
 
   /** The one driver loop: pending partitions → one evaluation →
-    * (persisted when violations are written) → violations → verdicts
-    * collected → checkpoint. Pending, skipped and every entry's snapshot
+    * violations written, counting the pending rows → verdicts on the
+    * driver → checkpoint. Pending, skipped and every entry's snapshot
     * id come from the one listing the run planned from. A converged run
     * evaluates nothing and returns empty frames with the verdict and
     * violation schemas. */
@@ -273,17 +278,12 @@ object PartitionedRunner {
       return result(verdicts, violations)
     }
 
-    val persist = violationsOut.isDefined
-    if (persist) eval.rows.persist(StorageLevel.DISK_ONLY)
-    try {
-      violationsOut.foreach { out =>
-        eval.violations.write.mode(SaveMode.Append).parquet(out)
-      }
-      val snapshot = plan.snapshots.toMap
-      checkpoint.append(checkpointEntries(table.partitionCols,
-        eval.verdicts.collect().toSeq, constraintHash, runId,
-        pending.map(p => p -> snapshot(p))))
-    } finally if (persist) eval.rows.unpersist(blocking = false)
+    violationsOut.foreach(out =>
+      eval.writeViolations(_.write.mode(SaveMode.Append).parquet(out)))
+    val snapshot = plan.snapshots.toMap
+    checkpoint.append(checkpointEntries(table.partitionCols,
+      eval.verdicts.collect().toSeq, constraintHash, runId,
+      pending.map(p => p -> snapshot(p))))
     result(eval.verdicts, eval.violations)
   }
 

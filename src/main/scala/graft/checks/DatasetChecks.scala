@@ -2,7 +2,8 @@ package graft.checks
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row,
+  SparkSession}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types._
@@ -121,9 +122,10 @@ object DatasetCheck {
  * grouping set of the summary aggregate, and only hashes seen more than
  * once come back to the driver. Phase 2 ([[duplicates]]) runs only when
  * such candidates exist: it re-reads the key column, keeps the rows whose
- * hash is a candidate and recounts EXACTLY on the real key in a
- * distributed aggregate, so xxhash64 collisions (≈ n²/2^65 false
- * candidates: a few ×10^4 at 10^12 rows) are filtered, never reported.
+ * hash is a candidate and recounts EXACTLY on the real key — each task
+ * counts its own rows' keys and the driver sums them — so xxhash64
+ * collisions (≈ n²/2^65 false candidates: a few ×10^4 at 10^12 rows) are
+ * filtered, never reported.
  * Violations: one row per duplicated key value (not per duplicate row) —
  * violation volume stays proportional to the number of BAD KEYS.
  *
@@ -152,17 +154,28 @@ final case class UniqueCheck(id: String, col: String, expected: String)
   }
 
   /** Phase 2 over `df` for the candidate hashes phase 1 found: each
-    * duplicated key with its count. Only the recount's result is
-    * collected — one row per duplicated key, as many as the candidates
-    * already on the driver up to hash collisions. */
+    * duplicated key with its count. One job with no exchange: the tasks'
+    * key counts ([[keyCounts]]) are summed on the driver, which keeps
+    * the keys counted more than once. */
   private[graft] def duplicates(df: DataFrame,
       candidates: Set[Long]): Seq[(String, Long)] =
     if (candidates.isEmpty) Nil
-    else df.where(Evaluation.inSet(keyHash, candidates.toSet[Any]))
-      .groupBy(F.col(col).cast("string").as("_k"))
-      .agg(F.count(F.lit(1)).as("_cnt"))
-      .where(F.col("_cnt") > 1)
-      .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
+    else Evaluation.layer(df.sparkSession, "phase2")(
+        keyCounts(df, candidates).collect())
+      .groupMapReduce(_._1)(_._2)(_ + _).toSeq.filter(_._2 > 1)
+
+  /** Each task's count of every key it reads whose hash is a candidate:
+    * at most one row per candidate key per task, however often the key
+    * repeats. NULL keys have no hash and are never read. */
+  private[graft] def keyCounts(df: DataFrame,
+      candidates: Set[Long]): Dataset[(String, Long)] =
+    df.where(Evaluation.inSet(keyHash, candidates.toSet[Any]))
+      .select(F.col(col).cast("string")).as(Encoders.STRING)
+      .mapPartitions { keys =>
+        val counts = scala.collection.mutable.HashMap.empty[String, Long]
+        keys.foreach(k => counts(k) = counts.getOrElse(k, 0L) + 1L)
+        counts.iterator
+      }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
 }
 
 /**
@@ -200,9 +213,10 @@ final case class RefIntegrityCheck(
       s"referential check '$id': dimension '$dimName' not provided"))
     val k = F.col(dimCol).cast("string")
     val keyRows = dim.select(k).where(k.isNotNull)
-    val keys = (if (DatasetCheck.onDriver(keyRows)) keyRows
-      else keyRows.distinct())
-      .collect().map(r => UTF8String.fromString(r.getString(0)): Any).toSet
+    val keys = Evaluation.layer(dim.sparkSession, "dim_keys")(
+        (if (DatasetCheck.onDriver(keyRows)) keyRows else keyRows.distinct())
+          .collect())
+      .map(r => UTF8String.fromString(r.getString(0)): Any).toSet
     val fk = F.col(col).cast("string")
     F.when(fk.isNull, F.lit("null")).when(!Evaluation.inSet(fk, keys), fk)
   }
@@ -352,7 +366,8 @@ final case class ArrayDriftCheck(
     val sums = (0 until buckets).map(i =>
       F.sum(F.element_at(F.col("_bc"), i + 1)).as(s"_s$i"))
     val n = s.partitionCols.size
-    bc.groupBy(pcols: _*).agg(sums.head, sums.tail: _*).collect().toSeq
+    Evaluation.layer(bc.sparkSession, "array_drift")(
+        bc.groupBy(pcols: _*).agg(sums.head, sums.tail: _*).collect()).toSeq
       .map(r => (r.toSeq.take(n), Array.tabulate(buckets)(i => r.getLong(n + i))))
   }
 }

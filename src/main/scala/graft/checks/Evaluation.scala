@@ -1,6 +1,7 @@
 package graft.checks
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Observation,
+  Row, SparkSession}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -44,22 +45,27 @@ private[graft] final class Finished(
  *    check i's [[SummaryColumn]].
  *  - `whole`: the frame the whole-table checks read. When it is wider
  *    than `df` (a partial run), their columns are projected from it
- *    instead, so row-local work never re-scans the whole table.
+ *    (`wide`) instead, so row-local work never re-scans the whole table.
+ *
+ * The per-partition counts of `rows` — rows, failing rows and each
+ * counted column's non-NULL values — come from one of two places, and
+ * one rule picks it. A resumable run that writes violations
+ * ([[writeViolations]]) observes them in that write, the one pass over
+ * `rows`; every other caller reads them from the summary aggregate.
  *
  * ONE summary [[aggregate]] over grouping sets: `(partitionCols...,
- * first bucket)` — rows, failing rows and each counted column's non-NULL
- * rows per partition, plus that histogram — one `(partitionCols...,
- * bucket)` per further bucketed column, and one `(hash)` per hashed
- * column, of which only values seen more than once come back. It is
- * collected once, each check finishes on the driver
- * ([[DatasetCheck.finish]]), and the verdicts are a local frame built
- * from the collected rows.
+ * first bucket)` — those counts, plus that histogram — one
+ * `(partitionCols..., bucket)` per further bucketed column, and one
+ * `(hash)` per hashed column, of which only values seen more than once
+ * come back. When the counts are observed it reads only `wide`, and does
+ * not run when there is none. It is collected once, each check finishes
+ * on the driver ([[DatasetCheck.finish]]), and the verdicts are a local
+ * frame built from the collected rows and the counts.
  *
  * Nothing runs until a result is asked for; in particular `rows` is
  * built on first use, because referential integrity reads its dimension
  * keys to build its column. Row-local and referential-integrity
- * violation rows stay lazy plans over `rows`, so a caller that persists
- * `rows` evaluates every row once however many outputs it consumes.
+ * violation rows stay lazy plans over `rows`.
  */
 private[graft] final class Evaluation(
     df: DataFrame,
@@ -69,7 +75,7 @@ private[graft] final class Evaluation(
     idCol: String,
     dims: Map[String, DataFrame],
     rowCols: Seq[Column]) {
-  import Evaluation.column
+  import Evaluation.{column, layer}
   import SummaryColumn._
 
   /** An evaluation without dataset checks over a ready per-row frame
@@ -81,15 +87,18 @@ private[graft] final class Evaluation(
   val whole: DataFrame = globalDf.getOrElse(df)
   val partitionFields: Seq[StructField] = partitionCols.map(df.schema(_))
   private val pcols = partitionCols.map(F.col)
+  private def spark = whole.sparkSession
 
   private lazy val columns: IndexedSeq[Option[SummaryColumn]] =
     checks.map(_.summaryColumn(partitionCols, dims)).toIndexedSeq
 
+  private def fromWhole(i: Int): Boolean =
+    checks(i).needsGlobalScope && !(whole eq df)
+
   /** The checks' columns read from `whole` (`wide`) or from `df`. */
   private def projected(wide: Boolean): Seq[Column] =
     columns.indices.flatMap { i =>
-      val fromWhole = checks(i).needsGlobalScope && !(whole eq df)
-      columns(i).filter(_ => fromWhole == wide).map(_.value.as(column(i)))
+      columns(i).filter(_ => fromWhole(i) == wide).map(_.value.as(column(i)))
     }
 
   lazy val rows: DataFrame = {
@@ -123,28 +132,47 @@ private[graft] final class Evaluation(
       if (set.contains(k)) 0L else 1L << (keys.size - 1 - j)
     }.sum
 
-  /** The aggregate. `_c` counts the rows of a group, `_n` and `_bad` the
-    * rows and failing rows of `rows`' scope, and each counted column its
-    * non-NULL rows. */
-  lazy val aggregate: DataFrame = {
-    val input = wide.fold(rows)(w => rows
-      .select((partitionCols ++ ("_ok" +: counted)).map(F.col): _*)
-      .unionByName(w, allowMissingColumns = true))
-    val aggs = Seq(
-      F.count(F.lit(1)).as("_c"),
-      F.count("_ok").as("_n"),
-      F.count(F.when(!F.col("_ok"), 1)).as("_bad")) ++
-      counted.map(c => F.count(c).as(c))
-    val grouped =
-      if (sets.size == 1)
-        input.groupBy(baseSet.map(F.col): _*).agg(F.lit(0L).as("_g"), aggs: _*)
-      else input.groupingSets(sets.map(_.map(F.col)), keys.map(F.col): _*)
-        .agg(F.grouping_id().as("_g"), aggs: _*)
-    hashed.foldLeft(grouped)((g, h) => g.filter(F.col("_g") =!= gid(Seq(h)) ||
-      (F.col(h).isNotNull && F.col("_c") > 1)))
+  /** The aggregate the validator runs: it counts `rows` too. */
+  lazy val aggregate: DataFrame = aggregateOf(observed = false).get
+
+  /** The aggregate. `_c` counts the rows of a group. Unless the counts
+    * of `rows` are `observed`, `_n` and `_bad` count the rows and failing
+    * rows of `rows`' scope, and each counted column its non-NULL rows;
+    * when they are, `rows` contributes only the bucketed and hashed
+    * columns it holds, usually none, and with no `wide` either there is
+    * nothing to aggregate. */
+  private def aggregateOf(observed: Boolean): Option[DataFrame] = {
+    val own = (if (observed) Nil else Seq("_ok")) ++ columns.indices.collect {
+      case i if !fromWhole(i) && columns(i).exists {
+        case _: Counted => !observed
+        case _ => true
+      } => column(i)
+    }
+    val input = (Option.when(own.nonEmpty)(
+        rows.select((partitionCols ++ own).map(F.col): _*)) ++ wide)
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+    input.map { in =>
+      val aggs = F.count(F.lit(1)).as("_c") +: (if (observed) Nil else Seq(
+        F.count("_ok").as("_n"),
+        F.count(F.when(!F.col("_ok"), 1)).as("_bad")) ++
+        counted.map(c => F.count(c).as(c)))
+      val grouped =
+        if (sets.size == 1)
+          in.groupBy(baseSet.map(F.col): _*).agg(F.lit(0L).as("_g"), aggs: _*)
+        else in.groupingSets(sets.map(_.map(F.col)), keys.map(F.col): _*)
+          .agg(F.grouping_id().as("_g"), aggs: _*)
+      hashed.foldLeft(grouped)((g, h) => g.filter(F.col("_g") =!= gid(Seq(h)) ||
+        (F.col(h).isNotNull && F.col("_c") > 1)))
+    }
   }
 
-  private lazy val collected: Array[Row] = aggregate.collect()
+  /** Set by [[writeViolations]] before anything is aggregated: the
+    * counts of `rows`, observed by the write. */
+  private var observation: Option[Observation] = None
+
+  private lazy val collected: Array[Row] =
+    (if (observation.isEmpty) Some(aggregate) else aggregateOf(observed = true))
+      .fold(Array.empty[Row])(a => layer(spark, "summary")(a.collect()))
 
   private def rowsOf(set: Seq[String]): Array[Row] = {
     val g = gid(set)
@@ -153,9 +181,21 @@ private[graft] final class Evaluation(
 
   private def key(r: Row): Seq[Any] = partitionCols.map(r.getAs[Any])
 
+  /** Per partition key of `rows`: its rows, its failing rows, then each
+    * counted column's non-NULL values — as the violations write observed
+    * them, when it did, else from the aggregate. */
+  private lazy val rowCounts: Map[Seq[Any], Array[Long]] =
+    observation.fold(rowsOf(baseSet).toSeq.map(r => key(r) ->
+      ("_n" +: "_bad" +: counted).map(r.getAs[Long]).toArray))(o =>
+      o.get("counts").asInstanceOf[Seq[Row]].map(r =>
+        r.getStruct(0).toSeq -> r.getSeq[Long](1).toArray))
+      .groupMapReduce(_._1)(_._2)((a, b) => a.zip(b).map(p => p._1 + p._2))
+
   /** Check i's counted column: its non-NULL rows per partition key. */
-  def counts(i: Int): Map[Seq[Any], Long] =
-    rowsOf(baseSet).groupMapReduce(key)(_.getAs[Long](column(i)))(_ + _)
+  def counts(i: Int): Map[Seq[Any], Long] = {
+    val j = 2 + counted.indexOf(column(i))
+    rowCounts.map { case (k, c) => k -> c(j) }
+  }
 
   /** Check i's bucketed column: its rows per partition key and bucket. */
   def histogram(i: Int, buckets: Int): Seq[(Seq[Any], Array[Long])] = {
@@ -188,18 +228,16 @@ private[graft] final class Evaluation(
     * rows in scope get a verdict row; unpartitioned input always gets
     * one. */
   lazy val verdicts: DataFrame =
-    verdictsOf(DatasetCheck.local(whole.sparkSession, totals, totalsSchema))
+    verdictsOf(DatasetCheck.local(spark, totals, totalsSchema))
 
   /** `(partitionCols..., _n, _bad, _np, _ng)`: rows, failing rows, and
     * attributable and table-scope check violations per partition. */
   private def totalsSchema: StructType = StructType(partitionFields ++
     Seq("_n", "_bad", "_np", "_ng").map(StructField(_, LongType, false)))
 
-  /** The totals, from the collected aggregate and the checks' counts. */
+  /** The totals, from the row counts and the checks' counts. */
   private def totals: Seq[Row] = {
-    val perPart = rowsOf(baseSet).groupMapReduce(key)(r =>
-      (r.getAs[Long]("_n"), r.getAs[Long]("_bad")))((a, b) =>
-      (a._1 + b._1, a._2 + b._2))
+    val perPart = rowCounts.map { case (k, c) => k -> (c(0), c(1)) }
     val parts =
       if (partitionCols.isEmpty) Map(Nil -> perPart.getOrElse(Nil, (0L, 0L)))
       else perPart.filter(_._2._1 > 0)
@@ -226,42 +264,67 @@ private[graft] final class Evaluation(
       (rowsOk && np === 0L && ng === 0L).as("valid")): _*)
   }
 
-  /** The violation rows of every source, union'd. The per-row ones — the
-    * engine's `_viols` when `rows` has it, plus each check's
-    * [[DatasetCheck.rowViolation]] — explode from ONE pass over `rows`
-    * behind one gate (`_ok` false or a per-row violation present): the
-    * filter pushes down as ONE codegen gate, so on a mostly-clean table
-    * the vast majority of rows short-circuit out of the scan stage
-    * without constructing a struct, and the Generate runs only over the
-    * failing sliver. The generator is `explode_outer`: Spark infers a
-    * `size(array) > 0` filter from an inner `explode` and pushes it below
-    * the per-row Project, so on a frame that is not persisted every
-    * failing row would build its violation array twice. NULL elements,
-    * and the NULL `explode_outer` emits for an empty array, drop with a
-    * plain Filter AFTER the Generate: a higher-order `filter(_viols, …)`
-    * lambda reads nicer but ArrayFilter is CodegenFallback, which drags
-    * the whole struct construction into interpreted eval() per row. The
-    * checks' driver rows join as one single-slice local frame, so writing
-    * the union runs one task per partition of `rows` plus one. */
-  lazy val violations: DataFrame = {
-    val engine = Option.when(rows.columns.contains("_viols"))(F.col("_viols"))
+  /** The violation rows of every source, union'd: [[violationsOf]]
+    * `rows`. */
+  lazy val violations: DataFrame = violationsOf(rows)
+
+  /** Writes the violations with `write` as the ONE pass over `rows`. An
+    * observation on `rows`, below the violation filter, counts each
+    * partition's rows, failing rows and counted values as the write's
+    * tasks read them: one [[graft.functions.KeyedCounts]] keyed by the
+    * partition values, so the plan does not grow with the partitions.
+    * It sits in the write's result stage, where Spark applies each
+    * partition's update once however often a task is retried. The
+    * verdicts then come from those counts, and the summary aggregate
+    * reads only `wide`. */
+  def writeViolations(write: DataFrame => Unit): Unit = {
+    require(rows.columns.contains("_viols"),
+      "an observed write needs the engine's violation column")
+    val o = Observation()
+    observation = Some(o)
+    val out = violationsOf(rows.observe(o, graft.functions.KeyedCounts(
+      F.struct(pcols: _*), F.when(!F.col("_ok"), true) +: counted.map(F.col))
+      .as("counts")))
+    layer(spark, "violations")(write(out))
+  }
+
+  /** The violation rows over `perRowFrame` (`rows` or an observed view of
+    * it). The per-row ones — the engine's `_viols` when the frame has it,
+    * plus each check's [[DatasetCheck.rowViolation]] — explode from ONE
+    * pass over the frame behind one gate (`_ok` false or a per-row
+    * violation present): the filter is ONE codegen gate, so on a
+    * mostly-clean table the vast majority of rows short-circuit out of
+    * the scan stage without constructing a struct, and the Generate runs
+    * only over the failing sliver. The generator is `explode_outer`:
+    * Spark infers a `size(array) > 0` filter from an inner `explode` and
+    * pushes it below the per-row Project, so every failing row would
+    * build its violation array twice. NULL elements, and the NULL
+    * `explode_outer` emits for an empty array, drop with a plain Filter
+    * AFTER the Generate: a higher-order `filter(_viols, …)` lambda reads
+    * nicer but ArrayFilter is CodegenFallback, which drags the whole
+    * struct construction into interpreted eval() per row. The checks'
+    * driver rows join as one single-slice local frame, so writing the
+    * union runs one task per partition of `rows` plus one. */
+  private def violationsOf(perRowFrame: DataFrame): DataFrame = {
+    val columns = perRowFrame.columns
+    val engine = Option.when(columns.contains("_viols"))(F.col("_viols"))
     val perRow = checks.indices.flatMap(i =>
       checks(i).rowViolation(F.col(column(i))))
     val exploded = Option.when(engine.nonEmpty || perRow.nonEmpty) {
-      require(rows.columns.contains("_doc_id"),
+      require(columns.contains("_doc_id"),
         s"violation rows need the id column '$idCol', which the input lacks")
       val viols = engine.fold(F.array(perRow: _*))(v =>
         if (perRow.isEmpty) v
-        else F.concat(F.coalesce(v,
-          F.array().cast(rows.schema("_viols").dataType)), F.array(perRow: _*)))
-      rows.filter((engine.map(_ => !F.col("_ok")) ++ perRow.map(_.isNotNull))
-          .reduce(_ || _))
+        else F.concat(F.coalesce(v, F.array()
+          .cast(perRowFrame.schema("_viols").dataType)), F.array(perRow: _*)))
+      perRowFrame.filter((engine.map(_ => !F.col("_ok")) ++
+          perRow.map(_.isNotNull)).reduce(_ || _))
         .select(F.col("_doc_id").as("doc_id"), F.explode_outer(viols).as("_v"))
         .filter(F.col("_v").isNotNull)
         .select("doc_id", "_v.*")
     }
     val driverRows = finished.flatMap(_.rows)
-    val local = DatasetCheck.local(whole.sparkSession, driverRows,
+    val local = DatasetCheck.local(spark, driverRows,
       DatasetCheck.violationSchema)
     exploded.fold(local)(e =>
       if (driverRows.isEmpty) e else e.unionAll(local.coalesce(1)))
@@ -269,12 +332,10 @@ private[graft] final class Evaluation(
 
   /** Empty frames with the verdict and violation schemas, for a run with
     * nothing to evaluate: nothing runs, and no dimension is read. */
-  def empty: (DataFrame, DataFrame) = {
-    val spark = whole.sparkSession
+  def empty: (DataFrame, DataFrame) =
     (verdictsOf(DatasetCheck.local(spark, Nil, totalsSchema)),
       if (checks.isEmpty) violations.limit(0)
       else DatasetCheck.local(spark, Nil, DatasetCheck.violationSchema))
-  }
 }
 
 private[graft] object Evaluation {
@@ -286,6 +347,22 @@ private[graft] object Evaluation {
       partitionCols: Seq[String], dims: Map[String, DataFrame]): Evaluation =
     new Evaluation(df, None, Seq(check), partitionCols, idCol, dims,
       Seq(F.lit(true).as("_ok")))
+
+  /** Runs `body` with its Spark jobs tagged `graft.<name>`, the engine
+    * layer they belong to (`table`, `summary`, `phase2`, `array_drift`,
+    * `dim_keys`, `violations`), and with no other graft tag: a layer's
+    * action started inside another's carries only its own. */
+  def layer[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val tag = s"graft.$name"
+    val outer = sc.getJobTags().filter(_.startsWith("graft."))
+    sc.removeJobTags(outer)
+    sc.addJobTag(tag)
+    try body finally {
+      sc.removeJobTag(tag)
+      sc.addJobTags(outer)
+    }
+  }
 
   /** `value IN values` as ONE `InSet` over values already on the driver,
     * so planning never walks one literal per value. `values` are in

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import graft.checks.Evaluation
+
 /**
  * Abstraction over the partitioned fact table being validated — the slot
  * Iceberg occupies on a real cluster (north rule). No Iceberg runtime jar
@@ -141,7 +143,8 @@ final class ParquetPartitionedTable(
       // decode to: inferred types would read `part=07` back as 7 and
       // `part=1.50` as 1.5, and neither the scan filter nor a verdict's
       // checkpoint match would find its partition again
-      val inferred = spark.read.option("basePath", root).parquet(root).schema
+      val inferred = Evaluation.layer(spark, "table")(
+        spark.read.option("basePath", root).parquet(root).schema)
       val schema = StructType(inferred.filterNot(f => cols.contains(f.name)) ++
         cols.map(StructField(_, StringType)))
       val df = spark.read.schema(schema).option("basePath", root).parquet(root)

@@ -2,6 +2,9 @@ package graft.tools
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+
 import graft.Session
 import graft.compile.ConstraintCompiler
 import graft.exec.Validator
@@ -71,11 +74,11 @@ object Explain {
     val ev = evaluation
     ev.verdicts.collect()
     val plan = ev.aggregate.queryExecution.executedPlan
-    val finalPlan = plan.toString
-    val reused = finalPlan.linesIterator.count(_.contains("ReusedExchange"))
-    val stages = finalPlan.linesIterator.count(_.contains("ShuffleQueryStage"))
     // walk the final plan: its string also prints the initial plan, so
-    // counting scan lines there counts every scan twice
+    // counting lines there counts every node twice
+    val reused = PlanWalk.collect(plan) { case r: ReusedExchangeExec => r }.size
+    val stages =
+      PlanWalk.collect(plan) { case s: ShuffleQueryStageExec => s }.size
     val scans = PlanWalk.fileScans(plan)
     println(s"ReusedExchange nodes: $reused; ShuffleQueryStages: $stages; " +
       s"parquet scans: ${scans.size}")

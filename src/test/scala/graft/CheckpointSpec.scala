@@ -7,10 +7,12 @@ import java.nio.file.{Files, Paths}
 import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.{functions => F}
 
 import graft.checkpoint.{CheckpointEntry, CheckpointStore, Covering,
-  PartitionedRunner}
-import graft.compile.ConstraintCompiler
+  PartitionedRunner, RunResult}
+import graft.checks.DatasetCheck
+import graft.compile.{CompiledSuite, ConstraintCompiler}
 import graft.dsl.Constraint._
 import graft.dsl.ConstraintSuite
 import graft.gen.SequenceGen
@@ -225,18 +227,46 @@ class CheckpointSpec extends SparkSpec {
     assert(r2.processed.isEmpty)
   }
 
-  test("run evaluates once: the verdict action reads the persisted evaluation") {
-    // with violations written, the verdicts must come from the same
-    // evaluation the write materialized — not from a second scan of the
-    // pending partitions and of every dataset check's input
-    val base = Files.createTempDirectory("graft-cp-once").toString
-    val table = mkTable(s"$base/data")
-    val full = ConstraintCompiler.compile(ConstraintSuite("once", Seq(
+  /** The run's entries and written violations equal the one-shot
+    * evaluation of the same scope: the pending partitions, with the
+    * whole-table checks over the whole table. A pending partition with
+    * no rows has no verdict, and its entry is vacuously valid. */
+  private def sameAsOneShot(table: TableProvider, suite: CompiledSuite,
+      dims: Map[String, DataFrame], r: RunResult, cp: CheckpointStore,
+      violations: String): Unit = {
+    val direct = Validator.evaluate(table.scan(r.processed), suite,
+      table.partitionCols, "doc_id", dims, Some(table.scanAll()))
+    def values(p: String) = TableProvider.decode(p).map(_._2)
+    val entries = cp.load().as[CheckpointEntry].collect()
+      .filter(_.run_id == r.runId)
+      .map(e => values(e.partition) -> (e.n_rows, e.n_bad_rows, e.valid)).toMap
+    val want = direct.verdicts.collect().map(v =>
+      table.partitionCols.map(c => Option(v.getAs[String](c))) ->
+        (v.getAs[Long]("n_rows"), v.getAs[Long]("n_bad_rows"),
+          v.getAs[Boolean]("valid"))).toMap
+    assert(entries == want ++ r.processed.map(values)
+      .filterNot(want.contains).map(_ -> (0L, 0L, true)))
+    def sorted(df: DataFrame) =
+      df.orderBy(DatasetCheck.violationCols.map(F.col): _*).collect().toSeq
+    assert(sorted(spark.read.parquet(violations)) == sorted(direct.violations))
+  }
+
+  /** The bench suite's checks over `mkTable`'s columns. */
+  private def fullSuite(id: String) = ConstraintCompiler.compile(
+    ConstraintSuite(id, Seq(
       SizeConsistency("sc", "n_tok", "tokens"),
       Bounds("nt", "n_tok", Some(1), Some(8192)),
       Unique("uq", "doc_id"),
       RefIntegrity("src_known", "source", "sources", "source"),
       NoDrift("nt_stable", "n_tok", 0, 2048, 32, "psi", 0.4))))
+
+  test("run evaluates once: the verdicts come from the violations write") {
+    // with violations written, the verdicts must come from the same
+    // evaluation the write made — not from a second scan of the
+    // pending partitions
+    val base = Files.createTempDirectory("graft-cp-once").toString
+    val table = mkTable(s"$base/data")
+    val full = fullSuite("once")
     val dims = Map("sources" -> SequenceGen.sourcesDim(spark, 4))
     val cp = new CheckpointStore(spark, s"$base/checkpoint")
     val r = PartitionedRunner.run(table, full, cp, "once", dims = dims,
@@ -245,20 +275,40 @@ class CheckpointSpec extends SparkSpec {
     val scans = graft.tools.PlanWalk
       .fileScans(r.verdicts.queryExecution.executedPlan)
     assert(scans.isEmpty, scans.map(_.relation.location.rootPaths))
+    sameAsOneShot(table, full, dims, r, cp, s"$base/violations")
+  }
 
-    // same answers as the one-shot detail path over the same scope
-    val direct = graft.exec.Validator.evaluate(table.scan(r.processed), full,
-      table.partitionCols, "doc_id", dims, Some(table.scanAll()))
-    val entries = cp.load().collect().map(e => e.getAs[String]("partition") ->
-      (e.getAs[Long]("n_bad_rows"), e.getAs[Boolean]("valid"))).toMap
-    val want = direct.verdicts.collect().map(v =>
-      s"source=${v.getAs[String]("source")}" ->
-        (v.getAs[Long]("n_bad_rows"), v.getAs[Boolean]("valid"))).toMap
-    assert(entries == want)
-    def sorted(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("constraint_id", "doc_id").collect().toSeq
-    assert(sorted(spark.read.parquet(s"$base/violations")) ==
-      sorted(direct.violations))
+  test("a run over NULL, Hive-escaped, empty and two-column partitions matches the one-shot evaluation") {
+    val base = Files.createTempDirectory("graft-cp-scoped").toString
+    // doc ids repeat past 200 (uniqueness), every 7th n_tok disagrees
+    // with its tokens, and source `a:b` is not in the dimension
+    val rows = (0 until 240).map { i =>
+      (s"d${i % 200}", Seq(i % 50), if (i % 7 == 0) 2 else 1,
+        Seq("web", "a:b", "books")(i % 3), if (i % 2 == 0) null else "d1")
+    }.toDF("doc_id", "tokens", "n_tok", "source", "day")
+    rows.write.partitionBy("source", "day").parquet(s"$base/data")
+    rows.drop("source", "day").limit(0)
+      .write.parquet(s"$base/data/source=hollow/day=d1")
+    val table = new ParquetPartitionedTable(spark, s"$base/data",
+      Seq("source", "day"))
+    val parts = table.partitions()
+    assert(Seq("source=a%3Ab/day=__HIVE_DEFAULT_PARTITION__",
+      "source=hollow/day=d1", "source=web/day=d1").forall(parts.contains),
+      parts)
+    val checked = ConstraintCompiler.compile(ConstraintSuite("scoped", Seq(
+      SizeConsistency("sc", "n_tok", "tokens"),
+      Unique("uq", "doc_id"),
+      RefIntegrity("src_known", "source", "sources", "source"),
+      NoDrift("nt_stable", "n_tok", 0, 4, 4, "psi", 0.1, minRows = 10))))
+    val dims = Map("sources" -> Seq("web", "books").toDF("source"))
+    val cp = new CheckpointStore(spark, s"$base/checkpoint")
+    // all but `source=web/day=d1`: the whole-table checks read past the
+    // pending scan
+    val r = PartitionedRunner.run(table, checked, cp, "scoped", dims = dims,
+      violationsOut = Some(s"$base/violations"),
+      maxPartitions = parts.size - 1)
+    assert(r.processed == parts.init)
+    sameAsOneShot(table, checked, dims, r, cp, s"$base/violations")
   }
 
   test("converged run returns empty frames with the output schemas") {
@@ -296,7 +346,6 @@ class CheckpointSpec extends SparkSpec {
   }
 
   test("runJson: resumable raw-JSON corpus validation with lineage") {
-    import org.apache.spark.sql.{functions => F}
     val base = Files.createTempDirectory("graft-cp-json").toString
     // partitioned JSONL-shaped table: (doc_id, js) under source=…;
     // n_tok 9999 planted for src1 rows, one malformed doc whose source
@@ -456,7 +505,7 @@ class CheckpointSpec extends SparkSpec {
   }
 
   /** A resume of one pending partition under the bench suite, its second
-    * run listened; shared by the two job-count tests below. */
+    * run listened. */
   private lazy val resumeOne = {
     val base = Files.createTempDirectory("graft-cp-jobs").toString
     val table = mkTable(s"$base/data")
@@ -493,6 +542,7 @@ class CheckpointSpec extends SparkSpec {
     val ids = viol.select("constraint_id").as[String].collect().toSet
     assert(Set("doc_id_unique", "n_tok_stable").subsetOf(ids) &&
       ids.exists(id => !Set("doc_id_unique", "n_tok_stable")(id)), ids)
+    // the write takes one task per slice of the pending scan plus one
     val writes = seen.perJob.filter(_.recordsWritten > 0)
     assert(writes.map(_.recordsWritten).headOption == Some(viol.count()), seen)
     assert(writes.head.tasks <= slices + 1, (slices, seen))
@@ -510,6 +560,94 @@ class CheckpointSpec extends SparkSpec {
     val writes = seen.perJob.filter(_.recordsWritten > 0)
     assert(writes.map(_.recordsWritten) == Seq(viol.count()), seen)
     assert(seen.jobs <= 6, seen)
+  }
+
+  test("a resume of one partition runs exactly 4 tagged jobs and caches nothing") {
+    val (_, seen, _, _, _) = resumeOne
+    // the summary aggregate's shuffle and result, uniqueness phase 2 and
+    // the violations write, which is the only job reading the pending
+    // rows
+    assert(seen.perJob.map(_.layers) == Seq("summary", "summary", "phase2",
+      "violations").map(l => Set(s"graft.$l")), seen)
+    // no relation is cached while the run's jobs start, nor after it
+    assert(!seen.perJob.exists(_.cached), seen)
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty)
+  }
+
+  test("the violations write observes the pending rows with no exchange beneath") {
+    import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution,
+      SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val base = Files.createTempDirectory("graft-cp-observed").toString
+    val table = mkTable(s"$base/data")
+    val dims = Map("sources" -> SequenceGen.sourcesDim(spark, 4))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      PartitionedRunner.run(table, fullSuite("observed"),
+        new CheckpointStore(spark, s"$base/checkpoint"), "observed",
+        dims = dims, violationsOut = Some(s"$base/violations"),
+        maxPartitions = 2)
+      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val walk = graft.tools.PlanWalk
+    val observed = plans.asScala.toSeq.flatMap(p =>
+      walk.collect(p) { case m: CollectMetricsExec => (p, m) })
+    assert(observed.size == 1, plans)
+    val (write, metrics) = observed.head
+    assert(walk.collect(write) { case w: DataWritingCommandExec => w }.nonEmpty,
+      write)
+    val beneath = walk.collect(metrics) {
+      case e @ (_: Exchange | _: ReusedExchangeExec | _: QueryStageExec) => e
+    }
+    assert(beneath.isEmpty, metrics)
+  }
+
+  test("every job validate, run and runJson launch carries exactly one engine layer tag") {
+    val base = Files.createTempDirectory("graft-cp-tags").toString
+    val table = mkTable(s"$base/data")
+    SequenceGen.generate(spark, 4000L, nSources = 4, numPartitions = 4)
+      .toDF().select(F.col("source"), F.col("doc_id"), F.to_json(F.struct(
+        F.col("doc_id"), F.col("n_tok"))).as("js"))
+      .write.partitionBy("source").parquet(s"$base/json")
+    val jsonTable = new ParquetPartitionedTable(spark, s"$base/json", "source")
+    val suite = ConstraintCompiler.compile(ConstraintSuite("tagged",
+      Scaling.benchSuite.constraints :+
+        NoArrayDrift("tok_drift", "tokens", 16, "psi", 0.5)))
+    // a dimension that is not a local relation: its keys take a job
+    val dims = Map("sources" -> spark.range(4)
+      .select(F.concat(F.lit("src"), F.col("id")).as("source")))
+    val cp = new CheckpointStore(spark, s"$base/checkpoint")
+    // both tables are new: the first scan of each infers its schema
+    val calls = Seq(
+      listened(Validator.validate(table.scanAll(), suite, table.partitionCols,
+        dims = dims)),
+      listened(PartitionedRunner.run(table, suite, cp, "written", dims = dims,
+        violationsOut = Some(s"$base/violations"), maxPartitions = 2)),
+      listened(PartitionedRunner.run(table, suite, cp, "verdicts",
+        dims = dims)),
+      listened(PartitionedRunner.runJson(jsonTable, ConstraintSuite("js",
+        Seq(Bounds("n_max", "n_tok", None, Some(BigDecimal(1000))))),
+        new CheckpointStore(spark, s"$base/json-checkpoint"), "json",
+        violationsOut = Some(s"$base/json-violations"))))
+    val jobs = calls.flatMap(_._2.perJob)
+    assert(jobs.forall(_.layers.size == 1), jobs)
+    assert(jobs.flatMap(_.layers).toSet == Set("table", "summary", "phase2",
+      "array_drift", "dim_keys", "violations").map(l => s"graft.$l"), jobs)
+    // a run without dataset checks launches the write alone, after its
+    // table's schema inference
+    assert(calls.last._2.perJob.map(_.layers) == Seq(Set("graft.table"),
+      Set("graft.violations")), calls.last._2)
   }
 
   test("a checkpoint written by Spark's parquet writer plans and takes appends alike") {
@@ -588,7 +726,6 @@ class CheckpointSpec extends SparkSpec {
   }
 
   test("a run returns the verdicts it checkpointed, and reading them runs no job") {
-    import org.apache.spark.sql.{functions => F}
     val base = Files.createTempDirectory("graft-cp-returned").toString
     val table = mkTable(s"$base/data")
     SequenceGen.generate(spark, 4000L, nSources = 4, numPartitions = 4)

@@ -291,4 +291,22 @@ class FunctionsSpec extends SparkSpec {
       plan.collect { case s: FileSourceScanExec => s }.size == 1, plan)
     assert(rows.count() == 2000L)
   }
+
+  test("keyed counts equal a GROUP BY count, NULL key fields included") {
+    import graft.functions.KeyedCounts
+    // 4 slices, so partial buffers are serialized and merged
+    val df = spark.range(0, 1000, 1, 4).select(
+      F.when($"id" % 5 === 0, null).otherwise(($"id" % 3).cast("string"))
+        .as("p"),
+      ($"id" % 2).as("q"),
+      F.when($"id" % 7 === 0, $"id").as("v"))
+    val got = df.agg(KeyedCounts(F.struct($"p", $"q"), Seq($"v")).as("c"))
+      .select(F.explode($"c").as("e"))
+      .select($"e.key.p", $"e.key.q", $"e.counts")
+      .as[(String, Long, Seq[Long])].collect().toSet
+    val want = df.groupBy("p", "q").agg(F.count(F.lit(1)), F.count("v"))
+      .as[(String, Long, Long, Long)].collect()
+      .map { case (p, q, n, v) => (p, q, Seq(n, v)) }.toSet
+    assert(got == want && want.exists(_._1 == null), (got, want))
+  }
 }

@@ -22,11 +22,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]
     val jobOfStage = new java.util.concurrent.ConcurrentHashMap[Int, Int]
     val tasks, written = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+    val layers = new java.util.concurrent.ConcurrentHashMap[Int, Set[String]]
+    val cached = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
     val bytes = new java.util.concurrent.atomic.AtomicLong
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         jobs.add(e.jobId)
         e.stageIds.foreach(jobOfStage.putIfAbsent(_, e.jobId))
+        val tags = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags")))
+        layers.put(e.jobId, tags.toSeq.flatMap(_.split(","))
+          .filter(_.startsWith("graft.")).toSet)
+        if (!cache.isEmpty) cached.add(e.jobId)
       }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
         val job = jobOfStage.get(e.stageId)
@@ -43,15 +52,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       val r = body
       drainListenerBus(sc)
       val seen = jobs.asScala.toSeq.sorted.map(j =>
-        JobSeen(tasks.getOrDefault(j, 0L).toInt, written.getOrDefault(j, 0L)))
+        JobSeen(tasks.getOrDefault(j, 0L).toInt, written.getOrDefault(j, 0L),
+          layers.getOrDefault(j, Set.empty), cached.contains(j)))
       (r, Listened(seen, bytes.get))
     } finally sc.removeSparkListener(listener)
   }
 }
 
 object SparkSpec {
-  /** One job: the tasks it ran and the records they wrote to output. */
-  final case class JobSeen(tasks: Int, recordsWritten: Long)
+  /** One job: the tasks it ran, the records they wrote to output, the
+    * engine layers it was tagged with (`graft.<layer>`), and whether the
+    * session's cache held a relation when it started. */
+  final case class JobSeen(tasks: Int, recordsWritten: Long,
+      layers: Set[String], cached: Boolean)
 
   /** The jobs started, in order, and the shuffle bytes written. */
   final case class Listened(perJob: Seq[JobSeen], shuffleWriteBytes: Long) {

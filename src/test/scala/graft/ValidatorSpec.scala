@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{functions => F}
 import graft.dsl._
 import graft.dsl.Constraint._
 import graft.checks.{DatasetCheck, DriftCheck, RefIntegrityCheck, UniqueCheck}
@@ -457,7 +458,7 @@ class ValidatorSpec extends SparkSpec {
       assert(rows.nonEmpty)
       if (planted) {
         // the planted keys make uniqueness run phase 2: 2 summary jobs
-        // (shuffle and result) and 2 for the recount of the candidates
+        // (shuffle and result) and 1 for the recount of the candidates
         assert(rows.exists(_.getAs[Long]("n_global_violations") > 0))
         assert(seen.jobs <= 5, seen)
       } else {
@@ -486,6 +487,38 @@ class ValidatorSpec extends SparkSpec {
       .as[String].collect()
     assert(viol.toSeq == Seq("count=2"))
     assert(rep.violations.count() == n / 2)
+  }
+
+  /** Phase 2 of a uniqueness check on `doc_id`, and a key's hash. */
+  private val unique = UniqueCheck("u", "doc_id", "unique")
+  private def hashOf(key: String): Long =
+    Seq(key).toDF("doc_id").select(unique.keyHash).as[Long].head()
+
+  test("uniqueness phase 2: one job with no exchange, a key split across slices summed") {
+    // "k" at ids 0, 10, 20 and 30: one row in each of the 4 slices
+    val df = spark.range(0, 40, 1, 4).select(F.when($"id" % 10 === 0, "k")
+      .otherwise($"id".cast("string")).as("doc_id"))
+    val (dups, seen) = listened(unique.duplicates(df, Set(hashOf("k"))))
+    assert(dups == Seq("k" -> 4L))
+    assert(seen.perJob.map(_.layers) == Seq(Set("graft.phase2")), seen)
+    assert(seen.shuffleWriteBytes == 0L, seen)
+  }
+
+  test("uniqueness phase 2: a candidate hash whose key occurs once yields no row") {
+    // what an xxhash64 collision with a repeated key's hash looks like:
+    // the candidate's own key is unique
+    val df = Seq("a", "b", "b").toDF("doc_id")
+    assert(unique.duplicates(df, Set(hashOf("a"))).isEmpty)
+    assert(unique.duplicates(df, Set(hashOf("a"), hashOf("b"))) ==
+      Seq("b" -> 2L))
+  }
+
+  test("uniqueness phase 2: a key repeated 10^5 times returns at most one row per task") {
+    val df = spark.range(0, 100000, 1, 4).select(F.lit("k").as("doc_id"))
+    val perTask = unique.keyCounts(df, Set(hashOf("k"))).rdd
+      .mapPartitions(rows => Iterator(rows.size)).collect()
+    assert(perTask.length == 4 && perTask.forall(_ <= 1), perTask.toSeq)
+    assert(unique.duplicates(df, Set(hashOf("k"))) == Seq("k" -> 100000L))
   }
 
   test("referential integrity: a NULL partition value counts its own dangling rows") {
