@@ -5,9 +5,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row,
   SparkSession}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.table.TableProvider
 
 /**
  * A dataset-scope validation — no per-document analogue in the reference
@@ -274,21 +275,19 @@ sealed trait DriftBase extends DatasetCheck {
       StructType(s.partitionFields :+ StructField("metric", DoubleType)))
 
   /** One violation row per partition whose divergence exceeds
-    * `threshold`: `doc_id` is the partition's key, `p=value/...`, a NULL
-    * value written as the directory name it is read back from. Rendered
-    * by Catalyst over a local frame, so collecting them runs no job. */
+    * `threshold`: `doc_id` is the partition's name as the table lists it
+    * ([[TableProvider.encode]]). Values and metric are rendered by
+    * Catalyst over a local frame, so collecting them runs no job. */
   private[graft] def flaggedRows(s: Evaluation,
       metrics: Seq[(Seq[Any], Double)]): Seq[Row] =
     metricsFrame(s, metrics.filter(_._2 > threshold)).select(
-      F.concat_ws("/", s.partitionCols.map(p => F.concat(F.lit(p + "="),
-        F.coalesce(F.col(p).cast("string"),
-          F.lit(ExternalCatalogUtils.DEFAULT_PARTITION_NAME)))): _*)
-        .as("doc_id"),
-      F.lit(id).as("constraint_id"),
+      F.array(s.partitionCols.map(F.col(_).cast("string")): _*),
       F.concat(F.lit(metric + "="), F.round(F.col("metric"), 6)
-        .cast("string")).as("observed"),
-      F.lit(expected).as("expected"),
-      F.lit(instancePath(col)).as("instance_path")).collect().toSeq
+        .cast("string"))).collect().toSeq.map { r =>
+      Row(TableProvider.encode(
+          s.partitionCols.zip(r.getSeq[String](0).map(Option(_)))),
+        id, r.getString(1), expected, instancePath(col))
+    }
 
   protected def needsPartitions(partitionCols: Seq[String]): Unit =
     require(partitionCols.nonEmpty, s"drift check '$id' needs partitionCols")

@@ -445,6 +445,18 @@ object ConstraintCompiler {
   private def nullPasses(c: Column, raw: Column): Column =
     c.isNull || F.coalesce(raw, F.lit(false))
 
+  /** `p` over `v` read as a number the way the doc engine reads one: a
+    * string column counts only numeric content
+    * ([[FormatSpecs.numericContent]]), handed to `p` through `text`, and
+    * any other content (or a cast that finds no value) fails `p` instead
+    * of failing the job on an ANSI cast. `typeof` folds while planning,
+    * so a numeric column is left with `p(v)` alone. */
+  private def onNumber(v: Column, text: Column => Column)(
+      p: Column => Column): Column =
+    F.when(F.typeof(v).startsWith("string"), F.coalesce(
+        v.rlike(FormatSpecs.numericContent) && p(text(v)), F.lit(false)))
+      .otherwise(p(v))
+
   /** "Key is NOT covered" predicate for unevaluatedProperties — ONE
     * definition shared by the lowering and the observed-summary so the
     * flagged rows and their summaries can never disagree. */
@@ -486,18 +498,18 @@ object ConstraintCompiler {
       // Exact decimal remainder — avoids the float-tolerance trap on
       // cases like 0.0075 % 0.0001 (cf. multipleOf.json in the suite).
       // Magnitudes past decimal(38,12) range (suite float-overflow case:
-      // 1e308 multipleOf 0.123456789) fall back to double remainder
-      // instead of an ANSI cast-overflow task failure.
+      // 1e308 multipleOf 0.123456789) fall back to double remainder.
+      // decimal(38,12) carries 26 integer digits, so everything below
+      // 1e26 stays on the EXACT branch. A string keeps its text: both
+      // branches cast it themselves.
       val v = res(col, scope)
-      val exact =
-        F.pmod(v.cast("decimal(38,12)"), F.lit(k.bigDecimal)) === F.lit(0)
-      val approx =
-        F.pmod(v.cast("double"), F.lit(k.toDouble)) === F.lit(0.0)
-      nullPasses(v,
-        // decimal(38,12) carries 26 integer digits, so everything below
-        // 1e26 stays on the EXACT branch (1e25 would needlessly degrade
-        // the top decade of in-range values to double remainder)
-        F.when(F.abs(v.cast("double")) < 1e26, exact).otherwise(approx))
+      nullPasses(v, onNumber(v, identity) { x =>
+        val exact = F.pmod(x.try_cast("decimal(38,12)"),
+          F.lit(k.bigDecimal)) === F.lit(0)
+        val approx =
+          F.pmod(x.try_cast("double"), F.lit(k.toDouble)) === F.lit(0.0)
+        F.when(F.abs(x.try_cast("double")) < 1e26, exact).otherwise(approx)
+      })
 
     case LengthBounds(_, col, mn, mx) =>
       val v = res(col, scope)
@@ -634,9 +646,13 @@ object ConstraintCompiler {
       nullPasses(v, raw)
 
     case SizeConsistency(_, intCol, arrCol) =>
+      // an integral column is a plain compare; string content is read
+      // at scale 28, past the ten integer digits of any size, so only a
+      // text with more than 28 fraction digits rounds before the compare
       val i = res(intCol, scope)
       val a = res(arrCol, scope)
-      i.isNull || a.isNull || (i === F.size(a))
+      i.isNull || a.isNull ||
+        onNumber(i, _.try_cast("decimal(38,28)"))(_ === F.size(a))
 
     case ExprIs(_, predicateSql, _, _) =>
       F.coalesce(F.expr(predicateSql), F.lit(true))

@@ -135,13 +135,9 @@ object JsonSchemaImport {
   }
 
   /**
-   * `typedColumns = true` (default): columns are statically typed, so
-   * numeric keywords sit on numeric columns and lower to plain
-   * comparisons (the hot-path shape). `false`: emit full JSON-value
-   * applicability semantics — numeric keywords wrap in a content-is-
-   * number guard so non-numeric values PASS them (2020-12: `minimum`
-   * does not constrain a string instance) instead of raising an ANSI
-   * cast error on string columns.
+   * Columns are typed: a numeric keyword on a string column checks the
+   * content's number and fails non-numeric content, as the doc engine
+   * does (a table column holds one kind of value).
    *
    * @param remotes remote schema documents keyed by the absolute URI
    *        they are addressable under — the official suite's
@@ -153,7 +149,6 @@ object JsonSchemaImport {
    *        anchors (`uri#anchorName`) all resolve.
    */
   def translate(schemaJson: String, suiteId: String = null,
-      typedColumns: Boolean = true,
       remotes: Map[String, String] = Map.empty): ConstraintSuite = {
     val root =
       try mapper.readTree(schemaJson)
@@ -462,12 +457,6 @@ object JsonSchemaImport {
           s"$kw member $v at '$path' is not scalar — object/array " +
             "values cannot be compared against a scalar column")
 
-      // full applicability semantics (typedColumns = false): a numeric
-      // keyword simply does not apply to non-numeric content
-      def numGuard(c: Constraint): Constraint =
-        if (typedColumns) c
-        else IfThen(s"${c.id}.applies",
-          TypeIs(s"${c.id}.isnum", path, "number"), c)
       Option(s.get("enum")).foreach { e =>
         val members = e.elements().asScala.toSeq
         if (members.forall(m => m.isTextual || m.isBoolean))
@@ -486,18 +475,18 @@ object JsonSchemaImport {
       val mn = num(s, "minimum")
       val mx = num(s, "maximum")
       if (mn.isDefined || mx.isDefined)
-        out += numGuard(Bounds(fresh(path, "bounds"), path, mn, mx,
+        out += Bounds(fresh(path, "bounds"), path, mn, mx,
           exMinB && s.get("exclusiveMinimum").asBoolean(),
-          exMaxB && s.get("exclusiveMaximum").asBoolean()))
+          exMaxB && s.get("exclusiveMaximum").asBoolean())
       if (!exMinB || !exMaxB) {
         val emn = if (exMinB) None else num(s, "exclusiveMinimum")
         val emx = if (exMaxB) None else num(s, "exclusiveMaximum")
         if (emn.isDefined || emx.isDefined)
-          out += numGuard(Bounds(fresh(path, "xbounds"), path, emn, emx,
-            emn.isDefined, emx.isDefined))
+          out += Bounds(fresh(path, "xbounds"), path, emn, emx,
+            emn.isDefined, emx.isDefined)
       }
       num(s, "multipleOf").foreach(k =>
-        out += numGuard(MultipleOf(fresh(path, "multipleOf"), path, k)))
+        out += MultipleOf(fresh(path, "multipleOf"), path, k))
 
       if (s.has("minLength") || s.has("maxLength"))
         out += LengthBounds(fresh(path, "length"), path,

@@ -206,7 +206,9 @@ object Constraint {
   // ----------------------------------------------------------------
 
   /** Declared-length consistency: `intCol == size(arrCol)` — the
-    * `input_hint` invariant `n_tok == size(tokens)`. */
+    * `input_hint` invariant `n_tok == size(tokens)`. A string `intCol`
+    * compares its numeric content by value ("2.0" holds for two
+    * elements); other content is a violation on both engines. */
   final case class SizeConsistency(id: String, intCol: String, arrCol: String)
       extends Constraint
 

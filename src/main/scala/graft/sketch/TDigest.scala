@@ -24,6 +24,8 @@ final case class TDigestState(
 
 object TDigest {
   private val BufCap = 512
+  /** δ of every aggregate's digest ([[TDigestQuantiles]]). */
+  val Compression = 200.0
 
   def empty(compression: Double): TDigestState =
     TDigestState(compression, Array.empty, Array.empty,
@@ -123,9 +125,9 @@ object TDigest {
  * `TypedImperativeAggregate` per SURVEY.md §4.2 (simpler, same
  * partial/merge physical shape via ObjectHashAggregate).
  */
-final case class TDigestQuantiles(qs: Seq[Double], compression: Double = 200.0)
+final case class TDigestQuantiles(qs: Seq[Double])
     extends Aggregator[java.lang.Double, TDigestState, Seq[Double]] {
-  override def zero: TDigestState = TDigest.empty(compression)
+  override def zero: TDigestState = TDigest.empty(TDigest.Compression)
   // boxed input: a primitive Double encoder decodes NULL column values
   // as 0.0 and silently drags every quantile toward zero — nulls must
   // be SKIPPED, matching how the fused min/max/avg stats treat them

@@ -48,18 +48,25 @@ trait TableProvider {
 }
 
 object TableProvider {
+  import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{
+    DEFAULT_PARTITION_NAME, escapePathName, unescapePathName}
+
   /** The `(column, value)` pairs of a partition name `c1=v1/c2=v2/...`,
     * values decoded as the reader surfaces them: directory names carry
     * Hive-ESCAPED values ('a%3Ab' on disk, 'a:b' in the column), and
     * `__HIVE_DEFAULT_PARTITION__` reads back as NULL (`None`). */
-  def decode(partition: String): Seq[(String, Option[String])] = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+  def decode(partition: String): Seq[(String, Option[String])] =
     partition.split("/").toSeq.map { seg =>
       val Array(c, v) = seg.split("=", 2)
-      c -> Option.when(v != ExternalCatalogUtils.DEFAULT_PARTITION_NAME)(
-        ExternalCatalogUtils.unescapePathName(v))
+      c -> Option.when(v != DEFAULT_PARTITION_NAME)(unescapePathName(v))
     }
-  }
+
+  /** The partition name of `(column, value)` pairs, as the table lists
+    * it: [[decode]]'s inverse. */
+  def encode(values: Seq[(String, Option[String])]): String =
+    values.map { case (c, v) =>
+      c + "=" + v.fold(DEFAULT_PARTITION_NAME)(escapePathName)
+    }.mkString("/")
 }
 
 /**

@@ -272,8 +272,7 @@ class CheckpointSpec extends SparkSpec {
     val r = PartitionedRunner.run(table, full, cp, "once", dims = dims,
       violationsOut = Some(s"$base/violations"), maxPartitions = 3)
     assert(r.processed.size == 3)
-    val scans = graft.tools.PlanWalk
-      .fileScans(r.verdicts.queryExecution.executedPlan)
+    val scans = PlanWalk.fileScans(r.verdicts.queryExecution.executedPlan)
     assert(scans.isEmpty, scans.map(_.relation.location.rootPaths))
     sameAsOneShot(table, full, dims, r, cp, s"$base/violations")
   }
@@ -600,7 +599,7 @@ class CheckpointSpec extends SparkSpec {
       org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
-    val walk = graft.tools.PlanWalk
+    val walk = PlanWalk
     val observed = plans.asScala.toSeq.flatMap(p =>
       walk.collect(p) { case m: CollectMetricsExec => (p, m) })
     assert(observed.size == 1, plans)

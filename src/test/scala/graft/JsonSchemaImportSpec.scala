@@ -262,22 +262,16 @@ class JsonSchemaImportSpec extends SparkSpec {
     assert(verdicts(schema, df) == Map(
       "txt" -> true, "num" -> true, "junk" -> false))
 
-    // typedColumns = false: full applicability semantics — minimum
-    // does not constrain non-numeric content (2020-12), numeric
-    // content still checked
-    val boundsSchema = """{
-      "type": "object",
-      "properties": {"source": {"minimum": 3}}
-    }"""
-    val suite = ConstraintCompiler.compile(JsonSchemaImport.translate(
-      boundsSchema, typedColumns = false))
-    val got = df.withColumn("ok", suite.rowPredicate)
-      .select("doc_id", "ok").as[(String, Boolean)].collect().toMap
-    assert(got == Map("txt" -> true, "junk" -> true, "num" -> true))
-    val df2 = Seq(("small", "2"), ("big", "7")).toDF("doc_id", "source")
-    val got2 = df2.withColumn("ok", suite.rowPredicate)
-      .select("doc_id", "ok").as[(String, Boolean)].collect().toMap
-    assert(got2 == Map("small" -> false, "big" -> true))
+    // minimum and multipleOf over string content, each alone: junk is
+    // a clean violation, numeric content is checked by value
+    val nums = Seq(("junk", "abc"), ("nine", "9"), ("two", "2"),
+      ("ten", "10")).toDF("doc_id", "source")
+    def imported(keyword: String) = verdicts(
+      s"""{"type":"object","properties":{"source":{"$keyword":3}}}""", nums)
+    assert(imported("minimum") == Map(
+      "junk" -> false, "nine" -> true, "two" -> false, "ten" -> true))
+    assert(imported("multipleOf") == Map(
+      "junk" -> false, "nine" -> true, "two" -> false, "ten" -> false))
   }
 
   test("row-level open-key object keywords are refused") {

@@ -136,7 +136,7 @@ class JsonValidatorSpec extends SparkSpec {
     // ONE scan of the table, NULL-variant rows included; a pushed
     // extraction is a field of the scanned variant struct whose metadata
     // names its path
-    val scans = graft.tools.PlanWalk.fileScans(plan)
+    val scans = PlanWalk.fileScans(plan)
     assert(scans.size == 1, plan)
     val pushed = scans.flatMap(
       _.requiredSchema("v").dataType.asInstanceOf[StructType].fields.map(f =>

@@ -1,10 +1,10 @@
-package graft.tools
+package graft
 
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /**
- * Executed-plan walker shared by the tools and specs that inspect a
+ * Executed-plan walker shared by the specs that inspect a
  * physical plan — one place to absorb Spark's AQE wrapper zoo
  * (`AdaptiveSparkPlanExec` holds the re-optimized plan; materialized
  * stages appear as LEAF `QueryStageExec` nodes wrapping the real

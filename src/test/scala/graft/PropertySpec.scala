@@ -179,11 +179,10 @@ class PropertySpec extends SparkSpec {
       // schema-vs-column-type mismatch (array keyword on a scalar) may
       // raise a DESCRIPTIVE AnalysisException at plan time — but once
       // analysis passes, NO row content may produce a runtime task
-      // failure (typedColumns = false guards numeric keywords on
-      // non-numeric content, the adversarial-authoring mode)
+      // failure (a numeric keyword fails non-numeric content)
       try {
         val suite = ConstraintCompiler.compile(
-          JsonSchemaImport.translate(schema, typedColumns = false))
+          JsonSchemaImport.translate(schema))
         rows.select(suite.rowPredicate.as("ok")).collect()
       } catch {
         case _: JsonSchemaImport.ImportException => () // descriptive

@@ -6,7 +6,7 @@ import graft.dsl._
 import graft.dsl.Constraint._
 import graft.checks.{DatasetCheck, DriftCheck, RefIntegrityCheck, UniqueCheck}
 import graft.compile.ConstraintCompiler
-import graft.exec.{Validator, Violation}
+import graft.exec.{DocValidator, Validator, Violation}
 import graft.gen.SequenceGen
 import graft.registry.ConstraintRegistry
 
@@ -166,6 +166,26 @@ class ValidatorSpec extends SparkSpec {
       SizeBounds("sb", "tokens", Some(1), None))))
     val rep = Validator.validateWithDetails(df, suite, Seq.empty)
     assert(rep.violations.count() == 3)
+
+    // numeric checks over string content: junk fails them, numeric
+    // content is checked by value, and the doc engine agrees row by row
+    val rows = Seq(("nine", "9", "2"), ("junk", "abc", "abc"),
+      ("frac", "9", "2.0"), ("half", "2", "2.5"))
+    val checks = ConstraintSuite("s", Seq(
+      MultipleOf("m", "v", 3), SizeConsistency("sc", "n", "xs")))
+    val failed = Validator.validateWithDetails(
+        rows.map { case (d, v, n) => (d, v, n, Array(1, 2)) }
+          .toDF("doc_id", "v", "n", "xs"),
+        ConstraintCompiler.compile(checks), Seq.empty)
+      .violations.select("doc_id", "constraint_id").as[(String, String)]
+      .collect().toSet
+    assert(failed == Set("junk" -> "m", "junk" -> "sc",
+      "half" -> "m", "half" -> "sc"))
+    val doc = DocValidator.compile(checks)
+    assert(rows.flatMap { case (d, v, n) =>
+      DocValidator.validateWithDetails(doc,
+        s"""{"v":"$v","n":"$n","xs":[1,2]}""").map(d -> _.constraintId)
+    }.toSet == failed)
   }
 
   test("ref resolution inlines registry suites; cycles fail compile") {
@@ -467,8 +487,8 @@ class ValidatorSpec extends SparkSpec {
         val ev = Validator.evaluate(df, suite, Seq("source"), "doc_id", dims,
           None)
         ev.verdicts.collect()
-        val scans = graft.tools.PlanWalk
-          .fileScans(ev.aggregate.queryExecution.executedPlan)
+        val scans =
+          PlanWalk.fileScans(ev.aggregate.queryExecution.executedPlan)
         assert(scans.size == 1, scans)
       }
     }
@@ -605,18 +625,30 @@ class ValidatorSpec extends SparkSpec {
   }
 
   test("drift: a flagged NULL partition value is named as its directory") {
-    // p1 and p2 spread over the ten buckets, the NULL partition fills one
-    val rows = (0 until 600).map { i =>
-      val part = Seq("p1", "p2", null)(i % 3)
-      (s"d$i", if (part == null) 0.05 else (i % 10) / 10.0 + 0.05, "x", part)
+    // p1 and p2 spread over the ten buckets; NULL, a:b and a/b each fill
+    // one bucket of their own
+    val rows = (0 until 1000).map { i =>
+      val part = Seq("p1", "p2", null, "a:b", "a/b")(i % 5)
+      val v = part match {
+        case null  => 0.05
+        case "a:b" => 0.55
+        case "a/b" => 0.95
+        case _     => (i / 5 % 10) / 10.0 + 0.05
+      }
+      (s"d$i", v, "x", part)
     }.toDF("doc_id", "v", "a", "part")
     val suite = ConstraintCompiler.compile(ConstraintSuite("s",
       Seq(NoDrift("drift", "v", 0, 1, 10, "psi", 2.0))))
     def drifted(partitionCols: String*): Set[String] =
       Validator.validateWithDetails(rows, suite, partitionCols)
         .violations.select("doc_id").as[String].collect().toSet
-    assert(drifted("part") == Set("part=__HIVE_DEFAULT_PARTITION__"))
-    assert(drifted("a", "part") == Set("a=x/part=__HIVE_DEFAULT_PARTITION__"))
+    // each is the name the table lists, which decodes back to its value
+    val names = Set("part=__HIVE_DEFAULT_PARTITION__", "part=a%3Ab",
+      "part=a%2Fb")
+    assert(drifted("part") == names)
+    assert(drifted("a", "part") == names.map("a=x/" + _))
+    assert(drifted("part").map(graft.table.TableProvider.decode) ==
+      Set(None, Some("a:b"), Some("a/b")).map(v => Seq("part" -> v)))
   }
 
   test("violation rows name a missing id column; verdicts need none") {

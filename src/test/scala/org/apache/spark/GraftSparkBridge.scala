@@ -2,7 +2,7 @@ package org.apache.spark
 
 /**
  * Bridge to `private[spark]` SparkContext internals — the same pattern as
- * [[org.apache.spark.sql.GraftSqlBridge]], for the tools that read
+ * `org.apache.spark.sql.GraftSqlBridge`, for the specs that read
  * listener counters.
  */
 object GraftSparkBridge {
